@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.LongAdder
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the given SF.
   *
@@ -23,39 +22,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // FAIR across per-query pools (each query thread names its own pool
-      // below): under FIFO, the 7 heavy retrieval queries added in r7
-      // starved small concurrent queries' stages — walls rose 1.8-2.9×
-      // with flat task_sec (the r7 regression cluster). Pools share the
-      // cores evenly between in-flight queries, like a multi-tenant
-      // cluster's fair scheduler.
-      .config("spark.scheduler.mode", "FAIR")
-      // r16: the Janino codegen class cache is a STATIC conf defaulting to
-      // 100 entries; a 210-query suite compiles far more distinct
-      // whole-stage fragments than that, so every sweep recompiled nearly
-      // every fragment on the (8-way contended) driver. Size the cache to
-      // the suite — this is the production-true setting for any driver
-      // serving a large query inventory, not a local[32] trick.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Sessions.envCores
+    // Sessions runs FAIR: each query thread below names its own pool, so
+    // concurrent queries share the cores evenly (under FIFO the heavy
+    // retrieval queries starved small ones' stages, r7).
+    val spark = Sessions(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    // Warm-up: touch every table (codegen + file-footer caches + JIT) so
-    // per-query timings measure the query, not session cold start. Use the
-    // Tables loaders, not raw reads — `events` needs the schema-adaptive
-    // ts handling and would otherwise silently fail to warm on the
-    // nanos-encoded fixture generations.
-    Seq(Tables.region _, Tables.nation _, Tables.customer _, Tables.supplier _,
-      Tables.part _, Tables.orders _, Tables.lineitem _, Tables.events _,
-      Tables.documents _, Tables.embeddings _)
-      .foreach(load => try load(spark, sfDir).count() catch { case _: Throwable => () })
+    // Warm-up: touch every table so per-query timings measure the query,
+    // not session cold start.
+    Tables.warm(spark, sfDir)
 
     // Per-query Spark task-time attribution: each query runs under its own
     // job group (thread-local, and each Future body runs synchronously on
@@ -97,16 +73,8 @@ object Bench {
     // VISIBLE exactly as before ([[Graft.warm]] logs and continues — a
     // silently-dead builder pushes its build into timed query groups,
     // the r12 driver signature).
-    val preTasks: Seq[(String, Seq[String], () => Unit)] =
-      Seq(("intradayFold", Seq.empty[String],
-            () => graft.queries.BacktestQ.prewarm(spark, sfDir)),
-          ("replayFold", Seq.empty[String],
-            () => graft.queries.ReplayQ.prewarm(spark))) ++
-        graft.queries.TextQ.prewarmTasks(spark, sfDir) ++
-        graft.queries.VectorQ.prewarmTasks(spark, sfDir) ++
-        graft.queries.ExtQ.prewarmTasks(spark, sfDir)
-    graft.Graft.warmAll(spark, preTasks,
-      poolSize = math.min(8, math.max(3, cpus.toInt / 4)))
+    Graft.warmAll(spark, Graft.prewarmTasks(spark, sfDir),
+      Graft.prewarmPoolSize(cpus))
     val preSec = (System.nanoTime() - pre0) / 1e9
 
     // Median-of-3 SWEEPS: scheduler/attribution jitter under the
@@ -120,7 +88,7 @@ object Bench {
     // can't move a query's number.
     val Runs = 3
     val failed = ConcurrentHashMap.newKeySet[String]()
-    val pool = Executors.newFixedThreadPool(math.max(2, cpus.toInt / 4))
+    val pool = Executors.newFixedThreadPool(math.max(2, cpus / 4))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val sweeps: Seq[Map[String, Double]] = (0 until Runs).map { r =>
       val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>

@@ -27,6 +27,25 @@ object Graft {
     queries.ReplayQ.clearCache()
   }
 
+  /** Every shared-artifact build task, in topological order: the intraday
+    * and replay folds, then the `TextQ`, `VectorQ` and `ExtQ` lists.
+    * `Bench` and `Profile warm` run it through [[warmAll]]. */
+  private[graft] def prewarmTasks(spark: org.apache.spark.sql.SparkSession,
+                                  sfDir: String)
+      : Seq[(String, Seq[String], () => Unit)] =
+    Seq(("intradayFold", Seq.empty[String],
+          () => queries.BacktestQ.prewarm(spark, sfDir)),
+        ("replayFold", Seq.empty[String],
+          () => queries.ReplayQ.prewarm(spark))) ++
+      queries.TextQ.prewarmTasks(spark, sfDir) ++
+      queries.VectorQ.prewarmTasks(spark, sfDir) ++
+      queries.ExtQ.prewarmTasks(spark, sfDir)
+
+  /** Prewarm pool size on `cores` cores: 3 at the driver's low-core run,
+    * 8 from 32 cores up. */
+  private[graft] def prewarmPoolSize(cores: Int): Int =
+    math.min(8, math.max(3, cores / 4))
+
   /** Prewarm-builder isolation: run one shared-artifact build, log-and-
     * continue on failure. A prewarm leg is a SEQUENCE of builders; an
     * exception in the first used to silently skip every later builder

@@ -7,7 +7,7 @@ import graft.functions.{CosineSim, LshSignature, MinHashSig}
 
 /** Session extensions: expose graft's native expressions to SQL.
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Usage: `.withExtensions(new GraftExtensions)` on a session builder, or
   * `spark.sql.extensions=graft.GraftExtensions`; then
   * `SELECT cosine_sim(a, b) FROM ...` plans the fused codegen kernel.
   * (The injectFunction hook is the (b)-rung of the custom-operator ladder;

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
@@ -22,14 +21,7 @@ object RecallAtScale {
     val sections = sys.env.get("SPARK_GRAFT_SECTIONS")
       .map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set("emb", "rag", "hybrid"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions(Sessions.envCores)
     spark.sparkContext.setLogLevel("ERROR")
 
     if (sections("emb")) mults.foreach { m =>

@@ -1,7 +1,7 @@
 package graft
 
 import java.time.{DayOfWeek, LocalDate}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Deterministic generator of the reference-shaped fixture (FIXTURES.md §1):
   * the four tables the reference pipelines consume, synthesized with pure
@@ -148,11 +148,7 @@ object RefFixtureGen {
   // ---- main --------------------------------------------------------------
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("src/test/resources/reffix")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-reffix-gen").getOrCreate()
+    val spark = Sessions(8)
     import spark.implicits._
 
     val dim = fixDotless(dimRows)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Similarity, TextOps}
 
@@ -30,16 +30,9 @@ import graft.ext.{Dedup, Similarity, TextOps}
 object ScaleStress {
   def main(args: Array[String]): Unit = {
     val mults = if (args.isEmpty) Seq(1, 8, 64) else args.map(_.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = "/tmp/graft_scale"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions(Sessions.envCores)
     spark.sparkContext.setLogLevel("ERROR")
 
     def time(f: => Long): (Double, Long) = {

@@ -572,7 +572,7 @@ object VectorQ {
     * disk-round-tripped maintained artifact. Postings deliberately NOT
     * memory-persisted: index-scale vector tables serve faster from
     * (page-cached) parquet than from the deserialized executor cache
-    * (ProbeFloor, SCALING.md r8); only the nCells-row centroids persist. */
+    * (SCALING.md r8); only the nCells-row centroids persist. */
   private val streamIvfCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), Similarity.IvfIndex]
   private val tmpIvfDirs =

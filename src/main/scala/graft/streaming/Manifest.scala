@@ -517,32 +517,38 @@ object Manifest {
     * (ADVICE r10, high). A claim is permanent (ids are an infinite
     * namespace; a crashed claimant just burns one), and [[vacuumHistory]]
     * leaves the marker files alone — they are bytes-sized. Exclusive
-    * create is atomic on HDFS-like stores and the local FS; the object-
+    * create is atomic on HDFS-like stores; the local FS's
+    * `create(overwrite = false)` is check-then-create, so two threads of
+    * one JVM could both win the same marker — `claimLock` makes the
+    * list-and-create one step for every claimant in the JVM. The object-
     * store caveat is the same as the manifest CAS's (scaladoc above). */
-  def claimNegId(s: SparkSession, root: String, usedIds: Set[Int]): Int = {
-    val fs = fsOf(s, root)
-    val cdir = new Path(s"$root/idclaims")
-    if (!fs.exists(cdir)) fs.mkdirs(cdir)
-    val claimed = fs.listStatus(cdir).map(_.getPath.getName)
-      .flatMap(n => scala.util.Try(n.toInt).toOption).toSet
-    var cand = math.min(0, (usedIds ++ claimed + 0).min) - 1
-    while (true) {
-      try {
-        fs.create(new Path(cdir, cand.toString), false).close()
-        return cand
-      } catch {
-        // ONLY an actually-claimed marker means the race was lost; any
-        // other I/O failure (deleted claims dir, read-only FS, quota,
-        // safe mode) must propagate — retrying it would spin forever
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          cand -= 1
-        case e: java.io.IOException =>
-          if (fs.exists(new Path(cdir, cand.toString))) cand -= 1
-          else throw e
+  def claimNegId(s: SparkSession, root: String, usedIds: Set[Int]): Int =
+    claimLock.synchronized {
+      val fs = fsOf(s, root)
+      val cdir = new Path(s"$root/idclaims")
+      if (!fs.exists(cdir)) fs.mkdirs(cdir)
+      val claimed = fs.listStatus(cdir).map(_.getPath.getName)
+        .flatMap(n => scala.util.Try(n.toInt).toOption).toSet
+      var cand = math.min(0, (usedIds ++ claimed + 0).min) - 1
+      var won = false
+      while (!won) {
+        try {
+          fs.create(new Path(cdir, cand.toString), false).close()
+          won = true
+        } catch {
+          // ONLY an actually-claimed marker means the race was lost; any
+          // other I/O failure (deleted claims dir, read-only FS, quota,
+          // safe mode) must propagate — retrying it would spin forever
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+            cand -= 1
+          case e: java.io.IOException =>
+            if (fs.exists(new Path(cdir, cand.toString))) cand -= 1
+            else throw e
+        }
       }
+      cand
     }
-    cand // unreachable
-  }
+  private val claimLock = new Object
 
   /** The shared sink-ENTRY protocol ([[StreamBm25]]/[[StreamIvf]]/
     * [[StreamCurate]] `appendBatch`): commit an empty manifest on a

@@ -209,9 +209,9 @@ object StreamClusters {
     * ROW COUNTS only (the overlay is merge-history-sized; the members
     * count is a parquet metadata count — no data scan).
     *
-    * Defaults are MEASURED ([[graft.OverlayBench]], 20M members on
-    * local[32] — SCALING.md r10): the serve is FLAT to ~1% share
-    * (0.6-1.0× the bare members scan; the broadcast build is free), and
+    * Defaults are MEASURED (SCALING.md r10: 20M members on local[32]):
+    * the serve is FLAT to ~1% share (0.6-1.0× the bare members scan; the
+    * broadcast build is free), and
     * 2.4-3.7× bare once the overlay passes ~1M rows (share 5%+ at that
     * scale) — the build side starts to bite just where broadcastability
     * ends. So the 2% share trigger fires right at the measured knee,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -15,13 +14,7 @@ import graft.ext.Similarity
   * multiplicatively jittered copies (cos ≈ 0.999) that annTopK must
   * recover as rank-1 neighbors.
   */
-class AnnLshSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-ann-lsh").getOrCreate()
-
+class AnnLshSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   /** Fixture corpus (ids 0..49) + near-dup copies (id+1000): each element

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * is the deterministic fallback). Thresholds are scaled down so the
   * fixture-size hot partition crosses them; the assertion reads the
   * finalized adaptive plan, which marks split joins with `skew=true`. */
-class AqeSkewSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-aqe-skew").getOrCreate()
-
+class AqeSkewSpec extends AnyFunSuite with SharedSpark {
   test("AQE splits the hot key's partition at runtime (skew=true in the final plan)") {
     import spark.implicits._
     val confs = Seq(
@@ -29,9 +22,7 @@ class AqeSkewSpec extends AnyFunSuite {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32768",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withSQLConf(confs: _*) {
       // 50k fact rows, 90% on key 0 (with padding so bytes, not rows,
       // make the partition hot), vs a 100-key dim
       val fact = spark.range(50000)
@@ -46,9 +37,6 @@ class AqeSkewSpec extends AnyFunSuite {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE should have marked the hot partition as skew-split:\n$finalPlan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * longArray round trip, and the dirArtifact commit protocol. The
   * environment knobs (REBUILD / DIR=off) are driver-level and covered by
   * tools/determinism_check.py run B. */
-class ArtifactStoreSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-artifact-store").getOrCreate()
-
+class ArtifactStoreSpec extends AnyFunSuite with SharedSpark {
   /** A throwaway fixture dir (the fingerprint source). */
   private def freshFixture(): String = {
     import spark.implicits._

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
 
 /** Contiguous global-id assignment without a global sort
   * (TextOps.assignGlobalIds; query x46_assign_ids). */
-class AssignIdsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-assign-ids").getOrCreate()
-
+class AssignIdsSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private def docs = Tables.documents(spark, sf).select("doc_id", "lang")
 

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
 
 /** 1-bit sign quantization + Hamming-rescore funnel (Similarity.signBits /
   * hammingDist / binaryTopK; query v16_binary_recall). */
-class BinaryQuantSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-binquant").getOrCreate()
-
+class BinaryQuantSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   import scala.jdk.CollectionConverters._
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
 
@@ -14,13 +13,7 @@ import graft.ext.Dedup
   * only cost confirm-join input, so they get a rate bound, not an
   * exactness requirement.
   */
-class BloomSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-bloom").getOrCreate()
-
+class BloomSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   test("no false negatives: every inserted key passes mightContain") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -10,13 +9,7 @@ import graft.ext.TextOps
   * against an independent Scala reference on a synthetic corpus, the
   * classic saturation/length-normalization properties, verbatim-copy
   * retrieval at rank 1, and the exact RRF arithmetic. */
-class Bm25Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-bm25").getOrCreate()
-
+class Bm25Spec extends AnyFunSuite with SharedSpark {
   private val k1 = 1.2
   private val b = 0.75
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * These tests pin the equivalence the refactor rests on: a branched
   * dir taken through the divergent verbs serves EXACTLY what a
   * scratch-built lifecycle serves — rows, fingerprints, manifests. */
-class BranchIngestSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-branchingest").getOrCreate()
-
+class BranchIngestSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix)

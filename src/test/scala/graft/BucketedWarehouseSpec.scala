@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TimeSeries
@@ -14,17 +13,7 @@ import graft.ops.TimeSeries
   * At 100 TB that converts the dominant per-query cost (shuffling the fact
   * table by key) into a one-time write-side cost.
   */
-class BucketedWarehouseSpec extends AnyFunSuite {
-  // the suite may share one JVM-wide session with other specs (builder
-  // configs only apply to whichever suite creates it first), so the
-  // AQE-off requirement is enforced per-plan via runtime conf, not the
-  // builder
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-bucketed").getOrCreate()
-
+class BucketedWarehouseSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val table: String = {
@@ -49,12 +38,10 @@ class BucketedWarehouseSpec extends AnyFunSuite {
   /** Build + stringify the plan with AQE off — the assertions inspect the
     * static plan; an AdaptiveSparkPlan wrapper would print its pre-AQE
     * Exchanges regardless of what runs. */
-  private def plan(mkDf: => org.apache.spark.sql.DataFrame): String = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try mkDf.queryExecution.executedPlan.toString
-    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
+  private def plan(mkDf: => org.apache.spark.sql.DataFrame): String =
+    withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+      mkDf.queryExecution.executedPlan.toString
+    }
 
   test("keyed window (T1 ffill) over the bucketed fact runs with zero Exchange") {
     val p = plan(TimeSeries.ffill(spark.table(table),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Graft.clearCaches: a long-running embedder must be able to release the
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * backtest folds) and keep querying — rebuild-after-clear must return
   * identical results, and clearing empty/already-cleared caches must be
   * a no-op. */
-class CacheLifecycleSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-cache-lifecycle").getOrCreate()
-
+class CacheLifecycleSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private def rows(q: String): Seq[String] =

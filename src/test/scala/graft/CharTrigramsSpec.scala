@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference it replaced: bit-identical arrays (values AND order) on
   * random ASCII, multibyte, repeated and short texts, and identical
   * null/short-input semantics (both yield the EMPTY array, never null). */
-class CharTrigramsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-chartrigrams").getOrCreate()
-
+class CharTrigramsSpec extends AnyFunSuite with SharedSpark {
   /** The pre-r16 composable form, verbatim. */
   private def composed(text: org.apache.spark.sql.Column) =
     array_distinct(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,13 +17,7 @@ import graft.streaming.StreamBm25
   * and the final index must equal a from-scratch build — streamed ≡
   * scratch through a genuine engine-level crash/restart, not a
   * simulated one. */
-class CheckpointRestartSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-ckpt-restart").getOrCreate()
-
+class CheckpointRestartSpec extends AnyFunSuite with SharedSpark {
   private val corpus = Seq(
     1L -> "apples and oranges and pears",
     2L -> "oranges oranges oranges",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -8,13 +7,7 @@ import graft.ext.Similarity
 /** Cluster-balanced sampling: per-cell cap, exact per-cell coverage
   * (min(cap, cell size) survivors — never fewer), determinism, and the
   * md5-uniform pick order (engine-replicable, id-bias-free). */
-class ClusterSampleSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-clustersample").getOrCreate()
-
+class ClusterSampleSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val cap = 8
 

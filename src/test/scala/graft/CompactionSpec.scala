@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Compaction
@@ -8,13 +7,7 @@ import graft.ops.Compaction
 /** Small-file compaction of a landed dt-partitioned table
   * (ops.Compaction): per-partition rewrite, content preservation, cold
   * partitions untouched. */
-class CompactionSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-compaction").getOrCreate()
-
+class CompactionSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   test("hot partition compacts to target; content and cold files unchanged") {

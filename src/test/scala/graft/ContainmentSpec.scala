@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
@@ -12,13 +11,7 @@ import graft.ext.{Dedup, TextOps}
   * for), brute-force parity on the rare-shingle candidate envelope, the
   * maxDf recall boundary, direction semantics (smaller shingle set is
   * contained; ties break to the smaller id), and a cartesian-free plan. */
-class ContainmentSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-containment").getOrCreate()
-
+class ContainmentSpec extends AnyFunSuite with SharedSpark {
   private def docs(rows: (Long, String)*) = {
     import spark.implicits._
     rows.toDF("doc_id", "text")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
@@ -10,12 +9,7 @@ import graft.ext.{Dedup, TextOps}
   * (TextOps.chunkSliding; x40), doc-frequency boilerplate removal
   * (Dedup.boilerplateRemove; x41) and the per-key quota cap
   * (TextOps.capPerKey; x42). */
-class CorpusQualitySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-corpusquality").getOrCreate()
+class CorpusQualitySpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"

@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -10,13 +9,7 @@ import graft.ext.Similarity
   * zip_with/aggregate reference implementation: bit-identical results,
   * matching null semantics, and survives both codegen and interpreted
   * evaluation paths. */
-class CosineSimSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-cosine").getOrCreate()
-
+class CosineSimSpec extends AnyFunSuite with SharedSpark {
   test("native kernel equals composable form bit-for-bit on random vectors") {
     import spark.implicits._
     val rnd = new Random(5)
@@ -53,18 +46,14 @@ class CosineSimSpec extends AnyFunSuite {
   test("interpreted path (eval) agrees with codegen") {
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
+    def cosine(wholeStage: String, factoryMode: String): Double =
+      withSQLConf("spark.sql.codegen.wholeStage" -> wholeStage,
+          "spark.sql.codegen.factoryMode" -> factoryMode) {
+        df.select(Similarity.cosine($"a", $"b")).collect().head.getDouble(0)
+      }
     // force interpreted evaluation by disabling codegen for this query
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = df.select(Similarity.cosine($"a", $"b")).collect().head.getDouble(0)
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      val gen = df.select(Similarity.cosine($"a", $"b")).collect().head.getDouble(0)
-      assert(interp == gen)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    val interp = cosine("false", "NO_CODEGEN")
+    val gen = cosine("true", "FALLBACK")
+    assert(interp == gen)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
@@ -10,13 +9,7 @@ import graft.ext.{Dedup, TextOps}
   * training docs — light edits of benchmark docs — must surface as
   * candidates of their source benchmark doc, and clean training docs
   * must not flood the output. */
-class CrossCorpusSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-crosscorpus").getOrCreate()
-
+class CrossCorpusSpec extends AnyFunSuite with SharedSpark {
   test("planted contamination is caught; output stays cross-corpus only") {
     import spark.implicits._
     val rnd = new Random(17)

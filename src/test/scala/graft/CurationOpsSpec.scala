@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
@@ -9,13 +8,7 @@ import graft.ext.{Dedup, TextOps}
   * dedup, and temperature-scaled mixture sampling — planted-data semantics
   * the fixture oracles can't isolate (the word-salad corpus has no
   * engineered boilerplate or contamination). */
-class CurationOpsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-curation-ops").getOrCreate()
-
+class CurationOpsSpec extends AnyFunSuite with SharedSpark {
   test("ngramContamination: planted benchmark overlap yields exact fractions") {
     import spark.implicits._
     // bench doc = "a b c d"; train doc 1 copies it verbatim (all trigrams

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +11,7 @@ import graft.ext.TextOps
   * partition-invariant, bucket the corpus window (never a
   * single-partition corpus sort), drop NULL order values, and land
   * every phase boundary on the ⌊nPhases·(rank−1)/n⌋ arithmetic. */
-class CurriculumSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-curriculum").getOrCreate()
-
+class CurriculumSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private def docs = Tables.documents(spark, sf)
     .select(col("doc_id"), (col("n_chars") % 97).cast("double").as("v"))

@@ -1,20 +1,13 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
 
 /** Connected-components correctness: min-label propagation must produce
   * exactly the components a local union-find produces, for random graphs
   * (seeded) and for adversarial shapes (long chains, stars, cliques). */
-class DupClusterSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-dupcluster").getOrCreate()
-
+class DupClusterSpec extends AnyFunSuite with SharedSpark {
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {

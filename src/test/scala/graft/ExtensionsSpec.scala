@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft's native expression reachable from SQL via the session-extension
   * / function-registry path. */
-class ExtensionsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-extensions").getOrCreate()
-
+class ExtensionsSpec extends AnyFunSuite with SharedSpark {
   test("cosine_sim callable from spark.sql after registration") {
-    // tests share one session (getOrCreate), so register through the same
+    // tests share one session (SharedSpark), so register through the same
     // descriptor the withExtensions path injects
     val (ident, info, builder) = GraftExtensions.cosineSimDescriptor
     spark.sessionState.functionRegistry.registerFunction(ident, info, builder)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -8,13 +7,7 @@ import graft.ext.Similarity
 /** Attribute-filtered similarity search (Similarity.filteredTopK; query
   * v17_filtered_topk): pre-filter semantics, the post-filter failure mode
   * it exists to avoid, and the equi-join (not cross-join) plan. */
-class FilteredSearchSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-filtered-search").getOrCreate()
-
+class FilteredSearchSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private def corpus = Tables.embeddings(spark, sf)
     .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("vec"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -15,13 +15,7 @@ import graft.streaming.StreamCurate
   * PSI = 0 exactly on identical distributions, a hand-computed value, a
   * finite contribution from a one-sided bin, and alert-level PSI on a
   * genuinely shifted distribution. */
-class FingerprintSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-fingerprint").getOrCreate()
-
+class FingerprintSpec extends AnyFunSuite with SharedSpark {
   private def docs(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text").withColumn("lang",

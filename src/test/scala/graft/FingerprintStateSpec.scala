@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -14,13 +14,7 @@ import graft.streaming.StreamCurate
   * batch, delete, compact, vacuum — and must refuse (None) when coverage
   * is unprovable (a live batch predating the fingerprint state), with
   * compaction as the migration path that mints a base. */
-class FingerprintStateSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-fpstate").getOrCreate()
-
+class FingerprintStateSpec extends AnyFunSuite with SharedSpark {
   private val good = "the data row holds a good long value " * 4
 
   private def policy(b: DataFrame): DataFrame =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.ReplayQ
@@ -17,12 +16,9 @@ import graft.queries.ReplayQ
   * reproduced here to 9 significant digits), over a 55-day intraday span
   * with 40 eligible tickers.
   */
-class GoldenReplaySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-golden-replay").getOrCreate()
+class GoldenReplaySpec extends AnyFunSuite with SharedSpark {
+  override protected def suiteConf =
+    Seq("spark.sql.shuffle.partitions" -> "8")
 
   private def golden(name: String) =
     spark.read.parquet(s"${ReplayQ.fixDir}/goldens/$name")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * have no SQL oracle, regenerated-once-and-frozen outputs are the
   * regression oracle. Any intentional semantic change must update these
   * numbers consciously. */
-class GoldenSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-golden").getOrCreate()
+class GoldenSpec extends AnyFunSuite with SharedSpark {
+  override protected def suiteConf =
+    Seq("spark.sql.shuffle.partitions" -> "8")
 
   private val sf = "/root/testdata/sf0.01"
 

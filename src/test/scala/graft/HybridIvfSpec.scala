@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** v26_hybrid_ivf — the scale-true hybrid serve path (IVF-probed dense
@@ -16,13 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * holds regardless of centroid geometry (including the hierarchical
   * assignment path past `hierAssignFrom`), because a full probe makes
   * WHICH cell a posting landed in irrelevant. */
-class HybridIvfSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-hybrid-ivf").getOrCreate()
-
+class HybridIvfSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   test("v26 at nProbe = nCells equals v23 row-for-row") {

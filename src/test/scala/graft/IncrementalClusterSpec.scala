@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
@@ -10,13 +9,7 @@ import graft.ext.Dedup
   * [[Dedup.duplicateClusters]] over the full edge union — committed
   * components merging with each other, new docs bridging two committed
   * clusters, new-doc-only chains — and replayed edges must be a no-op. */
-class IncrementalClusterSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-inccc").getOrCreate()
-
+class IncrementalClusterSpec extends AnyFunSuite with SharedSpark {
   private def table(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
 

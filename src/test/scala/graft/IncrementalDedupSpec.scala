@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
@@ -8,13 +7,7 @@ import graft.ext.Dedup
 /** Incremental exact dedup (Dedup.incrementalDedup; query
   * x36_incremental_dedup): new-batch-vs-corpus survivors without
   * rescanning corpus bodies. */
-class IncrementalDedupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-incdedup").getOrCreate()
-
+class IncrementalDedupSpec extends AnyFunSuite with SharedSpark {
   private def df(rows: Seq[(Long, String)]) = {
     import spark.implicits._
     rows.toDF("doc_id", "text")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -11,13 +10,7 @@ import graft.ext.TextOps
   * the df-index merge must equal a scratch rebuild over the union, and
   * planted overlap must land in exactly the right bucket (index-vs-batch
   * AND batch-internal). */
-class IncrementalDupScoreSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-incdup").getOrCreate()
-
+class IncrementalDupScoreSpec extends AnyFunSuite with SharedSpark {
   private def score(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
@@ -8,12 +8,7 @@ import graft.ext.{Dedup, TextOps}
 /** Incremental near-dup dedup (Dedup.incrementalNearDup; query
   * x45_incremental_neardup): a new batch against the corpus's maintained
   * (id, minhash) signature index. */
-class IncrementalNearDupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-incr-neardup").getOrCreate()
+class IncrementalNearDupSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
   private def shingled(df: DataFrame): DataFrame = df

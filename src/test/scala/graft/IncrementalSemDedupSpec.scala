@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
 
@@ -16,13 +16,7 @@ import graft.ext.Similarity
   * whenever ids agree with arrival order (index ids all smaller) — on the
   * real fixture, so the claim is proven on data, not toys.
   */
-class IncrementalSemDedupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-incsemdedup").getOrCreate()
-
+class IncrementalSemDedupSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val th = 0.3
 

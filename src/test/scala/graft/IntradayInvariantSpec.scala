@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY.md §5.4 invariants of the T4 intraday backtest, checked on the
   * real fixture pipeline output (sf0.001). */
-class IntradayInvariantSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-intraday-inv").getOrCreate()
-
+class IntradayInvariantSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val trades =

@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.backtest.IntradayPipeline
@@ -10,13 +10,7 @@ import graft.backtest.IntradayPipeline
   * block-local normalization, inclusive session bounds, pandas
   * reindex-not-asof FX semantics, NaN propagation for missing data, and
   * the base-listing eligibility guard. */
-class IntradayPipelineSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-intraday-pipeline").getOrCreate()
-
+class IntradayPipelineSpec extends AnyFunSuite with SharedSpark {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   private def quotesDf(rows: Seq[(Long, Int, Boolean, String, Double)]): DataFrame = {

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.backtest._
@@ -10,13 +9,7 @@ import graft.backtest._
   * same events as the batch fold over the same ticks — even when the feed
   * arrives split across micro-batches (state snapshots carry open
   * positions over the batch boundary). */
-class IntradayStreamSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-intraday-stream").getOrCreate()
-
+class IntradayStreamSpec extends AnyFunSuite with SharedSpark {
   private val base = 1704100000000L
   private def tick(company: Long, i: Int, rets: Seq[Double], prices: Seq[Double],
                    sec: Int = 12 * 3600) =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -8,13 +7,7 @@ import graft.ext.Similarity
 /** Two-level (hierarchical) IVF assignment: exact parity with the flat
   * broadcast pick when no coarse pruning happens, measured agreement under
   * pruning, and the zero-corpus-shuffle plan contract. */
-class Ivf2Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-ivf2").getOrCreate()
-
+class Ivf2Spec extends AnyFunSuite with SharedSpark {
   // deterministic varied vectors (the IvfSpec no-shuffle fixture shape)
   private def corpus = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -12,13 +11,7 @@ import graft.ext.Similarity
   * the occupancy account exact — and make the increment retrievable (a
   * full-depth probe returns each appended vector for itself at rank 1,
   * cos 1). */
-class IvfAppendSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-ivf-append").getOrCreate()
-
+class IvfAppendSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val NCells = 8
   private val NAssign = 2

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
 
-class IvfSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-ivf").getOrCreate()
-
+class IvfSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   test("every corpus vector lands in exactly one IVF cell") {

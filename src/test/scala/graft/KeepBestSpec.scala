@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
@@ -13,13 +12,7 @@ import graft.ext.Dedup
   * keys keep their winner (null-safe semi-join), exactly one survivor
   * per group, and the winner decision runs on narrow rows (bodies
   * never shuffle — plan gate: no exchange carries the text column). */
-class KeepBestSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-keepbest").getOrCreate()
-
+class KeepBestSpec extends AnyFunSuite with SharedSpark {
   test("arg-max wins over first-seen; ties fall back to min id; one survivor per group") {
     import spark.implicits._
     val d = Seq(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -11,13 +10,7 @@ import graft.ext.Similarity
   * edges must be exactly the in-block top-k under the all-pairs cosine
   * table — edges can be MISSED across cells, never invented, and every
   * returned cosine is the exact one. */
-class KnnGraphSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-knn-graph").getOrCreate()
-
+class KnnGraphSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val K = 3
 

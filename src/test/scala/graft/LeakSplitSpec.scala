@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
@@ -12,13 +11,7 @@ import graft.ext.Dedup
   * every row is labeled, the representative is the content group's min
   * id, the coin is deterministic and partition-invariant, and the
   * train fraction lands near its target on unique content. */
-class LeakSplitSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-leaksplit").getOrCreate()
-
+class LeakSplitSpec extends AnyFunSuite with SharedSpark {
   test("planted duplicates never straddle the split; reps are min-id; all rows labeled") {
     import spark.implicits._
     val uniq = (1L to 200L).map(i => (i, s"unique document body $i"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Manifest
 
@@ -10,12 +9,9 @@ import graft.streaming.Manifest
   * stay byte-identical to the uncached form — including after
   * vacuumHistory-style pruning deletes generation files, which must
   * invalidate the cache and recompute from the survivors. */
-class ManifestCacheSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-manifestcache").getOrCreate()
+class ManifestCacheSpec extends AnyFunSuite with SharedSpark {
+  override protected def suiteConf =
+    Seq("spark.sql.shuffle.partitions" -> "2")
 
   private def refOf(dir: String): Set[Int] =
     Manifest.enterBatch(spark, dir, batchId = 999999,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{Manifest, StreamBm25}
@@ -13,12 +12,9 @@ import graft.streaming.{Manifest, StreamBm25}
   * crashed or racing takedown can neither misclassify a live merged
   * segment as a tombstone (which vanished the whole index) nor share
   * an id with a concurrent compaction. */
-class ManifestFamilySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-manifestfamily").getOrCreate()
+class ManifestFamilySpec extends AnyFunSuite with SharedSpark {
+  override protected def suiteConf =
+    Seq("spark.sql.shuffle.partitions" -> "2")
 
   test("Live families round-trip the commit; combined reads stay back-compatible") {
     val dir = java.nio.file.Files.createTempDirectory("mfam").toString

@@ -1,20 +1,13 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
 
 /** MinHash/LSH quality: known near-duplicate pairs are recovered as
   * candidates and the signature-agreement estimate tracks true Jaccard. */
-class MinHashSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-minhash").getOrCreate()
-
+class MinHashSpec extends AnyFunSuite with SharedSpark {
   test("near-dup docs become LSH candidates; estimate tracks true Jaccard") {
     import spark.implicits._
     val rnd = new Random(31)

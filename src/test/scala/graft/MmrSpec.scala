@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
@@ -8,13 +7,7 @@ import graft.ext.Similarity
 /** MMR re-rank semantics ([[Similarity.mmrRerank]]) on hand-built
   * geometry: diversity actually trades off against relevance, λ=1
   * degenerates to relevance order, bounded output, determinism. */
-class MmrSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-mmr").getOrCreate()
-
+class MmrSpec extends AnyFunSuite with SharedSpark {
   // candidates for one query: 10 and 11 are near-identical high-relevance
   // vectors; 12 is orthogonal to both with lower relevance
   private def candDf = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{MediaRow, Multimodal, Similarity}
@@ -10,13 +9,7 @@ import graft.ext.{MediaRow, Multimodal, Similarity}
   * kernel. Exercises the full schema path (binary column, typed metadata,
   * mapPartitions batch stage, array<double> features) that a real
   * image/audio pipeline runs — only the codec inside StubDecoder is fake. */
-class MultimodalSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-multimodal").getOrCreate()
-
+class MultimodalSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   test("decode metadata is deterministic and matches payload arithmetic") {

@@ -2,20 +2,13 @@ package graft
 
 import java.sql.Timestamp
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.TimeSeries
 import graft.backtest.{PairBacktest, PairBar}
 
 /** Property tests from SURVEY.md §5.4: invariants of the wrangling core
   * and the T3 state machine over seeded random series (deterministic). */
-class OpsPropertySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-props").getOrCreate()
-
+class OpsPropertySpec extends AnyFunSuite with SharedSpark {
   private def seriesDF(xs: List[Option[Double]]) = {
     import spark.implicits._
     xs.zipWithIndex.map { case (v, i) => ("k", i.toLong, v) }

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Pack
 
 /** Sequence-packing semantics: hand-computed next-fit traces + the
   * invariants every packing must satisfy. */
-class PackSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-pack").getOrCreate()
-
+class PackSpec extends AnyFunSuite with SharedSpark {
   test("hand trace: next-fit in id order, oversized doc isolated") {
     import spark.implicits._
     // budget 10; id order sizes: 4, 5, 3, 12, 2 →

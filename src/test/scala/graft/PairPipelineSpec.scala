@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,13 +13,7 @@ import graft.functions.ProductAgg
   * dropna → T3 fold → product aggregate) on a synthetic BRK-shaped pair,
   * compared against an independent plain-Scala replay of the notebook
   * algorithm (stock_arbitrage.ipynb cells 1-8). */
-class PairPipelineSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-pair-golden").getOrCreate()
-
+class PairPipelineSpec extends AnyFunSuite with SharedSpark {
   private val ratio = 1500.0
   private val buyAt = 0.005
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -13,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * layout must turn into PartitionFilters on the scan and read strictly
   * fewer partitions/files than the table holds — at 100 TB this is the
   * difference between scanning a day and scanning three years. */
-class PartitionLayoutSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-partition-layout").getOrCreate()
-
+class PartitionLayoutSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {

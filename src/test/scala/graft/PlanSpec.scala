@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast, no accidental cartesian products, aggregates run
   * partial+final. Regressions here are performance bugs even when results
   * stay correct. */
-class PlanSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // AQE re-plans lazily and hides codegen stages from toString until
-    // execution; the static plan is what these gates inspect
-    .config("spark.sql.adaptive.enabled", "false")
-    .appName("graft-plans").getOrCreate()
+class PlanSpec extends AnyFunSuite with SharedSpark {
+  // AQE re-plans lazily and hides codegen stages from toString until
+  // execution; the static plan is what these gates inspect
+  override protected def suiteConf = Seq("spark.sql.adaptive.enabled" -> "false")
 
   private val sf = "/root/testdata/sf0.001"
 

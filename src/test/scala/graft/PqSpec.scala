@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Pq, Similarity}
 
@@ -9,13 +9,7 @@ import graft.ext.{Pq, Similarity}
   * Pins determinism (hash-seeded Lloyd), code well-formedness, the
   * k-monotone reconstruction error, and the ADC recall floor vs exact
   * L2 on the fixture. */
-class PqSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-pq").getOrCreate()
-
+class PqSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private def corpus: DataFrame =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Similarity, TextOps}
@@ -10,13 +9,7 @@ import graft.ext.{Similarity, TextOps}
   * the fit/apply split's semantics (parity with the monolithic form on
   * the corpus, OOV tokens drop for unseen query text), verbatim-chunk
   * rank-1 retrieval, and the v19 driver query's shape + determinism. */
-class RagRetrievalSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-rag").getOrCreate()
-
+class RagRetrievalSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val Dim = 32
 

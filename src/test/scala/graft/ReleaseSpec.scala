@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -15,13 +14,7 @@ import graft.streaming._
   * names them; the post-forget one is clean), and pin the vacuum edge
   * (an expired generation audits `readable = false`, loudly in the
   * row, never an exception). */
-class ReleaseSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-release").getOrCreate()
-
+class ReleaseSpec extends AnyFunSuite with SharedSpark {
   test("publish/registry/audit lifecycle: pinned generations audit exactly; vacuum flips readable") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("release").toString

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Skew
@@ -8,14 +7,10 @@ import graft.ops.Skew
 /** The scale toolbox works and does what SCALING.md claims: salted joins
   * preserve join semantics while spreading hot keys; bucketed tables
   * co-locate joins (no Exchange above the scan). */
-class ScaleToolsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .appName("graft-scale-tools").getOrCreate()
+class ScaleToolsSpec extends AnyFunSuite with SharedSpark {
+  override protected def suiteConf = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   test("salted join returns exactly the rows of the plain join") {
     import spark.implicits._

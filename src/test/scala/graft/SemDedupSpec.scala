@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Similarity
 
@@ -15,13 +15,7 @@ import graft.ext.Similarity
   * aggressive unblocked policy's drops only when blocks refine — here we
   * assert justification, the property blocking actually preserves).
   */
-class SemDedupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-semdedup").getOrCreate()
-
+class SemDedupSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val th = 0.3
 

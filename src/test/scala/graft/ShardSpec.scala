@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -8,13 +7,7 @@ import graft.ext.TextOps
 /** Training-shard assignment / sharded write (TextOps.trainingShards,
   * writeShards; query x37_training_shards) and per-source epoch
   * upsampling (TextOps.epochUpsample; query x38_epoch_upsample). */
-class ShardSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-shard").getOrCreate()
-
+class ShardSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private def docs = Tables.documents(spark, sf)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
@@ -9,13 +8,7 @@ import graft.ext.{Dedup, TextOps}
   * fingerprint (VERDICT round 1 item 10): across document pairs, Hamming
   * distance between 64-bit fingerprints must fall as token Jaccard rises.
   */
-class SimHashCorrelationSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-simhash-corr").getOrCreate()
-
+class SimHashCorrelationSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val pairs = {

@@ -1,19 +1,12 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
 import graft.ops.Reshape
 
-class SimHashSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-simhash").getOrCreate()
-
+class SimHashSpec extends AnyFunSuite with SharedSpark {
   test("near-dup docs have small Hamming distance; unrelated docs ~32 bits") {
     import spark.implicits._
     val rnd = new Random(17)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -14,13 +14,7 @@ import graft.streaming.{Manifest, StreamBm25, StreamIvf}
   * tombstones kept, raw partials carried), full fold, vacuum,
   * all-deleted — and must refuse (None) on pre-upgrade coverage, with
   * compaction as the migration path. */
-class SinkFingerprintSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-sinkfp").getOrCreate()
-
+class SinkFingerprintSpec extends AnyFunSuite with SharedSpark {
   private val body = "the quick brown fox jumps over the lazy dog near "
 
   private def docs(ids: Long*): DataFrame = {

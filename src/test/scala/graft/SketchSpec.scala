@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine-specific — so this spec bounds their error against the exact
   * answers on the fixture. HLL++ at default rsd=0.05 and KLL at
   * accuracy=1000 should land well inside these tolerances. */
-class SketchSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-sketch").getOrCreate()
-
+class SketchSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.01"
 
   test("approx_count_distinct within 5x rsd of exact per group") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{Manifest, StreamCurate}
@@ -15,13 +15,7 @@ import graft.streaming.{Manifest, StreamCurate}
   * row; payload-identical re-ingest = NO diff under set semantics — the
   * candidate-key verification against A is load-bearing), mixed-idCol
   * tombstone windows, and the fast path's no-sort-merge-join plan shape. */
-class SnapshotDiffSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-snapshotdiff").getOrCreate()
-
+class SnapshotDiffSpec extends AnyFunSuite with SharedSpark {
   private val stops = Seq("the", "a", "data", "row", "value")
   private val good = "the data row holds a good long value " * 4
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * practice lands as JSON; exports commonly round-trip CSV). Parquet
   * remains the scale format (columnar pruning + pushdown); this spec pins
   * that the OTHER formats are correct, not that they are fast. */
-class SourceFormatSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-source-format").getOrCreate()
-
+class SourceFormatSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   test("CSV and JSON round-trips agree with the parquet scan row-for-row") {
@@ -117,12 +110,8 @@ class SourceFormatSpec extends AnyFunSuite {
     // re-land day 0 with amounts doubled, HALF the rows (a correction)
     val fixed = ev.filter(col("dt") === d0 && col("event_id") % 2 === 0)
       .withColumn("value", col("value") * 2)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try fixed.write.partitionBy("dt").mode("overwrite").parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    withSQLConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      fixed.write.partitionBy("dt").mode("overwrite").parquet(dir)
     }
     val after = spark.read.parquet(dir)
     val afterD0 = after.filter(col("dt") === d0).count()

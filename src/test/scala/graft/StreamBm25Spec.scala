@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,13 +14,7 @@ import graft.streaming.StreamBm25
   * corpus; re-delivered batches append nothing; and compaction
   * ([[TextOps.bm25SegmentCompact]]) collapses segment metadata without
   * changing a single score. */
-class StreamBm25Spec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-stream-bm25").getOrCreate()
-
+class StreamBm25Spec extends AnyFunSuite with SharedSpark {
   private val corpus = Seq(
     1L -> "apples and oranges and pears",
     2L -> "oranges oranges oranges",

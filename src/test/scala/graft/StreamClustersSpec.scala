@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
@@ -14,13 +14,7 @@ import graft.streaming.{Manifest, StreamClusters}
   * no-op, time travel across a merge, compact ≡ serve, and the
   * [[StreamClusters.needsCompaction]] trigger policy (the overlay-share
   * threshold — floor and share legs separately). */
-class StreamClustersSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streamclusters").getOrCreate()
-
+class StreamClustersSpec extends AnyFunSuite with SharedSpark {
   private def edges(rows: (Long, Long)*): DataFrame = {
     import spark.implicits._
     rows.toDF("id1", "id2")

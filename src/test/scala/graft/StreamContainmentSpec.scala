@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
@@ -15,13 +15,7 @@ import graft.streaming.{Manifest, StreamContainment}
   * docs, re-delete idempotence, the deleted-doc re-crawl block, and the
   * physical-forget leg: after compact + vacuum NO on-disk file under
   * the sink holds the deleted doc's rows. */
-class StreamContainmentSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streamcont").getOrCreate()
-
+class StreamContainmentSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   /** Fixture slice + planted containment structure (ids chosen mod 4:

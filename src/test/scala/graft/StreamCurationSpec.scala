@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,13 +12,7 @@ case class CurDoc(doc_id: Long, text: String, n_chars: Long)
   * dedup as ONE pipeline, proven batch ≡ stream on the documents fixture —
   * and the row-shaped quality verdict proven equal to x21's aggregate
   * form. */
-class StreamCurationSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streamcurate").getOrCreate()
-
+class StreamCurationSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val stops = Seq("the", "a", "data", "row", "value")
 

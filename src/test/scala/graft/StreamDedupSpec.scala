@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,13 +8,7 @@ import graft.streaming.{DocEvent, KeptDoc, StreamDedup, TimedDocEvent}
 /** Streaming exact dedup: a digest must be emitted exactly once no matter
   * how duplicates are spread across micro-batches, and the surviving set
   * must agree with the batch keep-first form. */
-class StreamDedupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streamdedup").getOrCreate()
-
+class StreamDedupSpec extends AnyFunSuite with SharedSpark {
   test("each digest emitted once across micro-batches; agrees with batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

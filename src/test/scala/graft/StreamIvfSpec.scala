@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,13 +18,7 @@ import graft.streaming.StreamIvf
   * scratch proof. The drift trigger ([[Similarity.ivfRetrainNeeded]])
   * flips on a planted hot-cell batch and stays quiet under uniform
   * ingest. */
-class StreamIvfSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-stream-ivf").getOrCreate()
-
+class StreamIvfSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val NCells = 8
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.Dedup
@@ -14,13 +13,7 @@ case class NdDoc(doc_id: Long, text: String)
   * semantics as the batch x7 operator, proven (a) batch-degenerate ≡
   * Dedup.minHashCandidates, (b) cross-micro-batch detection against stored
   * bucket state, (c) bounded-state cap behavior. */
-class StreamNearDupSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streamneardup").getOrCreate()
-
+class StreamNearDupSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private val K = 32
   private val B = 16

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -13,13 +13,7 @@ import graft.streaming.{Manifest, StreamNgramDf}
   * replay no-op (no generation), partial re-delivery folding only
   * novel docs, the reset-checkpoint refusal, time travel, and
   * compact ≡ serve with the replay guard surviving compaction. */
-class StreamNgramDfSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streamngdf").getOrCreate()
-
+class StreamNgramDfSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private def docs: DataFrame = Tables.documents(spark, sf)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.backtest._
@@ -14,12 +13,9 @@ import graft.queries.ReplayQ
   * where open positions carry over in the state store, so feeding one
   * micro-batch per block exercises the snapshot/restore path on every
   * seam the reference's driver loop has. */
-class StreamReplaySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-stream-replay").getOrCreate()
+class StreamReplaySpec extends AnyFunSuite with SharedSpark {
+  override protected def suiteConf =
+    Seq("spark.sql.shuffle.partitions" -> "8")
 
   private val params = (1000.0, 0.1, 0.03, 0.01, 0.1, true)
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,13 +9,7 @@ import graft.streaming.{Session, SessionEvent, Sessionize}
 /** The sessionization state kernel run through Structured Streaming
   * (MemoryStream → flatMapGroupsWithState → memory sink), proving the
   * batch and streaming paths share semantics (SURVEY.md §2.10). */
-class StreamingSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-streaming-spec").getOrCreate()
-
+class StreamingSpec extends AnyFunSuite with SharedSpark {
   // offset from epoch: rows at event-time <= the initial watermark (epoch 0)
   // would be dropped as late data
   private val base = 1704067200000L // 2024-01-01T00:00:00Z

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -14,13 +13,7 @@ import graft.streaming._
   * holds the deleted content. Also pins the crash-mid-cascade contract:
   * re-running forget() after a partial pass is a no-op on the
   * already-deleted prefix. */
-class TakedownSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-takedown").getOrCreate()
-
+class TakedownSpec extends AnyFunSuite with SharedSpark {
   test("forget + reclaim across all six sinks: every derivative forgets; no on-disk copy survives") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("takedown").toString

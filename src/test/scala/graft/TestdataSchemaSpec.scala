@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,13 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * session-TZ timestamp) — the loader itself is schema-adaptive across
   * the physical encodings the fixture has shipped with (Tables.scala).
   */
-class TestdataSchemaSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-schema-canary").getOrCreate()
-
+class TestdataSchemaSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private def check(name: String, df: org.apache.spark.sql.DataFrame,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -8,13 +7,7 @@ import graft.ext.TextOps
 /** x24 PII scrubbing on planted PII (the fixture's word-salad only
   * exercises the digit-run category) and x25's occurrence-preserving
   * n-gram unit. */
-class TextScrubSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-textscrub").getOrCreate()
-
+class TextScrubSpec extends AnyFunSuite with SharedSpark {
   test("x24 patterns redact planted emails, urls and digit runs") {
     import spark.implicits._
     val email = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"

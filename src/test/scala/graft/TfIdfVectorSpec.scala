@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Similarity, TextOps}
@@ -10,13 +9,7 @@ import graft.ext.{Similarity, TextOps}
   * assembled dense vectors → cosine top-k. A document's vector must rank
   * itself first, and a planted near-duplicate must outrank unrelated
   * docs. */
-class TfIdfVectorSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-tfidf").getOrCreate()
-
+class TfIdfVectorSpec extends AnyFunSuite with SharedSpark {
   private val Dim = 32
 
   private def vectors(docs: org.apache.spark.sql.DataFrame) =

@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * i*s+1, w), " "))` with nChunks = max(1, ceil((n-w)/s)+1) (step <
   * width) — bit-identical arrays on random token arrays, and the
   * intraDocDedup aggregate-fold ≡ array_distinct equivalence. */
-class TokenWindowsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-tokenwindows").getOrCreate()
-
+class TokenWindowsSpec extends AnyFunSuite with SharedSpark {
   private def composedSegments(toks: org.apache.spark.sql.Column, w: Int) =
     transform(
       sequence(lit(0), floor((size(toks) - 1) / w).cast("int")),

@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.ext.Similarity.assignTo]] / `assignWithTree`: identical picks
   * (values AND order) on random vectors, zero-norm centroids, exact
   * ties, ±0.0 cosines, null vectors, and empty centroid sets. */
-class TopCellsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-topcells").getOrCreate()
-
+class TopCellsSpec extends AnyFunSuite with SharedSpark {
   /** The pre-r16 composable flat pick, verbatim (cell values out). */
   private def composedPicks(vecCol: org.apache.spark.sql.Column,
                             n: Int): org.apache.spark.sql.Column =

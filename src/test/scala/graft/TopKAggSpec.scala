@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,13 +9,7 @@ import graft.functions.TopKAgg
   * the rank-window form under the shared (score desc, id asc) order —
   * including exact-tie groups, keys with fewer than k rows, and rows
   * scattered across partitions (the map-side partial-merge path). */
-class TopKAggSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-topk").getOrCreate()
-
+class TopKAggSpec extends AnyFunSuite with SharedSpark {
   private def windowForm(df: org.apache.spark.sql.DataFrame, k: Int) =
     df.withColumn("rank", row_number().over(
         Window.partitionBy("q").orderBy(col("s").desc, col("id"))))

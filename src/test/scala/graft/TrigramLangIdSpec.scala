@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.TextOps
@@ -10,13 +9,7 @@ import graft.ext.TextOps
   * 100% from a 20% train split. (On the driver fixture the lang label is
   * independent of the text, so chance level there is correct — this spec
   * is what proves the operator itself works.) */
-class TrigramLangIdSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-trigram-langid").getOrCreate()
-
+class TrigramLangIdSpec extends AnyFunSuite with SharedSpark {
   test("disjoint-alphabet languages classify at 100% accuracy") {
     import spark.implicits._
     val vocab = Map(

@@ -1,7 +1,6 @@
 package graft
 
 import scala.util.Random
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * AND order) for both the occurrence-preserving and distinct variants,
   * on random token arrays, repeats, empty tokens, short arrays, and
   * null input. */
-class WordNgramsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-wordngrams").getOrCreate()
-
+class WordNgramsSpec extends AnyFunSuite with SharedSpark {
   /** The pre-r16 composable forms, verbatim. */
   private def composedNgrams(toks: org.apache.spark.sql.Column, k: Int) =
     when(size(toks) >= k,
