@@ -46,22 +46,16 @@ object Graft {
   private[graft] def prewarmPoolSize(cores: Int): Int =
     math.min(8, math.max(3, cores / 4))
 
-  /** Prewarm-builder isolation: run one shared-artifact build, log-and-
-    * continue on failure. A prewarm leg is a SEQUENCE of builders; an
-    * exception in the first used to silently skip every later builder
-    * in the leg, pushing whole artifact builds into timed bench queries
-    * (and, when the failure is persistent, into EVERY sweep — the r12
-    * driver-bench signature). Failures stay survivable (consumers build
-    * lazily) but are now contained to one builder and always named. */
   /** DAG-parallel prewarm scheduler (r15): run `(name, deps, thunk)` build
     * tasks on a bounded pool, each task starting the moment its declared
     * dependencies complete. The r14 shape ran the five module legs on a
     * 3-thread pool with each leg SEQUENTIAL inside — the TextQ leg's 26
     * builders summed to ~425 s cold and were the whole prematerialize
     * wall (56% of the cold-store suite wall, r15 measurement). Tasks must
-    * be declared in topological order (a dep named later is ignored);
-    * failures stay isolated per-builder ([[warm]]) so dependents fall
-    * back to their own lazy builds exactly as before. */
+    * be declared in topological order (a dep named later, or a duplicate
+    * task name, is refused with a `require`); failures stay isolated
+    * per-builder ([[warm]]) so dependents fall back to their own lazy
+    * builds exactly as before. */
   private[graft] def warmAll(spark: org.apache.spark.sql.SparkSession,
                              tasks: Seq[(String, Seq[String], () => Unit)],
                              poolSize: Int): Unit = {
@@ -144,6 +138,13 @@ object Graft {
     if (firstFailure != null) throw firstFailure
   }
 
+  /** Prewarm-builder isolation: run one shared-artifact build, log-and-
+    * continue on failure. A prewarm leg is a SEQUENCE of builders; an
+    * exception in the first used to silently skip every later builder
+    * in the leg, pushing whole artifact builds into timed bench queries
+    * (and, when the failure is persistent, into EVERY sweep — the r12
+    * driver-bench signature). Failures stay survivable (consumers build
+    * lazily) but are now contained to one builder and always named. */
   private[graft] def warm(name: String)(f: => Any): Unit = {
     val t0 = System.nanoTime()
     try { f; () } catch {

@@ -3,11 +3,14 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Lucene-`segments_N`-style MANIFEST commit for the streamed on-disk
-  * indexes ([[StreamBm25]], [[StreamIvf]], [[StreamCurate]]): the set of
-  * LIVE segment ids lives in a numbered manifest file, and readers serve
-  * exactly the latest committed set — never the directory listing. That
-  * closes the two crash windows the directory-listing protocol had:
+/** Lucene-`segments_N`-style MANIFEST commit for the six streamed
+  * on-disk sinks ([[StreamCurate]], [[StreamBm25]], [[StreamIvf]],
+  * [[StreamClusters]], [[StreamContainment]], [[StreamNgramDf]]; the
+  * maintenance verbs they share live in the [[ManagedSink]] contract):
+  * the set of LIVE segment ids lives in a numbered manifest file, and
+  * readers serve exactly the latest committed set — never the directory
+  * listing. That closes the two crash windows the directory-listing
+  * protocol had:
   *
   *   - append crash: a partially-committed postings partition (or a
   *     fully-written one whose metadata write died) is INVISIBLE until
@@ -17,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *     manifest flips, and after the flip the folded partitions are
   *     invisible even though their dirs still exist — at no point can a
   *     reader see a posting twice. The old dirs become time-travel
-  *     history until [[StreamBm25.vacuum]]-style reclamation expires it.
+  *     history until [[ManagedSink.vacuum]] expires it.
   *
   * CONCURRENCY: a commit claims its generation number — the write goes
   * to a uuid-tmp file and reaches `m-<gen>` through a NO-OVERWRITE
@@ -187,7 +190,7 @@ object Manifest {
   def generations(s: SparkSession, root: String): Seq[Int] =
     gens(fsOf(s, root), root).map(_._1)
 
-  /** Every historical live set (oldest first) — [[StreamBm25.vacuum]]'s
+  /** Every historical live set (oldest first) — [[ManagedSink.vacuum]]'s
     * "referenced by some generation" account. */
   def allSets(s: SparkSession, root: String): Seq[Set[Int]] = {
     val fs = fsOf(s, root)
@@ -253,14 +256,14 @@ object Manifest {
     commitAfter(s, root, live,
       basedOn = readWithGen(s, root).map(_._1).getOrElse(-1))
 
-  /** Shared history reclamation for any manifest-committed partition
-    * layout (extracted from [[StreamBm25.vacuum]], now also behind
-    * [[StreamClusters.vacuum]] / [[StreamNgramDf.vacuum]]): under each
-    * `families` dir, delete partition dirs (`<prefix><id>`) whose id is
-    * NOT in the latest live set — by default only ids some generation
-    * referenced (crash orphans are left for `includeOrphans = true`,
-    * which a careful operator runs only with no writer in flight) —
-    * then collapse the manifest to its numerically-latest generation.
+  /** History reclamation for a manifest-committed partition layout —
+    * sinks reach it through [[ManagedSink.vacuum]], which passes their
+    * declared vacuum families: under each `families` dir, delete
+    * partition dirs (`<prefix><id>`) whose id is NOT in the latest live
+    * set — by default only ids some generation referenced (crash
+    * orphans are left for `includeOrphans = true`, which a careful
+    * operator runs only with no writer in flight) — then collapse the
+    * manifest to its numerically-latest generation.
     * Correctness never depends on running this; it trades time-travel
     * depth for space, and a deployment picks its retention by how often
     * it runs. No-op on legacy (manifest-less) dirs.

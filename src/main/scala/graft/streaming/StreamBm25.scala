@@ -29,7 +29,7 @@ import graft.ext.TextOps
   * [[graft.ext.TextOps.bm25Index]] over the union corpus, and that a
   * re-delivered batch appends nothing.
   */
-object StreamBm25 {
+object StreamBm25 extends ManagedSink {
 
   private def postingsDir(dir: String) = s"$dir/postings"
   private def statsDir(dir: String) = s"$dir/segstats"
@@ -37,33 +37,22 @@ object StreamBm25 {
   private def tombDir(dir: String) = s"$dir/tombstones"
   private def blockDir(dir: String) = s"$dir/blocklist"
 
-  private def fsOf(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  /** Postings, term-df, tombstone, blocklist and fingerprint
+    * partitions expire with history; `segstats` is not a vacuum family
+    * (it is the id ledger's listing). */
+  protected def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
+    postingsDir(dir) -> "seg_id=", termDfDir(dir) -> "seg_id=",
+    tombDir(dir) -> "ts_id=", blockDir(dir) -> "bl_id=",
+    FpState.fpDir(dir) -> "batch_id=")
 
-  /** Every seg id EVER written, from the stats layout — partition-DIR
-    * names, never a data read: a concurrent append retrying its lost
-    * CAS rewrites its own STAGED stats partition (delete + new file
-    * names), and a raw `spark.read.parquet(statsDir)` racing that
-    * rewrite dies with FAILED_READ_FILE (caught by the pounded
-    * concurrency spec). Listing directory names races with nothing.
-    * Flat pre-partition-layout files are covered by [[migrateLegacy
-    * Stats]], which every writer runs first. */
-  private def everUsedIds(s: SparkSession, dir: String): Set[Int] = {
-    val fs = fsOf(s, dir)
-    def list(d: String, prefix: String): Set[Int] = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix).toInt).toSet
-    }
-    // tombstone + blocklist partitions share the id ledger:
-    // [[nextMergedId]] allocates every maintainer family from this
-    // union (plus the claim markers), so families can never collide
-    list(statsDir(dir), "seg_id=") ++ list(tombDir(dir), "ts_id=") ++
-      list(blockDir(dir), "bl_id=")
-  }
+  /** The id ledger: segment stats, tombstones and blocklist partitions
+    * share it, so [[nextMergedId]] allocates every maintainer family
+    * from one union and families can never collide. Flat
+    * pre-partition-layout stats files are covered by
+    * [[migrateLegacyStats]], which every writer runs first. */
+  protected def ledgerFamilies(dir: String): Seq[(String, String)] = Seq(
+    statsDir(dir) -> "seg_id=", tombDir(dir) -> "ts_id=",
+    blockDir(dir) -> "bl_id=")
 
   /** Split a committed live set into (segment ids, tombstone ids). The
     * family is DECLARED in the manifest ([[Manifest.Live]] — the r10
@@ -727,54 +716,13 @@ object StreamBm25 {
     }
   }
 
-  /** EXPIRE history: delete postings/dictionary partition dirs whose
-    * seg_id appears in SOME older manifest generation but not the
-    * latest, plus all manifest generations below the latest — after
-    * this only the current snapshot is readable ([[loadAt]] on an
-    * expired generation throws). Partitions referenced by NO generation
-    * are left alone by default: they may be an IN-FLIGHT append's
-    * staged-but-uncommitted batch, and deleting them under a running
-    * stream would lose its data mid-commit. `includeOrphans = true`
-    * reclaims those too (crashed-attempt leftovers) — only safe with
-    * the ingest quiesced. Pure garbage collection either way — the
-    * manifest protocol means correctness never depends on running
-    * this; a deployment picks its time-travel retention by how often
-    * it vacuums. No-op on legacy dirs. */
-  def vacuum(s: SparkSession, dir: String,
-             includeOrphans: Boolean = false,
-             retainMillis: Option[Long] = None): Unit =
-    Manifest.vacuumHistory(s, dir, vacuumFamilies(dir),
-      includeOrphans = includeOrphans, retainMillis = retainMillis)
-
-  private def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
-    postingsDir(dir) -> "seg_id=", termDfDir(dir) -> "seg_id=",
-    tombDir(dir) -> "ts_id=", blockDir(dir) -> "bl_id=",
-    FpState.fpDir(dir) -> "batch_id=")
-
-  /** DRY RUN of [[vacuum]] ([[Manifest.vacuumPlan]] on this layout) —
-    * (generations, would-expire, reclaimable partitions, orphans). */
-  def vacuumPlan(s: SparkSession, dir: String,
-                 retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long)] =
-    Manifest.vacuumPlan(s, dir, vacuumFamilies(dir), retainMillis)
-
-  /** [[vacuumPlan]] with the bytes a vacuum would give back
-    * ([[Manifest.vacuumPlanBytes]] on this layout — ledgered sizes,
-    * one listing per partition per lifetime). */
-  def vacuumPlanBytes(s: SparkSession, dir: String,
-                      retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long, Long, Long)] =
-    Manifest.vacuumPlanBytes(s, dir, vacuumFamilies(dir), retainMillis)
-
-  /** ALLOCATE the next merged-segment/tombstone id (negative
-    * namespace): one below every id ever written or claimed, CLAIMED
-    * atomically via an exclusive marker create ([[Manifest.claimNegId]])
-    * — two concurrent maintainers are guaranteed DISTINCT ids, closing
-    * the allocation race where a compaction and a takedown staged
-    * different partition families under one id (ADVICE r10). Migrates a
-    * legacy flat stats layout first so no pre-partition id is missed. */
-  def nextMergedId(s: SparkSession, dir: String): Int = {
+  /** [[ManagedSink.nextCompactId]] after migrating a legacy flat stats
+    * layout, so no pre-partition id is missed. */
+  override def nextCompactId(s: SparkSession, dir: String): Int = {
     migrateLegacyStats(s, dir)
-    Manifest.claimNegId(s, dir, everUsedIds(s, dir))
+    super.nextCompactId(s, dir)
   }
+
+  /** [[nextCompactId]] under its BM25 name (merged segments). */
+  def nextMergedId(s: SparkSession, dir: String): Int = nextCompactId(s, dir)
 }

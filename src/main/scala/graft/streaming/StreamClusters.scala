@@ -47,30 +47,19 @@ import graft.ext.Dedup
   * genuinely new edges on an ever-committed id fails loudly, and every
   * un-vacuumed generation time-travels ([[loadAt]]).
   */
-object StreamClusters {
+object StreamClusters extends ManagedSink {
 
   private def membersDir(dir: String) = s"$dir/members"
   private def rootmapDir(dir: String) = s"$dir/rootmap"
   private def tombDir(dir: String) = s"$dir/tombstones"
 
-  private def fsOf(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Every id EVER written, from partition-DIR names (never a data
-    * read — the StreamBm25 listing discipline: name listings race
-    * nothing). Tombstones share the ledger. */
-  private def everUsedIds(s: SparkSession, dir: String): Set[Int] = {
-    val fs = fsOf(s, dir)
-    Seq(membersDir(dir) -> "batch_id=", rootmapDir(dir) -> "batch_id=",
-      tombDir(dir) -> "ts_id=").flatMap { case (d, prefix) =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix).toInt)
-    }.toSet
-  }
+  /** Members, rootmap and tombstones: the vacuum families and the id
+    * ledger alike. */
+  protected def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
+    membersDir(dir) -> "batch_id=", rootmapDir(dir) -> "batch_id=",
+    tombDir(dir) -> "ts_id=")
+  protected def ledgerFamilies(dir: String): Seq[(String, String)] =
+    vacuumFamilies(dir)
 
   /** Split a live set into (data ids, tombstone ids) — manifest-declared
     * families ([[Manifest.Live]]), with the conservative probe fallback
@@ -281,11 +270,6 @@ object StreamClusters {
     }
   }
 
-  /** ALLOCATE the next maintainer id (negative namespace, atomically
-    * claimed — [[Manifest.claimNegId]] over the listing ledger). */
-  def nextCompactId(s: SparkSession, dir: String): Int =
-    Manifest.claimNegId(s, dir, everUsedIds(s, dir))
-
   /** TAKEDOWN deletes on the cluster table — membership is a derivative
     * of forgotten content, so the right-to-be-forgotten cascade reaches
     * this sink too ([[StreamBm25.deleteDocs]] pattern): `ids` become a
@@ -318,7 +302,7 @@ object StreamClusters {
       .persist()
     try {
       if (del.count() == 0) return // nothing newly deleted: no commit
-      val tsId = Manifest.claimNegId(s, dir, everUsedIds(s, dir))
+      val tsId = nextCompactId(s, dir)
       del.coalesce(1) // takedown-sized
         .write.mode("overwrite").parquet(s"${tombDir(dir)}/ts_id=$tsId")
       try Manifest.commitLiveAfter(s, dir,
@@ -332,37 +316,6 @@ object StreamClusters {
       }
     } finally del.unpersist()
   }
-
-  /** Reclaim time-travel history ([[Manifest.vacuumHistory]] on this
-    * layout): member + rootmap partitions no generation will serve
-    * anymore are deleted and the manifest collapses to the latest
-    * commit — typically run after [[compact]], which is what strands
-    * the folded partitions. The [[StreamBm25.vacuum]] contract:
-    * correctness never depends on it; retention = how often you run
-    * it. */
-  def vacuum(s: SparkSession, dir: String,
-             includeOrphans: Boolean = false,
-             retainMillis: Option[Long] = None): Unit =
-    Manifest.vacuumHistory(s, dir, vacuumFamilies(dir),
-      includeOrphans = includeOrphans, retainMillis = retainMillis)
-
-  private def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
-    membersDir(dir) -> "batch_id=", rootmapDir(dir) -> "batch_id=",
-    tombDir(dir) -> "ts_id=")
-
-  /** DRY RUN of [[vacuum]] ([[Manifest.vacuumPlan]] on this layout). */
-  def vacuumPlan(s: SparkSession, dir: String,
-                 retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long)] =
-    Manifest.vacuumPlan(s, dir, vacuumFamilies(dir), retainMillis)
-
-  /** [[vacuumPlan]] with the bytes a vacuum would give back
-    * ([[Manifest.vacuumPlanBytes]] on this layout — ledgered sizes,
-    * one listing per partition per lifetime). */
-  def vacuumPlanBytes(s: SparkSession, dir: String,
-                      retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long, Long, Long)] =
-    Manifest.vacuumPlanBytes(s, dir, vacuumFamilies(dir), retainMillis)
 
   /** The resolved cluster table (id, cluster_id) as committed so far;
     * None before the first batch. */

@@ -39,7 +39,7 @@ import graft.ext.Dedup
   * maintained index, O(batch) per increment (left-merged combined df,
   * bucket-pruned postings read, stored sets for the exact recheck).
   */
-object StreamContainment {
+object StreamContainment extends ManagedSink {
 
   private def setsDir(dir: String) = s"$dir/sets"
   private def postDir(dir: String) = s"$dir/post"
@@ -47,24 +47,16 @@ object StreamContainment {
   private def idsDir(dir: String) = s"$dir/seenids"
   private def delDir(dir: String) = s"$dir/delids"
 
-  private def fsOf(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Every id EVER written, from partition-DIR names (the shared
-    * maintainer-side listing discipline — names race nothing). */
-  private def everUsedIds(s: SparkSession, dir: String): Set[Int] = {
-    val fs = fsOf(s, dir)
-    Seq(setsDir(dir) -> "batch_id=", postDir(dir) -> "batch_id=",
-      dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
-      delDir(dir) -> "del_id=").flatMap { case (d, prefix) =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix).toInt)
-    }.toSet
-  }
+  /** Sets, postings, df, seen ids and delete records: the vacuum
+    * families and the id ledger alike. A vacuum keeps the live merged
+    * base, including the compacted seen-ids table, so the replay guard
+    * keeps holding. */
+  protected def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
+    setsDir(dir) -> "batch_id=", postDir(dir) -> "batch_id=",
+    dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
+    delDir(dir) -> "del_id=")
+  protected def ledgerFamilies(dir: String): Seq[(String, String)] =
+    vacuumFamilies(dir)
 
   /** The union of deleted doc ids (the `aux` family — survives every
     * fold, keeping re-deletes idempotent forever). */
@@ -164,8 +156,8 @@ object StreamContainment {
     }).persist()
     try {
       if (scoped.count() == 0) return // re-deletes/unknown ids: no commit
-      val negId = Manifest.claimNegId(s, dir, everUsedIds(s, dir))
-      val delId = Manifest.claimNegId(s, dir, everUsedIds(s, dir))
+      val negId = nextCompactId(s, dir)
+      val delId = nextCompactId(s, dir)
       // negative df from the stored sets of exactly the scoped docs —
       // a takedown-sized semi-join against the served set table
       loadSets(s, dir).getOrElse(
@@ -192,10 +184,6 @@ object StreamContainment {
       }
     } finally scoped.unpersist()
   }
-
-  /** ALLOCATE the next maintainer id (negative namespace). */
-  def nextCompactId(s: SparkSession, dir: String): Int =
-    Manifest.claimNegId(s, dir, everUsedIds(s, dir))
 
   /** Fold every live partition into ONE merged base per table: the
     * survivor sets/postings (masks absorbed — no live partition holds a
@@ -241,33 +229,6 @@ object StreamContainment {
         throw e
     }
   }
-
-  /** Reclaim time-travel history; the merged base survives, including
-    * the compacted seen-ids table (the replay guard keeps holding). */
-  def vacuum(s: SparkSession, dir: String,
-             includeOrphans: Boolean = false,
-             retainMillis: Option[Long] = None): Unit =
-    Manifest.vacuumHistory(s, dir, vacuumFamilies(dir),
-      includeOrphans = includeOrphans, retainMillis = retainMillis)
-
-  private def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
-    setsDir(dir) -> "batch_id=", postDir(dir) -> "batch_id=",
-    dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
-    delDir(dir) -> "del_id=")
-
-  /** DRY RUN of [[vacuum]] ([[Manifest.vacuumPlan]] on this layout). */
-  def vacuumPlan(s: SparkSession, dir: String,
-                 retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long)] =
-    Manifest.vacuumPlan(s, dir, vacuumFamilies(dir), retainMillis)
-
-  /** [[vacuumPlan]] with the bytes a vacuum would give back
-    * ([[Manifest.vacuumPlanBytes]] on this layout — ledgered sizes,
-    * one listing per partition per lifetime). */
-  def vacuumPlanBytes(s: SparkSession, dir: String,
-                      retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long, Long, Long)] =
-    Manifest.vacuumPlanBytes(s, dir, vacuumFamilies(dir), retainMillis)
 
   /** The served shingle-set table (\_\_cid, \_\_sh), deleted docs
     * masked; None before the first batch. */

@@ -24,7 +24,7 @@ import graft.ext.TextOps
   * micro-batch), while the batch x21 keeps the partial-agg explode that
   * wins on a 100 TB scan.
   */
-object StreamCurate {
+object StreamCurate extends ManagedSink {
 
   /** x21's keep/drop verdict as one per-row boolean column.
     * Signals: composite quality score ≥ 0.5, repeat_ratio ≤ 0.8,
@@ -77,6 +77,19 @@ object StreamCurate {
   private def fpDir(dir: String) = s"$dir/fpstate"
   private def fpShardDir(dir: String) = s"$dir/fpshard"
   private def binsDir(dir: String) = s"$dir/bins"
+
+  /** Every state family expires with history; the id ledger is the
+    * families ids are minted in — seen, corpus and tombstones (the
+    * digest-map, fingerprint and bins partitions reuse their batch's
+    * id). */
+  protected def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
+    corpusDir(dir) -> "batch_id=", seenDir(dir) -> "batch_id=",
+    digestMapDir(dir) -> "batch_id=", fpDir(dir) -> "batch_id=",
+    fpShardDir(dir) -> "batch_id=", binsDir(dir) -> "batch_id=",
+    tombDir(dir) -> "ts_id=")
+  protected def ledgerFamilies(dir: String): Seq[(String, String)] = Seq(
+    seenDir(dir) -> "batch_id=", corpusDir(dir) -> "batch_id=",
+    tombDir(dir) -> "ts_id=")
 
   /** Bin count of the PER-SHARD fingerprint partials
     * ([[fingerprintShardState]]): 1024 fixed bins over the same
@@ -157,18 +170,6 @@ object StreamCurate {
     } finally perBin.unpersist()
   }
 
-  /** Tombstone partition ids present under the dir (the negative-id
-    * ledger leg the takedown family contributes). */
-  private def tombIds(s: org.apache.spark.sql.SparkSession,
-                      dir: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(tombDir(dir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("ts_id="))
-      .map(_.stripPrefix("ts_id=").toInt).toSet
-  }
-
   /** Split the live set at a generation into (data ids, tombstone ids).
     * The family is DECLARED in the manifest ([[Manifest.Live]] — the
     * r10 fix: directory presence let a losing compaction's stranded
@@ -225,15 +226,6 @@ object StreamCurate {
       fs.reduce(_ unionByName _)
     }.toSeq
   }
-
-  /** ALLOCATE the next NEGATIVE id across every family — CLAIMED
-    * atomically ([[Manifest.claimNegId]]) so a concurrent compaction
-    * and takedown can never share an id (the StreamBm25.nextMergedId
-    * discipline). */
-  def nextCompactId(s: org.apache.spark.sql.SparkSession,
-                    dir: String): Int =
-    Manifest.claimNegId(s, dir, partitionIds(s, seenDir(dir)) ++
-      partitionIds(s, corpusDir(dir)) ++ tombIds(s, dir))
 
   /** TAKEDOWN on the curated corpus — the [[StreamBm25.deleteDocs]]
     * pattern on the sink that holds the actual BODIES (where a
@@ -323,8 +315,7 @@ object StreamCurate {
       (clusterBins == 1 || FpShardBins % clusterBins == 0),
       s"clusterBins must be 1 (flat) or a power of two dividing " +
         s"$FpShardBins, got $clusterBins")
-    val used = partitionIds(s, seenDir(dir)) ++
-      partitionIds(s, corpusDir(dir)) ++ tombIds(s, dir)
+    val used = everUsedIds(s, dir)
     require(!used.contains(into),
       s"into=$into was already used (ever-written ids: $used)")
     val st = Manifest.readWithGen(s, dir)
@@ -454,37 +445,6 @@ object StreamCurate {
   private def digestMap(s: org.apache.spark.sql.SparkSession, dir: String)
       : Option[DataFrame] =
     snapshotRead(s, dir, digestMapDir(dir), asOfGen = None)
-
-  /** Reclaim time-travel history ([[Manifest.vacuumHistory]]): corpus,
-    * seen, and tombstone partitions no generation serves anymore are
-    * deleted — after a takedown + [[compact]], this is the step that
-    * removes the last readable copy of the taken-down bodies (retention
-    * policy decides when that happens). */
-  def vacuum(s: org.apache.spark.sql.SparkSession, dir: String,
-             includeOrphans: Boolean = false,
-             retainMillis: Option[Long] = None): Unit =
-    Manifest.vacuumHistory(s, dir, vacuumFamilies(dir),
-      includeOrphans = includeOrphans, retainMillis = retainMillis)
-
-  private def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
-    corpusDir(dir) -> "batch_id=", seenDir(dir) -> "batch_id=",
-    digestMapDir(dir) -> "batch_id=", fpDir(dir) -> "batch_id=",
-    fpShardDir(dir) -> "batch_id=", binsDir(dir) -> "batch_id=",
-    tombDir(dir) -> "ts_id=")
-
-  /** DRY RUN of [[vacuum]] ([[Manifest.vacuumPlan]] on this layout). */
-  def vacuumPlan(s: org.apache.spark.sql.SparkSession, dir: String,
-                 retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long)] =
-    Manifest.vacuumPlan(s, dir, vacuumFamilies(dir), retainMillis)
-
-  /** [[vacuumPlan]] with the bytes a vacuum would give back
-    * ([[Manifest.vacuumPlanBytes]] on this layout — ledgered sizes,
-    * one listing per partition per lifetime). */
-  def vacuumPlanBytes(s: org.apache.spark.sql.SparkSession, dir: String,
-                      retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long, Long, Long)] =
-    Manifest.vacuumPlanBytes(s, dir, vacuumFamilies(dir), retainMillis)
 
   /** CROSS-GENERATION SNAPSHOT DIFF — the reproducibility-audit verb
     * ("what changed between the corpus snapshot run A trained on and
@@ -1368,18 +1328,6 @@ object StreamCurate {
         both.map(_.withColumn("batch_id", col("batch_id").cast("int")))
       }
     }
-
-  /** `batch_id=` partition ids present under `d` (empty if the dir
-    * doesn't exist) — the legacy-dir live-set baseline. */
-  private def partitionIds(s: org.apache.spark.sql.SparkSession,
-                           d: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toInt).toSet
-  }
 
   /** [[Manifest.hasDataFiles]] on a path string. */
   private def hasDataFiles(s: org.apache.spark.sql.SparkSession,

@@ -47,15 +47,20 @@ import graft.ext.Similarity
   * learned — the streamed ≡ scratch proof runs against a DuckDB
   * brute-force oracle on real data.
   */
-object StreamIvf {
+object StreamIvf extends ManagedSink {
 
   private def centroidsDir(dir: String) = s"$dir/centroids"
   private def postingsDir(dir: String) = s"$dir/postings"
   private def tombDir(dir: String) = s"$dir/tombstones"
 
-  private def fsOf(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  /** Postings, tombstone and fingerprint partitions expire with
+    * history; the id ledger is postings and tombstones (a fingerprint
+    * partial reuses its partition's id). */
+  protected def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
+    postingsDir(dir) -> "batch_id=", tombDir(dir) -> "ts_id=",
+    FpState.fpDir(dir) -> "batch_id=")
+  protected def ledgerFamilies(dir: String): Seq[(String, String)] = Seq(
+    postingsDir(dir) -> "batch_id=", tombDir(dir) -> "ts_id=")
 
   /** Split a live set into (postings-partition ids, tombstone ids) —
     * the manifest-declared family ([[Manifest.Live]]), with the
@@ -83,20 +88,6 @@ object StreamIvf {
       .parquet(tombIds.toSeq.sorted
         .map(id => s"${tombDir(dir)}/ts_id=$id"): _*)
       .select("key"))
-
-  /** Every id EVER written across both partition families — the
-    * listing-based ledger [[Manifest.claimNegId]] seeds from. */
-  private def everUsedIds(s: SparkSession, dir: String): Set[Int] = {
-    val fs = fsOf(s, dir)
-    def list(d: String, prefix: String): Set[Int] = {
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix).toInt).toSet
-    }
-    list(postingsDir(dir), "batch_id=") ++ list(tombDir(dir), "ts_id=")
-  }
 
   /** `foreachBatch` sink body: micro-batch `batchId` → one immutable
     * on-disk postings partition (`batch_id=<batchId>`), training the
@@ -279,7 +270,7 @@ object StreamIvf {
       .persist()
     try {
       if (del.count() == 0) return // nothing newly deleted: no commit
-      val tsId = Manifest.claimNegId(s, dir, everUsedIds(s, dir))
+      val tsId = nextCompactId(s, dir)
       del.coalesce(1) // takedown-sized, not index-sized
         .write.mode("overwrite").parquet(s"${tombDir(dir)}/ts_id=$tsId")
       // NEGATIVE fingerprint partial: the ids this delete masks out of
@@ -298,11 +289,6 @@ object StreamIvf {
       }
     } finally del.unpersist()
   }
-
-  /** ALLOCATE the next maintainer id (negative namespace, atomically
-    * claimed — [[Manifest.claimNegId]] over the listing ledger). */
-  def nextCompactId(s: SparkSession, dir: String): Int =
-    Manifest.claimNegId(s, dir, everUsedIds(s, dir))
 
   /** Fold every live postings partition into ONE base partition
     * (`into` — a fresh claimed NEGATIVE id) holding only SURVIVING
@@ -342,34 +328,6 @@ object StreamIvf {
         throw e
     }
   }
-
-  /** Reclaim time-travel history ([[Manifest.vacuumHistory]]): postings
-    * and tombstone partitions no generation serves anymore are deleted
-    * — after [[deleteVecs]] + [[compactAll]], the step that removes the
-    * last readable copy of the taken-down vectors. */
-  def vacuum(s: SparkSession, dir: String,
-             includeOrphans: Boolean = false,
-             retainMillis: Option[Long] = None): Unit =
-    Manifest.vacuumHistory(s, dir, vacuumFamilies(dir),
-      includeOrphans = includeOrphans, retainMillis = retainMillis)
-
-  private def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
-    postingsDir(dir) -> "batch_id=", tombDir(dir) -> "ts_id=",
-    FpState.fpDir(dir) -> "batch_id=")
-
-  /** DRY RUN of [[vacuum]] ([[Manifest.vacuumPlan]] on this layout). */
-  def vacuumPlan(s: SparkSession, dir: String,
-                 retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long)] =
-    Manifest.vacuumPlan(s, dir, vacuumFamilies(dir), retainMillis)
-
-  /** [[vacuumPlan]] with the bytes a vacuum would give back
-    * ([[Manifest.vacuumPlanBytes]] on this layout — ledgered sizes,
-    * one listing per partition per lifetime). */
-  def vacuumPlanBytes(s: SparkSession, dir: String,
-                      retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long, Long, Long)] =
-    Manifest.vacuumPlanBytes(s, dir, vacuumFamilies(dir), retainMillis)
 
   /** The maintained index as written so far; None before the first
     * batch. Serve with [[graft.ext.Similarity.probeIvf]]; audit with

@@ -36,29 +36,20 @@ import graft.ext.TextOps
   * id, snapshot-isolated reads (live partitions' paths, never a
   * directory listing), time travel via [[loadAt]].
   */
-object StreamNgramDf {
+object StreamNgramDf extends ManagedSink {
 
   private def dfDir(dir: String) = s"$dir/dfparts"
   private def idsDir(dir: String) = s"$dir/seenids"
   private def delDir(dir: String) = s"$dir/delids"
 
-  private def fsOf(s: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Every id EVER written, from partition-DIR names (the shared
-    * maintainer-side listing discipline — names race nothing). */
-  private def everUsedIds(s: SparkSession, dir: String): Set[Int] = {
-    val fs = fsOf(s, dir)
-    Seq(dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
-      delDir(dir) -> "del_id=").flatMap { case (d, prefix) =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith(prefix))
-        .map(_.stripPrefix(prefix).toInt)
-    }.toSet
-  }
+  /** Df deltas, seen ids and delete records: the vacuum families and
+    * the id ledger alike. A vacuum keeps the live merged base, including
+    * the compacted seen-ids table, so the replay guard keeps holding. */
+  protected def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
+    dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
+    delDir(dir) -> "del_id=")
+  protected def ledgerFamilies(dir: String): Seq[(String, String)] =
+    vacuumFamilies(dir)
 
   /** The union of deleted doc ids (the `aux` family — survives every
     * fold, keeping re-deletes idempotent forever); None when nothing
@@ -121,8 +112,8 @@ object StreamNgramDf {
     }).persist()
     try {
       if (scoped.count() == 0) return // re-deletes/unknown ids: no commit
-      val negId = Manifest.claimNegId(s, dir, everUsedIds(s, dir))
-      val delId = Manifest.claimNegId(s, dir, everUsedIds(s, dir))
+      val negId = nextCompactId(s, dir)
+      val delId = nextCompactId(s, dir)
       TextOps.ngramDf(scoped, idCol, textCol, n)
         .select(col("ng"), (-col("ndocs")).as("ndocs"))
         .write.mode("overwrite")
@@ -185,13 +176,6 @@ object StreamNgramDf {
     } finally fresh.unpersist()
   }
 
-  /** ALLOCATE the next maintainer id (negative namespace, atomically
-    * claimed over the LISTING-based ledger — [[Manifest.claimNegId]]'s
-    * documented seed; the live set alone would miss on-disk non-live
-    * partitions). */
-  def nextCompactId(s: SparkSession, dir: String): Int =
-    Manifest.claimNegId(s, dir, everUsedIds(s, dir))
-
   /** Fold every live delta into ONE merged base partition (`into` — a
     * fresh negative id, the merged-segment namespace) for both the df
     * table and the seen ids: the tiered-merge step that bounds the
@@ -228,36 +212,6 @@ object StreamNgramDf {
         throw e
     }
   }
-
-  /** Reclaim time-travel history ([[Manifest.vacuumHistory]] on this
-    * layout): delta + seen-ids partitions no generation will serve
-    * anymore are deleted and the manifest collapses to the latest
-    * commit — typically run after [[compact]]. The merged base (live)
-    * partitions survive, INCLUDING the compacted seen-ids table, so the
-    * replay guard keeps holding after reclamation. */
-  def vacuum(s: SparkSession, dir: String,
-             includeOrphans: Boolean = false,
-             retainMillis: Option[Long] = None): Unit =
-    Manifest.vacuumHistory(s, dir, vacuumFamilies(dir),
-      includeOrphans = includeOrphans, retainMillis = retainMillis)
-
-  private def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
-    dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
-    delDir(dir) -> "del_id=")
-
-  /** DRY RUN of [[vacuum]] ([[Manifest.vacuumPlan]] on this layout). */
-  def vacuumPlan(s: SparkSession, dir: String,
-                 retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long)] =
-    Manifest.vacuumPlan(s, dir, vacuumFamilies(dir), retainMillis)
-
-  /** [[vacuumPlan]] with the bytes a vacuum would give back
-    * ([[Manifest.vacuumPlanBytes]] on this layout — ledgered sizes,
-    * one listing per partition per lifetime). */
-  def vacuumPlanBytes(s: SparkSession, dir: String,
-                      retainMillis: Option[Long] = None)
-      : Option[(Long, Long, Long, Long, Long, Long)] =
-    Manifest.vacuumPlanBytes(s, dir, vacuumFamilies(dir), retainMillis)
 
   /** The served (ng, ndocs) index — the keyed sum over live delta
     * partitions; None before the first batch. Feed it to [[graft.ext

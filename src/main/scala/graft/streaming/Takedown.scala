@@ -223,34 +223,10 @@ object Takedown {
         .agg(count(lit(1)).as("n_served"),
           count(col("__del")).as("n_residual"))
         .select(lit(sink).as("sink"), col("n_served"), col("n_residual"))
-    def zero(sink: String): DataFrame =
-      s.range(1).select(lit(sink).as("sink"), lit(0L).as("n_served"),
-        lit(0L).as("n_residual"))
-    val rows = Seq(
-      sinks.curateDir.map(d => StreamCurate.load(s, d)
-        .map(c => row("corpus", c, sinks.idCol))
-        .getOrElse(zero("corpus"))),
-      sinks.bm25Dir.map(d => StreamBm25.load(s, d)
-        .map(i => row("bm25", i.postings.select("key").distinct(), "key"))
-        .getOrElse(zero("bm25"))),
-      sinks.ivf.map { case (d, idCol, vecCol) =>
-        StreamIvf.load(s, d, idCol, vecCol)
-          .map(i => row("ivf", i.postings.select(idCol).distinct(), idCol))
-          .getOrElse(zero("ivf"))
-      },
-      sinks.clustersDir.map(d => StreamClusters.load(s, d)
-        .map(c => row("clusters", c, "id"))
-        .getOrElse(zero("clusters"))),
-      sinks.containmentDir.map(d => StreamContainment.loadSets(s, d)
-        .map(sets => row("containment", sets, "__cid"))
-        .getOrElse(zero("containment"))),
-      sinks.ngramDf.map { case (d, _) =>
-        StreamNgramDf.countedIds(s, d)
-          .map(c => row("ngram_df", c, "id"))
-          .getOrElse(zero("ngram_df"))
-      }).flatten
-    require(rows.nonEmpty, "attest needs at least one configured sink")
-    rows.reduce(_ unionByName _)
+    union("attest", reported(s, sinks).map(m => m.served()
+      .map { case (served, keyCol) => row(m.name, served, keyCol) }
+      .getOrElse(s.range(1).select(lit(m.name).as("sink"),
+        lit(0L).as("n_served"), lit(0L).as("n_residual")))))
   }
 
   /** Live data partitions at or above this count recommend a fold in
@@ -282,52 +258,28 @@ object Takedown {
     *
     * Metadata-only: manifests, nBins/segment-count stats tables and the
     * cluster overlay count — never postings, vectors or bodies. */
-  def maintenanceReport(s: SparkSession, sinks: Sinks): DataFrame = {
-    def liveOf(dir: String) = Manifest.readLiveWithGen(s, dir).map(_._2)
-    def row(sink: String, dir: String, nQuarantined: Long,
-            fpOk: Option[Boolean], extraNeeds: Boolean): DataFrame = {
-      val l = liveOf(dir)
-      val (nd, nt, na) = l
-        .map(x => (x.data.size.toLong, x.tombs.size.toLong,
-          x.aux.size.toLong))
-        .getOrElse((0L, 0L, 0L))
-      val needs = l.isDefined &&
-        (nt > 0 || nd >= MaxLiveParts || extraNeeds)
-      // an unborn sink has no coverage to judge: fingerprint_ok stays
-      // NULL until the first commit, like the no-checksum sinks
-      val fp = if (l.isEmpty) None else fpOk
-      s.range(1).select(lit(sink).as("sink"),
-        lit(nd).as("n_data"), lit(nt).as("n_tombstones"),
-        lit(na).as("n_aux"),
-        lit(Manifest.generations(s, dir).size.toLong)
-          .as("n_generations"),
-        lit(nQuarantined).as("n_quarantined"),
-        fp.map(b => lit(b)).getOrElse(lit(null)).cast("boolean")
-          .as("fingerprint_ok"),
-        lit(needs).as("needs_compaction"))
-    }
-    val rows = Seq(
-      sinks.curateDir.map(d => row("corpus", d,
-        StreamCurate.quarantine(s, d).map(_.count()).getOrElse(0L),
-        Some(StreamCurate.fingerprintState(s, d).isDefined),
-        extraNeeds = false)),
-      sinks.bm25Dir.map(d => row("bm25", d, 0L,
-        Some(StreamBm25.fingerprintState(s, d).isDefined),
-        extraNeeds = StreamBm25.compactionCandidates(s, d).nonEmpty)),
-      sinks.ivf.map { case (d, _, _) => row("ivf", d, 0L,
-        Some(StreamIvf.fingerprintState(s, d).isDefined),
-        extraNeeds = false)
-      },
-      sinks.clustersDir.map(d => row("clusters", d, 0L, None,
-        extraNeeds = StreamClusters.needsCompaction(s, d))),
-      sinks.containmentDir.map(d => row("containment", d, 0L, None,
-        extraNeeds = false)),
-      sinks.ngramDf.map { case (d, _) => row("ngram_df", d, 0L, None,
-        extraNeeds = false)
-      }).flatten
-    require(rows.nonEmpty,
-      "maintenanceReport needs at least one configured sink")
-    rows.reduce(_ unionByName _)
+  def maintenanceReport(s: SparkSession, sinks: Sinks): DataFrame =
+    union("maintenanceReport", reported(s, sinks).map(health(s, _)._1))
+
+  /** One sink's [[maintenanceReport]] row (a frame of literals read
+    * now) and its fold trigger. */
+  private def health(s: SparkSession, m: Managed): (DataFrame, Boolean) = {
+    val l = Manifest.readLiveWithGen(s, m.dir).map(_._2)
+    val (nd, nt, na) = l
+      .map(x => (x.data.size.toLong, x.tombs.size.toLong, x.aux.size.toLong))
+      .getOrElse((0L, 0L, 0L))
+    val needs = l.isDefined &&
+      (nt > 0 || nd >= MaxLiveParts || m.extraNeeds())
+    // an unborn sink has no coverage to judge: fingerprint_ok stays
+    // NULL until the first commit, like the no-checksum sinks
+    val fp = if (l.isEmpty) None else m.fingerprintOk()
+    (s.range(1).select(lit(m.name).as("sink"),
+      lit(nd).as("n_data"), lit(nt).as("n_tombstones"), lit(na).as("n_aux"),
+      lit(Manifest.generations(s, m.dir).size.toLong).as("n_generations"),
+      lit(m.quarantined()).as("n_quarantined"),
+      fp.map(b => lit(b)).getOrElse(lit(null)).cast("boolean")
+        .as("fingerprint_ok"),
+      lit(needs).as("needs_compaction")), needs)
   }
 
   /** RETENTION DRY RUN across the configured sinks — what WOULD a
@@ -343,33 +295,14 @@ object Takedown {
     * leftovers an `includeOrphans` pass would also take. Pure manifest
     * metadata + directory listings — zero data reads, zero writes. */
   def retentionReport(s: SparkSession, sinks: Sinks,
-                      retainMillis: Option[Long] = None): DataFrame = {
-    def row(sink: String, plan: Option[(Long, Long, Long, Long)])
-        : DataFrame = {
-      val (g, e, r, o) = plan.getOrElse((0L, 0L, 0L, 0L))
-      s.range(1).select(lit(sink).as("sink"),
+                      retainMillis: Option[Long] = None): DataFrame =
+    union("retentionReport", reported(s, sinks).map { m =>
+      val (g, e, r, o) = m.sink.vacuumPlan(s, m.dir, retainMillis)
+        .getOrElse((0L, 0L, 0L, 0L))
+      s.range(1).select(lit(m.name).as("sink"),
         lit(g).as("n_generations"), lit(e).as("n_expire"),
         lit(r).as("n_reclaimable"), lit(o).as("n_orphans"))
-    }
-    val rows = Seq(
-      sinks.curateDir.map(d => row("corpus",
-        StreamCurate.vacuumPlan(s, d, retainMillis))),
-      sinks.bm25Dir.map(d => row("bm25",
-        StreamBm25.vacuumPlan(s, d, retainMillis))),
-      sinks.ivf.map { case (d, _, _) => row("ivf",
-        StreamIvf.vacuumPlan(s, d, retainMillis))
-      },
-      sinks.clustersDir.map(d => row("clusters",
-        StreamClusters.vacuumPlan(s, d, retainMillis))),
-      sinks.containmentDir.map(d => row("containment",
-        StreamContainment.vacuumPlan(s, d, retainMillis))),
-      sinks.ngramDf.map { case (d, _) => row("ngram_df",
-        StreamNgramDf.vacuumPlan(s, d, retainMillis))
-      }).flatten
-    require(rows.nonEmpty,
-      "retentionReport needs at least one configured sink")
-    rows.reduce(_ unionByName _)
-  }
+    })
 
   /** BYTES-level retention dry run — [[retentionReport]] plus what the
     * vacuum actually gives BACK: (sink, n_generations, n_expire,
@@ -386,35 +319,15 @@ object Takedown {
     * index. Zero data reads, zero Spark jobs beyond the literal report
     * rows. */
   def retentionBytesReport(s: SparkSession, sinks: Sinks,
-                           retainMillis: Option[Long] = None): DataFrame = {
-    def row(sink: String,
-            plan: Option[(Long, Long, Long, Long, Long, Long)])
-        : DataFrame = {
-      val (g, e, r, o, rb, ob) = plan.getOrElse((0L, 0L, 0L, 0L, 0L, 0L))
-      s.range(1).select(lit(sink).as("sink"),
+                           retainMillis: Option[Long] = None): DataFrame =
+    union("retentionBytesReport", reported(s, sinks).map { m =>
+      val (g, e, r, o, rb, ob) = m.sink.vacuumPlanBytes(s, m.dir, retainMillis)
+        .getOrElse((0L, 0L, 0L, 0L, 0L, 0L))
+      s.range(1).select(lit(m.name).as("sink"),
         lit(g).as("n_generations"), lit(e).as("n_expire"),
         lit(r).as("n_reclaimable"), lit(rb).as("bytes_reclaimable"),
         lit(o).as("n_orphans"), lit(ob).as("bytes_orphans"))
-    }
-    val rows = Seq(
-      sinks.curateDir.map(d => row("corpus",
-        StreamCurate.vacuumPlanBytes(s, d, retainMillis))),
-      sinks.bm25Dir.map(d => row("bm25",
-        StreamBm25.vacuumPlanBytes(s, d, retainMillis))),
-      sinks.ivf.map { case (d, _, _) => row("ivf",
-        StreamIvf.vacuumPlanBytes(s, d, retainMillis))
-      },
-      sinks.clustersDir.map(d => row("clusters",
-        StreamClusters.vacuumPlanBytes(s, d, retainMillis))),
-      sinks.containmentDir.map(d => row("containment",
-        StreamContainment.vacuumPlanBytes(s, d, retainMillis))),
-      sinks.ngramDf.map { case (d, _) => row("ngram_df",
-        StreamNgramDf.vacuumPlanBytes(s, d, retainMillis))
-      }).flatten
-    require(rows.nonEmpty,
-      "retentionBytesReport needs at least one configured sink")
-    rows.reduce(_ unionByName _)
-  }
+    })
 
   /** [[attest]] addressed by CONTENT — the DMCA-shaped PROOF: the
     * request's bytes are digested and resolved to every corpus id ever
@@ -458,55 +371,11 @@ object Takedown {
     * retention is the legal dial and [[reclaim]] owns it. Idempotent:
     * a fold clears its own trigger, so the next run acts on nothing. */
   def maintain(s: SparkSession, sinks: Sinks): DataFrame = {
-    val rep = maintenanceReport(s, sinks).collect()
-    val need = rep.filter(_.getBoolean(7)).map(_.getString(0)).toSet
-    if (need("corpus")) sinks.curateDir.foreach(d =>
-      StreamCurate.compact(s, d, StreamCurate.nextCompactId(s, d),
-        clusterBins = sinks.curateClusterBins))
-    if (need("bm25")) sinks.bm25Dir.foreach { d =>
-      val tombed = Manifest.readLiveWithGen(s, d).map(_._2)
-        .exists(_.tombs.nonEmpty)
-      val cands = StreamBm25.compactionCandidates(s, d)
-      val target =
-        if (tombed || cands.isEmpty)
-          // tombstones force a full fold (masks must absorb). A fired
-          // trigger with an EMPTY tiered candidate set (delta chain at
-          // MaxLiveParts made of segments the tiered rule keeps) must
-          // also fold fully: acting on nothing would leave the trigger
-          // set forever and re-act every run, breaking the documented
-          // "a fold clears its own trigger" idempotency (ADVICE r12).
-          Manifest.read(s, d).getOrElse(Set())
-        else cands
-      if (target.nonEmpty)
-        StreamBm25.compactSet(s, d, target,
-          into = StreamBm25.nextMergedId(s, d))
-    }
-    if (need("ivf")) sinks.ivf.foreach { case (d, idCol, vecCol) =>
-      StreamIvf.compactAll(s, d, StreamIvf.nextCompactId(s, d),
-        idCol, vecCol)
-    }
-    if (need("clusters")) sinks.clustersDir.foreach(d =>
-      StreamClusters.compact(s, d, StreamClusters.nextCompactId(s, d)))
-    if (need("containment")) sinks.containmentDir.foreach(d =>
-      StreamContainment.compact(s, d,
-        StreamContainment.nextCompactId(s, d)))
-    if (need("ngram_df")) sinks.ngramDf.foreach { case (d, _) =>
-      StreamNgramDf.compact(s, d, StreamNgramDf.nextCompactId(s, d))
-    }
-    rep.map { r =>
-      val fp: Option[Boolean] =
-        if (r.isNullAt(6)) None else Some(r.getBoolean(6))
-      s.range(1).select(lit(r.getString(0)).as("sink"),
-        lit(r.getLong(1)).as("n_data"),
-        lit(r.getLong(2)).as("n_tombstones"),
-        lit(r.getLong(3)).as("n_aux"),
-        lit(r.getLong(4)).as("n_generations"),
-        lit(r.getLong(5)).as("n_quarantined"),
-        fp.map(b => lit(b)).getOrElse(lit(null)).cast("boolean")
-          .as("fingerprint_ok"),
-        lit(r.getBoolean(7)).as("needs_compaction"),
-        lit(need(r.getString(0))).as("acted"))
-    }.reduce(_ unionByName _)
+    val rows = reported(s, sinks).map(m => (m, health(s, m)))
+    rows.foreach { case (m, (_, needs)) => if (needs) m.fold(true) }
+    union("maintain", rows.map { case (_, (row, needs)) =>
+      row.withColumn("acted", lit(needs))
+    })
   }
 
   /** [[maintain]] on a Structured Streaming TRIGGER — the maintainer as
@@ -550,36 +419,111 @@ object Takedown {
   /** Phase 2 — physical reclaim: fold every configured sink (the merge
     * absorbs masks and negative deltas) and vacuum its history under
     * `retainMillis` (None = expire everything but the latest snapshot
-    * — forgetting is immediately irreversible). */
+    * — forgetting is immediately irreversible), in cascade order. A
+    * configured sink with no committed state (unborn, or holding only
+    * its empty birth commit) is skipped — deployed but empty, as
+    * [[attest]] and the reports read it: nothing to fold or expire, no
+    * id claimed, nothing created under its dir, and the sinks after it
+    * are still reclaimed. */
   def reclaim(s: SparkSession, sinks: Sinks,
-              retainMillis: Option[Long] = None): Unit = {
-    sinks.ngramDf.foreach { case (dir, _) =>
-      StreamNgramDf.compact(s, dir, StreamNgramDf.nextCompactId(s, dir))
-      StreamNgramDf.vacuum(s, dir, retainMillis = retainMillis)
+              retainMillis: Option[Long] = None): Unit =
+    configured(s, sinks).foreach { m =>
+      if (Manifest.read(s, m.dir).exists(_.nonEmpty)) {
+        m.fold(false)
+        m.sink.vacuum(s, m.dir, retainMillis = retainMillis)
+      }
     }
-    sinks.bm25Dir.foreach { d =>
-      StreamBm25.compactSet(s, d, Manifest.read(s, d).getOrElse(Set()),
-        into = StreamBm25.nextMergedId(s, d))
-      StreamBm25.vacuum(s, d, retainMillis = retainMillis)
-    }
-    sinks.ivf.foreach { case (d, idCol, vecCol) =>
-      StreamIvf.compactAll(s, d, StreamIvf.nextCompactId(s, d),
-        idCol, vecCol)
-      StreamIvf.vacuum(s, d, retainMillis = retainMillis)
-    }
-    sinks.clustersDir.foreach { d =>
-      StreamClusters.compact(s, d, StreamClusters.nextCompactId(s, d))
-      StreamClusters.vacuum(s, d, retainMillis = retainMillis)
-    }
-    sinks.containmentDir.foreach { d =>
-      StreamContainment.compact(s, d,
-        StreamContainment.nextCompactId(s, d))
-      StreamContainment.vacuum(s, d, retainMillis = retainMillis)
-    }
-    sinks.curateDir.foreach { d =>
-      StreamCurate.compact(s, d, StreamCurate.nextCompactId(s, d),
-        clusterBins = sinks.curateClusterBins)
-      StreamCurate.vacuum(s, d, retainMillis = retainMillis)
-    }
+
+  /** One configured sink as the maintenance verbs see it: its report
+    * name, dir and [[ManagedSink]] layout, plus the per-sink parts —
+    *
+    *   - `served`: the entities [[attest]] counts and their key column
+    *     (None = no committed state);
+    *   - `quarantined`: rows waiting in the admission outbox;
+    *   - `fingerprintOk`: whether the maintained checksum covers every
+    *     live partition (None = the sink keeps none);
+    *   - `extraNeeds`: the sink's own fold trigger, beyond masks and
+    *     delta-chain depth;
+    *   - `fold`: fold the live partitions into a merged base; `tiered`
+    *     lets BM25 fold just its small-segment candidates. */
+  private case class Managed(
+      name: String, dir: String, sink: ManagedSink,
+      served: () => Option[(DataFrame, String)],
+      quarantined: () => Long = () => 0L,
+      fingerprintOk: () => Option[Boolean] = () => None,
+      extraNeeds: () => Boolean = () => false,
+      fold: Boolean => Unit)
+
+  /** The configured sinks in CASCADE ORDER ([[forget]]): the ngram-df
+    * sink first, the id-keyed derivatives next, the corpus last. */
+  private def configured(s: SparkSession, sinks: Sinks): Seq[Managed] = Seq(
+    sinks.ngramDf.map { case (d, _) => Managed("ngram_df", d, StreamNgramDf,
+      served = () => StreamNgramDf.countedIds(s, d).map(_ -> "id"),
+      fold = _ => StreamNgramDf.compact(s, d,
+        StreamNgramDf.nextCompactId(s, d)))
+    },
+    sinks.bm25Dir.map(d => Managed("bm25", d, StreamBm25,
+      served = () => StreamBm25.load(s, d)
+        .map(_.postings.select("key").distinct() -> "key"),
+      fingerprintOk = () => Some(StreamBm25.fingerprintState(s, d).isDefined),
+      extraNeeds = () => StreamBm25.compactionCandidates(s, d).nonEmpty,
+      fold = tiered => foldBm25(s, d, tiered))),
+    sinks.ivf.map { case (d, idCol, vecCol) => Managed("ivf", d, StreamIvf,
+      served = () => StreamIvf.load(s, d, idCol, vecCol)
+        .map(_.postings.select(idCol).distinct() -> idCol),
+      fingerprintOk = () => Some(StreamIvf.fingerprintState(s, d).isDefined),
+      fold = _ => StreamIvf.compactAll(s, d, StreamIvf.nextCompactId(s, d),
+        idCol, vecCol))
+    },
+    sinks.clustersDir.map(d => Managed("clusters", d, StreamClusters,
+      served = () => StreamClusters.load(s, d).map(_ -> "id"),
+      extraNeeds = () => StreamClusters.needsCompaction(s, d),
+      fold = _ => StreamClusters.compact(s, d,
+        StreamClusters.nextCompactId(s, d)))),
+    sinks.containmentDir.map(d => Managed("containment", d, StreamContainment,
+      served = () => StreamContainment.loadSets(s, d).map(_ -> "__cid"),
+      fold = _ => StreamContainment.compact(s, d,
+        StreamContainment.nextCompactId(s, d)))),
+    sinks.curateDir.map(d => Managed("corpus", d, StreamCurate,
+      served = () => StreamCurate.load(s, d).map(_ -> sinks.idCol),
+      quarantined = () =>
+        StreamCurate.quarantine(s, d).map(_.count()).getOrElse(0L),
+      fingerprintOk = () =>
+        Some(StreamCurate.fingerprintState(s, d).isDefined),
+      fold = _ => StreamCurate.compact(s, d, StreamCurate.nextCompactId(s, d),
+        clusterBins = sinks.curateClusterBins)))
+  ).flatten
+
+  /** Row order of the per-sink reports: the corpus first, ngram-df last. */
+  private val ReportOrder =
+    Seq("corpus", "bm25", "ivf", "clusters", "containment", "ngram_df")
+
+  private def reported(s: SparkSession, sinks: Sinks): Seq[Managed] =
+    configured(s, sinks).sortBy(m => ReportOrder.indexOf(m.name))
+
+  /** The per-sink rows of a report verb as one frame. */
+  private def union(verb: String, rows: Seq[DataFrame]): DataFrame = {
+    require(rows.nonEmpty, s"$verb needs at least one configured sink")
+    rows.reduce(_ unionByName _)
+  }
+
+  /** BM25's fold. Tombstones force a FULL fold (masks must absorb); a
+    * `tiered` fold otherwise takes just the small-segment candidates. A
+    * fired trigger with an EMPTY candidate set (a delta chain at
+    * [[MaxLiveParts]] made of segments the tiered rule keeps) folds
+    * fully too: acting on nothing would leave the trigger set forever
+    * and re-act every run, breaking "a fold clears its own trigger"
+    * (ADVICE r12). */
+  private def foldBm25(s: SparkSession, dir: String, tiered: Boolean)
+      : Unit = {
+    val cands =
+      if (!tiered || Manifest.readLiveWithGen(s, dir)
+            .exists(_._2.tombs.nonEmpty)) Set.empty[Int]
+      else StreamBm25.compactionCandidates(s, dir)
+    val target =
+      if (cands.nonEmpty) cands else Manifest.read(s, dir).getOrElse(Set())
+    if (target.nonEmpty)
+      StreamBm25.compactSet(s, dir, target,
+        into = StreamBm25.nextMergedId(s, dir))
   }
 }

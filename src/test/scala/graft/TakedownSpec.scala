@@ -329,6 +329,21 @@ class TakedownSpec extends AnyFunSuite with SharedSpark {
     assert(abc("corpus") == ((5L, 1L)) && abc("bm25") == ((5L, 1L)) &&
       abc("ngram_df") == ((5L, 1L)),
       s"still-served bytes must attest residual 1, deleted bytes 0: $abc")
+    // reclaim with the same configured-but-empty sink: skipped as
+    // deployed-but-empty — nothing created under its dir, and the sinks
+    // after it in the cascade (the corpus, last) are still reclaimed
+    val unbuilt = s"$root/cont_unbuilt"
+    Takedown.reclaim(spark, sinks.copy(containmentDir = Some(unbuilt)))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(unbuilt)),
+      "reclaim must create nothing under an unborn sink")
+    Seq(sinks.ngramDf.get._1, sinks.bm25Dir.get, sinks.curateDir.get)
+      .foreach { d =>
+        assert(Manifest.generations(spark, d).size == 1,
+          s"$d must be folded and vacuumed to one generation")
+        assert(Manifest.readLiveWithGen(spark, d).get._2.tombs.isEmpty,
+          s"$d: the fold must absorb the tombstone")
+      }
+    assert(StreamCurate.load(spark, sinks.curateDir.get).get.count() == 5L)
   }
 
   test("retentionBytesReport: ledgered bytes equal a live recompute; vacuum takes exactly what the report priced") {
@@ -336,7 +351,11 @@ class TakedownSpec extends AnyFunSuite with SharedSpark {
     val root = java.nio.file.Files.createTempDirectory("takedown_b").toString
     val sinks = Takedown.Sinks(
       curateDir = Some(s"$root/corpus"),
-      bm25Dir = Some(s"$root/bm25"))
+      bm25Dir = Some(s"$root/bm25"),
+      ivf = Some((s"$root/ivf", "doc_id", "vec")),
+      clustersDir = Some(s"$root/cc"),
+      containmentDir = Some(s"$root/cont"),
+      ngramDf = Some((s"$root/ngdf", 3)))
     val body = "the quick brown fox jumps over the lazy dog near the "
     val docs = (1L to 12L).map(i => (i, body + s"marker$i tail$i", 200))
       .toDF("doc_id", "text", "n_chars")
@@ -346,9 +365,31 @@ class TakedownSpec extends AnyFunSuite with SharedSpark {
         x => x.select("doc_id", "text"))
       StreamBm25.appendBatch(sinks.bm25Dir.get,
         b.select("doc_id", "text"), i.toLong, "doc_id", "text")
+      StreamIvf.appendBatch(sinks.ivf.get._1,
+        b.select(col("doc_id"),
+          array((0 to 3).map(j => pmod(col("doc_id") * (j + 3), lit(7))
+            .cast("double") + 0.1): _*).as("vec")),
+        i.toLong, "doc_id", "vec", nCells = 2)
+      StreamClusters.appendBatch(sinks.clustersDir.get,
+        b.select(col("doc_id").as("id1"),
+          (col("doc_id") % 3 + 100L).as("id2")), i.toLong)
+      StreamContainment.appendBatch(sinks.containmentDir.get,
+        b.select("doc_id", "text"), i.toLong)
+      StreamNgramDf.appendBatch(sinks.ngramDf.get._1,
+        b.select("doc_id", "text"), i.toLong)
     }
     Takedown.forget(spark, Seq(3L).toDF("doc_id"), sinks)
-    Takedown.maintain(spark, sinks) // fold strands the pre-fold history
+    // the maintainer folds the four mask sinks, which strands their
+    // pre-fold history; the two LSM sinks (netted deltas) are folded by
+    // hand so every sink has history to price
+    val acted = Takedown.maintain(spark, sinks).collect()
+      .filter(_.getBoolean(8)).map(_.getString(0)).toSet
+    assert(acted == Set("corpus", "bm25", "ivf", "clusters"), s"$acted")
+    val cont = sinks.containmentDir.get
+    StreamContainment.compact(spark, cont,
+      StreamContainment.nextCompactId(spark, cont))
+    val ngdf = sinks.ngramDf.get._1
+    StreamNgramDf.compact(spark, ngdf, StreamNgramDf.nextCompactId(spark, ngdf))
     def rep() = Takedown.retentionBytesReport(spark, sinks).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
@@ -379,20 +420,33 @@ class TakedownSpec extends AnyFunSuite with SharedSpark {
     }
     assert(r1("corpus")._1 > 0 && r1("corpus")._2 == expected,
       s"corpus bytes must equal the live recompute ($expected): $r1")
-    assert(r1("bm25")._1 > 0 && r1("bm25")._2 > 0, s"bm25 must price: $r1")
+    assert(r1.keySet == Set("corpus", "bm25", "ivf", "clusters",
+      "containment", "ngram_df") &&
+      r1.values.forall(v => v._1 > 0 && v._2 > 0),
+      s"every folded sink must price: $r1")
     assert(r1.values.forall(v => v._3 == 0L && v._4 == 0L),
       s"no orphans in a clean lifecycle: $r1")
     // ledger stability: the second call serves the memoized sizes and
     // must agree byte-for-byte with the first (which listed live)
     assert(rep() == r1, "ledgered sizes must equal the listing pass")
-    // vacuum takes exactly the priced set: a fresh report reclaims
-    // nothing and prices nothing, and the serve is unmoved
+    // vacuum takes exactly the priced set, sink by sink: after each
+    // sink's vacuum its dry run reclaims nothing and prices nothing,
+    // the sinks not yet vacuumed still price what they did, and the
+    // serve is unmoved
     val served = StreamCurate.load(spark, cdir).get.count()
-    StreamCurate.vacuum(spark, cdir)
-    StreamBm25.vacuum(spark, sinks.bm25Dir.get)
-    val r2 = rep()
-    assert(r2.values.forall(v => v._1 == 0L && v._2 == 0L),
-      s"post-vacuum dry run must find nothing priced: $r2")
+    val bySink = Seq[(String, ManagedSink, String)](
+      ("corpus", StreamCurate, cdir), ("bm25", StreamBm25, sinks.bm25Dir.get),
+      ("ivf", StreamIvf, sinks.ivf.get._1),
+      ("clusters", StreamClusters, sinks.clustersDir.get),
+      ("containment", StreamContainment, cont), ("ngram_df", StreamNgramDf, ngdf))
+    bySink.zipWithIndex.foreach { case ((k, sink, dir), i) =>
+      sink.vacuum(spark, dir)
+      val r2 = rep()
+      assert(r2(k)._1 == 0L && r2(k)._2 == 0L,
+        s"post-vacuum dry run must find nothing priced for $k: $r2")
+      bySink.drop(i + 1).foreach { case (later, _, _) =>
+        assert(r2(later) == r1(later), s"vacuuming $k moved $later: $r2") }
+    }
     assert(StreamCurate.load(spark, cdir).get.count() == served)
   }
 
