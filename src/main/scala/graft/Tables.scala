@@ -1,17 +1,72 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata tables (TESTDATA.md / FIXTURES.md §2).
   *
   * All reads are plain parquet scans: schema-on-read, column pruning and
   * predicate pushdown are delegated to the vectorized parquet reader —
   * callers `.select`/`.filter` early so pushdown reaches the scan.
+  *
+  * Every committed input table is read through [[parquet]], which infers
+  * a table's schema once and hands it to later reads. Without a schema,
+  * each `spark.read.parquet` launches a Spark job to read footers, so
+  * building any query that loads a table paid one job per load, even for
+  * a table the session had read many times. The memo is keyed by what
+  * the inferred schema depends on: the path, the leaf files under it
+  * (name, length, mtime — a rewritten table is inferred again) and the
+  * session's explicitly set parquet reader settings (`events` sets
+  * `nanosAsLong`, which changes the type `ts` reads as). Only schemas
+  * are kept, and each comes from Spark's own inference, so a table's
+  * first read in the JVM still pays for that inference ([[warm]] pays it
+  * in setup).
   */
 object Tables {
+  /** (path, sorted leaf listing, sorted reader settings) */
+  private type SchemaKey = (String, Seq[(String, Long, Long)], Seq[(String, String)])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  private def readerSetting(key: String): Boolean =
+    key.startsWith("spark.sql.parquet.") ||
+      key.startsWith("spark.sql.legacy.parquet.") ||
+      key == "spark.sql.caseSensitive"
+
+  /** The one reader for committed input parquet: `spark.read.parquet`
+    * with the schema supplied when this listing was already inferred
+    * under the same reader settings. A path with no file to list is read
+    * the ordinary way, so its error is Spark's own. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val files =
+      try {
+        val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+          .toSeq.sorted
+      } catch { case _: java.io.FileNotFoundException => Nil }
+    if (files.isEmpty) spark.read.parquet(path)
+    else {
+      val settings = spark.conf.getAll.filter(kv => readerSetting(kv._1))
+        .toSeq.sorted
+      val key: SchemaKey = (path, files, settings)
+      Option(schemas.get(key)) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          schemas.put(key, df.schema)
+          df
+      }
+    }
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -59,9 +114,10 @@ object Tables {
 
   /** Touch every table once (file footers, codegen, JIT) so the timings
     * that follow measure queries, not session cold start. Goes through
-    * the loaders, so `events` gets its schema-adaptive `ts` handling. A
-    * table that fails to load is named on stderr and the warm-up moves on
-    * to the next one. */
+    * the loaders, so `events` gets its schema-adaptive `ts` handling, and
+    * each table's inferred schema seeds [[parquet]]'s memo. A table that
+    * fails to load is named on stderr and the warm-up moves on to the
+    * next one. */
   def warm(s: SparkSession, d: String): Unit =
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { name =>

@@ -179,7 +179,7 @@ object ExtQ {
             "doc_id")
           graft.streaming.StreamBm25.compactSet(s, dir,
             graft.streaming.Manifest.read(s, dir).get,
-            into = graft.streaming.StreamBm25.nextMergedId(s, dir))
+            into = graft.streaming.StreamBm25.nextCompactId(s, dir))
         }
         val dir = graft.ArtifactStore.dirArtifact(d, "x57segs", spec) match {
           case Some((p, true)) => p.toString
@@ -230,7 +230,7 @@ object ExtQ {
             "doc_id", blockRecrawl = true)
           graft.streaming.StreamBm25.compactSet(s, dir,
             graft.streaming.Manifest.read(s, dir).get,
-            into = graft.streaming.StreamBm25.nextMergedId(s, dir))
+            into = graft.streaming.StreamBm25.nextCompactId(s, dir))
           // the re-crawl AFTER reclaim: same keys, same bytes — the
           // blocklist (not the long-gone tombstone) keeps them out
           graft.streaming.StreamBm25.appendBatch(dir,
@@ -313,7 +313,7 @@ object ExtQ {
             docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
             "doc_id")
           graft.streaming.StreamBm25.compactSet(s, dir, Set(0, 1),
-            into = graft.streaming.StreamBm25.nextMergedId(s, dir))
+            into = graft.streaming.StreamBm25.nextCompactId(s, dir))
         }
         graft.ArtifactStore.dirArtifact(d, "st17bm25fp", spec) match {
           case Some((p, true)) => p.toString

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.RefFixtureGen
+import graft.{RefFixtureGen, Tables}
 import graft.backtest._
 import graft.functions.ProductAgg
 import graft.ops.TimeSeries
@@ -40,7 +40,7 @@ object ReplayQ {
     * shuffles by pair key and scales to millions of pairs. */
   private[queries] def brkBars(s: SparkSession): Dataset[PairBar] = {
     import s.implicits._
-    val daily = s.read.parquet(s"$fixDir/quotes_daily.parquet")
+    val daily = Tables.parquet(s, s"$fixDir/quotes_daily.parquet")
     val a = daily.filter(col("ticker") === "BRK-A")
       .select(col("ts"), col("close").as("a"))
     val b = daily.filter(col("ticker") === "BRK-B")
@@ -75,7 +75,7 @@ object ReplayQ {
     * ≥1 "." ticker, assign listing indices in pandas dropna order (base =
     * first non-null column) and FX-convert flag = ticker contains ".". */
   private[graft] def intradayQuotes(s: SparkSession): DataFrame = {
-    val dim = s.read.parquet(s"$fixDir/stocks_dim.parquet")
+    val dim = Tables.parquet(s, s"$fixDir/stocks_dim.parquet")
     val entries = array(RefFixtureGen.Exchanges.zipWithIndex.map {
       case (e, i) => struct(lit(i).as("ord"), col(e).as("ticker"))
     }: _*)
@@ -94,7 +94,7 @@ object ReplayQ {
       .withColumn("company", regexp_extract(col("Company"), "(\\d+)", 1).cast("long"))
       .withColumn("convert", col("ticker").contains("."))
       .select("company", "listing", "convert", "ticker")
-    s.read.parquet(s"$fixDir/quotes_5m.parquet")
+    Tables.parquet(s, s"$fixDir/quotes_5m.parquet")
       .join(listed, "ticker")
       .select(col("company"), col("listing"), col("convert"), col("ts"),
         col("close").as("price"))
@@ -123,7 +123,7 @@ object ReplayQ {
           "v1 bal=1000 minDev=0.1 sl=0.03 trig=0.01 size=0.1pct") {
           val ticks = IntradayPipeline.companyTicks(
             intradayQuotes(s),
-            Some(s.read.parquet(s"$fixDir/fx_5m.parquet")),
+            Some(Tables.parquet(s, s"$fixDir/fx_5m.parquet")),
             refBlocks(s))
           IntradayBacktest.run(ticks, bal = 1000.0, minDeviation = 0.1,
             slPercent = 0.03, triggerRange = 0.01, tradeSize = 0.1,

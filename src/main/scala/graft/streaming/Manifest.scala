@@ -151,17 +151,8 @@ object Manifest {
   /** [[readAt]] with explicit partition families. `gen = None` →
     * latest; throws on a missing generation like [[readAt]]. */
   def readLiveAt(s: SparkSession, root: String, gen: Option[Int])
-      : Option[Live] = {
-    val fs = fsOf(s, root)
-    val all = gens(fs, root)
-    val pick = gen match {
-      case None => all.lastOption
-      case Some(g) =>
-        Some(all.find(_._1 == g).getOrElse(throw new IllegalArgumentException(
-          s"no manifest generation $g at $root (have ${all.map(_._1)})")))
-    }
-    pick.map { case (_, p) => parseLive(fs, p) }
-  }
+      : Option[Live] =
+    parseAt(s, root, gen)(parseLive)
 
   /** The live set AT a generation — TIME TRAVEL over the maintained
     * index (the Iceberg/Delta snapshot-read idea on this layout): every
@@ -174,7 +165,13 @@ object Manifest {
     * missing generation (a pinned reader must fail loudly, not silently
     * serve a different snapshot). */
   def readAt(s: SparkSession, root: String, gen: Option[Int])
-      : Option[Set[Int]] = {
+      : Option[Set[Int]] =
+    parseAt(s, root, gen)(parse)
+
+  /** Parse generation `gen` (None = latest) of `root`'s manifest; None =
+    * legacy (no generation committed). Throws on a missing generation. */
+  private def parseAt[T](s: SparkSession, root: String, gen: Option[Int])(
+      parse: (FileSystem, Path) => T): Option[T] = {
     val fs = fsOf(s, root)
     val all = gens(fs, root)
     val pick = gen match {

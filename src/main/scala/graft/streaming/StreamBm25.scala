@@ -46,7 +46,7 @@ object StreamBm25 extends ManagedSink {
     FpState.fpDir(dir) -> "batch_id=")
 
   /** The id ledger: segment stats, tombstones and blocklist partitions
-    * share it, so [[nextMergedId]] allocates every maintainer family
+    * share it, so [[nextCompactId]] allocates every maintainer family
     * from one union and families can never collide. Flat
     * pre-partition-layout stats files are covered by
     * [[migrateLegacyStats]], which every writer runs first. */
@@ -276,7 +276,7 @@ object StreamBm25 extends ManagedSink {
     * StreamBm25Spec pins the disk form).
     *
     * `into` must be a FRESH NEGATIVE id (engine batch ids own the
-    * non-negative namespace — [[nextMergedId]] picks one): the merged
+    * non-negative namespace — [[nextCompactId]] picks one): the merged
     * artifacts are STAGED (unreadable), then one atomic [[Manifest]]
     * flip makes the merged segment visible and the folded segments
     * invisible in the same instant — a crash at any point cannot
@@ -483,7 +483,7 @@ object StreamBm25 extends ManagedSink {
       val tsId =
         if (nDel == 0) None
         else {
-          val id = nextMergedId(s, dir)
+          val id = nextCompactId(s, dir)
           del.coalesce(1) // tombstones are takedown-sized
             .write.mode("overwrite").parquet(s"${tombDir(dir)}/ts_id=$id")
           // NEGATIVE fingerprint partial: the (key, dl) doc rows this
@@ -503,7 +503,7 @@ object StreamBm25 extends ManagedSink {
       val blId =
         if (nBlock == 0) None
         else {
-          val id = nextMergedId(s, dir)
+          val id = nextCompactId(s, dir)
           blockAdds.get.coalesce(1).write.mode("overwrite")
             .parquet(s"${blockDir(dir)}/bl_id=$id")
           Some(id)
@@ -722,7 +722,4 @@ object StreamBm25 extends ManagedSink {
     migrateLegacyStats(s, dir)
     super.nextCompactId(s, dir)
   }
-
-  /** [[nextCompactId]] under its BM25 name (merged segments). */
-  def nextMergedId(s: SparkSession, dir: String): Int = nextCompactId(s, dir)
 }

@@ -61,11 +61,6 @@ object StreamCurate extends ManagedSink {
   // family's member of the maintained-artifact streaming set (st6/st7
   // sparse index, st8 dense index, st9 curated corpus).
 
-  /** [[Takedown.MaxPushdownKeys]]'s rationale: key sets at or below
-    * this size reach scans as isin predicates (row-group pruning);
-    * larger ones fall back to a semi-join. */
-  private val maxPushdownKeys = 100000
-
   /** Byte budget for an inlined isin literal list (a guard on top of
     * the key-count cap: even the id column could be a wide string). */
   private val maxPushdownBytes = 8L << 20
@@ -512,14 +507,14 @@ object StreamCurate extends ManagedSink {
             def probeA(keys: DataFrame, key: String): DataFrame = {
               val vals =
                 if (key == idCol) keys.select(key).distinct()
-                  .limit(maxPushdownKeys + 1).collect().map(_.get(0))
+                  .limit(Takedown.MaxPushdownKeys + 1).collect().map(_.get(0))
                 else Array.empty[Any]
               val bytes = vals.iterator.map {
                 case s: String => 16L + 2L * s.length
                 case b: Array[Byte] => 16L + b.length
                 case _ => 16L
               }.sum
-              if (key == idCol && vals.length <= maxPushdownKeys &&
+              if (key == idCol && vals.length <= Takedown.MaxPushdownKeys &&
                   bytes <= maxPushdownBytes)
                 pa.filter(col(key).isInCollection(vals))
               else pa.join(broadcast(keys.select(key).distinct()),

@@ -524,6 +524,6 @@ object Takedown {
       if (cands.nonEmpty) cands else Manifest.read(s, dir).getOrElse(Set())
     if (target.nonEmpty)
       StreamBm25.compactSet(s, dir, target,
-        into = StreamBm25.nextMergedId(s, dir))
+        into = StreamBm25.nextCompactId(s, dir))
   }
 }

@@ -73,7 +73,7 @@ class BranchIngestSpec extends AnyFunSuite with SharedSpark {
         docs.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
       graft.streaming.StreamBm25.compactSet(spark, dir,
         graft.streaming.Manifest.read(spark, dir).get,
-        into = graft.streaming.StreamBm25.nextMergedId(spark, dir))
+        into = graft.streaming.StreamBm25.nextCompactId(spark, dir))
     }
     val scratch = tmp("graft-bis-bm-scratch-").toString
     ingest(scratch); verbs(scratch)

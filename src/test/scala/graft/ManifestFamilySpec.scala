@@ -53,7 +53,7 @@ class ManifestFamilySpec extends AnyFunSuite with SharedSpark {
         i.toLong, "doc_id", "text")
     }
     // full fold into a claimed merged id
-    val into = StreamBm25.nextMergedId(spark, dir)
+    val into = StreamBm25.nextCompactId(spark, dir)
     StreamBm25.compactSet(spark, dir, Set(0, 1), into)
     // simulate the crashed-delete orphan the old directory-probe
     // classification was vulnerable to: a ts_id dir under the SAME id
@@ -93,7 +93,7 @@ class ManifestFamilySpec extends AnyFunSuite with SharedSpark {
         i.toLong, "doc_id", "text")
     }
     StreamBm25.compactSet(spark, dir, Set(0, 1, 2),
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     val gens = Manifest.generations(spark, dir)
     assert(gens.size >= 4)
     // age the two OLDEST generations past the retention window

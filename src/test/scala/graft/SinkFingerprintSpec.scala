@@ -61,12 +61,12 @@ class SinkFingerprintSpec extends AnyFunSuite with SharedSpark {
     // merged partial must carry the RAW folded contributions or the
     // kept negatives would double-subtract
     StreamBm25.compactSet(spark, dir, Set(0, 1),
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     assert(bm25State(dir).contains(bm25Scan(dir)), "after PARTIAL fold")
     // FULL fold: tombstones absorbed, exact base minted
     StreamBm25.compactSet(spark, dir,
       Manifest.read(spark, dir).getOrElse(Set.empty),
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     assert(bm25State(dir).contains(bm25Scan(dir)), "after FULL fold")
     StreamBm25.vacuum(spark, dir)
     assert(bm25State(dir).contains(bm25Scan(dir)), "after vacuum")
@@ -88,7 +88,7 @@ class SinkFingerprintSpec extends AnyFunSuite with SharedSpark {
       "unprovable coverage must refuse, not serve a wrong checksum")
     StreamBm25.compactSet(spark, dir,
       Manifest.read(spark, dir).getOrElse(Set.empty),
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     assert(bm25State(dir).contains(bm25Scan(dir)), "full fold mints the base")
   }
 

@@ -111,7 +111,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
     val wantTotals =
       before.segStats.agg(sum("n_docs"), sum("sum_dl")).collect()(0)
     StreamBm25.compact(spark, dir, upTo = 1,
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     val after = StreamBm25.load(spark, dir).get
     // layout: segs 0,1 folded into merged seg -1; seg 2 untouched
     assert(after.segStats.select("seg_id").as[Int].collect().toSet ==
@@ -203,7 +203,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
             smallFrac = 1.1)
           if (cand.size >= 2)
             StreamBm25.compactSet(spark, dir, cand,
-              into = StreamBm25.nextMergedId(spark, dir))
+              into = StreamBm25.nextCompactId(spark, dir))
         } catch {
           case _: java.util.ConcurrentModificationException =>
             cme.incrementAndGet() // lost the CAS — retry on fresh state
@@ -547,7 +547,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
     //    the live set in the same flip
     StreamBm25.compactSet(spark, dir,
       graft.streaming.Manifest.read(spark, dir).get,
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     val remaining = (corpus.filter(d => d._1 != 2L && d._1 != 5L) :+
       (7L -> "novel basket words"))
     val scratch = searchRows(TextOps.bm25Search(
@@ -579,7 +579,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
     // fold ONLY segments 0 and 1: doc 1 physically reclaimed by the
     // merge; doc 6 still sits in unfolded segment 2 behind the mask
     StreamBm25.compactSet(spark, dir, Set(0, 1),
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     val segs = StreamBm25.load(spark, dir).get
     val keys = segs.postings.select("key").distinct()
       .collect().map(_.getLong(0)).toSet
@@ -632,7 +632,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
       val cand = StreamBm25.compactionCandidates(spark, dir, smallFrac = 1.1)
       if (cand.size >= 2)
         StreamBm25.compactSet(spark, dir, cand,
-          into = StreamBm25.nextMergedId(spark, dir))
+          into = StreamBm25.nextCompactId(spark, dir))
     }
     val deleter = actor { () =>
       // re-deletes no-op; ids whose batch hasn't landed yet are out of
@@ -679,7 +679,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
     // full physical reclaim after the storm → bit-equality with scratch
     StreamBm25.compactSet(spark, dir,
       graft.streaming.Manifest.read(spark, dir).get,
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     assert(servedKeySet() == survivors.map(_._1).toSet)
     val queries = Seq(100L -> "alpha delta", 101L -> "zeta beta")
       .toDF("doc_id", "text")
@@ -707,7 +707,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
     // blocklist (aux family) rides through the flip
     StreamBm25.compactSet(spark, dir,
       graft.streaming.Manifest.read(spark, dir).get,
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     val live = graft.streaming.Manifest.readLiveWithGen(spark, dir).get._2
     assert(live.tombs.isEmpty && live.aux.nonEmpty,
       s"full fold must clear tombstones and keep the blocklist: $live")
@@ -723,7 +723,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
     // second fold: blocklist STILL survives (not a one-fold fluke)
     StreamBm25.compactSet(spark, dir,
       graft.streaming.Manifest.read(spark, dir).get,
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     StreamBm25.appendBatch(dir,
       Seq(2L -> "reborn again").toDF("doc_id", "text"), 101L,
       "doc_id", "text")
@@ -745,7 +745,7 @@ class StreamBm25Spec extends AnyFunSuite with SharedSpark {
       blockRecrawl = true)
     StreamBm25.compactSet(spark, dir,
       graft.streaming.Manifest.read(spark, dir).get,
-      into = StreamBm25.nextMergedId(spark, dir))
+      into = StreamBm25.nextCompactId(spark, dir))
     StreamBm25.appendBatch(dir,
       Seq(1L -> "one reborn").toDF("doc_id", "text"), 103L,
       "doc_id", "text")
