@@ -211,7 +211,9 @@ object ArtifactStore {
     * streamed-segment dir): returns (path, alreadyValid). The caller
     * ingests into `path` when `alreadyValid` is false and must call
     * [[commitDir]] afterwards. None ⇒ store disabled (caller uses a temp
-    * dir). Forced rebuild clears the old content first. */
+    * dir). Forced rebuild clears the old content first. Query modules go
+    * through [[Artifact.storedDir]], which wraps this, the commit and the
+    * tracked temp dir in one call. */
   def dirArtifact(srcDir: String, name: String, spec: String): Option[(Path, Boolean)] =
     groupDir(srcDir, name).map { dir =>
       if (!rebuild && isValid(dir, spec, Nil)) (dir, true)

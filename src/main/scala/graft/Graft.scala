@@ -2,29 +2,32 @@ package graft
 
 /** Library-embedder lifecycle hooks.
   *
-  * The query modules memoize expensive shared intermediates per
-  * (SparkSession, sfDir) — the x11/x13 duplicate-cluster table, the shared
-  * text-signal table, the prebuilt IVF index, and the two backtest folds.
-  * That is the right lifetime for the bench/verify harness (entries die
-  * with the session), but a long-running service embedding this library
-  * would retain the persisted blocks and checkpoint RDDs forever. This
+  * The query modules memoize their expensive shared intermediates per
+  * (SparkSession, sfDir) as [[Artifact]]s: the backtest and replay folds,
+  * the cluster, signal, signature and n-gram tables, the BM25, IVF, PQ,
+  * RAG and hybrid indexes, the streamed sinks and their takedown
+  * lifecycles, and the cascade and release roots. That is the right
+  * lifetime for the bench/verify harness (entries die with the session),
+  * but a long-running service embedding this library would retain the
+  * persisted blocks, checkpoint RDDs and temp sink dirs forever. This
   * hook releases them explicitly; the next query that needs an
-  * intermediate rebuilds it from the source tables (CacheLifecycleSpec
-  * proves rebuild-after-clear returns identical results).
+  * intermediate rebuilds it (CacheLifecycleSpec proves rebuild-after-clear
+  * returns identical results).
   */
 object Graft {
 
-  /** Unpersist and drop every memoized shared intermediate. Cached
-    * blocks are released immediately; severed checkpoint RDDs fall to
-    * the ContextCleaner once unreferenced. Safe to call at any point
-    * between queries; concurrent in-flight queries keep their plans (a
-    * Spark unpersist does not fail running jobs, it just recomputes). */
+  /** Unpersist and drop every memoized shared intermediate: release every
+    * artifact's values, delete the tracked temp dirs (store off), then
+    * drop the memos, so no memo can hand out a deleted dir. Cached blocks
+    * are released immediately; severed checkpoint RDDs fall to the
+    * ContextCleaner once unreferenced. Safe to call at any point between
+    * queries; concurrent in-flight queries keep their plans (a Spark
+    * unpersist does not fail running jobs, it just recomputes). */
   def clearCaches(): Unit = {
-    queries.TextQ.clearCache()
-    queries.VectorQ.clearCache()
-    queries.ExtQ.clearCache()
-    queries.BacktestQ.clearCache()
-    queries.ReplayQ.clearCache()
+    val all = Artifact.all
+    all.foreach(_.releaseAll())
+    Artifact.deleteTempDirs()
+    all.foreach(_.drop())
   }
 
   /** Every shared-artifact build task, in topological order: the intraday

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.ext.Multimodal
 import graft.streaming.Sessionize
 
@@ -12,6 +12,25 @@ import graft.streaming.Sessionize
   */
 object ExtQ {
   type Q = (SparkSession, String) => DataFrame
+
+  /** The st6 segment DIR — the full-corpus streamed-BM25 lifecycle
+    * PREFIX: st7 (+compact) branches from this committed dir (r16, the
+    * st9→st15/x58 rationale — the 3-batch tokenize+index ingest is the
+    * corpus-sized cost; the branch is an MB-sized file copy). */
+  private val streamedBm25Dir = Artifact("streamedBm25Dir") { (s, d) =>
+    val spec = "v2 3batches mod3 partdirs"
+    def ingest(dir: String): Unit = {
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      (0 to 2).foreach { i =>
+        graft.streaming.StreamBm25.appendBatch(dir,
+          docs.filter(col("doc_id") % 3 === i), i, "doc_id", "text")
+      }
+    }
+    // the segment dir IS the maintained artifact of the streaming
+    // ingest — under the ArtifactStore it is written once per fixture
+    // and every later JVM (and every clearCaches rebuild) reloads it
+    Artifact.storedDir(d, "st6segs", spec)(ingest)
+  }
 
   /** The STREAM-MAINTAINED segmented BM25 index ([[graft.streaming
     * .StreamBm25]]): the corpus ingested as three arrival batches through
@@ -23,59 +42,14 @@ object ExtQ {
     * maintained artifact of the streaming ingest, the x45 signature-index
     * rationale. StreamBm25Spec proves a REAL MemoryStream micro-batch
     * ingest through the identical sink body is bit-equal to scratch. */
-  private val bm25StreamCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ext.TextOps.Bm25Segments]
-  // temp ingest dirs (ArtifactStore disabled only), deleted in clearCache
-  // — repeated clearCache/re-ingest cycles must not accumulate corpus-
-  // sized parquet under /tmp (ADVICE r7)
-  private val tmpSegDirs =
-    scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-  private val bm25StreamDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  /** The st6 segment DIR — the full-corpus streamed-BM25 lifecycle
-    * PREFIX: st7 (+compact) branches from this committed dir (r16, the
-    * st9→st15/x58 rationale — the 3-batch tokenize+index ingest is the
-    * corpus-sized cost; the branch is an MB-sized file copy). */
-  private def streamedBm25Dir(s: SparkSession, d: String): String =
-    bm25StreamDirCache.synchronized {
-      bm25StreamDirCache.getOrElseUpdate((s, d), {
-        val spec = "v2 3batches mod3 partdirs"
-        def ingest(dir: String): Unit = {
-          val docs = Tables.documents(s, d).select("doc_id", "text")
-          (0 to 2).foreach { i =>
-            graft.streaming.StreamBm25.appendBatch(dir,
-              docs.filter(col("doc_id") % 3 === i), i, "doc_id", "text")
-          }
-        }
-        // the segment dir IS the maintained artifact of the streaming
-        // ingest — under the ArtifactStore it is written once per fixture
-        // and every later JVM (and every clearCache rebuild) reloads it
-        graft.ArtifactStore.dirArtifact(d, "st6segs", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            ingest(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st6-")
-            tmpSegDirs += p
-            ingest(p.toString)
-            p.toString
-        }
-      })
-    }
-  private def streamedBm25(s: SparkSession, d: String)
-      : graft.ext.TextOps.Bm25Segments =
-    bm25StreamCache.synchronized {
-      bm25StreamCache.getOrElseUpdate((s, d), {
-        val segs = graft.streaming.StreamBm25
-          .load(s, streamedBm25Dir(s, d)).get
-        val postings = segs.postings.persist(); postings.count()
-        val stats = segs.segStats.persist(); stats.count()
-        val termDf = segs.termDf.persist(); termDf.count()
-        graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
-      })
-    }
+  private val streamedBm25 = Artifact("streamedBm25") { (s, d) =>
+    val segs = graft.streaming.StreamBm25
+      .load(s, streamedBm25Dir(s, d)).get
+    val postings = segs.postings.persist(); postings.count()
+    val stats = segs.segStats.persist(); stats.count()
+    val termDf = segs.termDf.persist(); termDf.count()
+    graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
+  }
 
   /** st7's COMPACTED streamed index: the same 3-batch ingest as
     * [[streamedBm25]] into its own directory, then the on-disk
@@ -85,39 +59,39 @@ object ExtQ {
     * lifecycle (ingest → serve → merge) on the parquet layout. Kept
     * separate from the st6 dir, which must stay 3-segment for st6's
     * streamed ≡ scratch claim. */
-  private val bm25CompactCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ext.TextOps.Bm25Segments]
-  private def compactedBm25(s: SparkSession, d: String)
-      : graft.ext.TextOps.Bm25Segments =
-    bm25CompactCache.synchronized {
-      bm25CompactCache.getOrElseUpdate((s, d), {
-        // v4 (r16): BRANCH the committed st6 prefix instead of
-        // re-running the identical 3-batch ingest; the fold is unchanged.
-        val spec = "v4 branch=st6 compact upTo=1 into=-1 partdirs"
-        def build(dir: String): Unit = {
-          graft.ArtifactStore.branchFrom(streamedBm25Dir(s, d),
-            java.nio.file.Paths.get(dir))
-          graft.streaming.StreamBm25.compact(s, dir, upTo = 1, into = -1)
-        }
-        val dir = graft.ArtifactStore.dirArtifact(d, "st7segs", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st7-")
-            tmpSegDirs += p
-            build(p.toString)
-            p.toString
-        }
-        val segs = graft.streaming.StreamBm25.load(s, dir).get
-        val postings = segs.postings.persist(); postings.count()
-        val stats = segs.segStats.persist(); stats.count()
-        val termDf = segs.termDf.persist(); termDf.count()
-        graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
-      })
+  private val compactedBm25 = Artifact("compactedBm25", streamedBm25) { (s, d) =>
+    // v4 (r16): BRANCH the committed st6 prefix instead of
+    // re-running the identical 3-batch ingest; the fold is unchanged.
+    val spec = "v4 branch=st6 compact upTo=1 into=-1 partdirs"
+    def build(dir: String): Unit = {
+      graft.ArtifactStore.branchFrom(streamedBm25Dir(s, d),
+        java.nio.file.Paths.get(dir))
+      graft.streaming.StreamBm25.compact(s, dir, upTo = 1, into = -1)
     }
+    val dir = Artifact.storedDir(d, "st7segs", spec)(build)
+    val segs = graft.streaming.StreamBm25.load(s, dir).get
+    val postings = segs.postings.persist(); postings.count()
+    val stats = segs.segStats.persist(); stats.count()
+    val termDf = segs.termDf.persist(); termDf.count()
+    graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
+  }
+
+  /** The x57/x60 shared lifecycle PREFIX (r16): the 2-batch ingest of
+    * the x48 corpus slice, committed once — the two takedown lifecycles
+    * diverge only at the delete verb (plain vs `blockRecrawl = true`),
+    * so each branches from this dir instead of re-tokenizing the slice. */
+  private val bm25TwoBatchBase = Artifact("bm25TwoBatchBase") { (s, d) =>
+    val spec = "v1 2batches mod2 corpus=%97!=3 partdirs"
+    def ingest(dir: String): Unit = {
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+        .filter(col("doc_id") % 97 =!= 3)
+      (0 to 1).foreach { i =>
+        graft.streaming.StreamBm25.appendBatch(dir,
+          docs.filter(col("doc_id") % 2 === i), i, "doc_id", "text")
+      }
+    }
+    Artifact.storedDir(d, "x48b2", spec)(ingest)
+  }
 
   /** Memoized TAKEDOWN-lifecycle index for x57 — the full
     * delete-then-reclaim story on the streamed BM25 layout: ingest the
@@ -128,78 +102,29 @@ object ExtQ {
     * re-derives df/stats from the survivors — after which the index is
     * bit-equal to one never containing them, which is exactly what the
     * DuckDB oracle recomputes. */
-  /** The x57/x60 shared lifecycle PREFIX (r16): the 2-batch ingest of
-    * the x48 corpus slice, committed once — the two takedown lifecycles
-    * diverge only at the delete verb (plain vs `blockRecrawl = true`),
-    * so each branches from this dir instead of re-tokenizing the slice. */
-  private val bm25TwoBatchBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def bm25TwoBatchBase(s: SparkSession, d: String): String =
-    bm25TwoBatchBaseCache.synchronized {
-      bm25TwoBatchBaseCache.getOrElseUpdate((s, d), {
-        val spec = "v1 2batches mod2 corpus=%97!=3 partdirs"
-        def ingest(dir: String): Unit = {
-          val docs = Tables.documents(s, d).select("doc_id", "text")
-            .filter(col("doc_id") % 97 =!= 3)
-          (0 to 1).foreach { i =>
-            graft.streaming.StreamBm25.appendBatch(dir,
-              docs.filter(col("doc_id") % 2 === i), i, "doc_id", "text")
-          }
-        }
-        graft.ArtifactStore.dirArtifact(d, "x48b2", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            ingest(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x48b2-")
-            tmpSegDirs += p
-            ingest(p.toString)
-            p.toString
-        }
-      })
+  private val takedownBm25 = Artifact("takedownBm25", bm25TwoBatchBase) { (s, d) =>
+    // v2 (r16): BRANCH the committed 2-batch base; takedown verbs
+    // unchanged.
+    val spec = "v2 branch=x48b2 delete=%10==0 fullcompact"
+    def build(dir: String): Unit = {
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+        .filter(col("doc_id") % 97 =!= 3)
+      graft.ArtifactStore.branchFrom(bm25TwoBatchBase(s, d),
+        java.nio.file.Paths.get(dir))
+      graft.streaming.StreamBm25.deleteDocs(s, dir,
+        docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
+        "doc_id")
+      graft.streaming.StreamBm25.compactSet(s, dir,
+        graft.streaming.Manifest.read(s, dir).get,
+        into = graft.streaming.StreamBm25.nextCompactId(s, dir))
     }
-  private val bm25TakedownCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ext.TextOps.Bm25Segments]
-  private def takedownBm25(s: SparkSession, d: String)
-      : graft.ext.TextOps.Bm25Segments =
-    bm25TakedownCache.synchronized {
-      bm25TakedownCache.getOrElseUpdate((s, d), {
-        // v2 (r16): BRANCH the committed 2-batch base; takedown verbs
-        // unchanged.
-        val spec = "v2 branch=x48b2 delete=%10==0 fullcompact"
-        def build(dir: String): Unit = {
-          val docs = Tables.documents(s, d).select("doc_id", "text")
-            .filter(col("doc_id") % 97 =!= 3)
-          graft.ArtifactStore.branchFrom(bm25TwoBatchBase(s, d),
-            java.nio.file.Paths.get(dir))
-          graft.streaming.StreamBm25.deleteDocs(s, dir,
-            docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
-            "doc_id")
-          graft.streaming.StreamBm25.compactSet(s, dir,
-            graft.streaming.Manifest.read(s, dir).get,
-            into = graft.streaming.StreamBm25.nextCompactId(s, dir))
-        }
-        val dir = graft.ArtifactStore.dirArtifact(d, "x57segs", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x57-")
-            tmpSegDirs += p
-            build(p.toString)
-            p.toString
-        }
-        val segs = graft.streaming.StreamBm25.load(s, dir).get
-        val postings = segs.postings.persist(); postings.count()
-        val stats = segs.segStats.persist(); stats.count()
-        val termDf = segs.termDf.persist(); termDf.count()
-        graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
-      })
-    }
+    val dir = Artifact.storedDir(d, "x57segs", spec)(build)
+    val segs = graft.streaming.StreamBm25.load(s, dir).get
+    val postings = segs.postings.persist(); postings.count()
+    val stats = segs.segStats.persist(); stats.count()
+    val termDf = segs.termDf.persist(); termDf.count()
+    graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
+  }
 
   /** Memoized BLOCKLIST-lifecycle index for x60 — x57's takedown with
     * `blockRecrawl = true`, then the part x57 cannot promise: after the
@@ -211,50 +136,33 @@ object ExtQ {
     * The served index is therefore bit-equal to one that never
     * contained the deleted docs even though their bytes arrived twice,
     * which is exactly what the oracle recomputes. */
-  private val bm25BlocklistCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ext.TextOps.Bm25Segments]
-  private def blocklistBm25(s: SparkSession, d: String)
-      : graft.ext.TextOps.Bm25Segments =
-    bm25BlocklistCache.synchronized {
-      bm25BlocklistCache.getOrElseUpdate((s, d), {
-        // v2 (r16): BRANCH the committed 2-batch base (shared with x57);
-        // the blocklist delete + fold + re-crawl legs are unchanged.
-        val spec = "v2 branch=x48b2 block=%10==0 fullcompact recrawl"
-        def build(dir: String): Unit = {
-          val docs = Tables.documents(s, d).select("doc_id", "text")
-            .filter(col("doc_id") % 97 =!= 3)
-          graft.ArtifactStore.branchFrom(bm25TwoBatchBase(s, d),
-            java.nio.file.Paths.get(dir))
-          graft.streaming.StreamBm25.deleteDocs(s, dir,
-            docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
-            "doc_id", blockRecrawl = true)
-          graft.streaming.StreamBm25.compactSet(s, dir,
-            graft.streaming.Manifest.read(s, dir).get,
-            into = graft.streaming.StreamBm25.nextCompactId(s, dir))
-          // the re-crawl AFTER reclaim: same keys, same bytes — the
-          // blocklist (not the long-gone tombstone) keeps them out
-          graft.streaming.StreamBm25.appendBatch(dir,
-            docs.filter(col("doc_id") % 10 === 0), 5, "doc_id", "text")
-        }
-        val dir = graft.ArtifactStore.dirArtifact(d, "x60segs", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x60-")
-            tmpSegDirs += p
-            build(p.toString)
-            p.toString
-        }
-        val segs = graft.streaming.StreamBm25.load(s, dir).get
-        val postings = segs.postings.persist(); postings.count()
-        val stats = segs.segStats.persist(); stats.count()
-        val termDf = segs.termDf.persist(); termDf.count()
-        graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
-      })
+  private val blocklistBm25 = Artifact("blocklistBm25", bm25TwoBatchBase) { (s, d) =>
+    // v2 (r16): BRANCH the committed 2-batch base (shared with x57);
+    // the blocklist delete + fold + re-crawl legs are unchanged.
+    val spec = "v2 branch=x48b2 block=%10==0 fullcompact recrawl"
+    def build(dir: String): Unit = {
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+        .filter(col("doc_id") % 97 =!= 3)
+      graft.ArtifactStore.branchFrom(bm25TwoBatchBase(s, d),
+        java.nio.file.Paths.get(dir))
+      graft.streaming.StreamBm25.deleteDocs(s, dir,
+        docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
+        "doc_id", blockRecrawl = true)
+      graft.streaming.StreamBm25.compactSet(s, dir,
+        graft.streaming.Manifest.read(s, dir).get,
+        into = graft.streaming.StreamBm25.nextCompactId(s, dir))
+      // the re-crawl AFTER reclaim: same keys, same bytes — the
+      // blocklist (not the long-gone tombstone) keeps them out
+      graft.streaming.StreamBm25.appendBatch(dir,
+        docs.filter(col("doc_id") % 10 === 0), 5, "doc_id", "text")
     }
+    val dir = Artifact.storedDir(d, "x60segs", spec)(build)
+    val segs = graft.streaming.StreamBm25.load(s, dir).get
+    val postings = segs.postings.persist(); postings.count()
+    val stats = segs.segStats.persist(); stats.count()
+    val termDf = segs.termDf.persist(); termDf.count()
+    graft.ext.TextOps.Bm25Segments(postings, stats, termDf)
+  }
 
   /** Memoized media FINGERPRINT index for m6 — the maintained
     * (doc_id, phash) artifact an incremental media-dedup loop carries
@@ -265,25 +173,19 @@ object ExtQ {
     * linear leg, SCALING.md exp 0.96) becomes a one-time build cost.
     * Index side = the doc_id % 4 != 0 slice; the % 4 == 0 slice plays
     * the arriving crawl batch. */
-  private val phashIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private[graft] def mediaFingerprintIndex(s: SparkSession, d: String)
-      : DataFrame =
-    phashIdxCache.synchronized {
-      phashIdxCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "phashidx",
-          "v1 ahash corpus=doc_id%4!=0") {
-          Multimodal.perceptualHash(
-            Multimodal.mediaTable(Tables.documents(s, d)
-              .filter(col("doc_id") % 4 =!= 0)),
-            new Multimodal.ImageIoAHash())
-            .select("doc_id", "phash")
-        }
-        val idx = loaded.persist()
-        idx.count() // materialize inside the lock (shared await)
-        idx
-      })
+  private[graft] val mediaFingerprintIndex = Artifact("mediaFingerprintIndex") { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "phashidx",
+      "v1 ahash corpus=doc_id%4!=0") {
+      Multimodal.perceptualHash(
+        Multimodal.mediaTable(Tables.documents(s, d)
+          .filter(col("doc_id") % 4 =!= 0)),
+        new Multimodal.ImageIoAHash())
+        .select("doc_id", "phash")
     }
+    val idx = loaded.persist()
+    idx.count() // materialize inside the lock (shared await)
+    idx
+  }
 
   /** Memoized MAINTAINED-FINGERPRINT BM25 dir for st17 — a full
     * lifecycle that exercises the trickiest leg of the partial algebra:
@@ -294,89 +196,37 @@ object ExtQ {
     * RAW contributions ([[graft.streaming.StreamBm25.fingerprintState]]).
     * The serve is O(state): one (n, xor) row per live id, never an
     * index scan. */
-  private val bm25FpDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def fpBm25Dir(s: SparkSession, d: String): String =
-    bm25FpDirCache.synchronized {
-      bm25FpDirCache.getOrElseUpdate((s, d), {
-        val spec = "v1 3batches mod3 corpus=%4!=0 delete=%10==0 " +
-          "partialcompact01 fpstate"
-        def build(dir: String): Unit = {
-          val docs = Tables.documents(s, d).select("doc_id", "text")
-            .filter(col("doc_id") % 4 =!= 0)
-          (0 to 2).foreach { i =>
-            graft.streaming.StreamBm25.appendBatch(dir,
-              docs.filter(pmod(col("doc_id"), lit(3)) === i), i,
-              "doc_id", "text")
-          }
-          graft.streaming.StreamBm25.deleteDocs(s, dir,
-            docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
-            "doc_id")
-          graft.streaming.StreamBm25.compactSet(s, dir, Set(0, 1),
-            into = graft.streaming.StreamBm25.nextCompactId(s, dir))
-        }
-        graft.ArtifactStore.dirArtifact(d, "st17bm25fp", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st17-")
-            tmpSegDirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
-    }
-
-  /** Bench hook: ingest + load the streamed segment indexes up front (the
-    * BacktestQ.prewarm attribution rationale — st6/st7 time the serve). */
-  /** Prewarm DAG (r15): see [[graft.queries.TextQ.prewarmTasks]]. Every
-    * streamed-BM25 lifecycle builder owns its own sink dir — no edges;
-    * heaviest-first (cold walls, r15). */
-  private[graft] def prewarmTasks(s: SparkSession, d: String)
-      : Seq[(String, Seq[String], () => Unit)] = Seq(
-    ("streamedBm25", Nil, () => streamedBm25(s, d)),
-    ("bm25TwoBatchBase", Nil, () => bm25TwoBatchBase(s, d)),
-    // r16 branch edges: st7 copies st6's committed prefix, x57/x60 the
-    // shared 2-batch base ([[graft.ArtifactStore.branchFrom]]).
-    ("compactedBm25", Seq("streamedBm25"), () => compactedBm25(s, d)),
-    ("takedownBm25", Seq("bm25TwoBatchBase"), () => takedownBm25(s, d)),
-    ("blocklistBm25", Seq("bm25TwoBatchBase"), () => blocklistBm25(s, d)),
-    ("fpBm25Dir", Nil, () => fpBm25Dir(s, d)),
-    ("mediaFingerprintIndex", Nil, () => mediaFingerprintIndex(s, d)))
-
-  private[graft] def prewarm(s: SparkSession, d: String): Unit =
-    // each builder isolated ([[graft.Graft.warm]]): one failure must not
-    // silently skip the rest of the leg
-    prewarmTasks(s, d).foreach { case (n, _, t) => graft.Graft.warm(n)(t()) }
-
-  /** Release the memoized streamed-segment index (see Graft.clearCaches)
-    * and delete any temp ingest dirs (store-disabled mode); store-managed
-    * segment dirs stay — the next query RELOADS them instead of
-    * re-ingesting. */
-  private[graft] def clearCache(): Unit = bm25StreamCache.synchronized {
-    (bm25StreamCache.values ++ bm25CompactCache.values ++
-        bm25TakedownCache.values ++ bm25BlocklistCache.values)
-      .foreach { segs =>
-        segs.postings.unpersist(); segs.segStats.unpersist()
-        segs.termDf.unpersist()
+  private val fpBm25Dir = Artifact("fpBm25Dir") { (s, d) =>
+    val spec = "v1 3batches mod3 corpus=%4!=0 delete=%10==0 " +
+      "partialcompact01 fpstate"
+    def build(dir: String): Unit = {
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+        .filter(col("doc_id") % 4 =!= 0)
+      (0 to 2).foreach { i =>
+        graft.streaming.StreamBm25.appendBatch(dir,
+          docs.filter(pmod(col("doc_id"), lit(3)) === i), i,
+          "doc_id", "text")
       }
-    bm25StreamCache.clear()
-    bm25CompactCache.clear()
-    bm25TakedownCache.clear()
-    bm25BlocklistCache.clear()
-    phashIdxCache.values.foreach(_.unpersist())
-    phashIdxCache.clear()
-    tmpSegDirs.foreach(graft.ArtifactStore.deleteRecursively)
-    tmpSegDirs.clear()
-    // the st17 dir memo may point into tmpSegDirs; the r16 branch-base
-    // dir memos (st6 prefix, x57/x60 two-batch base) likewise
-    bm25FpDirCache.clear()
-    bm25StreamDirCache.clear()
-    bm25TwoBatchBaseCache.clear()
+      graft.streaming.StreamBm25.deleteDocs(s, dir,
+        docs.filter(col("doc_id") % 10 === 0).select("doc_id"),
+        "doc_id")
+      graft.streaming.StreamBm25.compactSet(s, dir, Set(0, 1),
+        into = graft.streaming.StreamBm25.nextCompactId(s, dir))
+    }
+    Artifact.storedDir(d, "st17bm25fp", spec)(build)
   }
+
+  /** Prewarm DAG (r15): see [[graft.queries.TextQ.prewarmTasks]]. Every
+    * streamed-BM25 lifecycle builder owns its own sink dir; the edges are
+    * the r16 branch edges (st7 copies st6's committed prefix, x57/x60 the
+    * shared 2-batch base, [[graft.ArtifactStore.branchFrom]]).
+    * Heaviest-first (cold walls, r15). */
+  private val prewarmed: Seq[Artifact[_]] = Seq(streamedBm25,
+    bm25TwoBatchBase, compactedBm25, takedownBm25, blocklistBm25, fpBm25Dir,
+    mediaFingerprintIndex)
+
+  private[graft] def prewarmTasks(s: SparkSession, d: String)
+      : Seq[(String, Seq[String], () => Unit)] = Artifact.tasks(prewarmed, s, d)
 
   val queries: Map[String, Q] = Map(
     // M1 — multimodal metadata extraction: opaque binary payload →

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{RefFixtureGen, Tables}
+import graft.{Artifact, RefFixtureGen, Tables}
 import graft.backtest._
 import graft.functions.ProductAgg
 import graft.ops.TimeSeries
@@ -102,50 +102,38 @@ object ReplayQ {
 
   /** One engine per company carried across ALL blocks (intra.ipynb:11121:
     * traders are created outside the block loop) — the T5 composition +
-    * T4 fold, reference parameters (intra.ipynb:11122). */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Dataset[IntradayEvent]]
-
-  // synchronized: r3/r4 run CONCURRENTLY in Bench; TrieMap's
-  // getOrElseUpdate may evaluate the op twice under a race, and persist()
-  // alone is lazy — without the materializing count() both callers' first
-  // actions would race to compute the fold before the block cache fills,
-  // running the whole pipeline ~twice. The count() inside the lock is the
-  // shared await: first caller computes, later callers read the cache.
-  private def intradayEvents(s: SparkSession): Dataset[IntradayEvent] =
-    cache.synchronized {
-      cache.getOrElseUpdate(s, {
-        import s.implicits._
-        // keyed by the COMMITTED reference fixture (fixDir, not sfDir):
-        // the replay fold is a pure function of it, so the artifact
-        // survives fixture-regeneration of the sf dirs entirely
-        val loaded = graft.ArtifactStore.dataFrame(s, fixDir, "replayfold",
-          "v1 bal=1000 minDev=0.1 sl=0.03 trig=0.01 size=0.1pct") {
-          val ticks = IntradayPipeline.companyTicks(
-            intradayQuotes(s),
-            Some(Tables.parquet(s, s"$fixDir/fx_5m.parquet")),
-            refBlocks(s))
-          IntradayBacktest.run(ticks, bal = 1000.0, minDeviation = 0.1,
-            slPercent = 0.03, triggerRange = 0.01, tradeSize = 0.1,
-            tradeSizePercent = true).toDF()
-        }
-        val ev = loaded.as[IntradayEvent].persist()
-        ev.count()
-        ev
-      })
+    * T4 fold, reference parameters (intra.ipynb:11122). Memoized per
+    * session: r3/r4 run CONCURRENTLY in Bench, and persist() alone is
+    * lazy — without the materializing count() inside the artifact's lock
+    * both callers' first actions would race to compute the fold before
+    * the block cache fills, running the whole pipeline ~twice. */
+  private val replayFold = Artifact("replayFold") { (s, dir) =>
+    import s.implicits._
+    // keyed by the COMMITTED reference fixture (fixDir, not sfDir):
+    // the replay fold is a pure function of it, so the artifact
+    // survives fixture-regeneration of the sf dirs entirely
+    val loaded = graft.ArtifactStore.dataFrame(s, dir, "replayfold",
+      "v1 bal=1000 minDev=0.1 sl=0.03 trig=0.01 size=0.1pct") {
+      val ticks = IntradayPipeline.companyTicks(
+        intradayQuotes(s),
+        Some(Tables.parquet(s, s"$fixDir/fx_5m.parquet")),
+        refBlocks(s))
+      IntradayBacktest.run(ticks, bal = 1000.0, minDeviation = 0.1,
+        slPercent = 0.03, triggerRange = 0.01, tradeSize = 0.1,
+        tradeSizePercent = true).toDF()
     }
+    val ev = loaded.as[IntradayEvent].persist()
+    ev.count()
+    ev
+  }
+  private def intradayEvents(s: SparkSession): Dataset[IntradayEvent] =
+    replayFold(s, fixDir)
 
   private val companyIds: Seq[Int] = 0 until 40
 
   /** Bench hook: materialize the shared replay fold up front (see
     * BacktestQ.prewarm — same attribution rationale for r3/r4). */
   private[graft] def prewarm(s: SparkSession): Unit = { intradayEvents(s); () }
-
-  /** Release the memoized replay fold (see Graft.clearCaches). */
-  private[graft] def clearCache(): Unit = cache.synchronized {
-    cache.values.foreach(_.unpersist())
-    cache.clear()
-  }
 
   /** Per-tick balance history of the replay (spec surface). */
   private[graft] def balanceHistory(s: SparkSession): DataFrame =

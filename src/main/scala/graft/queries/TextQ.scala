@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.ext.{Dedup, TextOps}
 
 /** Text-analysis + dedup extension operators over `documents`
@@ -35,48 +35,37 @@ object TextQ {
     * running the whole O(log diameter)-round CC loop once per query (it
     * was 29% of the bench suite's task time run twice). The loop's final
     * labels are already checkpoint-materialized, so caching the DataFrame
-    * reference suffices; the synchronized block is the shared await for
+    * reference suffices; the artifact's lock is the shared await for
     * concurrent bench consumers. */
-  private val ccCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def chainClusters(s: SparkSession, d: String): DataFrame =
-    ccCache.synchronized {
-      ccCache.getOrElseUpdate((s, d), {
-        // the CC loop (O(log diameter) jobs) runs once per FIXTURE, not
-        // once per JVM: the resolved cluster table is an ArtifactStore
-        // parquet — in production the maintained cluster table IS a
-        // written artifact (the x45 incremental loop extends it)
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "chainclusters",
-          "v1 chainEdges") {
-          Dedup.duplicateClusters(chainEdges(s, d))
-        }
-        val cc = loaded.persist()
-        cc.count() // materialize inside the lock (shared await)
-        cc
-      })
+  private val chainClusters = Artifact("chainClusters") { (s, d) =>
+    // the CC loop (O(log diameter) jobs) runs once per FIXTURE, not
+    // once per JVM: the resolved cluster table is an ArtifactStore
+    // parquet — in production the maintained cluster table IS a
+    // written artifact (the x45 incremental loop extends it)
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "chainclusters",
+      "v1 chainEdges") {
+      Dedup.duplicateClusters(chainEdges(s, d))
     }
+    val cc = loaded.persist()
+    cc.count() // materialize inside the lock (shared await)
+    cc
+  }
 
   /** Memoized CORPUS-slice cluster table for x56 — the maintained
     * (id, cluster_id) assignment artifact an incremental dedup loop
     * carries between runs ([[graft.ext.Dedup.incrementalClusters]]
     * extends it per batch): resolved once over the doc_id % 4 != 0
     * slice's chain edges, persisted like [[chainClusters]]. */
-  private val corpusCcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def corpusClusterTable(s: SparkSession, d: String)
-      : DataFrame =
-    corpusCcCache.synchronized {
-      corpusCcCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "corpuscc",
-          "v1 chainEdges corpus=doc_id%4!=0") {
-          Dedup.duplicateClusters(chainEdgesOf(
-            Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)))
-        }
-        val cc = loaded.persist()
-        cc.count() // materialize inside the lock (shared await)
-        cc
-      })
+  private[graft] val corpusClusterTable = Artifact("corpusClusterTable") { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "corpuscc",
+      "v1 chainEdges corpus=doc_id%4!=0") {
+      Dedup.duplicateClusters(chainEdgesOf(
+        Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)))
     }
+    val cc = loaded.persist()
+    cc.count() // materialize inside the lock (shared await)
+    cc
+  }
 
   /** Shared TEXT-SIGNAL table — the materialized intermediate a real
     * 100 TB curation run would write once and feed every stage from:
@@ -102,59 +91,45 @@ object TextQ {
     * Expressions are IDENTICAL to the per-query forms — `split` yields
     * ≥1 token for any string, so the inner join with the repeat
     * aggregate is total — keeping every consumer oracle-exact. */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def docSignals(s: SparkSession, d: String): DataFrame =
-    sigCache.synchronized {
-      sigCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "docsignals",
-          "v1 tokens+quality+digest") {
-          val docs = Tables.documents(s, d)
-          val rep = docs
-            .select(col("doc_id"),
-              explode(TextOps.tokens(col("text"))).as("tok"))
-            .groupBy("doc_id", "tok").agg(count(lit(1)).as("n"))
-            .groupBy("doc_id")
-            .agg(sum("n").as("total"), count(lit(1)).as("nd"),
-              max("n").as("maxn"))
-          docs
-            .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-              TextOps.qualityScore(col("text"), stops).as("quality"),
-              md5(col("text")).as("digest"))
-            .join(rep, Seq("doc_id"))
-        }
-        // repartition AFTER load: the tiny parquet packs into ~1 split,
-        // and concurrent consumers would serialize behind one cache scan
-        val sig = loaded.repartition(8, col("doc_id")).persist()
-        sig.count() // materialize inside the lock (shared await)
-        sig
-      })
+  private val docSignals = Artifact("docSignals") { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "docsignals",
+      "v1 tokens+quality+digest") {
+      val docs = Tables.documents(s, d)
+      val rep = docs
+        .select(col("doc_id"),
+          explode(TextOps.tokens(col("text"))).as("tok"))
+        .groupBy("doc_id", "tok").agg(count(lit(1)).as("n"))
+        .groupBy("doc_id")
+        .agg(sum("n").as("total"), count(lit(1)).as("nd"),
+          max("n").as("maxn"))
+      docs
+        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
+          TextOps.qualityScore(col("text"), stops).as("quality"),
+          md5(col("text")).as("digest"))
+        .join(rep, Seq("doc_id"))
     }
+    // repartition AFTER load: the tiny parquet packs into ~1 split,
+    // and concurrent consumers would serialize behind one cache scan
+    val sig = loaded.repartition(8, col("doc_id")).persist()
+    sig.count() // materialize inside the lock (shared await)
+    sig
+  }
 
   /** Benchmark-segment Bloom filter for x29 — the packed bit array is a
     * query-construction-time collect (the [[bloomBuild]] job), so memoize
     * it per (session, sfDir) like the IVF index: built once, every
     * subsequent x29 construction reuses the broadcast-sized array. */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Long]]
-  private def benchSegBloom(s: SparkSession, d: String): Array[Long] =
-    bloomCache.synchronized {
-      bloomCache.getOrElseUpdate((s, d), {
-        graft.ArtifactStore.longArray(s, d, "benchbloom",
-          "v1 bits=2^18 h=5 seg=10 bench=doc_id%7==0") {
-          val bench = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
-          Dedup.bloomBuild(
-            Dedup.segmentsOf(bench, "doc_id", "text", 10)
-              .select("__seg").distinct(),
-            col("__seg"), numBits = 1 << 18, numHashes = 5)
-        }
-      })
+  private val benchSegBloom = Artifact("benchSegBloom") { (s, d) =>
+    graft.ArtifactStore.longArray(s, d, "benchbloom",
+      "v1 bits=2^18 h=5 seg=10 bench=doc_id%7==0") {
+      val bench = Tables.documents(s, d).filter(col("doc_id") % 7 === 0)
+      Dedup.bloomBuild(
+        Dedup.segmentsOf(bench, "doc_id", "text", 10)
+          .select("__seg").distinct(),
+        col("__seg"), numBits = 1 << 18, numHashes = 5)
     }
+  }
 
-  /** Bench hook: run the iterative CC loop + the shared signal table +
-    * the x29 benchmark bloom up front (all execute jobs at construction
-    * time) so their cost lands in the bench's "prematerialize" phase,
-    * not on whichever consumer runs first. */
   /** Memoized corpus MinHash signature INDEX for x45 — in production
     * this is the maintained artifact an incremental loop carries between
     * runs (x45's survivors are appended to it); here it is memoized per
@@ -162,25 +137,20 @@ object TextQ {
     * so the bench pays the corpus signing once (prematerialize phase),
     * not per run. Batch-side signing stays inside the query — the batch
     * IS the new data. */
-  private val sigIdxCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def corpusSigIndex(s: SparkSession, d: String): DataFrame =
-    sigIdxCache.synchronized {
-      sigIdxCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "corpussigidx",
-          "v1 k=32 shingle=3 corpus=doc_id%4!=0") {
-          val docs = Tables.documents(s, d)
-            .withColumn("toks", TextOps.tokens(col("text")))
-            .select(col("doc_id"), TextOps.shingles(col("toks"), 3).as("sh"))
-          Dedup.withMinHash(docs.filter(col("doc_id") % 4 =!= 0), "sh",
-              k = 32)
-            .select(col("doc_id"), col("minhash"))
-        }
-        val idx = loaded.repartition(8, col("doc_id")).persist()
-        idx.count() // materialize inside the lock (shared await)
-        idx
-      })
+  private[graft] val corpusSigIndex = Artifact("corpusSigIndex") { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "corpussigidx",
+      "v1 k=32 shingle=3 corpus=doc_id%4!=0") {
+      val docs = Tables.documents(s, d)
+        .withColumn("toks", TextOps.tokens(col("text")))
+        .select(col("doc_id"), TextOps.shingles(col("toks"), 3).as("sh"))
+      Dedup.withMinHash(docs.filter(col("doc_id") % 4 =!= 0), "sh",
+          k = 32)
+        .select(col("doc_id"), col("minhash"))
     }
+    val idx = loaded.repartition(8, col("doc_id")).persist()
+    idx.count() // materialize inside the lock (shared await)
+    idx
+  }
 
   /** Memoized corpus n-gram-DF index for x55 — the maintained metadata
     * artifact of the incremental corpus-overlap score ([[TextOps
@@ -188,22 +158,16 @@ object TextQ {
     * written once per corpus snapshot and extended per ingest batch
     * with [[TextOps.ngramDfMerge]] (metadata-only; the bodies never
     * rescan). The [[corpusSigIndex]] lifecycle, trigram-df-shaped. */
-  private val ngDfIdxCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
-  private[graft] def ngramDfIndex(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    ngDfIdxCache.synchronized {
-      ngDfIdxCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "ngdf3idx",
-          "v1 n=3 corpus=doc_id%4!=0") {
-          TextOps.ngramDf(Tables.documents(s, d)
-            .filter(col("doc_id") % 4 =!= 0), "doc_id", "text", n = 3)
-        }
-        val idx = loaded.persist()
-        idx.count() // materialize inside the lock (shared await)
-        idx
-      })
+  private[graft] val ngramDfIndex = Artifact("ngramDfIndex") { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "ngdf3idx",
+      "v1 n=3 corpus=doc_id%4!=0") {
+      TextOps.ngramDf(Tables.documents(s, d)
+        .filter(col("doc_id") % 4 =!= 0), "doc_id", "text", n = 3)
     }
+    val idx = loaded.persist()
+    idx.count() // materialize inside the lock (shared await)
+    idx
+  }
 
   /** x33's resolved cluster table over the REAL MinHash candidate pairs,
     * memoized per (session, sfDir) like [[chainClusters]]: in production
@@ -213,27 +177,22 @@ object TextQ {
     * band-join + O(log diameter) CC loop per invocation. x45's
     * signature index is the incremental sibling (new batches extend it
     * without re-clustering the corpus). */
-  private val realClusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[queries] def realPairClusters(s: SparkSession, d: String): DataFrame =
-    realClusterCache.synchronized {
-      realClusterCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "realclusters",
-          "v1 k=32 bands=16 jacc>=0.25") {
-          val sh = Tables.documents(s, d)
-            .withColumn("toks", TextOps.tokens(col("text")))
-            .select(col("doc_id"), TextOps.shingles(col("toks"), 3).as("sh"))
-          val pairs = Dedup.minHashCandidates(sh, "doc_id", "sh", k = 32,
-              bands = 16)
-            .filter(col("est_jaccard") >= 0.25)
-            .select("id1", "id2")
-          Dedup.duplicateClusters(pairs)
-        }
-        val cc = loaded.persist()
-        cc.count() // materialize inside the lock (shared await)
-        cc
-      })
+  private[queries] val realPairClusters = Artifact("realPairClusters") { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "realclusters",
+      "v1 k=32 bands=16 jacc>=0.25") {
+      val sh = Tables.documents(s, d)
+        .withColumn("toks", TextOps.tokens(col("text")))
+        .select(col("doc_id"), TextOps.shingles(col("toks"), 3).as("sh"))
+      val pairs = Dedup.minHashCandidates(sh, "doc_id", "sh", k = 32,
+          bands = 16)
+        .filter(col("est_jaccard") >= 0.25)
+        .select("id1", "id2")
+      Dedup.duplicateClusters(pairs)
     }
+    val cc = loaded.persist()
+    cc.count() // materialize inside the lock (shared await)
+    cc
+  }
 
   /** PREBUILT segmented-BM25 artifacts for x51/x52 — the 3-segment
     * index over the ¾ corpus plus its compaction-time pruned lists,
@@ -245,44 +204,38 @@ object TextQ {
     * MAINTENANCE lifecycle stays proven by StreamBm25Spec and the
     * st6/st7 streaming sinks; x48 keeps the one-shot scratch build to
     * document that lifecycle. */
-  private val segIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (TextOps.Bm25Segments, TextOps.Bm25Index)]
-  private[queries] def prebuiltSegmented(s: SparkSession, d: String)
-      : (TextOps.Bm25Segments, TextOps.Bm25Index) =
-    segIdxCache.synchronized {
-      segIdxCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.group(s, d, "bm25seg",
-          "v1 3segs mod3 corpus=doc_id%97!=3 P=64",
-          Seq("postings", "segstats", "termdf", "prunedpostings",
-            "prunedstats")) {
-          val corpus = Tables.documents(s, d)
-            .filter(col("doc_id") % 97 =!= 3)
-          val s0 = TextOps.bm25SegmentAppend(
-            TextOps.bm25SegmentAppend(
-              TextOps.bm25SegmentInit(corpus.filter(col("doc_id") % 3 === 0),
-                "doc_id", "text"),
-              corpus.filter(col("doc_id") % 3 === 1), "doc_id", "text",
-              segId = 1),
-            corpus.filter(col("doc_id") % 3 === 2), "doc_id", "text",
-            segId = 2)
-          // SINGLE-tokenize build: materialize the postings once, then
-          // derive stats + term dictionaries FROM the persisted postings
-          // — the r7 form materialized three tokenize lineages and paid
-          // the corpus tokenize three times (VERDICT r7 item 2)
-          val p = s0.postings.persist(); p.count()
-          val (st0, td0) = TextOps.segMetaFromPostings(p)
-          val st = st0.persist(); st.count()
-          val td = td0.persist(); td.count()
-          val segs = TextOps.Bm25Segments(p, st, td)
-          val pr0 = TextOps.bm25PruneSegments(segs, maxPostingsPerTerm = 64)
-          val prp = pr0.postings.persist(); prp.count()
-          Seq(p, st, td, prp, pr0.stats)
-        }
-        val Seq(p, st, td, prp, prst) =
-          loaded.map { df => val x = df.persist(); x.count(); x }
-        (TextOps.Bm25Segments(p, st, td), TextOps.Bm25Index(prp, prst))
-      })
+  private[queries] val prebuiltSegmented = Artifact("prebuiltSegmented") { (s, d) =>
+    val loaded = graft.ArtifactStore.group(s, d, "bm25seg",
+      "v1 3segs mod3 corpus=doc_id%97!=3 P=64",
+      Seq("postings", "segstats", "termdf", "prunedpostings",
+        "prunedstats")) {
+      val corpus = Tables.documents(s, d)
+        .filter(col("doc_id") % 97 =!= 3)
+      val s0 = TextOps.bm25SegmentAppend(
+        TextOps.bm25SegmentAppend(
+          TextOps.bm25SegmentInit(corpus.filter(col("doc_id") % 3 === 0),
+            "doc_id", "text"),
+          corpus.filter(col("doc_id") % 3 === 1), "doc_id", "text",
+          segId = 1),
+        corpus.filter(col("doc_id") % 3 === 2), "doc_id", "text",
+        segId = 2)
+      // SINGLE-tokenize build: materialize the postings once, then
+      // derive stats + term dictionaries FROM the persisted postings
+      // — the r7 form materialized three tokenize lineages and paid
+      // the corpus tokenize three times (VERDICT r7 item 2)
+      val p = s0.postings.persist(); p.count()
+      val (st0, td0) = TextOps.segMetaFromPostings(p)
+      val st = st0.persist(); st.count()
+      val td = td0.persist(); td.count()
+      val segs = TextOps.Bm25Segments(p, st, td)
+      val pr0 = TextOps.bm25PruneSegments(segs, maxPostingsPerTerm = 64)
+      val prp = pr0.postings.persist(); prp.count()
+      Seq(p, st, td, prp, pr0.stats)
     }
+    val Seq(p, st, td, prp, prst) =
+      loaded.map { df => val x = df.persist(); x.count(); x }
+    (TextOps.Bm25Segments(p, st, td), TextOps.Bm25Index(prp, prst))
+  }
 
   /** PREBUILT MERGED BM25 index for x49 — [[graft.ext.TextOps
     * .bm25Merge]] of the ¾-corpus index with the ¼ increment, memoized
@@ -296,29 +249,34 @@ object TextQ {
     * same index from scratch over the full corpus — the driver compare
     * proves the merged artifact equals a scratch rebuild on real data
     * (Bm25Spec pins it on synthetic corpora too). */
-  private val mergedIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), TextOps.Bm25Index]
-  private[queries] def prebuiltMerged(s: SparkSession, d: String)
-      : TextOps.Bm25Index =
-    mergedIdxCache.synchronized {
-      mergedIdxCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.group(s, d, "bm25merged",
-          "v1 base=doc_id%4!=0 incr=%4==0 corpus=doc_id%97!=3",
-          Seq("postings", "stats")) {
-          val corpus = Tables.documents(s, d)
-            .filter(col("doc_id") % 97 =!= 3)
-          val idx = TextOps.bm25Merge(
-            TextOps.bm25Index(corpus.filter(col("doc_id") % 4 =!= 0),
-              "doc_id", "text"),
-            corpus.filter(col("doc_id") % 4 === 0), "doc_id", "text")
-          val p = idx.postings.persist(); p.count()
-          Seq(p, idx.stats)
-        }
-        val Seq(p, st) =
-          loaded.map { df => val x = df.persist(); x.count(); x }
-        TextOps.Bm25Index(p, st)
-      })
+  private[queries] val prebuiltMerged = Artifact("prebuiltMerged") { (s, d) =>
+    val loaded = graft.ArtifactStore.group(s, d, "bm25merged",
+      "v1 base=doc_id%4!=0 incr=%4==0 corpus=doc_id%97!=3",
+      Seq("postings", "stats")) {
+      val corpus = Tables.documents(s, d)
+        .filter(col("doc_id") % 97 =!= 3)
+      val idx = TextOps.bm25Merge(
+        TextOps.bm25Index(corpus.filter(col("doc_id") % 4 =!= 0),
+          "doc_id", "text"),
+        corpus.filter(col("doc_id") % 4 === 0), "doc_id", "text")
+      val p = idx.postings.persist(); p.count()
+      Seq(p, idx.stats)
     }
+    val Seq(p, st) =
+      loaded.map { df => val x = df.persist(); x.count(); x }
+    TextOps.Bm25Index(p, st)
+  }
+
+  /** The st9 sink DIR — the curation family's shared lifecycle PREFIX:
+    * st15 (+delete) and x58 (+delete+compact) branch from this committed
+    * dir ([[graft.ArtifactStore.branchFrom]], r16) instead of re-running
+    * the 3-batch policy ingest each (the ingest is the corpus-sized
+    * cost: quality filter + decontam jaccard join + stratified sample
+    * per batch; the branch is an MB-sized file copy). */
+  private val streamedCurationDir = Artifact("streamedCurationDir") { (s, d) =>
+    Artifact.storedDir(d, "st9cur", "v1 3batches mod3 x53policy")(
+      ingestCuration(s, d, _))
+  }
 
   /** The STREAM-CURATED corpus ([[graft.streaming.StreamCurate
     * .appendBatch]]): documents ingested as three arrival batches
@@ -327,46 +285,27 @@ object TextQ {
     * row-shaped verdict, batch × static-benchmark decontam, stratified
     * sample) — then the curated corpus loaded back from disk. Memoized
     * per (session, sfDir) + ArtifactStore'd like st6/st7/st8. */
-  private val st9Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val tmpSt9Dirs =
-    scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-  private val st9DirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  /** The st9 sink DIR — the curation family's shared lifecycle PREFIX:
-    * st15 (+delete) and x58 (+delete+compact) branch from this committed
-    * dir ([[graft.ArtifactStore.branchFrom]], r16) instead of re-running
-    * the 3-batch policy ingest each (the ingest is the corpus-sized
-    * cost: quality filter + decontam jaccard join + stratified sample
-    * per batch; the branch is an MB-sized file copy). */
-  private def streamedCurationDir(s: SparkSession, d: String): String =
-    st9DirCache.synchronized {
-      st9DirCache.getOrElseUpdate((s, d), {
-        val spec = "v1 3batches mod3 x53policy"
-        graft.ArtifactStore.dirArtifact(d, "st9cur", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            ingestCuration(s, d, p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st9-")
-            tmpSt9Dirs += p
-            ingestCuration(s, d, p.toString)
-            p.toString
-        }
-      })
+  private val streamedCuration = Artifact("streamedCuration") { (s, d) =>
+    val out = graft.streaming.StreamCurate
+      .load(s, streamedCurationDir(s, d)).get
+      .select("doc_id", "lang", "source").persist()
+    out.count()
+    out
+  }
+
+  /** The st10 sink DIR — the cluster family's shared lifecycle PREFIX:
+    * st12 (+deleteNodes+compact) branches from this committed dir (r16,
+    * the st9→st15/x58 rationale). */
+  private val streamedClustersDir = Artifact("streamedClustersDir") { (s, d) =>
+    def ingest(dir: String): Unit = {
+      val e = chainEdges(s, d)
+      (0 to 2).foreach { i =>
+        graft.streaming.StreamClusters.appendBatch(dir,
+          e.filter(pmod(col("id2"), lit(3)) === i), i)
+      }
     }
-  private def streamedCuration(s: SparkSession, d: String): DataFrame =
-    st9Cache.synchronized {
-      st9Cache.getOrElseUpdate((s, d), {
-        val out = graft.streaming.StreamCurate
-          .load(s, streamedCurationDir(s, d)).get
-          .select("doc_id", "lang", "source").persist()
-        out.count()
-        out
-      })
-    }
+    Artifact.storedDir(d, "st10cc", "v1 3batches id2mod3 chainEdges")(ingest)
+  }
 
   /** Memoized STREAM-MAINTAINED cluster table for st10 — the full chain
     * graph ingested as 3 edge micro-batches through the
@@ -375,49 +314,12 @@ object TextQ {
     * disk-round-tripped state. Splitting edges by id2 % 3 scatters each
     * chain across batches, so later batches BRIDGE committed components
     * — the overlay path is load-bearing, not decorative. */
-  private val streamCcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val tmpSt10Dirs =
-    scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-  private val streamCcDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  /** The st10 sink DIR — the cluster family's shared lifecycle PREFIX:
-    * st12 (+deleteNodes+compact) branches from this committed dir (r16,
-    * the st9→st15/x58 rationale). */
-  private def streamedClustersDir(s: SparkSession, d: String): String =
-    streamCcDirCache.synchronized {
-      streamCcDirCache.getOrElseUpdate((s, d), {
-        val spec = "v1 3batches id2mod3 chainEdges"
-        def ingest(dir: String): Unit = {
-          val e = chainEdges(s, d)
-          (0 to 2).foreach { i =>
-            graft.streaming.StreamClusters.appendBatch(dir,
-              e.filter(pmod(col("id2"), lit(3)) === i), i)
-          }
-        }
-        graft.ArtifactStore.dirArtifact(d, "st10cc", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            ingest(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st10-")
-            tmpSt10Dirs += p
-            ingest(p.toString)
-            p.toString
-        }
-      })
-    }
-  private def streamedClusters(s: SparkSession, d: String): DataFrame =
-    streamCcCache.synchronized {
-      streamCcCache.getOrElseUpdate((s, d), {
-        val t = graft.streaming.StreamClusters
-          .load(s, streamedClustersDir(s, d)).get.persist()
-        t.count() // materialize inside the lock (shared await)
-        t
-      })
-    }
+  private val streamedClusters = Artifact("streamedClusters") { (s, d) =>
+    val t = graft.streaming.StreamClusters
+      .load(s, streamedClustersDir(s, d)).get.persist()
+    t.count() // materialize inside the lock (shared await)
+    t
+  }
 
   /** Memoized TAKEDOWN-lifecycle cluster table for st12 — the closure
     * leg of the cascading right-to-be-forgotten (x57 postings, x58
@@ -432,41 +334,46 @@ object TextQ {
     * re-derived (that is the rebuild path) — so surviving members of a
     * chain stay one cluster, which is exactly what the oracle computes
     * (st10's blocks minus the deleted slice, min over survivors). */
-  private val takedownCcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def takedownClusters(s: SparkSession, d: String): DataFrame =
-    takedownCcCache.synchronized {
-      takedownCcCache.getOrElseUpdate((s, d), {
-        // v2 (r16): BRANCH the committed st10 prefix instead of
-        // re-running the 3-batch edge ingest (the st9→st15/x58
-        // rationale); the takedown verbs are unchanged.
-        val spec = "v2 branch=st10 delete=%10==0 compact"
-        def build(dir: String): Unit = {
-          graft.ArtifactStore.branchFrom(streamedClustersDir(s, d),
-            java.nio.file.Paths.get(dir))
-          graft.streaming.StreamClusters.deleteNodes(s, dir,
-            Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-              .select(col("doc_id").as("id")))
-          graft.streaming.StreamClusters.compact(s, dir,
-            into = graft.streaming.StreamClusters.nextCompactId(s, dir))
-        }
-        val dir = graft.ArtifactStore.dirArtifact(d, "st12cc", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st12-")
-            tmpSt10Dirs += p
-            build(p.toString)
-            p.toString
-        }
-        val t = graft.streaming.StreamClusters.load(s, dir).get.persist()
-        t.count() // materialize inside the lock (shared await)
-        t
-      })
+  private val takedownClusters = Artifact("takedownClusters", streamedClusters) { (s, d) =>
+    // v2 (r16): BRANCH the committed st10 prefix instead of
+    // re-running the 3-batch edge ingest (the st9→st15/x58
+    // rationale); the takedown verbs are unchanged.
+    val spec = "v2 branch=st10 delete=%10==0 compact"
+    def build(dir: String): Unit = {
+      graft.ArtifactStore.branchFrom(streamedClustersDir(s, d),
+        java.nio.file.Paths.get(dir))
+      graft.streaming.StreamClusters.deleteNodes(s, dir,
+        Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+          .select(col("doc_id").as("id")))
+      graft.streaming.StreamClusters.compact(s, dir,
+        into = graft.streaming.StreamClusters.nextCompactId(s, dir))
     }
+    val dir = Artifact.storedDir(d, "st12cc", spec)(build)
+    val t = graft.streaming.StreamClusters.load(s, dir).get.persist()
+    t.count() // materialize inside the lock (shared await)
+    t
+  }
+
+  /** The st11 sink DIR — the ngram-df family's shared lifecycle PREFIX:
+    * st13 (+deleteDocs+compact) branches from this committed dir (r16).
+    * st11's replay leg is disk-state-neutral (the seen-ids guard returns
+    * before any write or commit — that no-op IS the leg's pinned
+    * contract), so the branched dir equals the plain 3-batch state st13
+    * used to rebuild from scratch. */
+  private val streamedNgramDfDir = Artifact("streamedNgramDfDir") { (s, d) =>
+    val spec = "v1 3batches docidmod3 corpus=doc_id%4!=0 n=3 replay1"
+    def ingest(dir: String): Unit = {
+      val docs = Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)
+      (0 to 2).foreach { i =>
+        graft.streaming.StreamNgramDf.appendBatch(dir,
+          docs.filter(pmod(col("doc_id"), lit(3)) === i), i)
+      }
+      // at-least-once re-delivery of a committed batch: must no-op
+      graft.streaming.StreamNgramDf.appendBatch(dir,
+        docs.filter(pmod(col("doc_id"), lit(3)) === 1), 1)
+    }
+    Artifact.storedDir(d, "st11ngdf", spec)(ingest)
+  }
 
   /** Memoized STREAM-MAINTAINED n-gram-df index for st11 — x55's
     * maintained overlap artifact ingested as 3 document micro-batches
@@ -477,55 +384,12 @@ object TextQ {
     * guard is load-bearing in the gate: a double-counted delta would
     * shift every shared gram's df and hash-fail the x55-identical
     * oracle. */
-  private val streamNgDfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val tmpSt11Dirs =
-    scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-  private val streamNgDfDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  /** The st11 sink DIR — the ngram-df family's shared lifecycle PREFIX:
-    * st13 (+deleteDocs+compact) branches from this committed dir (r16).
-    * st11's replay leg is disk-state-neutral (the seen-ids guard returns
-    * before any write or commit — that no-op IS the leg's pinned
-    * contract), so the branched dir equals the plain 3-batch state st13
-    * used to rebuild from scratch. */
-  private def streamedNgramDfDir(s: SparkSession, d: String): String =
-    streamNgDfDirCache.synchronized {
-      streamNgDfDirCache.getOrElseUpdate((s, d), {
-        val spec = "v1 3batches docidmod3 corpus=doc_id%4!=0 n=3 replay1"
-        def ingest(dir: String): Unit = {
-          val docs = Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)
-          (0 to 2).foreach { i =>
-            graft.streaming.StreamNgramDf.appendBatch(dir,
-              docs.filter(pmod(col("doc_id"), lit(3)) === i), i)
-          }
-          // at-least-once re-delivery of a committed batch: must no-op
-          graft.streaming.StreamNgramDf.appendBatch(dir,
-            docs.filter(pmod(col("doc_id"), lit(3)) === 1), 1)
-        }
-        graft.ArtifactStore.dirArtifact(d, "st11ngdf", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            ingest(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st11-")
-            tmpSt11Dirs += p
-            ingest(p.toString)
-            p.toString
-        }
-      })
-    }
-  private def streamedNgramDf(s: SparkSession, d: String): DataFrame =
-    streamNgDfCache.synchronized {
-      streamNgDfCache.getOrElseUpdate((s, d), {
-        val t = graft.streaming.StreamNgramDf
-          .load(s, streamedNgramDfDir(s, d)).get.persist()
-        t.count() // materialize inside the lock (shared await)
-        t
-      })
-    }
+  private val streamedNgramDf = Artifact("streamedNgramDf") { (s, d) =>
+    val t = graft.streaming.StreamNgramDf
+      .load(s, streamedNgramDfDir(s, d)).get.persist()
+    t.count() // materialize inside the lock (shared await)
+    t
+  }
 
   /** Memoized TAKEDOWN-lifecycle ngram-df index for st13 — the last
     * derivative in the forget cascade (x57 postings, x58 bodies, v32
@@ -538,41 +402,25 @@ object TextQ {
     * .compact]] absorbs it physically. Serve nets to bit-equality with
     * an index that never saw the docs — which is what the oracle
     * recomputes. */
-  private val takedownNgDfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def takedownNgramDf(s: SparkSession, d: String): DataFrame =
-    takedownNgDfCache.synchronized {
-      takedownNgDfCache.getOrElseUpdate((s, d), {
-        // v2 (r16): BRANCH the committed st11 prefix (replay leg is
-        // disk-neutral — see [[streamedNgramDfDir]]) instead of
-        // re-running the 3-batch ingest; takedown verbs unchanged.
-        val spec = "v2 branch=st11 delete=%10==0 compact"
-        def build(dir: String): Unit = {
-          val docs = Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)
-          graft.ArtifactStore.branchFrom(streamedNgramDfDir(s, d),
-            java.nio.file.Paths.get(dir))
-          graft.streaming.StreamNgramDf.deleteDocs(s, dir,
-            docs.filter(col("doc_id") % 10 === 0))
-          graft.streaming.StreamNgramDf.compact(s, dir,
-            into = graft.streaming.StreamNgramDf.nextCompactId(s, dir))
-        }
-        val dir = graft.ArtifactStore.dirArtifact(d, "st13ngdf", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st13-")
-            tmpSt11Dirs += p
-            build(p.toString)
-            p.toString
-        }
-        val t = graft.streaming.StreamNgramDf.load(s, dir).get.persist()
-        t.count() // materialize inside the lock (shared await)
-        t
-      })
+  private val takedownNgramDf = Artifact("takedownNgramDf", streamedNgramDf) { (s, d) =>
+    // v2 (r16): BRANCH the committed st11 prefix (replay leg is
+    // disk-neutral — see [[streamedNgramDfDir]]) instead of
+    // re-running the 3-batch ingest; takedown verbs unchanged.
+    val spec = "v2 branch=st11 delete=%10==0 compact"
+    def build(dir: String): Unit = {
+      val docs = Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)
+      graft.ArtifactStore.branchFrom(streamedNgramDfDir(s, d),
+        java.nio.file.Paths.get(dir))
+      graft.streaming.StreamNgramDf.deleteDocs(s, dir,
+        docs.filter(col("doc_id") % 10 === 0))
+      graft.streaming.StreamNgramDf.compact(s, dir,
+        into = graft.streaming.StreamNgramDf.nextCompactId(s, dir))
     }
+    val dir = Artifact.storedDir(d, "st13ngdf", spec)(build)
+    val t = graft.streaming.StreamNgramDf.load(s, dir).get.persist()
+    t.count() // materialize inside the lock (shared await)
+    t
+  }
 
   /** The st9/x58 shared 3-batch curation ingest: quality filter +
     * benchmark decontam + stratified sample (the x53 policy) through
@@ -612,6 +460,25 @@ object TextQ {
     }
   }
 
+  /** The x58 sink DIR: the st9 prefix branched, then delete + full
+    * compact. */
+  private val takedownCurationDir = Artifact("takedownCurationDir") { (s, d) =>
+    // v2 (r16): BRANCH the committed st9 prefix instead of re-running
+    // the 3-batch policy ingest ([[streamedCurationDir]]) — the
+    // divergent verbs (delete + full compact) are unchanged, so the
+    // served corpus is identical (the DuckDB oracle re-proves it).
+    val spec = "v2 branch=st9 delete=%10==0 fullcompact"
+    def build(dir: java.nio.file.Path): Unit = {
+      graft.ArtifactStore.branchFrom(streamedCurationDir(s, d), dir)
+      graft.streaming.StreamCurate.deleteCurated(s, dir.toString,
+        Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+          .select("doc_id"))
+      graft.streaming.StreamCurate.compact(s, dir.toString,
+        into = graft.streaming.StreamCurate.nextCompactId(s, dir.toString))
+    }
+    Artifact.storedDir(d, "x58cur", spec)(p => build(java.nio.file.Paths.get(p)))
+  }
+
   /** Memoized TAKEDOWN-lifecycle curated corpus for x58 — the st9
     * pipeline plus the delete verb on the sink that holds the BODIES:
     * same 3-batch ingest and policy as [[streamedCuration]] (own dir),
@@ -621,50 +488,13 @@ object TextQ {
     * recompute as "st9's output minus the deleted slice". The seen
     * digest index survives both, so re-crawls of taken-down bytes stay
     * out structurally (StreamCurationSpec pins the lifecycle). */
-  private val x58Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val x58DirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def takedownCurationDir(s: SparkSession, d: String): String =
-    x58DirCache.synchronized {
-      x58DirCache.getOrElseUpdate((s, d), {
-        // v2 (r16): BRANCH the committed st9 prefix instead of re-running
-        // the 3-batch policy ingest ([[streamedCurationDir]]) — the
-        // divergent verbs (delete + full compact) are unchanged, so the
-        // served corpus is identical (the DuckDB oracle re-proves it).
-        val spec = "v2 branch=st9 delete=%10==0 fullcompact"
-        def build(dir: java.nio.file.Path): Unit = {
-          graft.ArtifactStore.branchFrom(streamedCurationDir(s, d), dir)
-          graft.streaming.StreamCurate.deleteCurated(s, dir.toString,
-            Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-              .select("doc_id"))
-          graft.streaming.StreamCurate.compact(s, dir.toString,
-            into = graft.streaming.StreamCurate.nextCompactId(s, dir.toString))
-        }
-        graft.ArtifactStore.dirArtifact(d, "x58cur", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x58-")
-            tmpSt9Dirs += p
-            build(p)
-            p.toString
-        }
-      })
-    }
-  private def takedownCuration(s: SparkSession, d: String): DataFrame =
-    x58Cache.synchronized {
-      x58Cache.getOrElseUpdate((s, d), {
-        val dir = takedownCurationDir(s, d)
-        val out = graft.streaming.StreamCurate.load(s, dir).get
-          .select("doc_id", "lang", "source").persist()
-        out.count()
-        out
-      })
-    }
+  private val takedownCuration = Artifact("takedownCuration", streamedCuration) { (s, d) =>
+    val dir = takedownCurationDir(s, d)
+    val out = graft.streaming.StreamCurate.load(s, dir).get
+      .select("doc_id", "lang", "source").persist()
+    out.count()
+    out
+  }
 
   /** Memoized CONTAINMENT index for x70/x61 — the maintained artifacts
     * of the containment family ([[graft.ext.Dedup.containmentAgainst]]
@@ -676,29 +506,23 @@ object TextQ {
     * partition-pruned flat read, never a per-increment explode of every
     * stored set) over the doc_id % 4 != 0 index slice (the x55 split
     * convention). ArtifactStore'd + prewarmed like every maintained
-    * index. */
-  private val contIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  private def containmentIndex(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    contIdxCache.synchronized {
-      contIdxCache.getOrElseUpdate((s, d), {
-        val Seq(setsFull, dfT, post) = graft.ArtifactStore.group(s, d,
-          "cont5", "v2 n=5 sets=full df/post=doc_id%4!=0 post=ngb",
-          Seq("sets", "df", "post"),
-          partitioned = Map("post" -> Seq("ngb"))) {
-          val all = Dedup.shingleSets(
-            Tables.documents(s, d), "doc_id", "text", n = 5).persist()
-          val idx = all.filter(col("__cid") % 4 =!= 0)
-          val post0 = Dedup.postingsOf(idx)
-          val df0 = post0.groupBy("ng").agg(count(lit(1)).as("ndocs"))
-          Seq(all, df0, post0)
-        }
-        val st = setsFull.persist(); st.count()
-        val dfp = dfT.persist(); dfp.count()
-        (st, dfp, post)
-      })
+    * index. The postings stay disk-resident (not persisted). */
+  private val containmentIndex = Artifact("containmentIndex") { (s, d) =>
+    val Seq(setsFull, dfT, post) = graft.ArtifactStore.group(s, d,
+      "cont5", "v2 n=5 sets=full df/post=doc_id%4!=0 post=ngb",
+      Seq("sets", "df", "post"),
+      partitioned = Map("post" -> Seq("ngb"))) {
+      val all = Dedup.shingleSets(
+        Tables.documents(s, d), "doc_id", "text", n = 5).persist()
+      val idx = all.filter(col("__cid") % 4 =!= 0)
+      val post0 = Dedup.postingsOf(idx)
+      val df0 = post0.groupBy("ng").agg(count(lit(1)).as("ndocs"))
+      Seq(all, df0, post0)
     }
+    val st = setsFull.persist(); st.count()
+    val dfp = dfT.persist(); dfp.count()
+    (st, dfp, post)
+  }
 
   /** Memoized TAKEDOWN-lifecycle containment sink dir for st16 — the
     * maintained containment index ([[graft.streaming.StreamContainment]])
@@ -707,38 +531,22 @@ object TextQ {
     * bodies needed, the stored sets are the contribution record), and a
     * compaction fold (masks and deltas absorbed). st16 then serves the
     * % 4 == 0 batch's containment against the survivors. */
-  private val st16Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def takedownContainment(s: SparkSession, d: String): String =
-    st16Cache.synchronized {
-      st16Cache.getOrElseUpdate((s, d), {
-        val spec = "v1 3batches mod3 corpus=doc_id%4!=0 n=5 " +
-          "delete=%9==2 compact"
-        def build(dir: String): Unit = {
-          val docs = Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)
-          (0 to 2).foreach { i =>
-            graft.streaming.StreamContainment.appendBatch(dir,
-              docs.filter(pmod(col("doc_id"), lit(3)) === i), i)
-          }
-          graft.streaming.StreamContainment.deleteDocs(s, dir,
-            docs.filter(col("doc_id") % 9 === 2).select("doc_id"))
-          graft.streaming.StreamContainment.compact(s, dir,
-            into = graft.streaming.StreamContainment.nextCompactId(s, dir))
-        }
-        graft.ArtifactStore.dirArtifact(d, "st16cont", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st16-")
-            tmpSt11Dirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
+  private val takedownContainment = Artifact("takedownContainment") { (s, d) =>
+    val spec = "v1 3batches mod3 corpus=doc_id%4!=0 n=5 " +
+      "delete=%9==2 compact"
+    def build(dir: String): Unit = {
+      val docs = Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0)
+      (0 to 2).foreach { i =>
+        graft.streaming.StreamContainment.appendBatch(dir,
+          docs.filter(pmod(col("doc_id"), lit(3)) === i), i)
+      }
+      graft.streaming.StreamContainment.deleteDocs(s, dir,
+        docs.filter(col("doc_id") % 9 === 2).select("doc_id"))
+      graft.streaming.StreamContainment.compact(s, dir,
+        into = graft.streaming.StreamContainment.nextCompactId(s, dir))
     }
+    Artifact.storedDir(d, "st16cont", spec)(build)
+  }
 
   /** Memoized FULL-CASCADE takedown root for x73 — all SIX maintained
     * sinks ingested from ONE corpus slice (doc_id % 7 == 1; two
@@ -749,8 +557,6 @@ object TextQ {
     * IVF vec is a deterministic function of the id (the TakedownSpec
     * shape — counts, not geometry, are what attest binds); the
     * cluster edges hang each doc off a % 3 hub above the id space. */
-  private val x73Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
   private def cascadeSinks(root: String) = graft.streaming.Takedown.Sinks(
     curateDir = Some(s"$root/corpus"),
     bm25Dir = Some(s"$root/bm25"),
@@ -758,67 +564,53 @@ object TextQ {
     clustersDir = Some(s"$root/cc"),
     containmentDir = Some(s"$root/cont"),
     ngramDf = Some((s"$root/ngdf", 3)))
-  private def cascadeRoot(s: SparkSession, d: String): String =
-    x73Cache.synchronized {
-      x73Cache.getOrElseUpdate((s, d), {
-        val spec = "v2 slice=%7==1 saltuid 2batches mod2 victims=%5==3 " +
-          "ivf=nCells4 hubs=%3+3e9 ngram=n3 forget +fpshard"
-        def build(root: String): Unit = {
-          val sinks = cascadeSinks(root)
-          // texts salted with the id: the curation sink's digest dedup
-          // becomes identity, so every ingested id resolves a body and
-          // the ngram leg's per-key guard can never trip on a dup loser
-          // — the attestation binds IDS; the dedup lifecycle is x71's
-          // (and st3's) concern
-          val slice = Tables.documents(s, d)
-            .filter(col("doc_id") % 7 === 1)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" uid"), col("doc_id")).as("text"))
-          val vecOf = array((0 to 3).map(j =>
-            pmod(col("doc_id") * (j + 3), lit(7)).cast("double") + 0.1): _*)
-          // the six sinks write disjoint dirs, so their ingest chains run
-          // CONCURRENTLY (batch order preserved WITHIN each sink) — this
-          // builder is the prewarm critical path's root (42 s solo,
-          // ~136 s co-scheduled, r15 measurement) and was 12 sequential
-          // append jobs
-          def b(i: Int) = slice.filter(pmod(col("doc_id"), lit(2)) === i)
-          graft.Graft.parLegs(s)(Seq(
-            () => (0 to 1).foreach(i => graft.streaming.StreamCurate
-              .appendBatch(sinks.curateDir.get, b(i), i.toLong,
-                batch => batch.select("doc_id", "text"))),
-            () => (0 to 1).foreach(i => graft.streaming.StreamBm25
-              .appendBatch(sinks.bm25Dir.get, b(i), i.toLong,
-                "doc_id", "text")),
-            () => (0 to 1).foreach(i => graft.streaming.StreamIvf
-              .appendBatch(sinks.ivf.get._1,
-                b(i).select(col("doc_id"), vecOf.as("vec")), i.toLong,
-                "doc_id", "vec", nCells = 4)),
-            () => (0 to 1).foreach(i => graft.streaming.StreamClusters
-              .appendBatch(sinks.clustersDir.get,
-                b(i).select(col("doc_id").as("id1"),
-                  (col("doc_id") % 3 + 3000000000L).as("id2")), i.toLong)),
-            () => (0 to 1).foreach(i => graft.streaming.StreamContainment
-              .appendBatch(sinks.containmentDir.get, b(i), i.toLong)),
-            () => (0 to 1).foreach(i => graft.streaming.StreamNgramDf
-              .appendBatch(sinks.ngramDf.get._1, b(i), i.toLong))))
-          graft.streaming.Takedown.forget(s,
-            slice.filter(col("doc_id") % 5 === 3).select("doc_id"),
-            sinks)
-        }
-        graft.ArtifactStore.dirArtifact(d, "x73cascade", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x73-")
-            tmpSt11Dirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
+  private val cascadeRoot = Artifact("cascadeRoot") { (s, d) =>
+    val spec = "v2 slice=%7==1 saltuid 2batches mod2 victims=%5==3 " +
+      "ivf=nCells4 hubs=%3+3e9 ngram=n3 forget +fpshard"
+    def build(root: String): Unit = {
+      val sinks = cascadeSinks(root)
+      // texts salted with the id: the curation sink's digest dedup
+      // becomes identity, so every ingested id resolves a body and
+      // the ngram leg's per-key guard can never trip on a dup loser
+      // — the attestation binds IDS; the dedup lifecycle is x71's
+      // (and st3's) concern
+      val slice = Tables.documents(s, d)
+        .filter(col("doc_id") % 7 === 1)
+        .select(col("doc_id"),
+          concat(col("text"), lit(" uid"), col("doc_id")).as("text"))
+      val vecOf = array((0 to 3).map(j =>
+        pmod(col("doc_id") * (j + 3), lit(7)).cast("double") + 0.1): _*)
+      // the six sinks write disjoint dirs, so their ingest chains run
+      // CONCURRENTLY (batch order preserved WITHIN each sink) — this
+      // builder is the prewarm critical path's root (42 s solo,
+      // ~136 s co-scheduled, r15 measurement) and was 12 sequential
+      // append jobs
+      def b(i: Int) = slice.filter(pmod(col("doc_id"), lit(2)) === i)
+      graft.Graft.parLegs(s)(Seq(
+        () => (0 to 1).foreach(i => graft.streaming.StreamCurate
+          .appendBatch(sinks.curateDir.get, b(i), i.toLong,
+            batch => batch.select("doc_id", "text"))),
+        () => (0 to 1).foreach(i => graft.streaming.StreamBm25
+          .appendBatch(sinks.bm25Dir.get, b(i), i.toLong,
+            "doc_id", "text")),
+        () => (0 to 1).foreach(i => graft.streaming.StreamIvf
+          .appendBatch(sinks.ivf.get._1,
+            b(i).select(col("doc_id"), vecOf.as("vec")), i.toLong,
+            "doc_id", "vec", nCells = 4)),
+        () => (0 to 1).foreach(i => graft.streaming.StreamClusters
+          .appendBatch(sinks.clustersDir.get,
+            b(i).select(col("doc_id").as("id1"),
+              (col("doc_id") % 3 + 3000000000L).as("id2")), i.toLong)),
+        () => (0 to 1).foreach(i => graft.streaming.StreamContainment
+          .appendBatch(sinks.containmentDir.get, b(i), i.toLong)),
+        () => (0 to 1).foreach(i => graft.streaming.StreamNgramDf
+          .appendBatch(sinks.ngramDf.get._1, b(i), i.toLong))))
+      graft.streaming.Takedown.forget(s,
+        slice.filter(col("doc_id") % 5 === 3).select("doc_id"),
+        sinks)
     }
+    Artifact.storedDir(d, "x73cascade", spec)(build)
+  }
 
   /** Recursive dir copy for fixture derivation (st21): committed
     * artifact trees are immutable, so deriving a mutated fixture from a
@@ -851,33 +643,17 @@ object TextQ {
     * .Takedown.maintain]] pass: the four mask sinks absorb their
     * tombstones into fresh base partitions, stranding exactly the
     * history partitions the bytes-level retention dry run prices. */
-  private val st21Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def maintainedRoot(s: SparkSession, d: String): String =
-    st21Cache.synchronized {
-      st21Cache.getOrElseUpdate((s, d), {
-        val spec = "v2 copyof=x73cascade(v2,+fpshard) maintain"
-        def build(root: String): Unit = {
-          copyTree(java.nio.file.Paths.get(cascadeRoot(s, d)),
-            java.nio.file.Paths.get(root))
-          graft.streaming.Takedown.maintain(s, cascadeSinks(root))
-            .collect()
-          ()
-        }
-        graft.ArtifactStore.dirArtifact(d, "st21maint", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st21-")
-            tmpSt11Dirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
+  private val maintainedRoot = Artifact("maintainedRoot", cascadeRoot) { (s, d) =>
+    val spec = "v2 copyof=x73cascade(v2,+fpshard) maintain"
+    def build(root: String): Unit = {
+      copyTree(java.nio.file.Paths.get(cascadeRoot(s, d)),
+        java.nio.file.Paths.get(root))
+      graft.streaming.Takedown.maintain(s, cascadeSinks(root))
+        .collect()
+      ()
     }
+    Artifact.storedDir(d, "st21maint", spec)(build)
+  }
 
   /** Memoized RELEASE root for x76/x77 — two training releases
     * published over [[cascadeRoot]]'s corpus sink (read-only on the
@@ -887,38 +663,22 @@ object TextQ {
     * (post-forget) generation. The pair is the audit story: a release
     * published before a takedown still contains the victims; the one
     * published after does not. */
-  private val x76Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def releaseRoot(s: SparkSession, d: String): String =
-    x76Cache.synchronized {
-      x76Cache.getOrElseUpdate((s, d), {
-        val spec = "v1 over=x73cascade r1@gen2 r2@latest shards=8"
-        def build(root: String): Unit = {
-          val corpusDir = s"${cascadeRoot(s, d)}/corpus"
-          // r1/r2 publish PINNED generations of an already-committed
-          // corpus into disjoint staged dirs — independent publishers;
-          // run concurrently (r16, the foldReleaseRoot f4/f5 rationale)
-          graft.Graft.parLegs(s)(Seq(
-            () => { graft.streaming.Release.publish(s, corpusDir,
-              Some(2), root, "r1", nShards = 8); () },
-            () => { graft.streaming.Release.publish(s, corpusDir, None,
-              root, "r2", nShards = 8); () }))
-          ()
-        }
-        graft.ArtifactStore.dirArtifact(d, "x76rel", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x76-")
-            tmpSt11Dirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
+  private val releaseRoot = Artifact("releaseRoot", cascadeRoot) { (s, d) =>
+    val spec = "v1 over=x73cascade r1@gen2 r2@latest shards=8"
+    def build(root: String): Unit = {
+      val corpusDir = s"${cascadeRoot(s, d)}/corpus"
+      // r1/r2 publish PINNED generations of an already-committed
+      // corpus into disjoint staged dirs — independent publishers;
+      // run concurrently (r16, the foldReleaseRoot f4/f5 rationale)
+      graft.Graft.parLegs(s)(Seq(
+        () => { graft.streaming.Release.publish(s, corpusDir,
+          Some(2), root, "r1", nShards = 8); () },
+        () => { graft.streaming.Release.publish(s, corpusDir, None,
+          root, "r2", nShards = 8); () }))
+      ()
     }
+    Artifact.storedDir(d, "x76rel", spec)(build)
+  }
 
   /** Memoized DELTA-release root for x78 — `d1` published at the
     * pre-forget generation with a PRODUCTION-shaped shard count (64:
@@ -926,34 +686,18 @@ object TextQ {
     * as a [[graft.streaming.Release.publishDelta]] against it at the
     * post-forget generation: only victim-touched shards rewrite, the
     * rest byte-copy from d1, victim-only shards drop. */
-  private val x78Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def deltaReleaseRoot(s: SparkSession, d: String): String =
-    x78Cache.synchronized {
-      x78Cache.getOrElseUpdate((s, d), {
-        val spec = "v2 over=x73cascade d1@gen2 d2=delta@latest shards=64 +via"
-        def build(root: String): Unit = {
-          val corpusDir = s"${cascadeRoot(s, d)}/corpus"
-          graft.streaming.Release.publish(s, corpusDir, Some(2), root,
-            "d1", nShards = 64)
-          graft.streaming.Release.publishDelta(s, corpusDir, None, root,
-            "d2", basedOn = "d1")
-          ()
-        }
-        graft.ArtifactStore.dirArtifact(d, "x78rel", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x78-")
-            tmpSt11Dirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
+  private val deltaReleaseRoot = Artifact("deltaReleaseRoot", cascadeRoot) { (s, d) =>
+    val spec = "v2 over=x73cascade d1@gen2 d2=delta@latest shards=64 +via"
+    def build(root: String): Unit = {
+      val corpusDir = s"${cascadeRoot(s, d)}/corpus"
+      graft.streaming.Release.publish(s, corpusDir, Some(2), root,
+        "d1", nShards = 64)
+      graft.streaming.Release.publishDelta(s, corpusDir, None, root,
+        "d2", basedOn = "d1")
+      ()
     }
+    Artifact.storedDir(d, "x78rel", spec)(build)
+  }
 
   /** Memoized FOLD-CROSSING release root for x80/x81 — the two
     * post-r13 [[graft.streaming.Release.publishDelta]] tiers made
@@ -967,76 +711,60 @@ object TextQ {
     * the % 5 == 2 victims forgotten (gen 5), and `f3 = delta(f1)` —
     * the maintained per-shard fingerprint state decides every shard
     * from metadata, `via = state`. */
-  private val x80Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def foldReleaseRoot(s: SparkSession, d: String): String =
-    x80Cache.synchronized {
-      x80Cache.getOrElseUpdate((s, d), {
-        // v2 (r15): the fold writes the base SHARD-CLUSTERED
-        // (clusterBins=64 — one cluster dir per release shard), so
-        // f3's state-tier content read partition-prunes to the
-        // touched shards' dirs (VERDICT r14 #1); content and both
-        // delta reports are bit-identical to v1's. f4 (same final
-        // snapshot at 16 shards) exists for the CROSS-LAYOUT
-        // comparison x84 — different shard count on purpose.
-        // f5 = LINKED delta of the same final snapshot (x85): untouched
-        // shards recorded as references into f1's physical dirs
-        val spec = "v3 slice=%7==2 saltuid 2batches mod2 f1@2 shards=64 " +
-          "forget=%5==1 foldcb64 f2=delta vacuum forget=%5==2 " +
-          "f3=delta(f1) f4@16 f5=linkdelta(f1)"
-        def build(root: String): Unit = {
-          val corpusDir = s"$root/corpus"
-          val rel = s"$root/releases"
-          val slice = Tables.documents(s, d)
-            .filter(col("doc_id") % 7 === 2)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" uid"), col("doc_id")).as("text"))
-          (0 to 1).foreach { i =>
-            graft.streaming.StreamCurate.appendBatch(corpusDir,
-              slice.filter(pmod(col("doc_id"), lit(2)) === i), i.toLong,
-              b => b.select("doc_id", "text"))
-          }
-          graft.streaming.Release.publish(s, corpusDir, None, rel,
-            "f1", nShards = 64)
-          graft.streaming.StreamCurate.deleteCurated(s, corpusDir,
-            slice.filter(col("doc_id") % 5 === 1).select("doc_id"))
-          graft.streaming.StreamCurate.compact(s, corpusDir,
-            graft.streaming.StreamCurate.nextCompactId(s, corpusDir),
-            clusterBins = 64)
-          graft.streaming.Release.publishDelta(s, corpusDir, None, rel,
-            "f2", basedOn = "f1")
-          graft.streaming.StreamCurate.vacuum(s, corpusDir)
-          graft.streaming.StreamCurate.deleteCurated(s, corpusDir,
-            slice.filter(col("doc_id") % 5 === 2).select("doc_id"))
-          graft.streaming.Release.publishDelta(s, corpusDir, None, rel,
-            "f3", basedOn = "f1")
-          // f4/f5 both read the SAME committed final generation and
-          // write disjoint staged release dirs — independent publishers
-          // by the commit protocol's own design, so run them
-          // concurrently (r16, [[graft.Graft.parLegs]]; per-release
-          // content is deterministic, so concurrency changes wall,
-          // never bytes — the fresh-store oracle gate re-proves it)
-          graft.Graft.parLegs(s)(Seq(
-            () => { graft.streaming.Release.publish(s, corpusDir, None,
-              rel, "f4", nShards = 16); () },
-            () => { graft.streaming.Release.publishDelta(s, corpusDir,
-              None, rel, "f5", basedOn = "f1", link = true); () }))
-          ()
-        }
-        graft.ArtifactStore.dirArtifact(d, "x80rel", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-x80-")
-            tmpSt11Dirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
+  private val foldReleaseRoot = Artifact("foldReleaseRoot") { (s, d) =>
+    // v2 (r15): the fold writes the base SHARD-CLUSTERED
+    // (clusterBins=64 — one cluster dir per release shard), so
+    // f3's state-tier content read partition-prunes to the
+    // touched shards' dirs (VERDICT r14 #1); content and both
+    // delta reports are bit-identical to v1's. f4 (same final
+    // snapshot at 16 shards) exists for the CROSS-LAYOUT
+    // comparison x84 — different shard count on purpose.
+    // f5 = LINKED delta of the same final snapshot (x85): untouched
+    // shards recorded as references into f1's physical dirs
+    val spec = "v3 slice=%7==2 saltuid 2batches mod2 f1@2 shards=64 " +
+      "forget=%5==1 foldcb64 f2=delta vacuum forget=%5==2 " +
+      "f3=delta(f1) f4@16 f5=linkdelta(f1)"
+    def build(root: String): Unit = {
+      val corpusDir = s"$root/corpus"
+      val rel = s"$root/releases"
+      val slice = Tables.documents(s, d)
+        .filter(col("doc_id") % 7 === 2)
+        .select(col("doc_id"),
+          concat(col("text"), lit(" uid"), col("doc_id")).as("text"))
+      (0 to 1).foreach { i =>
+        graft.streaming.StreamCurate.appendBatch(corpusDir,
+          slice.filter(pmod(col("doc_id"), lit(2)) === i), i.toLong,
+          b => b.select("doc_id", "text"))
+      }
+      graft.streaming.Release.publish(s, corpusDir, None, rel,
+        "f1", nShards = 64)
+      graft.streaming.StreamCurate.deleteCurated(s, corpusDir,
+        slice.filter(col("doc_id") % 5 === 1).select("doc_id"))
+      graft.streaming.StreamCurate.compact(s, corpusDir,
+        graft.streaming.StreamCurate.nextCompactId(s, corpusDir),
+        clusterBins = 64)
+      graft.streaming.Release.publishDelta(s, corpusDir, None, rel,
+        "f2", basedOn = "f1")
+      graft.streaming.StreamCurate.vacuum(s, corpusDir)
+      graft.streaming.StreamCurate.deleteCurated(s, corpusDir,
+        slice.filter(col("doc_id") % 5 === 2).select("doc_id"))
+      graft.streaming.Release.publishDelta(s, corpusDir, None, rel,
+        "f3", basedOn = "f1")
+      // f4/f5 both read the SAME committed final generation and
+      // write disjoint staged release dirs — independent publishers
+      // by the commit protocol's own design, so run them
+      // concurrently (r16, [[graft.Graft.parLegs]]; per-release
+      // content is deterministic, so concurrency changes wall,
+      // never bytes — the fresh-store oracle gate re-proves it)
+      graft.Graft.parLegs(s)(Seq(
+        () => { graft.streaming.Release.publish(s, corpusDir, None,
+          rel, "f4", nShards = 16); () },
+        () => { graft.streaming.Release.publishDelta(s, corpusDir,
+          None, rel, "f5", basedOn = "f1", link = true); () }))
+      ()
     }
+    Artifact.storedDir(d, "x80rel", spec)(build)
+  }
 
   /** Memoized GC-lifecycle report for x79 — the release lifecycle's
     * CLOSING verb ([[graft.streaming.Release.retire]] +
@@ -1050,31 +778,25 @@ object TextQ {
     * shared-account construction (ReleaseSpec pins bytes follow the
     * report, referenced bases never reclaim, gc idempotence, and that
     * retired names stay claimed). */
-  private val x79Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def gcReport(s: SparkSession, d: String): DataFrame =
-    x79Cache.synchronized {
-      x79Cache.getOrElseUpdate((s, d), {
-        val spec = "v1 over=x73cascade g1@gen2 g2=delta@latest " +
-          "g3@latest shards=8 retire=g1,g3 gc"
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "x79gc", spec) {
-          val corpusDir = s"${cascadeRoot(s, d)}/corpus"
-          val root = java.nio.file.Files.createTempDirectory("graft-x79-")
-          tmpSt11Dirs += root
-          val rr = root.toString
-          graft.streaming.Release.publish(s, corpusDir, Some(2), rr,
-            "g1", nShards = 8)
-          graft.streaming.Release.publishDelta(s, corpusDir, None, rr,
-            "g2", basedOn = "g1")
-          graft.streaming.Release.publish(s, corpusDir, None, rr,
-            "g3", nShards = 8)
-          graft.streaming.Release.retire(s, rr, "g1")
-          graft.streaming.Release.retire(s, rr, "g3")
-          graft.streaming.Release.gc(s, rr)
-        }
-        val x = loaded.persist(); x.count(); x
-      })
+  private val gcReport = Artifact("gcReport", cascadeRoot) { (s, d) =>
+    val spec = "v1 over=x73cascade g1@gen2 g2=delta@latest " +
+      "g3@latest shards=8 retire=g1,g3 gc"
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "x79gc", spec) {
+      val corpusDir = s"${cascadeRoot(s, d)}/corpus"
+      val root = Artifact.tempDir("graft-x79-")
+      val rr = root.toString
+      graft.streaming.Release.publish(s, corpusDir, Some(2), rr,
+        "g1", nShards = 8)
+      graft.streaming.Release.publishDelta(s, corpusDir, None, rr,
+        "g2", basedOn = "g1")
+      graft.streaming.Release.publish(s, corpusDir, None, rr,
+        "g3", nShards = 8)
+      graft.streaming.Release.retire(s, rr, "g1")
+      graft.streaming.Release.retire(s, rr, "g3")
+      graft.streaming.Release.gc(s, rr)
     }
+    val x = loaded.persist(); x.count(); x
+  }
 
   /** Memoized ADMISSION-GATE decision table for x71 — the x63 PSI
     * monitor wired to a policy ([[graft.streaming.StreamCurate
@@ -1086,37 +808,31 @@ object TextQ {
     * (admitted: the quarantine left no residue). The artifact stores
     * the four decision rows — the monitor's log — which the oracle
     * recomputes from the raw corpus with x63's PSI arithmetic. */
-  private val x71Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def admissionDecisions(s: SparkSession, d: String): DataFrame =
-    x71Cache.synchronized {
-      x71Cache.getOrElseUpdate((s, d), {
-        val spec = "v1 4batches mod3 bin=nchars/100cap9 drift=nchars>=400 " +
-          "threshold=0.25"
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "x71adm", spec) {
-          val docs = Tables.documents(s, d)
-            .select("doc_id", "n_chars", "text")
-          val policy = (b: DataFrame) => b.select("doc_id", "n_chars")
-          val bin = least(floor(col("n_chars") / 100), lit(9))
-          val dirP = java.nio.file.Files.createTempDirectory("graft-x71-")
-          tmpSt9Dirs += dirP // scratch sink; only the decisions persist
-          val dir = dirP.toString
-          def admit(b: DataFrame, id: Long) =
-            graft.streaming.StreamCurate.admitBatch(dir, b, id, policy,
-              bin, nBins = 10, threshold = 0.25)
-          Seq(
-            admit(docs.filter(col("doc_id") % 3 === 0), 0L),
-            admit(docs.filter(col("doc_id") % 3 === 1), 1L),
-            admit(docs.filter(col("doc_id") % 3 === 2 &&
-              col("n_chars") >= 400), 2L),
-            admit(docs.filter(col("doc_id") % 3 === 2), 3L))
-            .reduce(_ unionByName _) // decisions are literal rows —
-              // each admit() already ran its ingest/refusal eagerly
-        }
-        val out = loaded.persist(); out.count()
-        out
-      })
+  private val admissionDecisions = Artifact("admissionDecisions") { (s, d) =>
+    val spec = "v1 4batches mod3 bin=nchars/100cap9 drift=nchars>=400 " +
+      "threshold=0.25"
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "x71adm", spec) {
+      val docs = Tables.documents(s, d)
+        .select("doc_id", "n_chars", "text")
+      val policy = (b: DataFrame) => b.select("doc_id", "n_chars")
+      val bin = least(floor(col("n_chars") / 100), lit(9))
+      // scratch sink; only the decisions persist
+      val dir = Artifact.tempDir("graft-x71-").toString
+      def admit(b: DataFrame, id: Long) =
+        graft.streaming.StreamCurate.admitBatch(dir, b, id, policy,
+          bin, nBins = 10, threshold = 0.25)
+      Seq(
+        admit(docs.filter(col("doc_id") % 3 === 0), 0L),
+        admit(docs.filter(col("doc_id") % 3 === 1), 1L),
+        admit(docs.filter(col("doc_id") % 3 === 2 &&
+          col("n_chars") >= 400), 2L),
+        admit(docs.filter(col("doc_id") % 3 === 2), 3L))
+        .reduce(_ unionByName _) // decisions are literal rows —
+          // each admit() already ran its ingest/refusal eagerly
     }
+    val out = loaded.persist(); out.count()
+    out
+  }
 
   /** Memoized MAINTAINED-FINGERPRINT curation dir for st15 — the st9
     * pipeline + the %10 takedown, NO compaction: the fingerprint is
@@ -1124,158 +840,48 @@ object TextQ {
     * partial alone ([[graft.streaming.StreamCurate.fingerprintState]]),
     * so the driver query proves the metadata-sized serve equals a
     * DuckDB recomputation of the whole kept-set checksum. */
-  private val st15Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def fpCuration(s: SparkSession, d: String): DataFrame =
-    st15Cache.synchronized {
-      st15Cache.getOrElseUpdate((s, d), {
-        // v2: per-column row hash (the r11 session-2 review fix) — a v1
-        // dir's partials carry the old concat_ws hash and must rebuild.
-        // v3 (r16): BRANCH the committed st9 prefix instead of re-running
-        // the 3-batch policy ingest (the st9/x58 rationale — the fp
-        // partials are written by the SAME appendBatch, so the branched
-        // prefix carries them byte-identically).
-        val spec = "v3 branch=st9 delete=%10==0 fpstate"
-        def build(dir: java.nio.file.Path): Unit = {
-          graft.ArtifactStore.branchFrom(streamedCurationDir(s, d), dir)
-          graft.streaming.StreamCurate.deleteCurated(s, dir.toString,
-            Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-              .select("doc_id"))
-        }
-        val dir = graft.ArtifactStore.dirArtifact(d, "st15fp", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st15-")
-            tmpSt9Dirs += p
-            build(p)
-            p.toString
-        }
-        val out = graft.streaming.StreamCurate.fingerprintState(s, dir)
-          .get.persist()
-        out.count()
-        out
-      })
+  private val fpCuration = Artifact("fpCuration", streamedCuration) { (s, d) =>
+    // v2: per-column row hash (the r11 session-2 review fix) — a v1
+    // dir's partials carry the old concat_ws hash and must rebuild.
+    // v3 (r16): BRANCH the committed st9 prefix instead of re-running
+    // the 3-batch policy ingest (the st9/x58 rationale — the fp
+    // partials are written by the SAME appendBatch, so the branched
+    // prefix carries them byte-identically).
+    val spec = "v3 branch=st9 delete=%10==0 fpstate"
+    def build(dir: java.nio.file.Path): Unit = {
+      graft.ArtifactStore.branchFrom(streamedCurationDir(s, d), dir)
+      graft.streaming.StreamCurate.deleteCurated(s, dir.toString,
+        Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
+          .select("doc_id"))
     }
-
-  /** Prewarm DAG (r15): (name, deps, thunk) per shared-artifact builder,
-    * declared heaviest-first (cold-store walls, r15 measurement) within
-    * topological order so [[graft.Graft.warmAll]] can overlap independent
-    * builds. The only true edges are the cascade-root release family —
-    * maintainedRoot / releaseRoot / deltaReleaseRoot / gcReport read
-    * cascadeRoot's corpus dir; every other builder owns its fixture. */
-  private[graft] def prewarmTasks(s: SparkSession, d: String)
-      : Seq[(String, Seq[String], () => Unit)] = Seq(
-    ("takedownContainment", Nil, () => takedownContainment(s, d)),
-    ("prebuiltSegmented", Nil, () => prebuiltSegmented(s, d)),
-    ("cascadeRoot", Nil, () => cascadeRoot(s, d)),
-    ("containmentIndex", Nil, () => containmentIndex(s, d)),
-    ("streamedCuration", Nil, () => streamedCuration(s, d)),
-    ("foldReleaseRoot", Nil, () => foldReleaseRoot(s, d)),
-    ("realPairClusters", Nil, () => realPairClusters(s, d)),
-    // r16 branch edges: st15/x58 copy st9's committed prefix, st12
-    // copies st10's, st13 copies st11's ([[graft.ArtifactStore
-    // .branchFrom]]) — each branch waits for its base instead of
-    // re-running the shared ingest.
-    ("fpCuration", Seq("streamedCuration"), () => fpCuration(s, d)),
-    ("chainClusters", Nil, () => chainClusters(s, d)),
-    ("takedownCuration", Seq("streamedCuration"),
-      () => takedownCuration(s, d)),
-    ("admissionDecisions", Nil, () => admissionDecisions(s, d)),
-    ("streamedClusters", Nil, () => streamedClusters(s, d)),
-    ("benchSegBloom", Nil, () => benchSegBloom(s, d)),
-    ("takedownClusters", Seq("streamedClusters"),
-      () => takedownClusters(s, d)),
-    ("docSignals", Nil, () => docSignals(s, d)),
-    ("prebuiltMerged", Nil, () => prebuiltMerged(s, d)),
-    ("maintainedRoot", Seq("cascadeRoot"), () => maintainedRoot(s, d)),
-    ("gcReport", Seq("cascadeRoot"), () => gcReport(s, d)),
-    ("streamedNgramDf", Nil, () => streamedNgramDf(s, d)),
-    ("takedownNgramDf", Seq("streamedNgramDf"),
-      () => takedownNgramDf(s, d)),
-    ("deltaReleaseRoot", Seq("cascadeRoot"), () => deltaReleaseRoot(s, d)),
-    ("releaseRoot", Seq("cascadeRoot"), () => releaseRoot(s, d)),
-    ("corpusSigIndex", Nil, () => corpusSigIndex(s, d)),
-    ("corpusClusterTable", Nil, () => corpusClusterTable(s, d)),
-    ("ngramDfIndex", Nil, () => ngramDfIndex(s, d)))
-
-  private[graft] def prewarm(s: SparkSession, d: String): Unit =
-    // each builder isolated ([[graft.Graft.warm]]): one failure must not
-    // silently skip the rest of the leg
-    prewarmTasks(s, d).foreach { case (n, _, t) => graft.Graft.warm(n)(t()) }
-
-  /** Release the memoized cluster + signal tables (see Graft.clearCaches):
-    * unpersist cached blocks and drop the references so a long-running
-    * embedder can reclaim executor memory; the next call rebuilds. */
-  private[graft] def clearCache(): Unit = ccCache.synchronized {
-    ccCache.values.foreach(_.unpersist())
-    ccCache.clear()
-    realClusterCache.values.foreach(_.unpersist())
-    realClusterCache.clear()
-    sigCache.values.foreach(_.unpersist())
-    sigCache.clear()
-    sigIdxCache.values.foreach(_.unpersist())
-    sigIdxCache.clear()
-    ngDfIdxCache.values.foreach(_.unpersist())
-    ngDfIdxCache.clear()
-    corpusCcCache.values.foreach(_.unpersist())
-    corpusCcCache.clear()
-    segIdxCache.values.foreach { case (segs, pruned) =>
-      segs.postings.unpersist(); segs.segStats.unpersist()
-      segs.termDf.unpersist(); pruned.postings.unpersist()
-      pruned.stats.unpersist() // persisted read-back since the r8 store
-    }
-    segIdxCache.clear()
-    mergedIdxCache.values.foreach { idx =>
-      idx.postings.unpersist(); idx.stats.unpersist()
-    }
-    mergedIdxCache.clear()
-    bloomCache.clear() // plain driver arrays — no executor state to release
-    st9Cache.values.foreach(_.unpersist())
-    st9Cache.clear()
-    x58Cache.values.foreach(_.unpersist())
-    x58Cache.clear()
-    st15Cache.values.foreach(_.unpersist())
-    st15Cache.clear()
-    x71Cache.values.foreach(_.unpersist())
-    x71Cache.clear()
-    contIdxCache.values.foreach { case (a, b, _) =>
-      a.unpersist(); b.unpersist() // postings stay disk-resident
-    }
-    contIdxCache.clear()
-    tmpSt9Dirs.foreach(graft.ArtifactStore.deleteRecursively)
-    tmpSt9Dirs.clear()
-    // AFTER the temp dirs are gone: a memoized dir path may point into
-    // tmpSt9Dirs — clearing the frame caches but not the dir memo would
-    // hand the next x58/st14 call a deleted directory (and the r16
-    // branch builders would copy from one)
-    x58DirCache.clear()
-    st9DirCache.clear()
-    streamCcCache.values.foreach(_.unpersist())
-    streamCcCache.clear()
-    tmpSt10Dirs.foreach(graft.ArtifactStore.deleteRecursively)
-    tmpSt10Dirs.clear()
-    streamNgDfCache.values.foreach(_.unpersist())
-    streamNgDfCache.clear()
-    takedownCcCache.values.foreach(_.unpersist())
-    takedownCcCache.clear()
-    takedownNgDfCache.values.foreach(_.unpersist())
-    takedownNgDfCache.clear()
-    tmpSt11Dirs.foreach(graft.ArtifactStore.deleteRecursively)
-    tmpSt11Dirs.clear()
-    // the st16/x73 dir memos may point into tmpSt11Dirs (same rationale
-    // as x58DirCache above); the r16 branch-base dir memos likewise
-    st16Cache.clear()
-    x73Cache.clear()
-    st21Cache.clear()
-    x76Cache.clear()
-    x78Cache.clear()
-    streamCcDirCache.clear()
-    streamNgDfDirCache.clear()
+    val dir = Artifact.storedDir(d, "st15fp", spec)(
+      p => build(java.nio.file.Paths.get(p)))
+    val out = graft.streaming.StreamCurate.fingerprintState(s, dir)
+      .get.persist()
+    out.count()
+    out
   }
+
+  /** Prewarm DAG (r15): the shared-artifact builders, declared
+    * heaviest-first (cold-store walls, r15 measurement) within
+    * topological order so [[graft.Graft.warmAll]] can overlap independent
+    * builds. The edges are each artifact's `deps`: the cascade-root
+    * release family (maintainedRoot / releaseRoot / deltaReleaseRoot /
+    * gcReport read cascadeRoot's corpus dir) and the r16 branch edges
+    * (st15/x58 copy st9's committed prefix, st12 copies st10's, st13
+    * copies st11's — [[graft.ArtifactStore.branchFrom]]), where each
+    * branch waits for its base instead of re-running the shared ingest. */
+  private val prewarmed: Seq[Artifact[_]] = Seq(takedownContainment,
+    prebuiltSegmented, cascadeRoot, containmentIndex, streamedCuration,
+    foldReleaseRoot, realPairClusters, fpCuration, chainClusters,
+    takedownCuration, admissionDecisions, streamedClusters, benchSegBloom,
+    takedownClusters, docSignals, prebuiltMerged, maintainedRoot, gcReport,
+    streamedNgramDf, takedownNgramDf, deltaReleaseRoot, releaseRoot,
+    corpusSigIndex, corpusClusterTable, ngramDfIndex)
+
+  private[graft] def prewarmTasks(s: SparkSession, d: String)
+      : Seq[(String, Seq[String], () => Unit)] = Artifact.tasks(prewarmed, s, d)
+
   private val langMarkers = Seq(
     "jm" -> Seq("join", "merge", "hash"),
     "sf" -> Seq("scan", "filter", "sort"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.ext.Similarity
 
 /** Embedding similarity-search extension operators over `embeddings`
@@ -18,34 +18,33 @@ object VectorQ {
       .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("vec"),
         col("label"))
 
+  /** The embeddings read, warmed first in the prewarm DAG so concurrent
+    * builders find its table schema already inferred. */
+  private val vecCorpus = Artifact("vecCorpus") { (s, d) => corpus(s, d); () }
+
   /** Build-once/probe-many: the IVF index (Lloyd-refined centroids +
     * cell-replicated postings, both persisted-materialized) memoized per
     * (session, sfDir) — the production lifecycle where the build cost
     * amortizes over every query batch. v5 times the one-shot build+probe;
     * v6 times a probe against this prebuilt index, so the bench separates
     * index-build cost from query cost. */
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Similarity.IvfIndex]
-  private def prebuiltIvf(s: SparkSession, d: String): Similarity.IvfIndex =
-    ivfCache.synchronized {
-      ivfCache.getOrElseUpdate((s, d), {
-        // parquet-persisted via ArtifactStore (IvfSpec proves round-trip
-        // parity): built once per fixture, loaded by every later JVM
-        val Seq(cents, posts) = graft.ArtifactStore.group(s, d, "ivf16",
-          "v1 nCells=16 nAssign=2 corpus=vec_id>=5",
-          Seq("centroids", "postings")) {
-          val idx = Similarity.buildIvfIndex(
-            corpus(s, d).filter(col("vec_id") >= 5), "vec_id", "vec",
-            nCells = 16)
-          Seq(idx.centroids, idx.postings)
-        }
-        val c = cents.persist(); c.count()
-        val p = posts.persist()
-        p.count() // materialize inside the lock (shared await)
-        Similarity.IvfIndex(centroids = c, postings = p,
-          idCol = "vec_id", vecCol = "vec")
-      })
+  private val prebuiltIvf = Artifact("prebuiltIvf", vecCorpus) { (s, d) =>
+    // parquet-persisted via ArtifactStore (IvfSpec proves round-trip
+    // parity): built once per fixture, loaded by every later JVM
+    val Seq(cents, posts) = graft.ArtifactStore.group(s, d, "ivf16",
+      "v1 nCells=16 nAssign=2 corpus=vec_id>=5",
+      Seq("centroids", "postings")) {
+      val idx = Similarity.buildIvfIndex(
+        corpus(s, d).filter(col("vec_id") >= 5), "vec_id", "vec",
+        nCells = 16)
+      Seq(idx.centroids, idx.postings)
     }
+    val c = cents.persist(); c.count()
+    val p = posts.persist()
+    p.count() // materialize inside the lock (shared await)
+    Similarity.IvfIndex(centroids = c, postings = p,
+      idCol = "vec_id", vecCol = "vec")
+  }
 
   /** PREBUILT drifted IVF for v34 (VERDICT r12 #4): the planted
     * hot-cell drift — 4n copies of one corpus vector appended under the
@@ -56,77 +55,64 @@ object VectorQ {
     * drifted index inside every timed run benched the fixture, not the
     * verb (69.5 driver task-sec in r12). The append semantics stay
     * under test in IvfAppendSpec and the v28 query. */
-  private val driftedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Similarity.IvfIndex]
-  private def prebuiltDriftedIvf(s: SparkSession, d: String)
-      : Similarity.IvfIndex =
-    driftedCache.synchronized {
-      driftedCache.getOrElseUpdate((s, d), {
-        val idx = prebuiltIvf(s, d)
-        val drifted = graft.ArtifactStore.dataFrame(s, d, "ivf16drift",
-          "v1 hot=4n id+2e6 nCellsHint=16 base=ivf16") {
-          val n = corpus(s, d).count()
-          // broadcast the 1-row hot vector onto the id range (a bare
-          // crossJoin of two plain frames plans a CartesianProduct; the
-          // broadcast side makes it a nested-loop over one row — the
-          // PlanSpec cartesian gate holds for the whole surface)
-          val hot = s.range(0, 4 * n)
-            .select((col("id") + 2000000L).as("vec_id"))
-            .crossJoin(broadcast(
-              idx.postings.orderBy("vec_id").limit(1).select(col("vec"))))
-            .select("vec_id", "vec")
-          Similarity.ivfAppend(idx, hot, nCellsHint = Some(16)).postings
-        }
-        val p = drifted.persist()
-        p.count() // materialize inside the lock (shared await)
-        idx.copy(postings = p)
-      })
+  private val prebuiltDriftedIvf = Artifact("prebuiltDriftedIvf", prebuiltIvf) { (s, d) =>
+    val idx = prebuiltIvf(s, d)
+    val drifted = graft.ArtifactStore.dataFrame(s, d, "ivf16drift",
+      "v1 hot=4n id+2e6 nCellsHint=16 base=ivf16") {
+      val n = corpus(s, d).count()
+      // broadcast the 1-row hot vector onto the id range (a bare
+      // crossJoin of two plain frames plans a CartesianProduct; the
+      // broadcast side makes it a nested-loop over one row — the
+      // PlanSpec cartesian gate holds for the whole surface)
+      val hot = s.range(0, 4 * n)
+        .select((col("id") + 2000000L).as("vec_id"))
+        .crossJoin(broadcast(
+          idx.postings.orderBy("vec_id").limit(1).select(col("vec"))))
+        .select("vec_id", "vec")
+      Similarity.ivfAppend(idx, hot, nCellsHint = Some(16)).postings
     }
+    val p = drifted.persist()
+    p.count() // materialize inside the lock (shared await)
+    idx.copy(postings = p)
+  }
 
   /** Prebuilt PQ artifacts for v12 — codebook (persisted centroids) and
     * the cell-tagged codes table (PQ codes joined onto the prebuilt IVF
     * postings' cell assignment), memoized per (session, sfDir) like the
     * IVF index: at scale both are written once next to the index and
     * read per query batch. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-           (graft.ext.Pq.Codebook, DataFrame, DataFrame)]
   /** (codebook, cell-tagged codes for v12's cell-joined probe,
     * one-row-per-vector codes for v11's full ADC scan — persisted
     * beside the others so no invocation pays the de-replication
     * shuffle). */
-  private def prebuiltPq(s: SparkSession, d: String)
-      : (graft.ext.Pq.Codebook, DataFrame, DataFrame) =
-    pqCache.synchronized {
-      pqCache.getOrElseUpdate((s, d), {
-        val Seq(centsL, codesL, flatL) = graft.ArtifactStore.group(s, d,
-          "pq", "v2 m=8 k=16 subDim=8 corpus=vec_id>=5 cell=ivf16 +flat",
-          Seq("centroids", "codes", "codesflat")) {
-          val idx = prebuiltIvf(s, d)
-          val base = corpus(s, d).filter(col("vec_id") >= 5)
-          val cb0 = graft.ext.Pq.trainCodebooks(base, "vec_id", "vec",
-            m = 8, k = 16, subDim = 8)
-          // build-local persist: encode re-reads the centroids; the block
-          // is released by the store's afterWrite once the parquet exists
-          val cents0 = cb0.centroids.persist(); cents0.count()
-          val flat0 = graft.ext.Pq.encode(base, "vec_id", "vec",
-              cb0.copy(centroids = cents0)).persist()
-          flat0.count()
-          val codes0 = flat0
-            .join(idx.postings.select(col("vec_id"), col("ivf_cell")),
-              "vec_id")
-          Seq(cents0, codes0, flat0)
-        }
-        val cents = centsL.persist()
-        cents.count() // materialize inside the lock (shared await)
-        val codes = codesL.persist()
-        codes.count()
-        val flat = flatL.persist()
-        flat.count()
-        (graft.ext.Pq.Codebook(cents, m = 8, k = 16, subDim = 8), codes,
-          flat)
-      })
+  private val prebuiltPq = Artifact("prebuiltPq", prebuiltIvf) { (s, d) =>
+    val Seq(centsL, codesL, flatL) = graft.ArtifactStore.group(s, d,
+      "pq", "v2 m=8 k=16 subDim=8 corpus=vec_id>=5 cell=ivf16 +flat",
+      Seq("centroids", "codes", "codesflat")) {
+      val idx = prebuiltIvf(s, d)
+      val base = corpus(s, d).filter(col("vec_id") >= 5)
+      val cb0 = graft.ext.Pq.trainCodebooks(base, "vec_id", "vec",
+        m = 8, k = 16, subDim = 8)
+      // build-local persist: encode re-reads the centroids; the block
+      // is released by the store's afterWrite once the parquet exists
+      val cents0 = cb0.centroids.persist(); cents0.count()
+      val flat0 = graft.ext.Pq.encode(base, "vec_id", "vec",
+          cb0.copy(centroids = cents0)).persist()
+      flat0.count()
+      val codes0 = flat0
+        .join(idx.postings.select(col("vec_id"), col("ivf_cell")),
+          "vec_id")
+      Seq(cents0, codes0, flat0)
     }
+    val cents = centsL.persist()
+    cents.count() // materialize inside the lock (shared await)
+    val codes = codesL.persist()
+    codes.count()
+    val flat = flatL.persist()
+    flat.count()
+    (graft.ext.Pq.Codebook(cents, m = 8, k = 16, subDim = 8), codes,
+      flat)
+  }
 
   /** Exact L2 top-10 ground truth (queries = vec_id<5, candidates =
     * vec_id>=5) — what BOTH PQ recall queries (v11/v12) score against.
@@ -135,7 +121,7 @@ object VectorQ {
     * instead of re-running the brute-force scan on every invocation;
     * PqSpec independently re-derives the ground truth from raw floats,
     * so the artifact can never mask a recall bug. */
-  private def prebuiltExactL2(s: SparkSession, d: String): DataFrame =
+  private val prebuiltExactL2 = Artifact("prebuiltExactL2", vecCorpus) { (s, d) =>
     graft.ArtifactStore.dataFrame(s, d, "exactl2",
       "v1 k=10 metric=l2 q=vec_id<5 corpus=vec_id>=5") {
       val c = corpus(s, d)
@@ -149,6 +135,7 @@ object VectorQ {
           -col("dist"), "c_id", "dist", 10))
         .select("q_id", "rank", "c_id")
     }
+  }
 
   /** Exact float re-rank of a PQ shortlist: ONLY the shortlisted
     * candidates fetch their raw vectors (PQ's read contract — the scan
@@ -183,20 +170,15 @@ object VectorQ {
     * function of the index centroids, so every assignment pass (each
     * agreement mode, every bench sweep) probes the one cached tree
     * instead of re-running the coarse k-means + packing aggregations. */
-  private val hierCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Similarity.HierTree]
-  private def prebuiltHier(s: SparkSession, d: String): Similarity.HierTree =
-    hierCache.synchronized {
-      hierCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "hier",
-          "v1 over=ivf16") {
-          Similarity.buildHierTree(prebuiltIvf(s, d).centroids).packed
-        }
-        val packed = loaded.persist()
-        packed.count() // materialize inside the lock (shared await)
-        Similarity.HierTree(packed)
-      })
+  private val prebuiltHier = Artifact("prebuiltHier", prebuiltIvf) { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "hier",
+      "v1 over=ivf16") {
+      Similarity.buildHierTree(prebuiltIvf(s, d).centroids).packed
     }
+    val packed = loaded.persist()
+    packed.count() // materialize inside the lock (shared await)
+    Similarity.HierTree(packed)
+  }
 
   /** Prebuilt label-carrying IVF index for v18 (filtered search) — the
     * same build-once/probe-many lifecycle as [[prebuiltIvf]], but with
@@ -206,26 +188,21 @@ object VectorQ {
     * per-run rebuild. Kept separate from [[prebuiltIvf]] because the
     * filtered index intentionally uses a different geometry (nCells=24)
     * to exercise the second equi-key path at a non-trivial cell count. */
-  private val filteredIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Similarity.IvfIndex]
-  private def prebuiltFilteredIvf(s: SparkSession, d: String): Similarity.IvfIndex =
-    filteredIvfCache.synchronized {
-      filteredIvfCache.getOrElseUpdate((s, d), {
-        val Seq(cents, posts) = graft.ArtifactStore.group(s, d, "ivf24f",
-          "v1 nCells=24 nAssign=2 keep=label corpus=vec_id>=5",
-          Seq("centroids", "postings")) {
-          val idx = Similarity.buildIvfIndex(
-            corpus(s, d).filter(col("vec_id") >= 5), "vec_id", "vec",
-            nCells = 24, nAssign = 2, keepCols = Seq("label"))
-          Seq(idx.centroids, idx.postings)
-        }
-        val c = cents.persist(); c.count()
-        val postings = posts.persist()
-        postings.count() // materialize inside the lock (shared await)
-        Similarity.IvfIndex(centroids = c, postings = postings,
-          idCol = "vec_id", vecCol = "vec")
-      })
+  private val prebuiltFilteredIvf = Artifact("prebuiltFilteredIvf", vecCorpus) { (s, d) =>
+    val Seq(cents, posts) = graft.ArtifactStore.group(s, d, "ivf24f",
+      "v1 nCells=24 nAssign=2 keep=label corpus=vec_id>=5",
+      Seq("centroids", "postings")) {
+      val idx = Similarity.buildIvfIndex(
+        corpus(s, d).filter(col("vec_id") >= 5), "vec_id", "vec",
+        nCells = 24, nAssign = 2, keepCols = Seq("label"))
+      Seq(idx.centroids, idx.postings)
     }
+    val c = cents.persist(); c.count()
+    val postings = posts.persist()
+    postings.count() // materialize inside the lock (shared await)
+    Similarity.IvfIndex(centroids = c, postings = postings,
+      idCol = "vec_id", vecCol = "vec")
+  }
 
   /** Prebuilt RETRIEVAL artifacts for v19 — the fitted TF-IDF vectorizer
     * (df table + corpus size, persisted) and the chunk IVF index,
@@ -243,84 +220,75 @@ object VectorQ {
     * every query is audited and the output matches the uncapped sweep. */
   private val auditSample = 64
 
-  private val ragCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-           (graft.ext.TextOps.TfIdfModel, Similarity.IvfIndex, DataFrame,
-            DataFrame, DataFrame)]
-  private def prebuiltRag(s: SparkSession, d: String)
-      : (graft.ext.TextOps.TfIdfModel, Similarity.IvfIndex, DataFrame,
-         DataFrame, DataFrame) =
-    ragCache.synchronized {
-      ragCache.getOrElseUpdate((s, d), {
-        val chunks = graft.ext.TextOps.chunkSliding(
-            Tables.documents(s, d).filter(col("doc_id") % 97 =!= 3),
-            "doc_id", "text", w = 12, s = 8)
-          .select((col("doc_id") * 100000 + col("chunk_id")).as("chunk_key"),
-            col("chunk"))
-        val loaded = graft.ArtifactStore.group(s, d, "rag",
-          s"v1 dim=32 w=12 s=8 nAssign=2 audit=$auditSample",
-          Seq("dftab", "corpusn", "chunkvecs", "centroids", "postings",
-            "auditq", "exacttop5")) {
-        val m0 = graft.ext.TextOps.tfIdfModel(chunks, "chunk_key", "chunk",
-          dim = 32)
-        val dfTab = m0.dfTab.persist(); dfTab.count()
-        val corpusN = m0.corpusN.persist(); corpusN.count()
-        val model = m0.copy(dfTab = dfTab, corpusN = corpusN)
-        // kept persisted: the exact leg of the retrieval-recall audit
-        // (v20) brute-forces against these same chunk vectors — they are
-        // the ground-truth side of the index, not a build temporary
-        val chunkVecs = graft.ext.TextOps.assembleVector(
-          graft.ext.TextOps.applyTfIdf(chunks, "chunk_key", "chunk", model),
-          "chunk_key", 32).persist()
-        // nCells ~ √n (the standard IVF sizing, ScaleStress builtIvf):
-        // the chunk corpus is ~8× the doc corpus, and a fixed cell count
-        // would make every probe drag n/nCells postings per cell
-        val nCells = math.max(16,
-          math.sqrt(chunkVecs.count().toDouble).toInt)
-        val idx = Similarity.buildIvfIndex(chunkVecs, "chunk_key", "vec",
-          nCells = nCells, nAssign = 2)
-        val postings = idx.postings.persist()
-        postings.count() // materialize inside the lock (shared await)
-        // Recall-audit artifacts (v20), built ONCE beside the index: the
-        // deterministic md5-ordered query sample (embedded with the fitted
-        // model) and its EXACT brute-force chunk top-5 — the ground truth
-        // is a pure function of (corpus, model, sample), i.e. an
-        // index-build artifact, not a per-query cost. Without this the
-        // audit re-swept every chunk vector per invocation (94 s/call,
-        // 48% of the r5 bench wall).
-        // orderBy+limit → TakeOrderedAndProject: per-partition top-N then
-        // a driver merge of N×partitions rows — no global sort, no single
-        // partition, even when the held-out set is huge
-        val auditQVecs = graft.ext.TextOps.assembleVector(
-            graft.ext.TextOps.applyTfIdf(
-              Tables.documents(s, d).filter(col("doc_id") % 97 === 3),
-              "doc_id", "text", model),
-            "doc_id", 32)
-          .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-          .limit(auditSample)
-          .persist()
-        auditQVecs.count()
-        val exactTop5 = Similarity.bruteForceTopK(auditQVecs, chunkVecs,
-            "doc_id", "chunk_key", "vec", k = 5)
-          .select(col("q_id"), col("c_id"))
-          .persist()
-        exactTop5.count()
-        Seq(dfTab, corpusN, chunkVecs, idx.centroids, postings, auditQVecs,
-          exactTop5)
-        }
-        val Seq(dfTab, corpusN, chunkVecs, cents, postings, auditQVecs,
-          exactTop5) = loaded.map { df => val p = df.persist(); p.count(); p }
-        // model reconstructed lazily over the LOADED fit tables — the fit
-        // itself (bucketFn, dim) is data-independent plan structure
-        val model = graft.ext.TextOps.tfIdfModel(chunks, "chunk_key",
-            "chunk", dim = 32)
-          .copy(dfTab = dfTab, corpusN = corpusN)
-        (model,
-          Similarity.IvfIndex(centroids = cents, postings = postings,
-            idCol = "chunk_key", vecCol = "vec"),
-          chunkVecs, auditQVecs, exactTop5)
-      })
+  private[graft] val prebuiltRag = Artifact("prebuiltRag", vecCorpus) { (s, d) =>
+    val chunks = graft.ext.TextOps.chunkSliding(
+        Tables.documents(s, d).filter(col("doc_id") % 97 =!= 3),
+        "doc_id", "text", w = 12, s = 8)
+      .select((col("doc_id") * 100000 + col("chunk_id")).as("chunk_key"),
+        col("chunk"))
+    val loaded = graft.ArtifactStore.group(s, d, "rag",
+      s"v1 dim=32 w=12 s=8 nAssign=2 audit=$auditSample",
+      Seq("dftab", "corpusn", "chunkvecs", "centroids", "postings",
+        "auditq", "exacttop5")) {
+    val m0 = graft.ext.TextOps.tfIdfModel(chunks, "chunk_key", "chunk",
+      dim = 32)
+    val dfTab = m0.dfTab.persist(); dfTab.count()
+    val corpusN = m0.corpusN.persist(); corpusN.count()
+    val model = m0.copy(dfTab = dfTab, corpusN = corpusN)
+    // kept persisted: the exact leg of the retrieval-recall audit
+    // (v20) brute-forces against these same chunk vectors — they are
+    // the ground-truth side of the index, not a build temporary
+    val chunkVecs = graft.ext.TextOps.assembleVector(
+      graft.ext.TextOps.applyTfIdf(chunks, "chunk_key", "chunk", model),
+      "chunk_key", 32).persist()
+    // nCells ~ √n (the standard IVF sizing, ScaleStress builtIvf):
+    // the chunk corpus is ~8× the doc corpus, and a fixed cell count
+    // would make every probe drag n/nCells postings per cell
+    val nCells = math.max(16,
+      math.sqrt(chunkVecs.count().toDouble).toInt)
+    val idx = Similarity.buildIvfIndex(chunkVecs, "chunk_key", "vec",
+      nCells = nCells, nAssign = 2)
+    val postings = idx.postings.persist()
+    postings.count() // materialize inside the lock (shared await)
+    // Recall-audit artifacts (v20), built ONCE beside the index: the
+    // deterministic md5-ordered query sample (embedded with the fitted
+    // model) and its EXACT brute-force chunk top-5 — the ground truth
+    // is a pure function of (corpus, model, sample), i.e. an
+    // index-build artifact, not a per-query cost. Without this the
+    // audit re-swept every chunk vector per invocation (94 s/call,
+    // 48% of the r5 bench wall).
+    // orderBy+limit → TakeOrderedAndProject: per-partition top-N then
+    // a driver merge of N×partitions rows — no global sort, no single
+    // partition, even when the held-out set is huge
+    val auditQVecs = graft.ext.TextOps.assembleVector(
+        graft.ext.TextOps.applyTfIdf(
+          Tables.documents(s, d).filter(col("doc_id") % 97 === 3),
+          "doc_id", "text", model),
+        "doc_id", 32)
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+      .limit(auditSample)
+      .persist()
+    auditQVecs.count()
+    val exactTop5 = Similarity.bruteForceTopK(auditQVecs, chunkVecs,
+        "doc_id", "chunk_key", "vec", k = 5)
+      .select(col("q_id"), col("c_id"))
+      .persist()
+    exactTop5.count()
+    Seq(dfTab, corpusN, chunkVecs, idx.centroids, postings, auditQVecs,
+      exactTop5)
     }
+    val Seq(dfTab, corpusN, chunkVecs, cents, postings, auditQVecs,
+      exactTop5) = loaded.map { df => val p = df.persist(); p.count(); p }
+    // model reconstructed lazily over the LOADED fit tables — the fit
+    // itself (bucketFn, dim) is data-independent plan structure
+    val model = graft.ext.TextOps.tfIdfModel(chunks, "chunk_key",
+        "chunk", dim = 32)
+      .copy(dfTab = dfTab, corpusN = corpusN)
+    (model,
+      Similarity.IvfIndex(centroids = cents, postings = postings,
+        idCol = "chunk_key", vecCol = "vec"),
+      chunkVecs, auditQVecs, exactTop5)
+  }
 
   /** Prebuilt HYBRID-retrieval artifacts for v23 — the doc-level TF-IDF
     * model (md5 buckets, the x14/oracle-replicable geometry), the
@@ -333,60 +301,43 @@ object VectorQ {
     * (nCells ~ √n, the standard sizing) and its cell count: v26 probes it
     * as the scale-true dense leg where v23 brute-forces (the oracle
     * anchor), and HybridIvfSpec pins v26 ≡ v23 at nProbe = nCells. */
-  private val hybridCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-           (graft.ext.TextOps.TfIdfModel, DataFrame,
-            graft.ext.TextOps.Bm25Index, Similarity.IvfIndex, Int)]
-  private def prebuiltHybrid(s: SparkSession, d: String)
-      : (graft.ext.TextOps.TfIdfModel, DataFrame,
-         graft.ext.TextOps.Bm25Index, Similarity.IvfIndex, Int) =
-    hybridCache.synchronized {
-      hybridCache.getOrElseUpdate((s, d), {
-        val corpusD = Tables.documents(s, d).filter(col("doc_id") % 97 =!= 3)
-        val md5Bucket: Column => Column =
-          t => conv(substring(md5(t), 1, 4), 16, 10).cast("int") % 32
-        val loaded = graft.ArtifactStore.group(s, d, "hybrid",
-          "v1 dim=32 md5bucket nAssign=2",
-          Seq("dftab", "corpusn", "cvecs", "bm25postings", "bm25stats",
-            "centroids", "postings")) {
-          val m0 = graft.ext.TextOps.tfIdfModel(corpusD, "doc_id", "text",
-            dim = 32, bucketOf = md5Bucket)
-          val dfTab = m0.dfTab.persist(); dfTab.count()
-          val corpusN = m0.corpusN.persist(); corpusN.count()
-          val model = m0.copy(dfTab = dfTab, corpusN = corpusN)
-          val cVecs = graft.ext.TextOps.assembleVector(
-            graft.ext.TextOps.applyTfIdf(corpusD, "doc_id", "text", model),
-            "doc_id", 32).persist()
-          val nDocs = cVecs.count()
-          val b0 = graft.ext.TextOps.bm25Index(corpusD, "doc_id", "text")
-          val nCells = math.max(16, math.sqrt(nDocs.toDouble).toInt)
-          val idx0 = Similarity.buildIvfIndex(cVecs, "doc_id", "vec",
-            nCells = nCells, nAssign = 2)
-          Seq(dfTab, corpusN, cVecs, b0.postings, b0.stats, idx0.centroids,
-            idx0.postings)
-        }
-        val Seq(dfTab, corpusN, cVecs, postings, stats, cents, idxPostings) =
-          loaded.map { df => val p = df.persist(); p.count(); p }
-        val model = graft.ext.TextOps.tfIdfModel(corpusD, "doc_id", "text",
-            dim = 32, bucketOf = md5Bucket)
-          .copy(dfTab = dfTab, corpusN = corpusN)
-        // recompute the build-time √n sizing (not centroids.count(): a
-        // dead cell would shift it and change v26's probe depth) — a
-        // cheap count on the persisted corpus vectors
-        val nCells = math.max(16, math.sqrt(cVecs.count().toDouble).toInt)
-        (model, cVecs, graft.ext.TextOps.Bm25Index(postings, stats),
-          Similarity.IvfIndex(centroids = cents, postings = idxPostings,
-            idCol = "doc_id", vecCol = "vec"), nCells)
-      })
+  private[graft] val prebuiltHybrid = Artifact("prebuiltHybrid", prebuiltRag) { (s, d) =>
+    val corpusD = Tables.documents(s, d).filter(col("doc_id") % 97 =!= 3)
+    val md5Bucket: Column => Column =
+      t => conv(substring(md5(t), 1, 4), 16, 10).cast("int") % 32
+    val loaded = graft.ArtifactStore.group(s, d, "hybrid",
+      "v1 dim=32 md5bucket nAssign=2",
+      Seq("dftab", "corpusn", "cvecs", "bm25postings", "bm25stats",
+        "centroids", "postings")) {
+      val m0 = graft.ext.TextOps.tfIdfModel(corpusD, "doc_id", "text",
+        dim = 32, bucketOf = md5Bucket)
+      val dfTab = m0.dfTab.persist(); dfTab.count()
+      val corpusN = m0.corpusN.persist(); corpusN.count()
+      val model = m0.copy(dfTab = dfTab, corpusN = corpusN)
+      val cVecs = graft.ext.TextOps.assembleVector(
+        graft.ext.TextOps.applyTfIdf(corpusD, "doc_id", "text", model),
+        "doc_id", 32).persist()
+      val nDocs = cVecs.count()
+      val b0 = graft.ext.TextOps.bm25Index(corpusD, "doc_id", "text")
+      val nCells = math.max(16, math.sqrt(nDocs.toDouble).toInt)
+      val idx0 = Similarity.buildIvfIndex(cVecs, "doc_id", "vec",
+        nCells = nCells, nAssign = 2)
+      Seq(dfTab, corpusN, cVecs, b0.postings, b0.stats, idx0.centroids,
+        idx0.postings)
     }
-
-  /** Test hook (RagRetrievalSpec): the memoized RAG artifacts — model,
-    * chunk index, chunk vectors, audit query sample, exact top-5 — so the
-    * audit's ground-truth leg can be verified against an independent
-    * brute-force computation. */
-  private[graft] def ragArtifacts(s: SparkSession, d: String)
-      : (graft.ext.TextOps.TfIdfModel, Similarity.IvfIndex, DataFrame,
-         DataFrame, DataFrame) = prebuiltRag(s, d)
+    val Seq(dfTab, corpusN, cVecs, postings, stats, cents, idxPostings) =
+      loaded.map { df => val p = df.persist(); p.count(); p }
+    val model = graft.ext.TextOps.tfIdfModel(corpusD, "doc_id", "text",
+        dim = 32, bucketOf = md5Bucket)
+      .copy(dfTab = dfTab, corpusN = corpusN)
+    // recompute the build-time √n sizing (not centroids.count(): a
+    // dead cell would shift it and change v26's probe depth) — a
+    // cheap count on the persisted corpus vectors
+    val nCells = math.max(16, math.sqrt(cVecs.count().toDouble).toInt)
+    (model, cVecs, graft.ext.TextOps.Bm25Index(postings, stats),
+      Similarity.IvfIndex(centroids = cents, postings = idxPostings,
+        idCol = "doc_id", vecCol = "vec"), nCells)
+  }
 
   /** Prebuilt EXACT ground-truth legs of v25's self-retrieval eval —
     * the md5-sampled 32-query batch (each sampled doc's first sliding
@@ -400,73 +351,51 @@ object VectorQ {
     * re-derives both legs independently (driver-side cosine; a
     * scratch-built BM25 index), so the artifact cannot mask a
     * ground-truth bug. */
-  private val evalExactCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  private def prebuiltEvalExact(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    evalExactCache.synchronized {
-      evalExactCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.group(s, d, "evalexact",
-          "v1 sample=32 w=12 s=8 k=10 over=hybrid",
-          Seq("queries", "dense", "sparse")) {
-          val (model, cVecs, bm25, _, _) = prebuiltHybrid(s, d)
-          val sampled = Tables.documents(s, d)
-            .filter(col("doc_id") % 97 =!= 3)
-            .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-            .limit(32)
-            .select("doc_id", "text")
-          val queries = graft.ext.TextOps.chunkSliding(sampled, "doc_id",
-              "text", w = 12, s = 8)
-            .filter(col("chunk_id") === 0)
-            .select(col("doc_id"), col("chunk").as("text")).persist()
-          queries.count()
-          val qVecs = graft.ext.TextOps.assembleVector(
-            graft.ext.TextOps.applyTfIdf(queries, "doc_id", "text", model),
-            "doc_id", 32)
-          val dense = Similarity.bruteForceTopK(qVecs, cVecs, "doc_id",
-              "doc_id", "vec", k = 10)
-            .select(col("q_id"), col("rank"), col("c_id").as("key"))
-          val sparse = graft.ext.TextOps.bm25Search(bm25, queries,
-              "doc_id", "text", k = 10)
-            .select("q_id", "rank", "key")
-          Seq(queries, dense, sparse)
-        }
-        val Seq(queries, dense, sparse) =
-          loaded.map { df => val p = df.persist(); p.count(); p }
-        (queries, dense, sparse)
-      })
+  private[graft] val prebuiltEvalExact = Artifact("prebuiltEvalExact", prebuiltHybrid) { (s, d) =>
+    val loaded = graft.ArtifactStore.group(s, d, "evalexact",
+      "v1 sample=32 w=12 s=8 k=10 over=hybrid",
+      Seq("queries", "dense", "sparse")) {
+      val (model, cVecs, bm25, _, _) = prebuiltHybrid(s, d)
+      val sampled = Tables.documents(s, d)
+        .filter(col("doc_id") % 97 =!= 3)
+        .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+        .limit(32)
+        .select("doc_id", "text")
+      val queries = graft.ext.TextOps.chunkSliding(sampled, "doc_id",
+          "text", w = 12, s = 8)
+        .filter(col("chunk_id") === 0)
+        .select(col("doc_id"), col("chunk").as("text")).persist()
+      queries.count()
+      val qVecs = graft.ext.TextOps.assembleVector(
+        graft.ext.TextOps.applyTfIdf(queries, "doc_id", "text", model),
+        "doc_id", 32)
+      val dense = Similarity.bruteForceTopK(qVecs, cVecs, "doc_id",
+          "doc_id", "vec", k = 10)
+        .select(col("q_id"), col("rank"), col("c_id").as("key"))
+      val sparse = graft.ext.TextOps.bm25Search(bm25, queries,
+          "doc_id", "text", k = 10)
+        .select("q_id", "rank", "key")
+      Seq(queries, dense, sparse)
     }
-
-  /** Test hook (RagRetrievalSpec): v25's memoized ground-truth legs. */
-  private[graft] def evalExactArtifacts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = prebuiltEvalExact(s, d)
-
-  /** Test hook (RagRetrievalSpec): the memoized hybrid artifacts. */
-  private[graft] def hybridArtifacts(s: SparkSession, d: String)
-      : (graft.ext.TextOps.TfIdfModel, DataFrame,
-         graft.ext.TextOps.Bm25Index, Similarity.IvfIndex, Int) =
-    prebuiltHybrid(s, d)
+    val Seq(queries, dense, sparse) =
+      loaded.map { df => val p = df.persist(); p.count(); p }
+    (queries, dense, sparse)
+  }
 
   /** Impact-pruned stage-1 lists over [[prebuiltHybrid]]'s BM25 index
     * (P = 64, the measured full-candidate-coverage point — Bm25Spec):
     * v27's sparse candidate generator. Memoized beside the index it
-    * prunes; cleared with the hybrid cache. */
-  private val prunedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ext.TextOps.Bm25Index]
-  private def prebuiltPruned(s: SparkSession, d: String)
-      : graft.ext.TextOps.Bm25Index =
-    prunedCache.synchronized {
-      prunedCache.getOrElseUpdate((s, d), {
-        val (_, _, bm25, _, _) = prebuiltHybrid(s, d)
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "hybridpruned",
-          "v1 P=64 over=hybrid") {
-          graft.ext.TextOps.bm25Prune(bm25, maxPostingsPerTerm = 64).postings
-        }
-        val p = loaded.persist()
-        p.count()
-        graft.ext.TextOps.Bm25Index(p, bm25.stats)
-      })
+    * prunes. */
+  private val prebuiltPruned = Artifact("prebuiltPruned") { (s, d) =>
+    val (_, _, bm25, _, _) = prebuiltHybrid(s, d)
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "hybridpruned",
+      "v1 P=64 over=hybrid") {
+      graft.ext.TextOps.bm25Prune(bm25, maxPostingsPerTerm = 64).postings
     }
+    val p = loaded.persist()
+    p.count()
+    graft.ext.TextOps.Bm25Index(p, bm25.stats)
+  }
 
   /** v27's pipeline — BOTH legs bounded — with overridable depths so the
     * spec can run it wide open (nProbe = nCells, P ≥ every df), where the
@@ -563,6 +492,23 @@ object VectorQ {
       .orderBy("q_id", "rank")
   }
 
+  /** The st8 sink DIR — the streamed-IVF lifecycle PREFIX: v32
+    * (+delete+compactAll) and st18 (+delete) branch from this committed
+    * dir (r16, the st9→st15/x58 rationale — the 3-batch assign+write
+    * ingest is the corpus-sized cost; the branch is an MB-sized copy). */
+  private val streamedIvfDir = Artifact("streamedIvfDir") { (s, d) =>
+    val spec = "v1 3batches mod3 nCells=16 trainOnBatch0"
+    def ingest(dir: String): Unit = {
+      val c = corpus(s, d).select("vec_id", "vec")
+      (0 to 2).foreach { i =>
+        graft.streaming.StreamIvf.appendBatch(dir,
+          c.filter(col("vec_id") % 3 === i), i, "vec_id", "vec",
+          nCells = 16)
+      }
+    }
+    Artifact.storedDir(d, "st8ivf", spec)(ingest)
+  }
+
   /** The STREAM-MAINTAINED dense IVF index ([[graft.streaming
     * .StreamIvf]]): the embeddings table ingested as three arrival
     * batches through the SAME `foreachBatch` sink body the firehose runs
@@ -573,51 +519,12 @@ object VectorQ {
     * memory-persisted: index-scale vector tables serve faster from
     * (page-cached) parquet than from the deserialized executor cache
     * (SCALING.md r8); only the nCells-row centroids persist. */
-  private val streamIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Similarity.IvfIndex]
-  private val tmpIvfDirs =
-    scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
-  private val streamIvfDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  /** The st8 sink DIR — the streamed-IVF lifecycle PREFIX: v32
-    * (+delete+compactAll) and st18 (+delete) branch from this committed
-    * dir (r16, the st9→st15/x58 rationale — the 3-batch assign+write
-    * ingest is the corpus-sized cost; the branch is an MB-sized copy). */
-  private def streamedIvfDir(s: SparkSession, d: String): String =
-    streamIvfDirCache.synchronized {
-      streamIvfDirCache.getOrElseUpdate((s, d), {
-        val spec = "v1 3batches mod3 nCells=16 trainOnBatch0"
-        def ingest(dir: String): Unit = {
-          val c = corpus(s, d).select("vec_id", "vec")
-          (0 to 2).foreach { i =>
-            graft.streaming.StreamIvf.appendBatch(dir,
-              c.filter(col("vec_id") % 3 === i), i, "vec_id", "vec",
-              nCells = 16)
-          }
-        }
-        graft.ArtifactStore.dirArtifact(d, "st8ivf", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            ingest(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st8-")
-            tmpIvfDirs += p
-            ingest(p.toString)
-            p.toString
-        }
-      })
-    }
-  private def streamedIvf(s: SparkSession, d: String): Similarity.IvfIndex =
-    streamIvfCache.synchronized {
-      streamIvfCache.getOrElseUpdate((s, d), {
-        val idx = graft.streaming.StreamIvf
-          .load(s, streamedIvfDir(s, d), "vec_id", "vec").get
-        val cents = idx.centroids.persist(); cents.count()
-        idx.copy(centroids = cents)
-      })
-    }
+  private val streamedIvf = Artifact("streamedIvf", vecCorpus) { (s, d) =>
+    val idx = graft.streaming.StreamIvf
+      .load(s, streamedIvfDir(s, d), "vec_id", "vec").get
+    val cents = idx.centroids.persist(); cents.count()
+    idx.copy(centroids = cents)
+  }
 
   /** Memoized TAKEDOWN-lifecycle dense index for v32 — the cascading
     * right-to-be-forgotten story on the vector derivative: the same
@@ -631,42 +538,26 @@ object VectorQ {
     * slice filtered from the corpus). A deleted document's embeddings
     * are its content as much as its postings — x57/x58 forget the index
     * and the bodies; v32 forgets the vectors. */
-  private val takedownIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Similarity.IvfIndex]
-  private def takedownIvf(s: SparkSession, d: String): Similarity.IvfIndex =
-    takedownIvfCache.synchronized {
-      takedownIvfCache.getOrElseUpdate((s, d), {
-        // v2 (r16): BRANCH the committed st8 prefix instead of
-        // re-running the identical 3-batch ingest; takedown verbs
-        // unchanged.
-        val spec = "v2 branch=st8 delete=%10==0 compactAll"
-        def build(dir: String): Unit = {
-          val c = corpus(s, d).select("vec_id", "vec")
-          graft.ArtifactStore.branchFrom(streamedIvfDir(s, d),
-            java.nio.file.Paths.get(dir))
-          graft.streaming.StreamIvf.deleteVecs(s, dir,
-            c.filter(col("vec_id") % 10 === 0).select("vec_id"), "vec_id")
-          graft.streaming.StreamIvf.compactAll(s, dir,
-            graft.streaming.StreamIvf.nextCompactId(s, dir),
-            "vec_id", "vec")
-        }
-        val dir = graft.ArtifactStore.dirArtifact(d, "v32ivf", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-v32-")
-            tmpIvfDirs += p
-            build(p.toString)
-            p.toString
-        }
-        val idx = graft.streaming.StreamIvf.load(s, dir, "vec_id", "vec").get
-        val cents = idx.centroids.persist(); cents.count()
-        idx.copy(centroids = cents)
-      })
+  private val takedownIvf = Artifact("takedownIvf", streamedIvf) { (s, d) =>
+    // v2 (r16): BRANCH the committed st8 prefix instead of
+    // re-running the identical 3-batch ingest; takedown verbs
+    // unchanged.
+    val spec = "v2 branch=st8 delete=%10==0 compactAll"
+    def build(dir: String): Unit = {
+      val c = corpus(s, d).select("vec_id", "vec")
+      graft.ArtifactStore.branchFrom(streamedIvfDir(s, d),
+        java.nio.file.Paths.get(dir))
+      graft.streaming.StreamIvf.deleteVecs(s, dir,
+        c.filter(col("vec_id") % 10 === 0).select("vec_id"), "vec_id")
+      graft.streaming.StreamIvf.compactAll(s, dir,
+        graft.streaming.StreamIvf.nextCompactId(s, dir),
+        "vec_id", "vec")
     }
+    val dir = Artifact.storedDir(d, "v32ivf", spec)(build)
+    val idx = graft.streaming.StreamIvf.load(s, dir, "vec_id", "vec").get
+    val cents = idx.centroids.persist(); cents.count()
+    idx.copy(centroids = cents)
+  }
 
   /** Memoized EMBEDDING-slice index for v30 — the maintained
     * (id, label, vector) artifact an incremental semantic-dedup loop
@@ -676,21 +567,16 @@ object VectorQ {
     * re-pairing the corpus with itself. Index side = the
     * vec_id % 4 != 0 slice; the % 4 == 0 slice plays the arriving
     * batch. */
-  private val semIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def semanticIndex(s: SparkSession, d: String): DataFrame =
-    semIdxCache.synchronized {
-      semIdxCache.getOrElseUpdate((s, d), {
-        val loaded = graft.ArtifactStore.dataFrame(s, d, "semidx",
-          "v1 corpus=vec_id%4!=0") {
-          corpus(s, d).filter(col("vec_id") % 4 =!= 0)
-            .select("vec_id", "label", "vec")
-        }
-        val idx = loaded.persist()
-        idx.count() // materialize inside the lock (shared await)
-        idx
-      })
+  private val semanticIndex = Artifact("semanticIndex", vecCorpus) { (s, d) =>
+    val loaded = graft.ArtifactStore.dataFrame(s, d, "semidx",
+      "v1 corpus=vec_id%4!=0") {
+      corpus(s, d).filter(col("vec_id") % 4 =!= 0)
+        .select("vec_id", "label", "vec")
     }
+    val idx = loaded.persist()
+    idx.count() // materialize inside the lock (shared await)
+    idx
+  }
 
   /** Memoized IVF-CELL-blocked semantic index for v31 — [[semanticIndex]]
     * promoted to its PRODUCTION block key (the v10→v14 pattern applied to
@@ -700,64 +586,22 @@ object VectorQ {
     * SAME frozen centroids so the block equi-join aligns. nCells ~ √n
     * holds cell occupancy ~√n, so the per-batch cost stays
     * |batch|·occupancy at any corpus scale. */
-  private val semIvfIdxCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private def semanticIvfIndex(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) =
-    semIvfIdxCache.synchronized {
-      semIvfIdxCache.getOrElseUpdate((s, d), {
-        val Seq(cents0, idx0) = graft.ArtifactStore.group(s, d, "semidxivf",
-          "v1 corpus=vec_id%4!=0 cells=sqrt refine=2",
-          Seq("centroids", "index")) {
-          val c = corpus(s, d).filter(col("vec_id") % 4 =!= 0)
-            .select("vec_id", "label", "vec")
-          val nCells = math.max(16, math.sqrt(c.count().toDouble).toInt)
-          val cents = Similarity.ivfCentroids(c, "vec_id", "vec", nCells)
-            .persist()
-          cents.count()
-          Seq(cents, Similarity.assignTo(c, cents, "vec_id", "vec"))
-        }
-        val cents = cents0.persist(); cents.count()
-        val idx = idx0.persist(); idx.count()
-        (cents, idx)
-      })
+  private val semanticIvfIndex = Artifact("semanticIvfIndex", vecCorpus) { (s, d) =>
+    val Seq(cents0, idx0) = graft.ArtifactStore.group(s, d, "semidxivf",
+      "v1 corpus=vec_id%4!=0 cells=sqrt refine=2",
+      Seq("centroids", "index")) {
+      val c = corpus(s, d).filter(col("vec_id") % 4 =!= 0)
+        .select("vec_id", "label", "vec")
+      val nCells = math.max(16, math.sqrt(c.count().toDouble).toInt)
+      val cents = Similarity.ivfCentroids(c, "vec_id", "vec", nCells)
+        .persist()
+      cents.count()
+      Seq(cents, Similarity.assignTo(c, cents, "vec_id", "vec"))
     }
-
-  /** Bench hook: build the shared IVF indexes + PQ artifacts + hier tree
-    * + retrieval artifacts up front (see BacktestQ.prewarm — same
-    * attribution rationale). */
-  /** Prewarm DAG (r15): see [[graft.queries.TextQ.prewarmTasks]]. The
-    * shared `vecCorpus` memo goes first so concurrent builders hit the
-    * memo instead of convoying on its cache lock; the real edges are
-    * prebuiltIvf → {pq, hier, drifted} and prebuiltRag → prebuiltHybrid →
-    * {evalExact}. Heaviest-first (cold walls, r15) inside topo order. */
-  private[graft] def prewarmTasks(s: SparkSession, d: String)
-      : Seq[(String, Seq[String], () => Unit)] = Seq(
-    ("vecCorpus", Nil, () => corpus(s, d)),
-    ("prebuiltRag", Seq("vecCorpus"), () => prebuiltRag(s, d)),
-    ("prebuiltIvf", Seq("vecCorpus"), () => prebuiltIvf(s, d)),
-    ("prebuiltPq", Seq("prebuiltIvf"), () => prebuiltPq(s, d)),
-    ("prebuiltHybrid", Seq("prebuiltRag"), () => prebuiltHybrid(s, d)),
-    ("streamedIvf", Seq("vecCorpus"), () => streamedIvf(s, d)),
-    // r16 branch edges: v32/st18 copy st8's committed prefix
-    // ([[graft.ArtifactStore.branchFrom]]).
-    ("takedownIvf", Seq("streamedIvf"), () => takedownIvf(s, d)),
-    ("prebuiltFilteredIvf", Seq("vecCorpus"),
-      () => prebuiltFilteredIvf(s, d)),
-    ("fpIvfDir", Seq("streamedIvf"), () => fpIvfDir(s, d)),
-    ("prebuiltHier", Seq("prebuiltIvf"), () => prebuiltHier(s, d)),
-    ("prebuiltEvalExact", Seq("prebuiltHybrid"),
-      () => prebuiltEvalExact(s, d)),
-    ("semanticIvfIndex", Seq("vecCorpus"), () => semanticIvfIndex(s, d)),
-    ("prebuiltDriftedIvf", Seq("prebuiltIvf"),
-      () => prebuiltDriftedIvf(s, d)),
-    ("prebuiltExactL2", Seq("vecCorpus"), () => prebuiltExactL2(s, d)),
-    ("semanticIndex", Seq("vecCorpus"), () => semanticIndex(s, d)))
-
-  private[graft] def prewarm(s: SparkSession, d: String): Unit =
-    // each builder isolated ([[graft.Graft.warm]]): one failure must not
-    // silently skip the rest of the leg
-    prewarmTasks(s, d).foreach { case (n, _, t) => graft.Graft.warm(n)(t()) }
+    val cents = cents0.persist(); cents.count()
+    val idx = idx0.persist(); idx.count()
+    (cents, idx)
+  }
 
   /** Memoized MAINTAINED-FINGERPRINT IVF dir for st18 — the st8 ingest
     * plus a % 10 == 0 takedown, NO compaction: the fingerprint is
@@ -765,92 +609,34 @@ object VectorQ {
     * partial alone ([[graft.streaming.StreamIvf.fingerprintState]]) —
     * the driver query proves the metadata-sized serve equals a DuckDB
     * recomputation of the surviving vector-id-set checksum. */
-  private val fpIvfDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-  private def fpIvfDir(s: SparkSession, d: String): String =
-    fpIvfDirCache.synchronized {
-      fpIvfDirCache.getOrElseUpdate((s, d), {
-        // v2 (r16): BRANCH the committed st8 prefix (the v32 rationale);
-        // the delete verb is unchanged and no compaction follows.
-        val spec = "v2 branch=st8 delete=%10==0 nocompact fpstate"
-        def build(dir: String): Unit = {
-          val c = corpus(s, d).select("vec_id", "vec")
-          graft.ArtifactStore.branchFrom(streamedIvfDir(s, d),
-            java.nio.file.Paths.get(dir))
-          graft.streaming.StreamIvf.deleteVecs(s, dir,
-            c.filter(col("vec_id") % 10 === 0).select("vec_id"),
-            "vec_id")
-        }
-        graft.ArtifactStore.dirArtifact(d, "st18ivffp", spec) match {
-          case Some((p, true)) => p.toString
-          case Some((p, false)) =>
-            build(p.toString)
-            graft.ArtifactStore.commitDir(p, spec)
-            p.toString
-          case None =>
-            val p = java.nio.file.Files.createTempDirectory("graft-st18-")
-            tmpIvfDirs += p
-            build(p.toString)
-            p.toString
-        }
-      })
+  private val fpIvfDir = Artifact("fpIvfDir", streamedIvf) { (s, d) =>
+    // v2 (r16): BRANCH the committed st8 prefix (the v32 rationale);
+    // the delete verb is unchanged and no compaction follows.
+    val spec = "v2 branch=st8 delete=%10==0 nocompact fpstate"
+    def build(dir: String): Unit = {
+      val c = corpus(s, d).select("vec_id", "vec")
+      graft.ArtifactStore.branchFrom(streamedIvfDir(s, d),
+        java.nio.file.Paths.get(dir))
+      graft.streaming.StreamIvf.deleteVecs(s, dir,
+        c.filter(col("vec_id") % 10 === 0).select("vec_id"),
+        "vec_id")
     }
-
-  /** Release the memoized IVF index + PQ artifacts (see
-    * Graft.clearCaches): unpersist and drop the references; the next
-    * probe rebuilds. */
-  private[graft] def clearCache(): Unit = ivfCache.synchronized {
-    ivfCache.values.foreach { idx =>
-      idx.centroids.unpersist(); idx.postings.unpersist()
-    }
-    ivfCache.clear()
-    driftedCache.values.foreach(_.postings.unpersist())
-    driftedCache.clear()
-    pqCache.values.foreach { case (cb, codes, flat) =>
-      cb.centroids.unpersist(); codes.unpersist(); flat.unpersist()
-    }
-    pqCache.clear()
-    hierCache.values.foreach(_.packed.unpersist())
-    hierCache.clear()
-    filteredIvfCache.values.foreach { idx =>
-      idx.centroids.unpersist(); idx.postings.unpersist()
-    }
-    filteredIvfCache.clear()
-    ragCache.values.foreach { case (model, idx, chunkVecs, qv, exact) =>
-      model.dfTab.unpersist(); model.corpusN.unpersist()
-      idx.centroids.unpersist(); idx.postings.unpersist()
-      chunkVecs.unpersist(); qv.unpersist(); exact.unpersist()
-    }
-    ragCache.clear()
-    hybridCache.values.foreach { case (model, cVecs, bm25, docIdx, _) =>
-      model.dfTab.unpersist(); model.corpusN.unpersist()
-      cVecs.unpersist(); bm25.postings.unpersist(); bm25.stats.unpersist()
-      docIdx.centroids.unpersist(); docIdx.postings.unpersist()
-    }
-    hybridCache.clear()
-    prunedCache.values.foreach(_.postings.unpersist())
-    prunedCache.clear()
-    evalExactCache.values.foreach { case (q, dn, sp) =>
-      q.unpersist(); dn.unpersist(); sp.unpersist()
-    }
-    evalExactCache.clear()
-    streamIvfCache.values.foreach(_.centroids.unpersist())
-    streamIvfCache.clear()
-    takedownIvfCache.values.foreach(_.centroids.unpersist())
-    takedownIvfCache.clear()
-    semIdxCache.values.foreach(_.unpersist())
-    semIdxCache.clear()
-    semIvfIdxCache.values.foreach { case (c, i) =>
-      c.unpersist(); i.unpersist()
-    }
-    semIvfIdxCache.clear()
-    tmpIvfDirs.foreach(graft.ArtifactStore.deleteRecursively)
-    tmpIvfDirs.clear()
-    // the st18 dir memo may point into tmpIvfDirs; the r16 branch-base
-    // (st8 prefix) dir memo likewise
-    fpIvfDirCache.clear()
-    streamIvfDirCache.clear()
+    Artifact.storedDir(d, "st18ivffp", spec)(build)
   }
+
+  /** Prewarm DAG (r15): see [[graft.queries.TextQ.prewarmTasks]]. The
+    * shared `vecCorpus` read goes first so concurrent builders find it
+    * warmed; the real edges are prebuiltIvf → {pq, hier, drifted},
+    * prebuiltRag → prebuiltHybrid → {evalExact} and the r16 branch edges
+    * (v32/st18 copy st8's committed prefix, [[graft.ArtifactStore
+    * .branchFrom]]). Heaviest-first (cold walls, r15) inside topo order. */
+  private val prewarmed: Seq[Artifact[_]] = Seq(vecCorpus, prebuiltRag,
+    prebuiltIvf, prebuiltPq, prebuiltHybrid, streamedIvf, takedownIvf,
+    prebuiltFilteredIvf, fpIvfDir, prebuiltHier, prebuiltEvalExact,
+    semanticIvfIndex, prebuiltDriftedIvf, prebuiltExactL2, semanticIndex)
+
+  private[graft] def prewarmTasks(s: SparkSession, d: String)
+      : Seq[(String, Seq[String], () => Unit)] = Artifact.tasks(prewarmed, s, d)
 
   val queries: Map[String, Q] = Map(
     // V1 — all-pairs cosine scores of a small broadcast query set vs the

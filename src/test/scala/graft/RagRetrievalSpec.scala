@@ -107,7 +107,7 @@ class RagRetrievalSpec extends AnyFunSuite with SharedSpark {
 
   test("v20 exact leg: memoized ground truth is the true chunk top-5") {
     val (_, _, chunkVecs, auditQ, exactTop5) =
-      graft.queries.VectorQ.ragArtifacts(spark, sf)
+      graft.queries.VectorQ.prebuiltRag(spark, sf)
     def vecsOf(df: org.apache.spark.sql.DataFrame, id: String) =
       df.select(col(id), col("vec")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
@@ -143,9 +143,9 @@ class RagRetrievalSpec extends AnyFunSuite with SharedSpark {
 
   test("v25 exact legs: memoized ground truth matches independent recomputation") {
     val (queries, dense, sparse) =
-      graft.queries.VectorQ.evalExactArtifacts(spark, sf)
+      graft.queries.VectorQ.prebuiltEvalExact(spark, sf)
     val (model, cVecs, _, _, _) =
-      graft.queries.VectorQ.hybridArtifacts(spark, sf)
+      graft.queries.VectorQ.prebuiltHybrid(spark, sf)
     val qIds = queries.select("doc_id").collect().map(_.getLong(0))
     assert(qIds.nonEmpty && qIds.length <= 32 &&
       qIds.distinct.length == qIds.length)
