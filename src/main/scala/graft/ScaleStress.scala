@@ -996,8 +996,9 @@ object ScaleStress {
       Op("x45_incr_neardup", m => {
         // incremental near-dup at m×: per-copy shingle salt (the x7
         // move) keeps near-dup structure linear; the corpus side is
-        // ONLY its signature index — cost = sign the batch + two
-        // banded joins, both bucket-capped.
+        // ONLY its signature index — cost = sign the batch + one band
+        // pass (one explode, one banded join for the index hits and the
+        // within-batch twins), bucket-capped.
         val sh = docsOf(m)
           .withColumn("toks", TextOps.tokens(col("text")))
           .select(col("doc_id"),

@@ -19,8 +19,10 @@ import org.apache.spark.sql.types.StructType
   * a table the session had read many times. The memo is keyed by what
   * the inferred schema depends on: the path, the leaf files under it
   * (name, length, mtime — a rewritten table is inferred again) and the
-  * session's explicitly set parquet reader settings (`events` sets
-  * `nanosAsLong`, which changes the type `ts` reads as). Only schemas
+  * session's explicitly set parquet reader settings. [[parquet]] turns
+  * on `nanosAsLong` (which `events` needs) before it takes the key, so
+  * every read in a session keys on the same settings from its first
+  * read on, whichever table comes first. Only schemas
   * are kept, and each comes from Spark's own inference, so a table's
   * first read in the JVM still pays for that inference ([[warm]] pays it
   * in setup).
@@ -31,6 +33,8 @@ object Tables {
 
   private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   private def readerSetting(key: String): Boolean =
     key.startsWith("spark.sql.parquet.") ||
       key.startsWith("spark.sql.legacy.parquet.") ||
@@ -39,8 +43,14 @@ object Tables {
   /** The one reader for committed input parquet: `spark.read.parquet`
     * with the schema supplied when this listing was already inferred
     * under the same reader settings. A path with no file to list is read
-    * the ordinary way, so its error is Spark's own. */
+    * the ordinary way, so its error is Spark's own.
+    *
+    * Sets `nanosAsLong` on the session first: without it Spark rejects
+    * INT64 TIMESTAMP(NANOS) columns, and it changes no other type, so
+    * setting it for every table keeps the key stable instead of
+    * changing it at the session's first `events` read. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
+    spark.conf.set(NanosAsLong, "true")
     val p = new Path(path)
     val files =
       try {
@@ -78,17 +88,17 @@ object Tables {
   /** `events.ts` has shipped as two physical parquet types across fixture
     * generations, so the loader adapts to the *read* schema instead of
     * assuming one:
-    *  - INT64 TIMESTAMP(NANOS): Spark's reader rejects nanos, so read them
-    *    as long (`nanosAsLong`) and truncate to microseconds with exact
-    *    integer division (DIV — a double division would lose precision at
-    *    1e18 nanos). DuckDB truncates ns→µs the same way.
+    *  - INT64 TIMESTAMP(NANOS): Spark's reader rejects nanos, so they
+    *    read as long ([[parquet]] sets `nanosAsLong`) and are truncated
+    *    to microseconds with exact integer division (DIV — a double
+    *    division would lose precision at 1e18 nanos). DuckDB truncates
+    *    ns→µs the same way.
     *  - TIMESTAMP_MICROS with isAdjustedToUTC=false → Spark reads
     *    TIMESTAMP_NTZ: cast to session-TZ timestamp. The session TZ is
     *    pinned to UTC everywhere (Verify/Bench/specs), so NTZ micros ≡ the
     *    oracle's naive micros and downstream instants are unchanged.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -164,11 +164,12 @@ object Dedup {
   /** Cross-corpus near-dup candidates — the DECONTAMINATION shape: find
     * training documents (corpusA) that near-duplicate a benchmark/eval
     * document (corpusB). Same machinery as [[minHashCandidates]] but the
-    * band join is A×B instead of a self-join: each side is signed and
-    * banded independently, candidates come from ONE equi-join on
-    * (band, band_hash), and signature agreement estimates Jaccard. At
-    * 10⁹ training docs × 10⁶ benchmark docs this stays one shuffle of
-    * band keys — never a cross join.
+    * band join is A×B instead of a self-join: both sides are signed, then
+    * [[probePairs]] (with the within-probe side off) bands them in one
+    * explode of the side-tagged union and finds candidates with ONE
+    * equi-join on (band, band_hash); signature agreement estimates
+    * Jaccard. At 10⁹ training docs × 10⁶ benchmark docs this stays one
+    * shuffle of band keys — never a cross join.
     *
     * `maxBucketSize` caps the SUM of a bucket's occupancy across both
     * sides before the join (a boilerplate bucket shared by both corpora
@@ -184,51 +185,78 @@ object Dedup {
                             idCol: String, shingleCol: String,
                             k: Int, bands: Int,
                             maxBucketSize: Int = 10000): DataFrame = {
-    require(bands > 0 && bands <= k && k % bands == 0,
-      s"bands ($bands) must evenly divide signature length k ($k)")
     val signedA = withMinHash(corpusA, shingleCol, k)
       .select(col(idCol), col("minhash")).persist()
     val signedB = withMinHash(corpusB, shingleCol, k)
       .select(col(idCol), col("minhash")).persist()
-    val pairs = bandedPairs(signedA, signedB, idCol, k, bands, maxBucketSize)
+    val pairs = probePairs(signedA, signedB, idCol, k, bands, maxBucketSize,
+        withinProbe = false)
+      .select("id_a", "id_b", "est_jaccard")
       .localCheckpoint() // eager: materialized while the signatures cache
     signedA.unpersist(); signedB.unpersist()
     pairs
   }
 
-  /** Banded A×B candidate pairs between two PREBUILT `(id, minhash)`
-    * signature tables — the kernel under [[crossCorpusCandidates]] and
-    * [[incrementalNearDup]], split out so a maintained signature INDEX
-    * can be probed without re-signing the corpus. Same combined-occupancy
-    * bucket cap and SigAgree recheck as always. */
-  private[graft] def bandedPairs(signedA: DataFrame, signedB: DataFrame,
-                                 idCol: String, k: Int, bands: Int,
-                                 maxBucketSize: Int): DataFrame = {
+  /** The one banded candidate-pair kernel, over two PREBUILT
+    * `(id, minhash)` signature tables: a PROBE side (a new batch, or
+    * corpusA) and an INDEX side (a maintained signature index, or
+    * corpusB), so an index can be probed without re-signing its corpus.
+    *
+    * The sides are tagged (probe 1, index 0) and banded in ONE explode
+    * of their union; one window per (band, band_hash) counts the probe
+    * rows `na` and all rows `n`, and ONE equi-join of the probe band rows
+    * to all band rows on (band, band_hash) yields both kinds of pair:
+    *  - `side = 0`, an index hit: `id_b` is an index doc; the bucket is
+    *    kept while its combined occupancy `n ≤ maxBucketSize`;
+    *  - `side = 1`, a later probe twin (only when `withinProbe`): `id_b`
+    *    is a probe doc with `id_a < id_b`; the bucket is kept while
+    *    `2·na ≤ maxBucketSize`, the occupancy of the probe side joined
+    *    to itself.
+    * Pairs are distinct on (id_a, id_b, side) and rechecked with
+    * SigAgree against the signatures keyed by (id, side), so a probe doc
+    * whose id also occurs in the index is compared with each of its
+    * partners, never with itself. Null signatures (empty shingle sets)
+    * form no pair. Returns (id_a, id_b, side, est_jaccard). */
+  private[graft] def probePairs(probe: DataFrame, index: DataFrame,
+                                idCol: String, k: Int, bands: Int,
+                                maxBucketSize: Int,
+                                withinProbe: Boolean): DataFrame = {
     require(bands > 0 && bands <= k && k % bands == 0,
       s"bands ($bands) must evenly divide signature length k ($k)")
-    val rows = k / bands
-    val bA = lshBands(signedA, idCol, bands, rows)
-    val bB = lshBands(signedB, idCol, bands, rows)
-    // combined bucket occupancy cap: count each side per (band, hash),
-    // drop buckets whose summed size exceeds the cap — two tiny aggs on
-    // band keys, no window over the joined expansion
-    val cA = bA.groupBy("band", "band_hash").agg(count(lit(1)).as("na"))
-    val cB = bB.groupBy("band", "band_hash").agg(count(lit(1)).as("nb"))
-    val keep = cA.join(cB, Seq("band", "band_hash"))
-      .filter(col("na") + col("nb") <= maxBucketSize)
-      .select("band", "band_hash")
-    val pairs = bA.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-      .join(keep, Seq("band", "band_hash"))
-      .join(bB.select(col(idCol).as("id_b"), col("band"), col("band_hash")),
-        Seq("band", "band_hash"))
-      .select("id_a", "id_b").distinct()
+    val sigs = probe.select(col(idCol), col("minhash"), lit(1).as("side"))
+      .union(index.select(col(idCol), col("minhash"), lit(0).as("side")))
+    val bucket = org.apache.spark.sql.expressions.Window
+      .partitionBy("band", "band_hash")
+    val counted = lshBands(sigs, idCol, bands, k / bands, carry = Seq("side"))
+      .withColumn("na", sum(col("side")).over(bucket))
+      .withColumn("n", count(lit(1)).over(bucket))
+    // a band row joins only within the cap of its kind of pair, so a
+    // capped bucket sends no row of that kind into the join. Both sides
+    // filter ABOVE the window (not on its partition keys), so the subtree
+    // below it — the explode and its band-key exchange — is the same plan
+    // on both, and static exchange reuse runs it once. (Under AQE each
+    // cached input is a separate TableCacheQueryStage whose id enters the
+    // exchange's canonical form, so Spark 4.1 runs it once per side.)
+    val indexHit = col("side") === 0 && col("n") <= maxBucketSize
+    val twin =
+      if (withinProbe) col("side") === 1 && col("na") * 2 <= maxBucketSize
+      else lit(false)
+    val a = counted
+      .filter(col("side") === 1 && (col("n") <= maxBucketSize || twin))
+      .select(col(idCol).as("id_a"), col("band"), col("band_hash"))
+    val b = counted.filter(indexHit || twin)
+      .select(col(idCol).as("id_b"), col("side"), col("band"), col("band_hash"))
+    val pairs = a.join(b, Seq("band", "band_hash"))
+      .filter(col("side") === 0 || col("id_a") < col("id_b"))
+      .select("id_a", "id_b", "side").distinct()
     pairs
-      .join(signedA.select(col(idCol).as("id_a"), col("minhash").as("sig_a")), "id_a")
-      .join(signedB.select(col(idCol).as("id_b"), col("minhash").as("sig_b")), "id_b")
+      .join(probe.select(col(idCol).as("id_a"), col("minhash").as("sig_a")), "id_a")
+      .join(sigs.select(col(idCol).as("id_b"), col("side"), col("minhash").as("sig_b")),
+        Seq("id_b", "side"))
       .withColumn("est_jaccard",
         graft.functions.SigAgree.sig_agree(col("sig_a"), col("sig_b"))
           .cast("double") / k)
-      .select("id_a", "id_b", "est_jaccard")
+      .select("id_a", "id_b", "side", "est_jaccard")
   }
 
   /** INCREMENTAL near-dup dedup — the MinHash complement of
@@ -243,8 +271,9 @@ object Dedup {
     *
     * Returns the SURVIVING `(id, minhash)` rows — exactly the rows to
     * append to the index, so increment N+1's cost again never touches
-    * increment N's bodies. Scale shape: one signature scan of the batch
-    * + two banded equi-joins (batch×index, batch×batch), all candidate
+    * increment N's bodies. Scale shape: one signature scan of the batch,
+    * then one band explode and one banded equi-join ([[probePairs]]:
+    * batch×index and batch×batch in the same pass), all candidate
     * generation bucket-capped — the x7/x17 linear-candidate machinery
     * end to end.
     *
@@ -263,20 +292,26 @@ object Dedup {
       s"threshold must be in (0, 1], got $threshold")
     val batchSigs = withMinHash(batch, shingleCol, k)
       .select(col(idCol), col("minhash")).persist()
-    val vsCorpus = bandedPairs(batchSigs, corpusSigs, idCol, k, bands,
-        maxBucketSize)
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_a").as(idCol))
-    val laterTwins = bandedPairs(batchSigs, batchSigs, idCol, k, bands,
-        maxBucketSize)
-      .filter(col("id_a") < col("id_b") && col("est_jaccard") >= threshold)
-      .select(col("id_b").as(idCol))
     val survivors = batchSigs
-      .join(vsCorpus.union(laterTwins).distinct(), Seq(idCol), "left_anti")
+      .join(nearDupDrops(batchSigs, corpusSigs, idCol, k, bands, threshold,
+        maxBucketSize), Seq(idCol), "left_anti")
       .localCheckpoint() // eager: materialized while batchSigs is cached
     batchSigs.unpersist()
     survivors
   }
+
+  /** The ids [[incrementalNearDup]] drops from a signed batch: the probe
+    * doc of each index hit and the later doc of each batch twin with
+    * est ≥ `threshold` (ids may repeat). */
+  private[graft] def nearDupDrops(batchSigs: DataFrame, corpusSigs: DataFrame,
+                                  idCol: String, k: Int, bands: Int,
+                                  threshold: Double,
+                                  maxBucketSize: Int): DataFrame =
+    probePairs(batchSigs, corpusSigs, idCol, k, bands, maxBucketSize,
+        withinProbe = true)
+      .filter(col("est_jaccard") >= threshold)
+      .select(when(col("side") === 0, col("id_a")).otherwise(col("id_b"))
+        .as(idCol))
 
   /** Graded n-gram contamination — the GPT-3/PaLM-style decontamination
     * METRIC (vs [[crossCorpusCandidates]]'s binary near-dup verdict): for
@@ -1315,9 +1350,9 @@ object Dedup {
     * the corpus-sized self-join. Same guarantees (pigeonhole-exact
     * recall to Hamming ≤ bands − 1, no O(n²)); the bucket cap is the
     * COMBINED (a + b) occupancy per (band, value) — two tiny aggs on
-    * band keys, the [[bandedPairs]] discipline — so a degenerate
-    * boilerplate bucket is dropped no matter which side its mass sits
-    * on. Returns (id_a from `fpA`, id_b from `fpB`, hamming). */
+    * band keys, the cap [[probePairs]] puts on index hits — so a
+    * degenerate boilerplate bucket is dropped no matter which side its
+    * mass sits on. Returns (id_a from `fpA`, id_b from `fpB`, hamming). */
   def fingerprintPairsAgainst(fpA: DataFrame, fpB: DataFrame, idCol: String,
                               fpCol: String, maxHamming: Int = 3,
                               maxBucketSize: Int = 10000,

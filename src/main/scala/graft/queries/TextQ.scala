@@ -2346,9 +2346,12 @@ object TextQ {
     // maintained (id, minhash) signature index (built here from the
     // doc_id % 4 != 0 slice; in production it is the carried artifact),
     // the % 4 == 0 batch signs itself once and survives iff near-dup
-    // (est ≥ 0.25) of neither an index doc nor an earlier batch doc.
+    // (est ≥ 0.25) of neither an index doc nor an earlier batch doc;
+    // both probes come from one band pass (one explode of the
+    // side-tagged batch ∪ index, one band equi-join).
     // Output = the rows appended to the index. Rows-only (hash-family-
-    // specific); IncrementalNearDupSpec plants drops + pins idempotence.
+    // specific); IncrementalNearDupSpec plants drops, pins idempotence
+    // and parity with the earlier two-pass form.
     "x45_incremental_neardup" -> ((s, d) => {
       val batch = Tables.documents(s, d)
         .filter(col("doc_id") % 4 === 0)

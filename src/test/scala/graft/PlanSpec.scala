@@ -324,4 +324,29 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       s"one keyed exchange into the fold:\n$p")
     assert(p.contains("MapGroups"), s"fold missing:\n$p")
   }
+
+  test("x45's drop set bands once: one Generate, no cartesian product") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.GenerateExec
+    import graft.ext.{Dedup, TextOps}
+    // the batch x45 signs, persisted as incrementalNearDup persists it
+    val batchSigs = Dedup.withMinHash(Tables.documents(spark, sf)
+        .filter(col("doc_id") % 4 === 0)
+        .select(col("doc_id"),
+          TextOps.shingles(TextOps.tokens(col("text")), 3).as("sh")), "sh", 32)
+      .select("doc_id", "minhash").persist()
+    try {
+      val p = Dedup.nearDupDrops(batchSigs,
+          graft.queries.TextQ.corpusSigIndex(spark, sf), "doc_id",
+          k = 32, bands = 16, threshold = 0.25, maxBucketSize = 10000)
+        .queryExecution.executedPlan
+      // batch×index and batch×batch pairs come from one explode of the
+      // side-tagged union; both join sides read its one band-key shuffle
+      val generates = p.collect { case g: GenerateExec => g }
+      assert(generates.size == 1, s"expected one band explode:\n$p")
+      assert(!p.toString.contains("CartesianProduct") &&
+        !p.toString.contains("BroadcastNestedLoopJoin"),
+        s"candidates must come from the band equi-join:\n$p")
+    } finally batchSigs.unpersist()
+  }
 }

@@ -88,6 +88,17 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("a table read before the session's first events read is not inferred again after it") {
+    // a fresh copy of region, so no earlier read in this JVM memoized it
+    val copy = Files.createTempDirectory("tables_events").resolve("region.parquet")
+    Files.copy(Paths.get(s"$sf/region.parquet"), copy)
+    withSQLConf(nanosAsLong -> "false") {
+      Tables.parquet(spark, copy.toString)
+      Tables.events(spark, sf)
+      assert(jobsStartedBy(Tables.parquet(spark, copy.toString).schema) == 0)
+    }
+  }
+
   test("a table rewritten at the same path is inferred again") {
     val path = Files.createTempDirectory("tables_rewrite").resolve("t.parquet").toString
     spark.range(3).selectExpr("id AS a", "id * 2 AS b")
