@@ -33,6 +33,12 @@ private[streaming] object FpState {
 
   def fpDir(root: String) = s"$root/fpstate"
 
+  /** The partial's partition for commit id `id` — staged with its
+    * data partition, and deleted with it on a lost CAS
+    * ([[ManagedSink.commitStaged]]; the id was claimed, so this deletes
+    * nothing a winner committed). */
+  def path(root: String, id: Int): String = s"${fpDir(root)}/batch_id=$id"
+
   private def fsOf(s: SparkSession, root: String) =
     new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -54,17 +60,11 @@ private[streaming] object FpState {
   def write(root: String, id: Int, p: DataFrame): Unit =
     p.select(col("n"), col("fp"))
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"${fpDir(root)}/batch_id=$id")
-
-  /** Reclaim a staged partial after a lost CAS (the id was claimed —
-    * this deletes nothing a winner committed). */
-  def drop(s: SparkSession, root: String, id: Int): Unit =
-    fsOf(s, root).delete(new org.apache.hadoop.fs.Path(
-      s"${fpDir(root)}/batch_id=$id"), true)
+      .write.mode("overwrite").parquet(path(root, id))
 
   def hasPartial(s: SparkSession, root: String, id: Int): Boolean =
     Manifest.hasDataFiles(fsOf(s, root),
-      new org.apache.hadoop.fs.Path(s"${fpDir(root)}/batch_id=$id"))
+      new org.apache.hadoop.fs.Path(path(root, id)))
 
   /** Serve (n_rows, fingerprint) from the live ids' partials. `ids` =
     * every live id that carries state (data + tombstones); `uncovered`
@@ -77,7 +77,7 @@ private[streaming] object FpState {
     if (ids.exists(id => !hasPartial(s, root, id) && uncovered(id)) ||
         covered.isEmpty) None
     else Some(s.read.option("basePath", fpDir(root))
-      .parquet(covered.map(id => s"${fpDir(root)}/batch_id=$id"): _*)
+      .parquet(covered.map(path(root, _)): _*)
       .agg(sum(col("n")).as("n_rows"),
         bit_xor(coalesce(col("fp"), lit(0L))).as("fingerprint"))
       .select(col("n_rows"),

@@ -76,7 +76,7 @@ object Manifest {
   private def mdir(root: String) = new Path(s"$root/manifest")
 
   /** True iff `p` holds at least one real data file (directly, or one
-    * level down inside a partition dir) — shared by all three sinks'
+    * level down inside a partition dir) — shared by every sink's
     * loaders: `spark.read.parquet` on an existing-but-empty dir throws
     * UNABLE_TO_INFER_SCHEMA, so a first-batch crash whose retry wiped
     * the only staged partition must read as "state not born yet", not
@@ -550,8 +550,8 @@ object Manifest {
     }
   private val claimLock = new Object
 
-  /** The shared sink-ENTRY protocol ([[StreamBm25]]/[[StreamIvf]]/
-    * [[StreamCurate]] `appendBatch`): commit an empty manifest on a
+  /** The shared sink-ENTRY protocol (every sink's `appendBatch`, through
+    * [[ManagedSink.enterAppend]]): commit an empty manifest on a
     * virgin dir (manifest-mode from birth — even a batch-0 crash leaves
     * its orphan marked uncommitted), then wipe `stagedPartitions` if
     * `batchId` was never referenced by ANY manifest generation (the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.TextOps
@@ -58,21 +58,13 @@ object Release {
   /** Shard layout of a published release (loader entry point). */
   def shardsDir(root: String, name: String): String = s"$root/$name/shards"
 
-  /** Publish the corpus at `gen` (None = latest, resolved and RECORDED
-    * so the manifest always names an exact snapshot) as release `name`.
-    * Returns the one manifest row. Refuses a name that is already
-    * published (meta present); a crashed previous attempt (shards
-    * without meta) is overwritten. */
-  def publish(s: SparkSession, corpusDir: String, gen: Option[Int],
-              releaseRoot: String, name: String, nShards: Int,
-              idCol: String = "doc_id", textCol: String = "text")
-      : DataFrame = {
+  /** The name-claim preamble [[publish]] and [[publishDelta]] share:
+    * `name` is one path segment, not published yet, and not retired
+    * (retired names stay claimed). Returns the release root's FS. */
+  private def claimName(s: SparkSession, releaseRoot: String,
+                        name: String): FileSystem = {
     require(name.nonEmpty && !name.contains("/") && !name.startsWith("."),
       s"release names are single path segments, got '$name'")
-    require(nShards > 0, s"nShards must be positive, got $nShards")
-    val resolved = gen.orElse(Manifest.readWithGen(s, corpusDir).map(_._1))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed corpus state at $corpusDir"))
     val fs = new Path(releaseRoot)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     require(!fs.exists(new Path(metaDir(releaseRoot, name))),
@@ -82,6 +74,23 @@ object Release {
       s"release '$name' was retired at $releaseRoot — retired names stay " +
         "claimed (reuse would alias two lineages in based_on provenance); " +
         "publish under a new name")
+    fs
+  }
+
+  /** Publish the corpus at `gen` (None = latest, resolved and RECORDED
+    * so the manifest always names an exact snapshot) as release `name`.
+    * Returns the one manifest row. Refuses a name that is already
+    * published (meta present); a crashed previous attempt (shards
+    * without meta) is overwritten. */
+  def publish(s: SparkSession, corpusDir: String, gen: Option[Int],
+              releaseRoot: String, name: String, nShards: Int,
+              idCol: String = "doc_id", textCol: String = "text")
+      : DataFrame = {
+    val fs = claimName(s, releaseRoot, name)
+    require(nShards > 0, s"nShards must be positive, got $nShards")
+    val resolved = gen.orElse(Manifest.readWithGen(s, corpusDir).map(_._1))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no committed corpus state at $corpusDir"))
     val corpus = StreamCurate.loadAt(s, corpusDir, Some(resolved))
       .getOrElse(throw new IllegalArgumentException(
         s"corpus at $corpusDir has no rows at generation $resolved"))
@@ -298,19 +307,9 @@ object Release {
                    idCol: String = "doc_id", textCol: String = "text",
                    link: Boolean = false)
       : DataFrame = {
-    require(name.nonEmpty && !name.contains("/") && !name.startsWith("."),
-      s"release names are single path segments, got '$name'")
+    val fs = claimName(s, releaseRoot, name)
     val (nShards, bGen, baseBy) =
       baseForDelta(s, releaseRoot, basedOn, corpusDir, idCol, textCol)
-    val fs = new Path(releaseRoot)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(metaDir(releaseRoot, name))),
-      s"release '$name' is already published at $releaseRoot — releases " +
-        "are immutable; publish under a new name")
-    require(!fs.exists(new Path(retiredDir(releaseRoot, name))),
-      s"release '$name' was retired at $releaseRoot — retired names stay " +
-        "claimed (reuse would alias two lineages in based_on provenance); " +
-        "publish under a new name")
     val resolved = gen.orElse(Manifest.readWithGen(s, corpusDir).map(_._1))
       .getOrElse(throw new IllegalArgumentException(
         s"no committed corpus state at $corpusDir"))

@@ -34,7 +34,6 @@ object StreamBm25 extends ManagedSink {
   private def postingsDir(dir: String) = s"$dir/postings"
   private def statsDir(dir: String) = s"$dir/segstats"
   private def termDfDir(dir: String) = s"$dir/termdf"
-  private def tombDir(dir: String) = s"$dir/tombstones"
   private def blockDir(dir: String) = s"$dir/blocklist"
 
   /** Postings, term-df, tombstone, blocklist and fingerprint
@@ -54,46 +53,14 @@ object StreamBm25 extends ManagedSink {
     statsDir(dir) -> "seg_id=", tombDir(dir) -> "ts_id=",
     blockDir(dir) -> "bl_id=")
 
-  /** Split a committed live set into (segment ids, tombstone ids). The
-    * family is DECLARED in the manifest ([[Manifest.Live]] — the r10
-    * fix: directory-presence classification let a crashed delete's
-    * orphaned `ts_id=` dir mask a live merged segment out of every
-    * read). Ids committed by pre-family manifests (all in `data`) fall
-    * back to a conservative probe: tombstones were always negative and
-    * never had a stats partition, so only a negative id with tombstone
-    * data AND no stats partition classifies as one — ambiguity resolves
-    * to SEGMENT, the direction that can't vanish the index. */
-  private def families(s: SparkSession, dir: String,
-                       live: Manifest.Live): (Set[Int], Set[Int]) = {
-    val fs = fsOf(s, dir)
-    val legacyTombs = live.data.filter { id =>
-      id < 0 &&
-        Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(
-          s"${tombDir(dir)}/ts_id=$id")) &&
-        !Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(
-          s"${statsDir(dir)}/seg_id=$id"))
-    }
-    (live.data -- legacyTombs, live.tombs ++ legacyTombs)
-  }
-
-  /** The union of live tombstoned keys; None when nothing is deleted. */
-  private def tombstoneKeys(s: SparkSession, dir: String,
-                            tombIds: Set[Int]): Option[DataFrame] =
-    if (tombIds.isEmpty) None
-    else Some(s.read.option("basePath", tombDir(dir))
-      .parquet(tombIds.toSeq.sorted
-        .map(id => s"${tombDir(dir)}/ts_id=$id"): _*)
-      .select("key"))
-
-  /** The union of live PERSISTENT-BLOCKLIST keys (the `aux` family —
-    * survives every compaction fold); None when nothing is blocked. */
-  private def blocklistKeys(s: SparkSession, dir: String,
-                            blIds: Set[Int]): Option[DataFrame] =
-    if (blIds.isEmpty) None
-    else Some(s.read.option("basePath", blockDir(dir))
-      .parquet(blIds.toSeq.sorted
-        .map(id => s"${blockDir(dir)}/bl_id=$id"): _*)
-      .select("key"))
+  /** A pre-family tombstone id has no stats partition with data
+    * ([[ManagedSink.families]] — the probe asks for data files here,
+    * not a bare dir). */
+  override protected def dataFamilies(dir: String): Seq[(String, String)] =
+    Seq(statsDir(dir) -> "seg_id=")
+  override protected def dataPresent(fs: org.apache.hadoop.fs.FileSystem,
+                                     p: org.apache.hadoop.fs.Path): Boolean =
+    Manifest.hasDataFiles(fs, p)
 
   /** Upgrade-on-first-touch for the stats layout: dirs written before
     * the partition-dir layout carry flat files at the statsDir root
@@ -116,6 +83,8 @@ object StreamBm25 extends ManagedSink {
     migrationLocks.computeIfAbsent(dir, _ => new Object).synchronized {
       migrateLegacyStatsLocked(s, dir)
     }
+  override protected def beforeAppend(s: SparkSession, dir: String): Unit =
+    migrateLegacyStats(s, dir)
   private def migrateLegacyStatsLocked(s: SparkSession, dir: String): Unit = {
     val fs = fsOf(s, dir)
     val root = new org.apache.hadoop.fs.Path(statsDir(dir))
@@ -142,19 +111,17 @@ object StreamBm25 extends ManagedSink {
     * re-delivery-safe). */
   def appendBatch(dir: String, batch: DataFrame, batchId: Long,
                   idCol: String, textCol: String): Unit = {
-    require(batchId >= 0, s"engine batch ids are non-negative (got " +
-      s"$batchId); negative seg ids are the compaction namespace")
     val spark = batch.sparkSession
-    migrateLegacyStats(spark, dir) // pre-partition-layout dirs upgrade
-    // birth commit + same-batchId crash-retry wipe + ONE manifest read
-    // shared by guard and commit (the protocol all three sinks share);
+    // the shared append entry ([[ManagedSink.enterAppend]]): id guard,
+    // legacy stats migration, birth commit, same-batchId crash-retry
+    // wipe, ONE manifest read shared by the reset guard and the commit;
     // history-referenced partitions are never wiped (time travel)
-    val (gen, manifest, referenced) = Manifest.enterBatch(spark, dir,
-      batchId.toInt, postingsDir(dir), Seq(
+    val (gen, manifest, referenced) = enterAppend(spark, dir,
+      batchId, postingsDir(dir), Seq(
         s"${postingsDir(dir)}/seg_id=${batchId.toInt}",
         s"${termDfDir(dir)}/seg_id=${batchId.toInt}",
         s"${statsDir(dir)}/seg_id=${batchId.toInt}",
-        s"${FpState.fpDir(dir)}/batch_id=${batchId.toInt}"))
+        FpState.path(dir, batchId.toInt)))
     // first-seen guard counts TOMBSTONED keys as seen: load() masks
     // them out of postings, so without this leg a re-crawl of a
     // taken-down doc would re-index it — rows that cost storage but can
@@ -165,9 +132,10 @@ object StreamBm25 extends ManagedSink {
     // re-crawl stays out too (the x58 seen-digest semantics, brought to
     // the index sink).
     val liveNow = manifest.getOrElse(Manifest.Live.empty)
-    val tombstoned = tombstoneKeys(spark, dir,
-      families(spark, dir, liveNow)._2)
-    val blockedKeys = blocklistKeys(spark, dir, liveNow.aux)
+    val tombstoned = readIds(spark, tombDir(dir), "ts_id=",
+      families(spark, dir, liveNow)._2, "key")
+    val blockedKeys = readIds(spark, blockDir(dir), "bl_id=", liveNow.aux,
+      "key")
     val guarded = Seq(tombstoned, blockedKeys).flatten
       .foldLeft(batch)((b, deleted) =>
         b.join(deleted.select(col("key").as(idCol)), Seq(idCol), "left_anti"))
@@ -187,21 +155,7 @@ object StreamBm25 extends ManagedSink {
       // segment (an n_docs=0 metadata row would be harmless for the
       // stats sums but is noise the maintained index doesn't need).
       if (fresh.count() == 0) return
-      // COMMITTED segments are immutable — including segments a later
-      // compaction folded away, which older pinned generations still
-      // serve: a batch id EVER referenced by a manifest generation,
-      // arriving with docs this index has never seen, means a RESET
-      // stream checkpoint was pointed at an existing dir — proceeding
-      // would overwrite committed rows (in the live view for a live id;
-      // in time-travel history for a compacted-away one). A true
-      // at-least-once re-delivery carries only indexed keys and
-      // returned at the count above; anything else must fail loudly.
-      if (referenced.contains(batchId.toInt))
-        throw new IllegalStateException(
-          s"batch $batchId was already committed in $dir (live or in " +
-            "time-travel history) but this delivery carries unindexed " +
-            "documents — a restarted stream against an existing index " +
-            "needs batch ids above every id ever used (or a new dir)")
+      refuseReset(dir, batchId, referenced, "unindexed documents")
       val seg = TextOps.bm25SegmentOf(fresh, idCol, textCol, batchId.toInt)
       // partition-add, never a rewrite — and each staged write targets
       // its OWN partition directory as the job's output root (not a
@@ -249,9 +203,9 @@ object StreamBm25 extends ManagedSink {
       // empty partition then breaks every read; r11 self-review #3).
       // Ids with no data files in either family are orphans — dropped,
       // not adopted.
-      val everUsed = everUsedIds(spark, dir) - batchId.toInt
-      val fs2 = fsOf(spark, dir)
-      val live = manifest.getOrElse {
+      commitAppend(spark, dir, batchId, gen, manifest) {
+        val everUsed = everUsedIds(spark, dir) - batchId.toInt
+        val fs2 = fsOf(spark, dir)
         val data = everUsed.filter(id => Manifest.hasDataFiles(fs2,
           new org.apache.hadoop.fs.Path(s"${statsDir(dir)}/seg_id=$id")))
         val tombs = (everUsed -- data).filter(id =>
@@ -259,8 +213,6 @@ object StreamBm25 extends ManagedSink {
             s"${tombDir(dir)}/ts_id=$id")))
         Manifest.Live(data, tombs)
       }
-      Manifest.commitLiveAfter(spark, dir,
-        live.copy(data = live.data + batchId.toInt), basedOn = gen)
     } finally fresh.unpersist()
   }
 
@@ -296,21 +248,7 @@ object StreamBm25 extends ManagedSink {
     migrateLegacyStats(s, dir) // pre-partition-layout dirs upgrade
     val segs = load(s, dir).getOrElse(
       throw new IllegalArgumentException(s"no index at $dir"))
-    // merged segments live in the NEGATIVE id namespace — engine batch
-    // ids are non-negative, so a future micro-batch whose batchId equals
-    // a committed merged-segment id (into must be fresh, which is
-    // exactly where the engine's counter is heading) can never append
-    // into a live merged partition. `into` must also be fresh vs
-    // everything EVER written (raw stats, not the live view): a crashed
-    // compaction's orphaned id must never be re-used with rows already
-    // in its partition dir.
-    require(into < 0, s"merged segment ids are negative (got into=$into); " +
-      "non-negative ids belong to the streaming engine's batch counter")
-    // listing-based (everUsedIds): a raw statsDir data read here races
-    // a concurrent append's staged-partition rewrite (FAILED_READ_FILE)
-    val everUsed = everUsedIds(s, dir)
-    require(!everUsed.contains(into),
-      s"into=$into was already used (ever-written ids: $everUsed)")
+    requireFreshMergedId(s, dir, into)
     val st = Manifest.readLiveWithGen(s, dir)
     val live = st.map(_._2).getOrElse(Manifest.Live(
       segs.segStats.select("seg_id").distinct()
@@ -388,20 +326,9 @@ object StreamBm25 extends ManagedSink {
     val newLive =
       if (segIds == segLive) Manifest.Live(Set(into), Set.empty, live.aux)
       else Manifest.Live(segLive -- segIds + into, tombIds, live.aux)
-    try Manifest.commitLiveAfter(s, dir, newLive,
-      basedOn = st.map(_._1).getOrElse(-1))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // lost the CAS: reclaim the staged merged partitions so the
-        // orphan neither burns `into` in the listing ledger forever nor
-        // survives as an unreferenced dir (ADVICE r10 — the retry
-        // re-stages under a FRESH claimed id against fresh state)
-        val fs = fsOf(s, dir)
-        Seq(postingsDir(dir), termDfDir(dir), statsDir(dir)).foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$d/seg_id=$into"), true))
-        FpState.drop(s, dir, into)
-        throw e
-    }
+    commitStaged(s, dir, newLive, basedOn = st.map(_._1).getOrElse(-1),
+      staged = Seq(postingsDir(dir), termDfDir(dir), statsDir(dir))
+        .map(d => s"$d/seg_id=$into") :+ FpState.path(dir, into))
   }
 
   /** TAKEDOWN deletes — Lucene's liveDocs on this layout: `ids` become
@@ -468,7 +395,7 @@ object StreamBm25 extends ManagedSink {
     // self-review finding #1)
     val blockAdds =
       if (!blockRecrawl) None
-      else Some((blocklistKeys(s, dir, live.aux) match {
+      else Some((readIds(s, blockDir(dir), "bl_id=", live.aux, "key") match {
         case Some(blocked) => req.join(blocked, Seq("key"), "left_anti")
         case None => req
       }).persist())
@@ -508,24 +435,12 @@ object StreamBm25 extends ManagedSink {
             .parquet(s"${blockDir(dir)}/bl_id=$id")
           Some(id)
         }
-      try Manifest.commitLiveAfter(s, dir,
-        live.copy(tombs = live.tombs ++ tsId,
-          aux = live.aux ++ blId),
-        basedOn = st.map(_._1).getOrElse(-1))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // lost the CAS: reclaim the staged partitions — the ids are
-          // uniquely ours (claimed), so this deletes nothing a winner
-          // committed; the retry re-scopes against fresh state
-          tsId.foreach(id => fsOf(s, dir).delete(
-            new org.apache.hadoop.fs.Path(s"${tombDir(dir)}/ts_id=$id"),
-            true))
-          tsId.foreach(FpState.drop(s, dir, _))
-          blId.foreach(id => fsOf(s, dir).delete(
-            new org.apache.hadoop.fs.Path(s"${blockDir(dir)}/bl_id=$id"),
-            true))
-          throw e
-      }
+      commitStaged(s, dir,
+        live.copy(tombs = live.tombs ++ tsId, aux = live.aux ++ blId),
+        basedOn = st.map(_._1).getOrElse(-1),
+        staged = tsId.toSeq.flatMap(id => Seq(
+          s"${tombDir(dir)}/ts_id=$id", FpState.path(dir, id))) ++
+          blId.map(id => s"${blockDir(dir)}/bl_id=$id"))
     } finally {
       del.unpersist(); req.unpersist(); blockAdds.foreach(_.unpersist())
     }
@@ -660,7 +575,8 @@ object StreamBm25 extends ManagedSink {
           // exactly deleted-docs-still-count-toward-df-until-merge
           val postings0 = part(postingsDir(dir))
             .select("seg_id", "key", "tok", "tf", "dl")
-          val postings = tombstoneKeys(s, dir, tombIds) match {
+          val postings = readIds(s, tombDir(dir), "ts_id=", tombIds,
+              "key") match {
             case Some(deleted) =>
               postings0.join(deleted, Seq("key"), "left_anti")
             case None => postings0

@@ -51,7 +51,6 @@ object StreamClusters extends ManagedSink {
 
   private def membersDir(dir: String) = s"$dir/members"
   private def rootmapDir(dir: String) = s"$dir/rootmap"
-  private def tombDir(dir: String) = s"$dir/tombstones"
 
   /** Members, rootmap and tombstones: the vacuum families and the id
     * ledger alike. */
@@ -61,31 +60,10 @@ object StreamClusters extends ManagedSink {
   protected def ledgerFamilies(dir: String): Seq[(String, String)] =
     vacuumFamilies(dir)
 
-  /** Split a live set into (data ids, tombstone ids) — manifest-declared
-    * families ([[Manifest.Live]]), with the conservative probe fallback
-    * for pre-family generations (the StreamBm25.families discipline). */
-  private def families(s: SparkSession, dir: String,
-                       live: Manifest.Live): (Set[Int], Set[Int]) = {
-    val fs = fsOf(s, dir)
-    val legacyTombs = live.data.filter { id =>
-      id < 0 &&
-        Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(
-          s"${tombDir(dir)}/ts_id=$id")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${membersDir(dir)}/batch_id=$id"))
-    }
-    (live.data -- legacyTombs, live.tombs ++ legacyTombs)
-  }
-
-  /** The union of live tombstoned node ids (single `id` column); None
-    * when nothing is deleted. */
-  private def tombstoneKeys(s: SparkSession, dir: String,
-                            tombIds: Set[Int]): Option[DataFrame] =
-    if (tombIds.isEmpty) None
-    else Some(s.read.option("basePath", tombDir(dir))
-      .parquet(tombIds.toSeq.sorted
-        .map(id => s"${tombDir(dir)}/ts_id=$id"): _*)
-      .select("id"))
+  /** A pre-family tombstone id has no members partition
+    * ([[ManagedSink.families]]). */
+  override protected def dataFamilies(dir: String): Seq[(String, String)] =
+    Seq(membersDir(dir) -> "batch_id=")
 
   /** `foreachBatch` sink body: one micro-batch of candidate edges
     * (`idA`, `idB` columns) merges into the maintained table. Appends
@@ -97,11 +75,9 @@ object StreamClusters extends ManagedSink {
   def appendBatch(dir: String, edges: DataFrame, batchId: Long,
                   idA: String = "id1", idB: String = "id2",
                   checkpointDir: Option[String] = None): Unit = {
-    require(batchId >= 0, s"engine batch ids are non-negative (got " +
-      s"$batchId); negative ids are the compaction namespace")
     val spark = edges.sparkSession
-    val (gen, manifest, referenced) = Manifest.enterBatch(spark, dir,
-      batchId.toInt, membersDir(dir), Seq(
+    val (gen, manifest, referenced) = enterAppend(spark, dir,
+      batchId, membersDir(dir), Seq(
         s"${membersDir(dir)}/batch_id=${batchId.toInt}",
         s"${rootmapDir(dir)}/batch_id=${batchId.toInt}"))
     // takedown guard: an edge TOUCHING a tombstoned node is a
@@ -109,8 +85,8 @@ object StreamClusters extends ManagedSink {
     // id from re-entering as a "new" member and keeps its connectivity
     // from influencing future merges (the count-tombstoned-as-seen
     // discipline, edge-shaped)
-    val tombstoned = tombstoneKeys(spark, dir,
-      families(spark, dir, manifest.getOrElse(Manifest.Live.empty))._2)
+    val tombstoned = readIds(spark, tombDir(dir), "ts_id=",
+      families(spark, dir, manifest.getOrElse(Manifest.Live.empty))._2, "id")
     val edgesIn = tombstoned match {
       case Some(deleted) =>
         edges
@@ -143,12 +119,7 @@ object StreamClusters extends ManagedSink {
       // full re-delivery: replayed edges contract to self-loops and
       // vanish — nothing new, nothing merged, NO new generation
       if (nNew == 0 && nDelta == 0) return
-      if (referenced.contains(batchId.toInt))
-        throw new IllegalStateException(
-          s"batch $batchId was already committed in $dir (live or in " +
-            "time-travel history) but this delivery carries new edges — " +
-            "a restarted stream against existing state needs batch ids " +
-            "above every id ever used (or a new dir)")
+      refuseReset(dir, batchId, referenced, "new edges")
       // stage 1: the batch's new member rows — partition add, own dir
       // as the job output root (disjoint staging, the StreamBm25 rule)
       if (nNew > 0)
@@ -173,10 +144,8 @@ object StreamClusters extends ManagedSink {
           .write.mode("overwrite")
           .parquet(s"${rootmapDir(dir)}/batch_id=${batchId.toInt}")
       }
-      val live = manifest.getOrElse(Manifest.Live(
+      commitAppend(spark, dir, batchId, gen, manifest)(Manifest.Live(
         everUsedIds(spark, dir) - batchId.toInt, Set.empty))
-      Manifest.commitLiveAfter(spark, dir,
-        live.copy(data = live.data + batchId.toInt), basedOn = gen)
     } finally { newMembers.unpersist(); rootDelta.unpersist() }
   }
 
@@ -237,11 +206,7 @@ object StreamClusters extends ManagedSink {
     * partitions stay as time-travel history (the
     * compaction-only-stages-and-flips rule). */
   def compact(s: SparkSession, dir: String, into: Int): Unit = {
-    require(into < 0, s"merged ids are negative (got into=$into); " +
-      "non-negative ids belong to the streaming engine's batch counter")
-    val everUsed = everUsedIds(s, dir)
-    require(!everUsed.contains(into),
-      s"into=$into was already used (ever-written ids: $everUsed)")
+    requireFreshMergedId(s, dir, into)
     val st = Manifest.readLiveWithGen(s, dir)
     val resolved = load(s, dir).getOrElse(
       throw new IllegalArgumentException(s"no cluster state at $dir"))
@@ -259,15 +224,9 @@ object StreamClusters extends ManagedSink {
     // mid-fold makes this throw instead of silently losing its batch;
     // tombstones leave the live set in the SAME flip (their partitions
     // stay as history until [[vacuum]])
-    try Manifest.commitLiveAfter(s, dir,
-      Manifest.Live(Set(into), Set.empty),
-      basedOn = st.map(_._1).getOrElse(-1))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        fsOf(s, dir).delete(new org.apache.hadoop.fs.Path(
-          s"${membersDir(dir)}/batch_id=$into"), true)
-        throw e
-    }
+    commitStaged(s, dir, Manifest.Live(Set(into), Set.empty),
+      basedOn = st.map(_._1).getOrElse(-1),
+      staged = Seq(s"${membersDir(dir)}/batch_id=$into"))
   }
 
   /** TAKEDOWN deletes on the cluster table — membership is a derivative
@@ -305,15 +264,9 @@ object StreamClusters extends ManagedSink {
       val tsId = nextCompactId(s, dir)
       del.coalesce(1) // takedown-sized
         .write.mode("overwrite").parquet(s"${tombDir(dir)}/ts_id=$tsId")
-      try Manifest.commitLiveAfter(s, dir,
-        live.copy(tombs = live.tombs + tsId),
-        basedOn = st.map(_._1).getOrElse(-1))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          fsOf(s, dir).delete(new org.apache.hadoop.fs.Path(
-            s"${tombDir(dir)}/ts_id=$tsId"), true)
-          throw e
-      }
+      commitStaged(s, dir, live.copy(tombs = live.tombs + tsId),
+        basedOn = st.map(_._1).getOrElse(-1),
+        staged = Seq(s"${tombDir(dir)}/ts_id=$tsId"))
     } finally del.unpersist()
   }
 
@@ -341,9 +294,9 @@ object StreamClusters extends ManagedSink {
       // re-mins them over the survivors — deliberately the Lucene
       // stale-until-merge shape (the BM25 sink's df has the same
       // semantics between delete and merge).
-      val tombIds = Manifest.readLiveAt(s, dir, asOfGen)
-        .map(families(s, dir, _)._2).getOrElse(Set.empty)
-      tombstoneKeys(s, dir, tombIds) match {
+      val tombIds = familiesAt(s, dir, asOfGen).map(_._2)
+        .getOrElse(Set.empty)
+      readIds(s, tombDir(dir), "ts_id=", tombIds, "id") match {
         case Some(deleted) => resolved.join(deleted, Seq("id"), "left_anti")
         case None => resolved
       }
@@ -376,8 +329,7 @@ object StreamClusters extends ManagedSink {
     * everything folded by [[compact]]). */
   private def overlay(s: SparkSession, dir: String, asOfGen: Option[Int])
       : Option[DataFrame] =
-    Manifest.readLiveAt(s, dir, asOfGen).map(families(s, dir, _)._1)
-      .flatMap { live =>
+    familiesAt(s, dir, asOfGen).map(_._1).flatMap { live =>
       val fs = fsOf(s, dir)
       live.toSeq.sorted.reverse
         .map(id => s"${rootmapDir(dir)}/batch_id=$id")

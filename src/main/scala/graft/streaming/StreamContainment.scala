@@ -39,13 +39,10 @@ import graft.ext.Dedup
   * maintained index, O(batch) per increment (left-merged combined df,
   * bucket-pruned postings read, stored sets for the exact recheck).
   */
-object StreamContainment extends ManagedSink {
+object StreamContainment extends SeenIdsSink {
 
   private def setsDir(dir: String) = s"$dir/sets"
   private def postDir(dir: String) = s"$dir/post"
-  private def dfDir(dir: String) = s"$dir/dfparts"
-  private def idsDir(dir: String) = s"$dir/seenids"
-  private def delDir(dir: String) = s"$dir/delids"
 
   /** Sets, postings, df, seen ids and delete records: the vacuum
     * families and the id ledger alike. A vacuum keeps the live merged
@@ -55,22 +52,6 @@ object StreamContainment extends ManagedSink {
     setsDir(dir) -> "batch_id=", postDir(dir) -> "batch_id=",
     dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
     delDir(dir) -> "del_id=")
-  protected def ledgerFamilies(dir: String): Seq[(String, String)] =
-    vacuumFamilies(dir)
-
-  /** The union of deleted doc ids (the `aux` family — survives every
-    * fold, keeping re-deletes idempotent forever). */
-  private def deletedIds(s: SparkSession, dir: String,
-                         aux: Set[Int]): Option[DataFrame] = {
-    val fs = fsOf(s, dir)
-    val present = aux.toSeq.sorted
-      .map(id => s"${delDir(dir)}/del_id=$id")
-      .filter(p => Manifest.hasDataFiles(fs,
-        new org.apache.hadoop.fs.Path(p)))
-    if (present.isEmpty) None
-    else Some(s.read.option("basePath", delDir(dir))
-      .parquet(present: _*).select("id"))
-  }
 
   /** `foreachBatch` sink body: one micro-batch folds into the three
     * maintained tables. Each body is shingled EXACTLY ONCE, here —
@@ -80,12 +61,10 @@ object StreamContainment extends ManagedSink {
   def appendBatch(dir: String, docs: DataFrame, batchId: Long,
                   idCol: String = "doc_id", textCol: String = "text",
                   n: Int = 5): Unit = {
-    require(batchId >= 0, s"engine batch ids are non-negative (got " +
-      s"$batchId); negative ids are the compaction namespace")
     val spark = docs.sparkSession
     val bid = batchId.toInt
-    val (gen, manifest, referenced) = Manifest.enterBatch(spark, dir,
-      bid, setsDir(dir), Seq(
+    val (gen, manifest, referenced) = enterAppend(spark, dir,
+      batchId, setsDir(dir), Seq(
         s"${setsDir(dir)}/batch_id=$bid", s"${postDir(dir)}/batch_id=$bid",
         s"${dfDir(dir)}/batch_id=$bid", s"${idsDir(dir)}/batch_id=$bid"))
     val fresh0 = loadSeenIds(spark, dir) match {
@@ -96,12 +75,7 @@ object StreamContainment extends ManagedSink {
     val fresh = fresh0.dropDuplicates(idCol).persist()
     try {
       if (fresh.count() == 0) return // full replay: no delta, no commit
-      if (referenced.contains(bid))
-        throw new IllegalStateException(
-          s"batch $batchId was already committed in $dir (live or in " +
-            "time-travel history) but this delivery carries new docs — " +
-            "a restarted stream against existing state needs batch ids " +
-            "above every id ever used (or a new dir)")
+      refuseReset(dir, batchId, referenced, "new docs")
       val sets = Dedup.shingleSets(fresh, idCol, textCol, n).persist()
       sets.write.mode("overwrite")
         .parquet(s"${setsDir(dir)}/batch_id=$bid")
@@ -126,10 +100,8 @@ object StreamContainment extends ManagedSink {
       fresh.select(col(idCol).as("id"))
         .write.mode("overwrite").parquet(s"${idsDir(dir)}/batch_id=$bid")
       sets.unpersist()
-      val live = manifest.getOrElse(Manifest.Live(
+      commitAppend(spark, dir, batchId, gen, manifest)(Manifest.Live(
         everUsedIds(spark, dir) - bid, Set.empty))
-      Manifest.commitLiveAfter(spark, dir,
-        live.copy(data = live.data + bid), basedOn = gen)
     } finally fresh.unpersist()
   }
 
@@ -170,18 +142,10 @@ object StreamContainment extends ManagedSink {
         .parquet(s"${dfDir(dir)}/batch_id=$negId")
       scoped.coalesce(1) // takedown-sized
         .write.mode("overwrite").parquet(s"${delDir(dir)}/del_id=$delId")
-      try Manifest.commitLiveAfter(s, dir,
+      commitStaged(s, dir,
         live.copy(data = live.data + negId, aux = live.aux + delId),
-        basedOn = st.map(_._1).getOrElse(-1))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          val fs = fsOf(s, dir)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"${dfDir(dir)}/batch_id=$negId"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"${delDir(dir)}/del_id=$delId"), true)
-          throw e
-      }
+        basedOn = st.map(_._1).getOrElse(-1), staged = Seq(
+          s"${dfDir(dir)}/batch_id=$negId", s"${delDir(dir)}/del_id=$delId"))
     } finally scoped.unpersist()
   }
 
@@ -191,11 +155,7 @@ object StreamContainment extends ManagedSink {
     * absorbed; zero-sum shingles drop), and the seen ids. The aux
     * delids records survive the fold — re-deletes stay idempotent. */
   def compact(s: SparkSession, dir: String, into: Int): Unit = {
-    require(into < 0, s"merged ids are negative (got into=$into); " +
-      "non-negative ids belong to the streaming engine's batch counter")
-    val everUsed = everUsedIds(s, dir)
-    require(!everUsed.contains(into),
-      s"into=$into was already used (ever-written ids: $everUsed)")
+    requireFreshMergedId(s, dir, into)
     val st = Manifest.readLiveWithGen(s, dir)
     val sets = loadSets(s, dir).getOrElse(
       throw new IllegalArgumentException(s"no set state at $dir"))
@@ -216,18 +176,12 @@ object StreamContainment extends ManagedSink {
       .parquet(s"${postDir(dir)}/batch_id=$into")
     df.write.mode("overwrite").parquet(s"${dfDir(dir)}/batch_id=$into")
     ids.write.mode("overwrite").parquet(s"${idsDir(dir)}/batch_id=$into")
-    try Manifest.commitLiveAfter(s, dir,
+    commitStaged(s, dir,
       Manifest.Live(Set(into), Set.empty,
         st.map(_._2.aux).getOrElse(Set.empty)),
-      basedOn = st.map(_._1).getOrElse(-1))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        val fs = fsOf(s, dir)
-        Seq(setsDir(dir), postDir(dir), dfDir(dir), idsDir(dir))
-          .foreach(d => fs.delete(
-            new org.apache.hadoop.fs.Path(s"$d/batch_id=$into"), true))
-        throw e
-    }
+      basedOn = st.map(_._1).getOrElse(-1),
+      staged = Seq(setsDir(dir), postDir(dir), dfDir(dir), idsDir(dir))
+        .map(d => s"$d/batch_id=$into"))
   }
 
   /** The served shingle-set table (\_\_cid, \_\_sh), deleted docs
@@ -267,29 +221,7 @@ object StreamContainment extends ManagedSink {
   /** The served (ng, ndocs) df — keyed sum over live deltas, negative
     * takedown deltas netted, zero-sum shingles dropped. */
   def loadDf(s: SparkSession, dir: String): Option[DataFrame] =
-    livePaths(s, dir, dfDir(dir), asOfGen = None).map { case (paths, _) =>
-      s.read.option("basePath", dfDir(dir)).parquet(paths: _*)
-        .groupBy("ng").agg(sum("ndocs").as("ndocs"))
-        .filter(col("ndocs") > 0)
-    }
-
-  /** Ids whose rows the index still serves (seen minus deleted) — the
-    * takedown cascade's loud-failure view. */
-  def countedIds(s: SparkSession, dir: String): Option[DataFrame] =
-    loadSeenIds(s, dir).map { seen =>
-      Manifest.readLiveWithGen(s, dir).map(_._2)
-        .flatMap(l => deletedIds(s, dir, l.aux)) match {
-        case Some(del) => seen.join(del, Seq("id"), "left_anti")
-        case None => seen
-      }
-    }
-
-  /** The committed doc ids (the replay guard's view). */
-  def loadSeenIds(s: SparkSession, dir: String): Option[DataFrame] =
-    livePaths(s, dir, idsDir(dir), asOfGen = None).map { case (paths, _) =>
-      s.read.option("basePath", idsDir(dir)).parquet(paths: _*)
-        .select("id")
-    }
+    dfSumAt(s, dir, asOfGen = None)
 
   /** Containment of a probe `batch` against the maintained index — the
     * sink-served form of [[graft.ext.Dedup.containmentAgainst]]:
@@ -306,21 +238,4 @@ object StreamContainment extends ManagedSink {
     Dedup.containmentAgainst(sets, df, batch, idCol, textCol, n, maxDf,
       threshold, indexPostings = loadPostings(s, dir))
   }
-
-  /** Snapshot-isolated live-partition paths + the generation's aux set
-    * (DATA-family ids only read as deltas; aux drives the delete
-    * mask). */
-  private def livePaths(s: SparkSession, dir: String, sub: String,
-                        asOfGen: Option[Int])
-      : Option[(Seq[String], Set[Int])] =
-    Manifest.readLiveAt(s, dir, asOfGen) match {
-      case Some(live) if live.all.nonEmpty =>
-        val fs = fsOf(s, dir)
-        val present = live.data.toSeq.sorted
-          .map(id => s"$sub/batch_id=$id")
-          .filter(p => Manifest.hasDataFiles(fs,
-            new org.apache.hadoop.fs.Path(p)))
-        if (present.isEmpty) None else Some((present, live.aux))
-      case _ => None
-    }
 }

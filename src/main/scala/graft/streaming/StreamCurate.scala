@@ -67,7 +67,6 @@ object StreamCurate extends ManagedSink {
 
   private def seenDir(dir: String) = s"$dir/seen"
   private def corpusDir(dir: String) = s"$dir/corpus"
-  private def tombDir(dir: String) = s"$dir/tombstones"
   private def digestMapDir(dir: String) = s"$dir/digestmap"
   private def fpDir(dir: String) = s"$dir/fpstate"
   private def fpShardDir(dir: String) = s"$dir/fpshard"
@@ -165,31 +164,12 @@ object StreamCurate extends ManagedSink {
     } finally perBin.unpersist()
   }
 
-  /** Split the live set at a generation into (data ids, tombstone ids).
-    * The family is DECLARED in the manifest ([[Manifest.Live]] — the
-    * r10 fix: directory presence let a losing compaction's stranded
-    * `batch_id=` orphan serve under a live tombstone id, duplicating
-    * every corpus row, and the reverse phantom-masked corpus keys).
-    * Pre-family generations (all ids in `data`) fall back to the
-    * conservative probe: tombstones were always negative and never had
-    * a corpus/seen partition — ambiguity resolves to DATA. */
-  private def liveFamilies(s: org.apache.spark.sql.SparkSession,
-                           dir: String, asOfGen: Option[Int])
-      : Option[(Set[Int], Set[Int])] =
-    Manifest.readLiveAt(s, dir, asOfGen).map { live =>
-      val p0 = new org.apache.hadoop.fs.Path(dir)
-      val fs = p0.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val legacyTombs = live.data.filter { id =>
-        id < 0 &&
-          Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(
-            s"${tombDir(dir)}/ts_id=$id")) &&
-          !fs.exists(new org.apache.hadoop.fs.Path(
-            s"${corpusDir(dir)}/batch_id=$id")) &&
-          !fs.exists(new org.apache.hadoop.fs.Path(
-            s"${seenDir(dir)}/batch_id=$id"))
-      }
-      (live.data -- legacyTombs, live.tombs ++ legacyTombs)
-    }
+  /** A pre-family tombstone id has neither a corpus nor a seen
+    * partition ([[ManagedSink.families]]; the r10 fix there also stops
+    * a losing compaction's stranded `batch_id=` orphan serving under a
+    * live tombstone id, duplicating every corpus row). */
+  override protected def dataFamilies(dir: String): Seq[(String, String)] =
+    Seq(corpusDir(dir) -> "batch_id=", seenDir(dir) -> "batch_id=")
 
   /** Live tombstone masks as of a generation: each partition read
     * SEPARATELY, one single-column frame per distinct key-column name.
@@ -200,7 +180,7 @@ object StreamCurate extends ManagedSink {
   private def tombstoneMasks(s: org.apache.spark.sql.SparkSession,
                              dir: String, asOfGen: Option[Int])
       : Seq[DataFrame] =
-    liveFamilies(s, dir, asOfGen)
+    familiesAt(s, dir, asOfGen)
       .map { case (_, tombs) => maskFrames(s, dir, tombs) }
       .getOrElse(Nil)
 
@@ -210,8 +190,7 @@ object StreamCurate extends ManagedSink {
     * generations. */
   private def maskFrames(s: org.apache.spark.sql.SparkSession,
                          dir: String, tombs: Set[Int]): Seq[DataFrame] = {
-    val p0 = new org.apache.hadoop.fs.Path(tombDir(dir))
-    val fs = p0.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = fsOf(s, tombDir(dir))
     val frames = tombs.toSeq.sorted
       .map(id => s"${tombDir(dir)}/ts_id=$id")
       .filter(p => Manifest.hasDataFiles(fs,
@@ -261,22 +240,12 @@ object StreamCurate extends ManagedSink {
       // together at vacuum)
       writeFpPartials(Some(corpus.join(del, Seq(idCol), "left_semi")
         .drop("batch_id")), s, dir, tsId, sign = -1)
-      try Manifest.commitLiveAfter(s, dir,
-        live.copy(tombs = live.tombs + tsId),
-        basedOn = st.map(_._1).getOrElse(-1))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // lost the CAS: reclaim the staged tombstone AND its
-          // fingerprint partial (claimed id — deletes nothing a winner
-          // committed); retry re-scopes fresh
-          val fs = new org.apache.hadoop.fs.Path(dir)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          Seq(s"${tombDir(dir)}/ts_id=$tsId",
-            s"${fpDir(dir)}/batch_id=$tsId",
-            s"${fpShardDir(dir)}/batch_id=$tsId").foreach(p =>
-            fs.delete(new org.apache.hadoop.fs.Path(p), true))
-          throw e
-      }
+      // a lost CAS reclaims the staged tombstone AND its fingerprint
+      // partials; the retry re-scopes fresh
+      commitStaged(s, dir, live.copy(tombs = live.tombs + tsId),
+        basedOn = st.map(_._1).getOrElse(-1), staged = Seq(
+          s"${tombDir(dir)}/ts_id=$tsId", s"${fpDir(dir)}/batch_id=$tsId",
+          s"${fpShardDir(dir)}/batch_id=$tsId"))
     } finally del.unpersist()
   }
 
@@ -304,15 +273,11 @@ object StreamCurate extends ManagedSink {
     * generations interoperate. */
   def compact(s: org.apache.spark.sql.SparkSession, dir: String,
               into: Int, clusterBins: Int = 1): Unit = {
-    require(into < 0, s"compacted ids are negative (got into=$into); " +
-      "non-negative ids belong to the streaming engine's batch counter")
+    requireFreshMergedId(s, dir, into)
     require(clusterBins >= 1 &&
       (clusterBins == 1 || FpShardBins % clusterBins == 0),
       s"clusterBins must be 1 (flat) or a power of two dividing " +
         s"$FpShardBins, got $clusterBins")
-    val used = everUsedIds(s, dir)
-    require(!used.contains(into),
-      s"into=$into was already used (ever-written ids: $used)")
     val st = Manifest.readWithGen(s, dir)
     val corpus = load(s, dir).getOrElse(
       throw new IllegalArgumentException(s"no curated state at $dir"))
@@ -334,9 +299,7 @@ object StreamCurate extends ManagedSink {
         .parquet(s"${corpusDir(dir)}/batch_id=$into")
       // the granularity marker readers prune by ([[clusterBinsOf]]):
       // an underscore name, so Spark's data-file listing ignores it
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val out = fs.create(new org.apache.hadoop.fs.Path(
+      val out = fsOf(s, dir).create(new org.apache.hadoop.fs.Path(
         s"${corpusDir(dir)}/batch_id=$into/_clusterbins"), true)
       try out.write(clusterBins.toString.getBytes("UTF-8"))
       finally out.close()
@@ -362,20 +325,11 @@ object StreamCurate extends ManagedSink {
       .select(col("bin"), col("n"))
       .coalesce(1) // direct partition write — no shared-root staging
       .write.mode("overwrite").parquet(s"${binsDir(dir)}/batch_id=$into"))
-    try Manifest.commitAfter(s, dir, Set(into),
-      basedOn = st.map(_._1).getOrElse(-1))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // lost the CAS: reclaim the staged base partitions (claimed id)
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        Seq(corpusDir(dir), seenDir(dir), digestMapDir(dir), fpDir(dir),
-            fpShardDir(dir), binsDir(dir))
-          .foreach(d =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$d/batch_id=$into"),
-              true))
-        throw e
-    }
+    commitStaged(s, dir, Manifest.Live(Set(into), Set.empty),
+      basedOn = st.map(_._1).getOrElse(-1),
+      staged = Seq(corpusDir(dir), seenDir(dir), digestMapDir(dir),
+        fpDir(dir), fpShardDir(dir), binsDir(dir))
+        .map(d => s"$d/batch_id=$into"))
   }
 
   /** CONTENT-ADDRESSED takedown: forget by the BYTES, not by internal
@@ -490,8 +444,8 @@ object StreamCurate extends ManagedSink {
           s"key column $idCol not in the corpus schema $payload")
         val pa = aa.select(payload.map(col): _*)
         val pb = bb.select(payload.map(col): _*)
-        val fast = (liveFamilies(s, dir, genA),
-          liveFamilies(s, dir, genB)) match {
+        val fast = (familiesAt(s, dir, genA),
+          familiesAt(s, dir, genB)) match {
           case (Some((dA, tA)), Some((dB, tB)))
               if dA.subsetOf(dB) && tA.subsetOf(tB) =>
             // A-side probes push the (delta-sized) key set into the
@@ -581,9 +535,8 @@ object StreamCurate extends ManagedSink {
     * fold to re-base). */
   def fingerprintState(s: org.apache.spark.sql.SparkSession,
                        dir: String): Option[DataFrame] =
-    liveFamilies(s, dir, None).flatMap { case (data, tombs) =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
+    familiesAt(s, dir, None).flatMap { case (data, tombs) =>
+      val fs = fsOf(s, dir)
       def has(d: String) =
         Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(d))
       val dataUncovered = data.exists(id =>
@@ -671,9 +624,8 @@ object StreamCurate extends ManagedSink {
       }
       .nextOption().contains(payloadCols.sorted)
     if (!schemaOk) return None
-    liveFamilies(s, dir, gen).flatMap { case (data, tombs) =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
+    familiesAt(s, dir, gen).flatMap { case (data, tombs) =>
+      val fs = fsOf(s, dir)
       def has(d: String) =
         Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(d))
       val dataUncovered = data.exists(id =>
@@ -748,8 +700,7 @@ object StreamCurate extends ManagedSink {
     if (genA == genB) return Some(Seq.empty)
     val have = Manifest.generations(s, dir).toSet
     if (!(genA to genB).forall(have.contains)) return None
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = fsOf(s, dir)
     def has(p: String) =
       Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(p))
     val lives = (genA to genB).flatMap(g =>
@@ -865,38 +816,13 @@ object StreamCurate extends ManagedSink {
                   bins: Option[(org.apache.spark.sql.Column, Int)] = None)
       : Unit = {
     val spark = batch.sparkSession
-    // LEGACY (pre-manifest) dir: adopt the on-disk batches as the first
-    // manifest generation BEFORE entering the protocol — upgrade on
-    // first touch. Two reasons this must happen at entry, not at the
-    // commit: (a) an empty baseline would silently drop every
-    // pre-manifest batch from the live set; (b) this sink writes TWO
-    // state dirs, and Spark's recacheByPath re-materializes the cached
-    // anti-join when the seen dir is written — on a manifest-less dir
-    // the refreshed listing includes the batch's OWN just-written
-    // digests, so the corpus write would see an empty frame and the
-    // batch's documents would be recorded as seen but never kept. The
-    // manifest filter (staged ≠ live) is what makes the cached plan
-    // re-evaluation-stable. Adoption trusts the on-disk state as-is —
-    // the legacy protocol's own guarantee level; a crashed pre-manifest
-    // last batch is adopted like any other (indistinguishable, and
-    // dropping data would be worse).
-    if (Manifest.read(spark, dir).isEmpty) {
-      val baseline = partitionIds(spark, seenDir(dir)) ++
-        partitionIds(spark, corpusDir(dir))
-      if (baseline.nonEmpty)
-        Manifest.commitAfter(spark, dir, baseline, basedOn = -1)
-    }
-    // birth commit + same-batchId crash-retry wipe + ONE manifest read
-    // shared by guard and commit ([[Manifest.enterBatch]] — the
-    // protocol all three sinks share)
-    val (gen, manifest, referenced) = Manifest.enterBatch(spark, dir,
-      batchId.toInt, seenDir(dir), Seq(
-        s"${seenDir(dir)}/batch_id=${batchId.toInt}",
-        s"${corpusDir(dir)}/batch_id=${batchId.toInt}",
-        s"${digestMapDir(dir)}/batch_id=${batchId.toInt}",
-        s"${fpDir(dir)}/batch_id=${batchId.toInt}",
-        s"${fpShardDir(dir)}/batch_id=${batchId.toInt}",
-        s"${binsDir(dir)}/batch_id=${batchId.toInt}"))
+    // the shared append entry ([[ManagedSink.enterAppend]]): id guard,
+    // legacy adoption ([[beforeAppend]]), birth commit, same-batchId
+    // crash-retry wipe, ONE manifest read shared by guard and commit
+    val (gen, manifest, referenced) = enterAppend(spark, dir, batchId,
+      seenDir(dir), Seq(seenDir(dir), corpusDir(dir), digestMapDir(dir),
+        fpDir(dir), fpShardDir(dir), binsDir(dir))
+        .map(d => s"$d/batch_id=${batchId.toInt}"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__digest").orderBy(col("doc_id"))
     val firstInBatch = batch.withColumn("__digest", md5(col("text")))
@@ -911,17 +837,7 @@ object StreamCurate extends ManagedSink {
       // one materialized snapshot drives both writes (the st6 listing-
       // consistency discipline)
       if (fresh.count() == 0) return
-      // COMMITTED batches are immutable — including ones no longer live
-      // (older pinned generations still serve them): a batch id EVER
-      // referenced by a manifest generation, carrying unseen digests,
-      // means a RESET checkpoint against an existing dir. A true
-      // re-delivery carries only seen digests and returned above.
-      if (referenced.contains(batchId.toInt))
-        throw new IllegalStateException(
-          s"batch $batchId was already committed in $dir (live or in " +
-            "time-travel history) but this delivery carries unseen " +
-            "documents — a restarted stream against existing state " +
-            "needs batch ids above every id ever used (or a new dir)")
+      refuseReset(dir, batchId, referenced, "unseen documents")
       // every staged partition writes DIRECTLY to its path (no dynamic-
       // partition append into a table root: concurrent committers would
       // race on the root's shared _temporary staging dir)
@@ -955,8 +871,10 @@ object StreamCurate extends ManagedSink {
       // batches write empty/identity partials so coverage stays
       // provable.
       val writtenPath = s"${corpusDir(dir)}/batch_id=${batchId.toInt}"
+      val written = Manifest.hasDataFiles(fsOf(spark, dir),
+        new org.apache.hadoop.fs.Path(writtenPath))
       writeFpPartials(
-        if (hasDataFiles(spark, writtenPath))
+        if (written)
           Some(tombstoneMasks(spark, dir, asOfGen = None)
             .foldLeft(spark.read.parquet(writtenPath))((c, m) =>
               c.join(m, Seq(m.columns.head), "left_anti")))
@@ -969,7 +887,7 @@ object StreamCurate extends ManagedSink {
       // the dir's contract: pass the SAME (bin, nBins) every call.
       bins.foreach { case (bin, nBins) =>
         val src =
-          if (hasDataFiles(spark, writtenPath))
+          if (written)
             graft.ext.TextOps.psiBinCounts(
               spark.read.parquet(writtenPath), bin, nBins)
           else spark.range(0).select(col("id").as("bin"),
@@ -982,13 +900,35 @@ object StreamCurate extends ManagedSink {
       // unreachable None after entry-time adoption (every path above
       // leaves a committed manifest); the listing fallback stays as
       // belt-and-braces with this batch's just-staged partitions excluded
-      val live = manifest.getOrElse(Manifest.Live(
+      commitAppend(spark, dir, batchId, gen, manifest)(Manifest.Live(
         (partitionIds(spark, seenDir(dir)) ++
           partitionIds(spark, corpusDir(dir))) - batchId.toInt, Set.empty))
-      Manifest.commitLiveAfter(spark, dir,
-        live.copy(data = live.data + batchId.toInt), basedOn = gen)
     } finally fresh.unpersist()
   }
+
+  /** LEGACY (pre-manifest) dir: adopt the on-disk batches as the first
+    * manifest generation BEFORE entering the protocol — upgrade on
+    * first touch. Two reasons this must happen at entry, not at the
+    * commit: (a) an empty baseline would silently drop every
+    * pre-manifest batch from the live set; (b) this sink writes TWO
+    * state dirs, and Spark's recacheByPath re-materializes the cached
+    * anti-join when the seen dir is written — on a manifest-less dir
+    * the refreshed listing includes the batch's OWN just-written
+    * digests, so the corpus write would see an empty frame and the
+    * batch's documents would be recorded as seen but never kept. The
+    * manifest filter (staged ≠ live) is what makes the cached plan
+    * re-evaluation-stable. Adoption trusts the on-disk state as-is —
+    * the legacy protocol's own guarantee level; a crashed pre-manifest
+    * last batch is adopted like any other (indistinguishable, and
+    * dropping data would be worse). */
+  override protected def beforeAppend(s: org.apache.spark.sql.SparkSession,
+                                      dir: String): Unit =
+    if (Manifest.read(s, dir).isEmpty) {
+      val baseline = partitionIds(s, seenDir(dir)) ++
+        partitionIds(s, corpusDir(dir))
+      if (baseline.nonEmpty)
+        Manifest.commitAfter(s, dir, baseline, basedOn = -1)
+    }
 
   private def quarantineDir(dir: String) = s"$dir/quarantine"
 
@@ -1052,9 +992,8 @@ object StreamCurate extends ManagedSink {
     * was ever quarantined. Rows carry the raw arriving batch. */
   def quarantine(s: org.apache.spark.sql.SparkSession, dir: String)
       : Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(quarantineDir(dir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!Manifest.hasDataFiles(fs, p)) None
+    if (!Manifest.hasDataFiles(fsOf(s, dir),
+        new org.apache.hadoop.fs.Path(quarantineDir(dir)))) None
     else Some(s.read.option("basePath", quarantineDir(dir))
       .parquet(quarantineDir(dir)))
   }
@@ -1082,8 +1021,7 @@ object StreamCurate extends ManagedSink {
         "re-refused release re-outboxes under the new id, and the old " +
         "partition clears — the ids must differ or the rows are lost")
     val qPath = s"${quarantineDir(dir)}/batch_id=${quarantinedId.toInt}"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = fsOf(s, dir)
     require(Manifest.hasDataFiles(fs,
         new org.apache.hadoop.fs.Path(qPath)),
       s"no quarantined batch $quarantinedId at $dir")
@@ -1134,9 +1072,8 @@ object StreamCurate extends ManagedSink {
     * takedowns are distribution-neutral at admission granularity. */
   def binCounts(s: org.apache.spark.sql.SparkSession, dir: String)
       : Option[DataFrame] =
-    liveFamilies(s, dir, asOfGen = None).flatMap { case (dataIds, _) =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
+    familiesAt(s, dir, asOfGen = None).flatMap { case (dataIds, _) =>
+      val fs = fsOf(s, dir)
       def has(d: String) =
         Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(d))
       val uncovered = dataIds.exists(id =>
@@ -1209,7 +1146,7 @@ object StreamCurate extends ManagedSink {
                            asOfGen: Option[Int],
                            keepBin: Option[(Int, Int) => Boolean] = None)
       : Option[DataFrame] =
-    liveFamilies(s, dir, asOfGen) match {
+    familiesAt(s, dir, asOfGen) match {
       case Some((dataIds, _)) =>
         // DATA-family ids only: a tombstone id must never be probed
         // against this table — a losing compaction's stranded
@@ -1219,7 +1156,8 @@ object StreamCurate extends ManagedSink {
       case None =>
         // legacy (manifest-less) dirs are never clustered — a
         // clustered base only exists under [[compact]]'s commit
-        if (!hasDataFiles(s, dataDir)) None
+        if (!Manifest.hasDataFiles(fsOf(s, dataDir),
+            new org.apache.hadoop.fs.Path(dataDir))) None
         else Some(s.read.parquet(dataDir)
           .withColumn("batch_id", col("batch_id").cast("int")))
     }
@@ -1232,7 +1170,7 @@ object StreamCurate extends ManagedSink {
   private def firstDataFiles(s: org.apache.spark.sql.SparkSession,
                              dir: String, limit: Int): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = fsOf(s, dir)
     val out = scala.collection.mutable.ListBuffer.empty[String]
     def walk(p: org.apache.hadoop.fs.Path, depth: Int): Unit = {
       if (depth > 4 || out.size >= limit || !fs.exists(p)) return
@@ -1291,8 +1229,7 @@ object StreamCurate extends ManagedSink {
     if (ids.isEmpty) None
     else {
       val paths = ids.toSeq.sorted.map(id => s"$dataDir/batch_id=$id")
-      val p0 = new org.apache.hadoop.fs.Path(dataDir)
-      val fs = p0.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val fs = fsOf(s, dataDir)
       val present = paths.filter(p =>
         Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(p)))
       if (present.isEmpty) None
@@ -1323,14 +1260,6 @@ object StreamCurate extends ManagedSink {
         both.map(_.withColumn("batch_id", col("batch_id").cast("int")))
       }
     }
-
-  /** [[Manifest.hasDataFiles]] on a path string. */
-  private def hasDataFiles(s: org.apache.spark.sql.SparkSession,
-                           d: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(d)
-    Manifest.hasDataFiles(
-      p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
 
   /** The processed-set (seen digests), snapshot-isolated like the
     * corpus ([[snapshotRead]]). */

@@ -51,7 +51,6 @@ object StreamIvf extends ManagedSink {
 
   private def centroidsDir(dir: String) = s"$dir/centroids"
   private def postingsDir(dir: String) = s"$dir/postings"
-  private def tombDir(dir: String) = s"$dir/tombstones"
 
   /** Postings, tombstone and fingerprint partitions expire with
     * history; the id ledger is postings and tombstones (a fingerprint
@@ -62,32 +61,10 @@ object StreamIvf extends ManagedSink {
   protected def ledgerFamilies(dir: String): Seq[(String, String)] = Seq(
     postingsDir(dir) -> "batch_id=", tombDir(dir) -> "ts_id=")
 
-  /** Split a live set into (postings-partition ids, tombstone ids) —
-    * the manifest-declared family ([[Manifest.Live]]), with the
-    * conservative directory-probe fallback for pre-family generations
-    * (the StreamBm25.families discipline: ambiguity resolves to DATA). */
-  private def families(s: SparkSession, dir: String,
-                       live: Manifest.Live): (Set[Int], Set[Int]) = {
-    val fs = fsOf(s, dir)
-    val legacyTombs = live.data.filter { id =>
-      id < 0 &&
-        Manifest.hasDataFiles(fs, new org.apache.hadoop.fs.Path(
-          s"${tombDir(dir)}/ts_id=$id")) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(
-          s"${postingsDir(dir)}/batch_id=$id"))
-    }
-    (live.data -- legacyTombs, live.tombs ++ legacyTombs)
-  }
-
-  /** The union of live tombstoned vector ids (fixed column name `key`);
-    * None when nothing is deleted. */
-  private def tombstoneKeys(s: SparkSession, dir: String,
-                            tombIds: Set[Int]): Option[DataFrame] =
-    if (tombIds.isEmpty) None
-    else Some(s.read.option("basePath", tombDir(dir))
-      .parquet(tombIds.toSeq.sorted
-        .map(id => s"${tombDir(dir)}/ts_id=$id"): _*)
-      .select("key"))
+  /** A pre-family tombstone id has no postings partition
+    * ([[ManagedSink.families]]). */
+  override protected def dataFamilies(dir: String): Seq[(String, String)] =
+    Seq(postingsDir(dir) -> "batch_id=")
 
   /** `foreachBatch` sink body: micro-batch `batchId` → one immutable
     * on-disk postings partition (`batch_id=<batchId>`), training the
@@ -96,23 +73,31 @@ object StreamIvf extends ManagedSink {
   def appendBatch(dir: String, batch: DataFrame, batchId: Long,
                   idCol: String, vecCol: String, nCells: Int,
                   nAssign: Int = 2, refineIters: Int = 2,
-                  hierAssignFrom: Int = 512): Unit = {
+                  hierAssignFrom: Int = 512): Unit =
+    append(dir, batch, batchId, idCol, vecCol, nCells, nAssign,
+      refineIters, hierAssignFrom, engineBatch = true)
+
+  /** [[appendBatch]]'s body; `engineBatch = false` only for
+    * [[retrain]]'s reserved [[RetrainBatchId]]. */
+  private def append(dir: String, batch: DataFrame, batchId: Long,
+                     idCol: String, vecCol: String, nCells: Int,
+                     nAssign: Int, refineIters: Int, hierAssignFrom: Int,
+                     engineBatch: Boolean): Unit = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // birth commit + same-batchId crash-retry wipe + ONE manifest read
-    // shared by guard and commit ([[Manifest.enterBatch]] — the
-    // protocol all three sinks share)
-    val (gen, manifest, referenced) = Manifest.enterBatch(spark, dir,
-      batchId.toInt, postingsDir(dir),
-      Seq(s"${postingsDir(dir)}/batch_id=${batchId.toInt}",
-        s"${FpState.fpDir(dir)}/batch_id=${batchId.toInt}"))
+    val fs = fsOf(spark, dir)
+    // the shared append entry ([[ManagedSink.enterAppend]]): id guard,
+    // birth commit, same-batchId crash-retry wipe, ONE manifest read
+    // shared by the reset guard and the commit
+    val (gen, manifest, referenced) = enterAppend(spark, dir, batchId,
+      postingsDir(dir), Seq(s"${postingsDir(dir)}/batch_id=${batchId.toInt}",
+        FpState.path(dir, batchId.toInt)), engineBatch)
     // first-seen guard counts TOMBSTONED ids as seen (the StreamBm25
     // discipline): load() masks them out of the postings, so without
     // this leg a re-crawl of a taken-down vector would re-index rows
     // the mask makes unservable
-    val tombstoned = tombstoneKeys(spark, dir,
-      families(spark, dir, manifest.getOrElse(Manifest.Live.empty))._2)
+    val tombstoned = readIds(spark, tombDir(dir), "ts_id=",
+      families(spark, dir, manifest.getOrElse(Manifest.Live.empty))._2,
+      "key")
     val guarded = tombstoned match {
       case Some(deleted) =>
         batch.join(deleted.select(col("key").as(idCol)),
@@ -131,19 +116,7 @@ object StreamIvf extends ManagedSink {
       // later action can see a file listing containing this batch's own
       // postings
       if (fresh.count() == 0) return
-      // COMMITTED partitions are immutable — including ones no longer
-      // live (older pinned generations still serve them): a batch id
-      // EVER referenced by a manifest generation, carrying unindexed
-      // vectors, means a RESET checkpoint against an existing dir —
-      // appending would put rows into a committed partition (visible
-      // without a flip, leaking into pinned snapshots). A true
-      // re-delivery carries only indexed ids and returned above.
-      if (referenced.contains(batchId.toInt))
-        throw new IllegalStateException(
-          s"batch $batchId was already committed in $dir (live or in " +
-            "time-travel history) but this delivery carries unindexed " +
-            "vectors — a restarted stream against an existing index " +
-            "needs batch ids above every id ever used (or a new dir)")
+      refuseReset(dir, batchId, referenced, "unindexed vectors")
       val cPath = new org.apache.hadoop.fs.Path(centroidsDir(dir))
       // a centroid dir without its _SUCCESS job-commit marker is a
       // crashed training write — wipe and retrain (the quantizer is
@@ -182,13 +155,8 @@ object StreamIvf extends ManagedSink {
       // commit throws and the engine's batch retry re-runs fresh
       // legacy adoption baseline from partition-NAME listing (no data
       // read — the StreamBm25.everUsedIds discipline)
-      val live = manifest.getOrElse(Manifest.Live(
-        fs.listStatus(new org.apache.hadoop.fs.Path(postingsDir(dir)))
-          .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-          .map(_.stripPrefix("batch_id=").toInt).toSet - batchId.toInt,
-        Set.empty))
-      Manifest.commitLiveAfter(spark, dir,
-        live.copy(data = live.data + batchId.toInt), basedOn = gen)
+      commitAppend(spark, dir, batchId, gen, manifest)(Manifest.Live(
+        partitionIds(spark, postingsDir(dir)) - batchId.toInt, Set.empty))
     } finally fresh.unpersist()
   }
 
@@ -232,8 +200,8 @@ object StreamIvf extends ManagedSink {
           .orderBy(col("ivf_cell"))))
       .filter(col("__rk") === 1)
       .select(col(idCol), col(vecCol))
-    appendBatch(newDir, corpus, batchId = RetrainBatchId, idCol, vecCol,
-      nCells, nAssign, refineIters, hierAssignFrom)
+    append(newDir, corpus, RetrainBatchId, idCol, vecCol, nCells, nAssign,
+      refineIters, hierAssignFrom, engineBatch = false)
   }
 
   /** Reserved partition id for [[retrain]] output — outside the
@@ -277,16 +245,9 @@ object StreamIvf extends ManagedSink {
       // the serve, XORed and counted out — same flip as the tombstone
       FpState.write(dir, tsId, FpState.partial(
         del.select(col("key").as(idCol)), Seq(idCol), sign = -1))
-      try Manifest.commitLiveAfter(s, dir,
-        live.copy(tombs = live.tombs + tsId),
-        basedOn = st.map(_._1).getOrElse(-1))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          fsOf(s, dir).delete(new org.apache.hadoop.fs.Path(
-            s"${tombDir(dir)}/ts_id=$tsId"), true)
-          FpState.drop(s, dir, tsId)
-          throw e
-      }
+      commitStaged(s, dir, live.copy(tombs = live.tombs + tsId),
+        basedOn = st.map(_._1).getOrElse(-1),
+        staged = Seq(s"${tombDir(dir)}/ts_id=$tsId", FpState.path(dir, tsId)))
     } finally del.unpersist()
   }
 
@@ -300,11 +261,7 @@ object StreamIvf extends ManagedSink {
     * history until [[vacuum]]. */
   def compactAll(s: SparkSession, dir: String, into: Int,
                  idCol: String, vecCol: String): Unit = {
-    require(into < 0, s"compacted ids are negative (got into=$into); " +
-      "non-negative ids belong to the streaming engine's batch counter")
-    val everUsed = everUsedIds(s, dir)
-    require(!everUsed.contains(into),
-      s"into=$into was already used (ever-written ids: $everUsed)")
+    requireFreshMergedId(s, dir, into)
     val st = Manifest.readLiveWithGen(s, dir)
     val idx = load(s, dir, idCol, vecCol).getOrElse(
       throw new IllegalArgumentException(s"no index at $dir"))
@@ -317,16 +274,9 @@ object StreamIvf extends ManagedSink {
     FpState.write(dir, into, FpState.partial(
       s.read.parquet(s"${postingsDir(dir)}/batch_id=$into")
         .select(col(idCol)).distinct(), Seq(idCol), sign = 1))
-    try Manifest.commitLiveAfter(s, dir,
-      Manifest.Live(Set(into), Set.empty),
-      basedOn = st.map(_._1).getOrElse(-1))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        fsOf(s, dir).delete(new org.apache.hadoop.fs.Path(
-          s"${postingsDir(dir)}/batch_id=$into"), true)
-        FpState.drop(s, dir, into)
-        throw e
-    }
+    commitStaged(s, dir, Manifest.Live(Set(into), Set.empty),
+      basedOn = st.map(_._1).getOrElse(-1), staged = Seq(
+        s"${postingsDir(dir)}/batch_id=$into", FpState.path(dir, into)))
   }
 
   /** The maintained index as written so far; None before the first
@@ -366,7 +316,7 @@ object StreamIvf extends ManagedSink {
   def loadAt(s: SparkSession, dir: String, idCol: String, vecCol: String,
              asOfGen: Option[Int]): Option[Similarity.IvfIndex] = {
     val p = new org.apache.hadoop.fs.Path(postingsDir(dir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = fsOf(s, dir)
     // the index exists only once the quantizer completed (a batch-0
     // crash can leave staged postings without one)
     if (!fs.exists(new org.apache.hadoop.fs.Path(
@@ -390,7 +340,8 @@ object StreamIvf extends ManagedSink {
           // takedown mask ([[deleteVecs]] — Lucene liveDocs): a
           // tombstoned vector never scores, in ANY of its assigned
           // cells; physical reclaim happens at [[compactAll]]
-          val postings = tombstoneKeys(s, dir, tombIds) match {
+          val postings = readIds(s, tombDir(dir), "ts_id=", tombIds,
+              "key") match {
             case Some(deleted) =>
               postings0.join(deleted.select(col("key").as(idCol)),
                 Seq(idCol), "left_anti")

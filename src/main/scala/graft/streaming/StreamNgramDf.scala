@@ -36,11 +36,7 @@ import graft.ext.TextOps
   * id, snapshot-isolated reads (live partitions' paths, never a
   * directory listing), time travel via [[loadAt]].
   */
-object StreamNgramDf extends ManagedSink {
-
-  private def dfDir(dir: String) = s"$dir/dfparts"
-  private def idsDir(dir: String) = s"$dir/seenids"
-  private def delDir(dir: String) = s"$dir/delids"
+object StreamNgramDf extends SeenIdsSink {
 
   /** Df deltas, seen ids and delete records: the vacuum families and
     * the id ledger alike. A vacuum keeps the live merged base, including
@@ -48,23 +44,6 @@ object StreamNgramDf extends ManagedSink {
   protected def vacuumFamilies(dir: String): Seq[(String, String)] = Seq(
     dfDir(dir) -> "batch_id=", idsDir(dir) -> "batch_id=",
     delDir(dir) -> "del_id=")
-  protected def ledgerFamilies(dir: String): Seq[(String, String)] =
-    vacuumFamilies(dir)
-
-  /** The union of deleted doc ids (the `aux` family — survives every
-    * fold, keeping re-deletes idempotent forever); None when nothing
-    * was ever deleted. */
-  private def deletedIds(s: SparkSession, dir: String,
-                         aux: Set[Int]): Option[DataFrame] = {
-    val fs = fsOf(s, dir)
-    val present = aux.toSeq.sorted
-      .map(id => s"${delDir(dir)}/del_id=$id")
-      .filter(p => Manifest.hasDataFiles(fs,
-        new org.apache.hadoop.fs.Path(p)))
-    if (present.isEmpty) None
-    else Some(s.read.option("basePath", delDir(dir))
-      .parquet(present: _*).select("id"))
-  }
 
   /** TAKEDOWN deletes — the LSM answer for an index whose rows are
     * SUMS, not documents (x57's tombstone-mask doesn't transfer: a
@@ -120,18 +99,10 @@ object StreamNgramDf extends ManagedSink {
         .parquet(s"${dfDir(dir)}/batch_id=$negId")
       scoped.select(col(idCol).as("id")).coalesce(1) // takedown-sized
         .write.mode("overwrite").parquet(s"${delDir(dir)}/del_id=$delId")
-      try Manifest.commitLiveAfter(s, dir,
+      commitStaged(s, dir,
         live.copy(data = live.data + negId, aux = live.aux + delId),
-        basedOn = st.map(_._1).getOrElse(-1))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          val fs = fsOf(s, dir)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"${dfDir(dir)}/batch_id=$negId"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"${delDir(dir)}/del_id=$delId"), true)
-          throw e
-      }
+        basedOn = st.map(_._1).getOrElse(-1), staged = Seq(
+          s"${dfDir(dir)}/batch_id=$negId", s"${delDir(dir)}/del_id=$delId"))
     } finally scoped.unpersist()
   }
 
@@ -142,11 +113,9 @@ object StreamNgramDf extends ManagedSink {
   def appendBatch(dir: String, docs: DataFrame, batchId: Long,
                   idCol: String = "doc_id", textCol: String = "text",
                   n: Int = 3): Unit = {
-    require(batchId >= 0, s"engine batch ids are non-negative (got " +
-      s"$batchId); negative ids are the compaction namespace")
     val spark = docs.sparkSession
-    val (gen, manifest, referenced) = Manifest.enterBatch(spark, dir,
-      batchId.toInt, dfDir(dir), Seq(
+    val (gen, manifest, referenced) = enterAppend(spark, dir,
+      batchId, dfDir(dir), Seq(
         s"${dfDir(dir)}/batch_id=${batchId.toInt}",
         s"${idsDir(dir)}/batch_id=${batchId.toInt}"))
     val fresh0 = loadSeenIds(spark, dir) match {
@@ -157,22 +126,15 @@ object StreamNgramDf extends ManagedSink {
     val fresh = fresh0.persist()
     try {
       if (fresh.count() == 0) return // full replay: no delta, no commit
-      if (referenced.contains(batchId.toInt))
-        throw new IllegalStateException(
-          s"batch $batchId was already committed in $dir (live or in " +
-            "time-travel history) but this delivery carries new docs — " +
-            "a restarted stream against existing state needs batch ids " +
-            "above every id ever used (or a new dir)")
+      refuseReset(dir, batchId, referenced, "new docs")
       TextOps.ngramDf(fresh, idCol, textCol, n)
         .write.mode("overwrite")
         .parquet(s"${dfDir(dir)}/batch_id=${batchId.toInt}")
       fresh.select(col(idCol).as("id"))
         .write.mode("overwrite")
         .parquet(s"${idsDir(dir)}/batch_id=${batchId.toInt}")
-      val live = manifest.getOrElse(Manifest.Live(
+      commitAppend(spark, dir, batchId, gen, manifest)(Manifest.Live(
         everUsedIds(spark, dir) - batchId.toInt, Set.empty))
-      Manifest.commitLiveAfter(spark, dir,
-        live.copy(data = live.data + batchId.toInt), basedOn = gen)
     } finally fresh.unpersist()
   }
 
@@ -182,11 +144,7 @@ object StreamNgramDf extends ManagedSink {
     * serve-time sum's fan-in. Stages, then one atomic flip; folded
     * partitions stay as time-travel history. */
   def compact(s: SparkSession, dir: String, into: Int): Unit = {
-    require(into < 0, s"merged ids are negative (got into=$into); " +
-      "non-negative ids belong to the streaming engine's batch counter")
-    val everUsed = everUsedIds(s, dir)
-    require(!everUsed.contains(into),
-      s"into=$into was already used (ever-written ids: $everUsed)")
+    requireFreshMergedId(s, dir, into)
     val st = Manifest.readLiveWithGen(s, dir)
     // load() nets negative takedown deltas and drops zero-sum grams, so
     // the merged base PHYSICALLY forgets deleted contributions
@@ -198,19 +156,11 @@ object StreamNgramDf extends ManagedSink {
     ids.write.mode("overwrite").parquet(s"${idsDir(dir)}/batch_id=$into")
     // the aux family (deleted-ids records) survives the fold — that is
     // what keeps re-deletes idempotent after physical reclaim
-    try Manifest.commitLiveAfter(s, dir,
+    commitStaged(s, dir,
       Manifest.Live(Set(into), Set.empty,
         st.map(_._2.aux).getOrElse(Set.empty)),
-      basedOn = st.map(_._1).getOrElse(-1))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        val fs = fsOf(s, dir)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${dfDir(dir)}/batch_id=$into"), true)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          s"${idsDir(dir)}/batch_id=$into"), true)
-        throw e
-    }
+      basedOn = st.map(_._1).getOrElse(-1), staged = Seq(
+        s"${dfDir(dir)}/batch_id=$into", s"${idsDir(dir)}/batch_id=$into"))
   }
 
   /** The served (ng, ndocs) index — the keyed sum over live delta
@@ -220,52 +170,11 @@ object StreamNgramDf extends ManagedSink {
   def load(s: SparkSession, dir: String): Option[DataFrame] =
     loadAt(s, dir, asOfGen = None)
 
-  /** TIME-TRAVEL read of the df index as of a committed generation.
-    * The keyed sum nets [[deleteDocs]]' negative deltas; grams netting
-    * to zero DROP — the served table is bit-equal to one over a corpus
-    * that never contained the deleted docs. */
+  /** TIME-TRAVEL read of the df index as of a committed generation
+    * ([[SeenIdsSink.dfSumAt]]): [[deleteDocs]]' negative deltas net
+    * out, and the served table is bit-equal to one over a corpus that
+    * never contained the deleted docs. */
   def loadAt(s: SparkSession, dir: String, asOfGen: Option[Int])
       : Option[DataFrame] =
-    livePaths(s, dir, dfDir(dir), asOfGen).map { paths =>
-      s.read.option("basePath", dfDir(dir)).parquet(paths: _*)
-        .groupBy("ng").agg(sum("ndocs").as("ndocs"))
-        .filter(col("ndocs") > 0)
-    }
-
-  /** Ids whose gram contributions the index still COUNTS (seen minus
-    * already-deleted) — the set a takedown cascade must be able to
-    * resolve bodies for ([[Takedown.forget]]'s loud-failure guard);
-    * None before the first batch. */
-  def countedIds(s: SparkSession, dir: String): Option[DataFrame] =
-    loadSeenIds(s, dir).map { seen =>
-      Manifest.readLiveWithGen(s, dir).map(_._2)
-        .flatMap(l => deletedIds(s, dir, l.aux)) match {
-        case Some(del) => seen.join(del, Seq("id"), "left_anti")
-        case None => seen
-      }
-    }
-
-  /** The committed doc ids (the replay guard's view); None before the
-    * first batch. */
-  def loadSeenIds(s: SparkSession, dir: String): Option[DataFrame] =
-    livePaths(s, dir, idsDir(dir), asOfGen = None).map { paths =>
-      s.read.option("basePath", idsDir(dir)).parquet(paths: _*)
-        .select("id")
-    }
-
-  /** Snapshot-isolated live-partition paths (the manifest discipline:
-    * never a directory listing) — DATA-family ids only: the aux family
-    * (deleted-ids records) never reads as a delta. */
-  private def livePaths(s: SparkSession, dir: String, sub: String,
-                        asOfGen: Option[Int]): Option[Seq[String]] =
-    Manifest.readLiveAt(s, dir, asOfGen) match {
-      case Some(live) if live.all.nonEmpty =>
-        val fs = fsOf(s, dir)
-        val present = live.data.toSeq.sorted
-          .map(id => s"$sub/batch_id=$id")
-          .filter(p => Manifest.hasDataFiles(fs,
-            new org.apache.hadoop.fs.Path(p)))
-        if (present.isEmpty) None else Some(present)
-      case _ => None
-    }
+    dfSumAt(s, dir, asOfGen)
 }

@@ -409,10 +409,7 @@ object Takedown {
       .trigger(org.apache.spark.sql.streaming.Trigger
         .ProcessingTime(intervalMs))
       .foreachBatch { (_: DataFrame, _: Long) =>
-        try onReport(maintain(s, sinks))
-        catch {
-          case _: java.util.ConcurrentModificationException => ()
-        }
+        ManagedSink.skipOnLostCas(onReport(maintain(s, sinks)))
       }
       .start()
 

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{Manifest, StreamBm25}
+import graft.streaming.{Manifest, StreamBm25, StreamClusters, StreamCurate,
+  StreamIvf}
 
 /** The explicit partition-family manifest + claimed-id allocation
   * (ADVICE r10): tombstone membership is DECLARED in the committed
@@ -66,21 +67,57 @@ class ManifestFamilySpec extends AnyFunSuite with SharedSpark {
       "the manifest-declared segment family must win over the dir probe")
   }
 
-  test("pre-family tombstones (r10 on-disk state) still classify via the probe fallback") {
+  /** One tombstone sink's leg of the pre-family fixture: `append`
+    * commits keys 1 and 2 as batch 0, a takedown of that sink writes
+    * its tombstone rows in column `keyCol`, and `served` reads back the
+    * keys the sink serves. */
+  private case class TombSink(name: String, keyCol: String,
+                              append: String => Unit,
+                              served: String => Set[Long])
+
+  private def longs(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.distinct().collect().map(_.getLong(0)).toSet
+
+  private lazy val tombSinks: Seq[TombSink] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mlegacy").toString
     val docs = Seq(1L -> "apples and pears", 2L -> "pears and plums")
       .toDF("doc_id", "text")
-    StreamBm25.appendBatch(dir, docs, 0L, "doc_id", "text")
-    // mimic the r10 deleteDocs layout: ts partition + PLAIN-int commit
-    Seq(2L).toDF("key").coalesce(1)
-      .write.parquet(s"$dir/tombstones/ts_id=-1")
-    val (gen, live) = Manifest.readWithGen(spark, dir).get
-    Manifest.commitAfter(spark, dir, live + -1, basedOn = gen)
-    val keys = StreamBm25.load(spark, dir).get
-      .postings.select("key").distinct().collect().map(_.getLong(0)).toSet
-    assert(keys == Set(1L),
-      s"legacy plain-int tombstone must still mask, got $keys")
+    Seq(
+      TombSink("StreamBm25", "key",
+        StreamBm25.appendBatch(_, docs, 0L, "doc_id", "text"),
+        d => longs(StreamBm25.load(spark, d).get.postings.select("key"))),
+      TombSink("StreamIvf", "key",
+        StreamIvf.appendBatch(_, Seq(1L -> Seq(1.0, 0.0),
+          2L -> Seq(0.0, 1.0)).toDF("vec_id", "vec"), 0L, "vec_id", "vec",
+          nCells = 2),
+        d => longs(StreamIvf.load(spark, d, "vec_id", "vec").get
+          .postings.select("vec_id"))),
+      TombSink("StreamClusters", "id",
+        StreamClusters.appendBatch(_, Seq(1L -> 2L).toDF("id1", "id2"), 0L),
+        d => longs(StreamClusters.load(spark, d).get.select("id"))),
+      TombSink("StreamCurate", "doc_id",
+        StreamCurate.appendBatch(_, docs, 0L, identity),
+        d => longs(StreamCurate.load(spark, d).get.select("doc_id"))))
+  }
+
+  test("pre-family tombstones (r10 on-disk state) still classify via the probe fallback") {
+    import spark.implicits._
+    // the split is the contract's ([[graft.streaming.ManagedSink]]):
+    // every tombstone sink runs the same probe over its declared data
+    // families, so one fixture pins all four
+    tombSinks.foreach { sink =>
+      val dir = java.nio.file.Files.createTempDirectory("mlegacy").toString
+      sink.append(dir)
+      assert(sink.served(dir) == Set(1L, 2L), sink.name)
+      // mimic the r10 takedown layout: ts partition + PLAIN-int commit
+      Seq(2L).toDF(sink.keyCol).coalesce(1)
+        .write.parquet(s"$dir/tombstones/ts_id=-1")
+      val (gen, live) = Manifest.readWithGen(spark, dir).get
+      Manifest.commitAfter(spark, dir, live + -1, basedOn = gen)
+      val keys = sink.served(dir)
+      assert(keys == Set(1L),
+        s"${sink.name}: legacy plain-int tombstone must still mask, got $keys")
+    }
   }
 
   test("time-based vacuum retention: young generations stay time-travel-readable, old ones reclaim") {
