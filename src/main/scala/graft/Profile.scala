@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Developer profiling main (not part of the driver contract), on a
   * [[Sessions]] session of `SPARK_GRAFT_CPUS` cores. `sfDir` defaults to
@@ -21,8 +22,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *    (building the DataFrame, including its eager driver-side work), plan
   *    (`executedPlan`) and exec (`toRdd.count()`, which materializes every
   *    output column). `show` then prints up to 200 rows of each query.
-  *  - `jobs` is `time` plus, for the last iteration, every job's wall and
-  *    the top 20 stages by task time.
+  *  - `jobs` is `time` plus, for the last iteration, every job's wall,
+  *    the top 20 stages by task time and the executed plan as it stands
+  *    after the run (under AQE the final adaptive plan, with the query
+  *    stages, reused exchanges and join choices Spark actually ran).
   *  - `plan` writes each query's formatted plan to
   *    `<outDir>/<name>_<suffix>.txt` (suffix defaults to `before`), or
   *    prints it when no outDir is given.
@@ -86,7 +89,16 @@ object Profile {
         println(f"[profile] $nm iter $i: ${secs(t0, t3)}%.2f s = construct " +
           f"${secs(t0, t1)}%.2f + plan ${secs(t1, t2)}%.2f + exec " +
           f"${secs(t2, t3)}%.2f ($n rows)")
-        if (jobs && last) log.report()
+        if (jobs && last) {
+          log.report()
+          // read after the run, so AQE's re-planned stages are in it
+          val run = df.queryExecution.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.executedPlan
+            case p => p
+          }
+          println("[profile] final plan:")
+          run.toString.linesIterator.foreach(l => println(s"[profile]   $l"))
+        }
       }
     }
   }

@@ -996,9 +996,10 @@ object ScaleStress {
       Op("x45_incr_neardup", m => {
         // incremental near-dup at m×: per-copy shingle salt (the x7
         // move) keeps near-dup structure linear; the corpus side is
-        // ONLY its signature index — cost = sign the batch + one band
-        // pass (one explode, one banded join for the index hits and the
-        // within-batch twins), bucket-capped.
+        // ONLY its signature index — cost = sign the batch once (one
+        // checkpoint) + one band pass (one explode, one band-key
+        // shuffle; index hits and within-batch twins paired inside each
+        // bucket), bucket-capped.
         val sh = docsOf(m)
           .withColumn("toks", TextOps.tokens(col("text")))
           .select(col("doc_id"),

@@ -39,8 +39,8 @@ object Dedup {
     * ~1/6000th of the corpus bytes). When even that index dwarfs the
     * batch, [[bloomBuild]] turns the anti-join into a scan-side
     * prefilter (the x29 pattern). Near-dup increments compose the same
-    * way: [[crossCorpusCandidates]](batch, corpus) is already the A×B
-    * banded join. */
+    * way: [[incrementalNearDup]] probes a maintained signature index
+    * with the batch in one band pass. */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame, idCol: String,
                        textCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -92,28 +92,34 @@ object Dedup {
     * `carry` names extra columns to keep through the explode (e.g. the
     * signature itself for streaming consumers that verify per-bucket).
     *
-    * `sigNonNull`: set true when the caller guarantees no null signatures
-    * (e.g. it already dropped docs with empty shingle sets). The default
-    * null filter is CORRECT but hostile to unmaterialized pipelines:
-    * pushed below the signature projection, Catalyst rewrites
-    * `isnotnull(minhash)` into a scan-stage re-computation of the whole
-    * minhash_sig(shingles(...)) expression with `toks` inlined as
-    * split(text) — the O(tokens²) HOF-inlining trap (SCALING.md). Callers
-    * that persist the signed table first (minHashCandidates) are immune;
-    * streaming callers can't persist and must pre-filter instead. */
+    * A null signature (empty shingle set) emits no band row. The null
+    * test sits inside the explode, not in a Filter: a filter on
+    * `minhash` is pushed below the signature projection, where Catalyst
+    * rewrites `isnotnull(minhash)` into a scan-stage re-computation of
+    * the whole minhash_sig(shingles(...)) expression with `toks` inlined
+    * as split(text) — the O(tokens²) HOF-inlining trap (SCALING.md). The
+    * explode's argument is no attribute, so no filter is inferred from it
+    * either: an unmaterialized signed table (a streaming micro-batch,
+    * [[crossCorpusCandidates]]' corpora) bands without being persisted
+    * first. */
   def lshBands(docs: DataFrame, idCol: String, bands: Int, rowsPerBand: Int,
-               carry: Seq[String] = Nil, sigNonNull: Boolean = false): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
+               carry: Seq[String] = Nil): DataFrame = {
+    val bandCols = array((0 until bands).map { b =>
       struct(lit(b).as("band"),
         xxhash64((col("minhash").getItem(b * rowsPerBand) +:
           (1 until rowsPerBand).map(r => col("minhash").getItem(b * rowsPerBand + r))) :+
           lit(b): _*).as("band_hash"))
-    }
+    }: _*)
     val kept = col(idCol) +: carry.map(col)
-    (if (sigNonNull) docs else docs.filter(col("minhash").isNotNull))
-      .select(kept :+ explode(array(bandCols: _*)).as("bb"): _*)
+    docs
+      .select(kept :+
+        explode(when(col("minhash").isNotNull, bandCols)).as("bb"): _*)
       .select(kept ++ Seq(col("bb.band"), col("bb.band_hash")): _*)
   }
+
+  private def requireBands(k: Int, bands: Int): Unit =
+    require(bands > 0 && bands <= k && k % bands == 0,
+      s"bands ($bands) must evenly divide signature length k ($k)")
 
   /** Candidate pairs from LSH buckets + estimated Jaccard = fraction of
     * agreeing signature positions. One self-equi-join on (band, band_hash);
@@ -126,8 +132,7 @@ object Dedup {
   def minHashCandidates(docs: DataFrame, idCol: String, shingleCol: String,
                         k: Int, bands: Int,
                         maxBucketSize: Int = 10000): DataFrame = {
-    require(bands > 0 && bands <= k && k % bands == 0,
-      s"bands ($bands) must evenly divide signature length k ($k)")
+    requireBands(k, bands)
     val rows = k / bands
     // The signature table is referenced three times (both sides of the
     // band join + the agreement re-check); persist so the shingle+hash
@@ -164,99 +169,110 @@ object Dedup {
   /** Cross-corpus near-dup candidates — the DECONTAMINATION shape: find
     * training documents (corpusA) that near-duplicate a benchmark/eval
     * document (corpusB). Same machinery as [[minHashCandidates]] but the
-    * band join is A×B instead of a self-join: both sides are signed, then
+    * buckets pair A×B instead of a self-join: both sides are signed, then
     * [[probePairs]] (with the within-probe side off) bands them in one
-    * explode of the side-tagged union and finds candidates with ONE
-    * equi-join on (band, band_hash); signature agreement estimates
-    * Jaccard. At 10⁹ training docs × 10⁶ benchmark docs this stays one
-    * shuffle of band keys — never a cross join.
+    * explode of the side-tagged union, shuffles the band rows once and
+    * pairs each bucket's A members with its B members; signature
+    * agreement estimates Jaccard. At 10⁹ training docs × 10⁶ benchmark
+    * docs this stays one shuffle of band keys — never a cross join.
     *
     * `maxBucketSize` caps the SUM of a bucket's occupancy across both
-    * sides before the join (a boilerplate bucket shared by both corpora
+    * sides before pairing (a boilerplate bucket shared by both corpora
     * otherwise emits |A|·|B| pairs). Output: (id_a, id_b, est_jaccard),
-    * one row per candidate pair.
+    * one row per candidate pair (ids unique within each corpus).
     *
-    * Cache lifecycle: both signature tables are cached only for the
-    * duration of the call (candidates are eagerly checkpoint-
-    * materialized, then the signatures unpersist — the
-    * [[incrementalNearDup]] discipline, so repeated decontamination
-    * passes don't accumulate cached signature tables). */
+    * Cache lifecycle: nothing is cached or checkpointed. The result is a
+    * lazy plan; corpusB is signed once for the band pass and once for the
+    * signature lookup of each candidate pair, corpusA once. */
   def crossCorpusCandidates(corpusA: DataFrame, corpusB: DataFrame,
                             idCol: String, shingleCol: String,
                             k: Int, bands: Int,
                             maxBucketSize: Int = 10000): DataFrame = {
-    val signedA = withMinHash(corpusA, shingleCol, k)
-      .select(col(idCol), col("minhash")).persist()
-    val signedB = withMinHash(corpusB, shingleCol, k)
-      .select(col(idCol), col("minhash")).persist()
-    val pairs = probePairs(signedA, signedB, idCol, k, bands, maxBucketSize,
-        withinProbe = false)
+    def signed(docs: DataFrame) =
+      withMinHash(docs, shingleCol, k).select(col(idCol), col("minhash"))
+    probePairs(signed(corpusA), signed(corpusB), idCol, k, bands,
+        maxBucketSize, withinProbe = false)
       .select("id_a", "id_b", "est_jaccard")
-      .localCheckpoint() // eager: materialized while the signatures cache
-    signedA.unpersist(); signedB.unpersist()
-    pairs
+      .distinct()
   }
 
-  /** The one banded candidate-pair kernel, over two PREBUILT
-    * `(id, minhash)` signature tables: a PROBE side (a new batch, or
-    * corpusA) and an INDEX side (a maintained signature index, or
-    * corpusB), so an index can be probed without re-signing its corpus.
+  /** The one banded candidate-pair kernel, over two `(id, minhash)`
+    * signature tables: a PROBE side (a new batch, or corpusA) and an
+    * INDEX side (a maintained signature index, or corpusB), so an index
+    * can be probed without re-signing its corpus. Ids are unique within
+    * each side; an id may occur on both.
     *
     * The sides are tagged (probe 1, index 0) and banded in ONE explode
-    * of their union; one window per (band, band_hash) counts the probe
-    * rows `na` and all rows `n`, and ONE equi-join of the probe band rows
-    * to all band rows on (band, band_hash) yields both kinds of pair:
-    *  - `side = 0`, an index hit: `id_b` is an index doc; the bucket is
-    *    kept while its combined occupancy `n ≤ maxBucketSize`;
+    * of their union; probe rows carry their signature through it, index
+    * rows do not (that would be one copy per band of every index doc).
+    * The band rows shuffle ONCE, on (band, band_hash): one window over
+    * that key counts the probe rows `na` and all rows `n`, and a
+    * grouping on the same key (no second exchange) collects each
+    * bucket's kept members. A bucket yields two kinds of pair:
+    *  - `side = 0`, an index hit: `id_b` is an index doc; the bucket
+    *    pairs while its combined occupancy `n ≤ maxBucketSize`;
     *  - `side = 1`, a later probe twin (only when `withinProbe`): `id_b`
-    *    is a probe doc with `id_a < id_b`; the bucket is kept while
-    *    `2·na ≤ maxBucketSize`, the occupancy of the probe side joined
-    *    to itself.
-    * Pairs are distinct on (id_a, id_b, side) and rechecked with
-    * SigAgree against the signatures keyed by (id, side), so a probe doc
-    * whose id also occurs in the index is compared with each of its
-    * partners, never with itself. Null signatures (empty shingle sets)
-    * form no pair. Returns (id_a, id_b, side, est_jaccard). */
+    *    is a probe doc with `id_a < id_b`; the bucket pairs while
+    *    `2·na ≤ maxBucketSize`, the occupancy of the probe side paired
+    *    with itself.
+    * A row enters its bucket only within the cap of a kind of pair it can
+    * form, so a kept bucket holds at most `maxBucketSize` members, and
+    * its pairs come from two explodes of that member list. A twin
+    * carries both signatures out of its bucket; an index hit looks up
+    * the index signature with one join on `id_b`. Both are rechecked
+    * with SigAgree in the same pipeline, so nothing above the band
+    * shuffle forks (a fork would re-run it once per branch under AQE,
+    * whose cached inputs defeat exchange reuse). A probe doc whose id also
+    * occurs in the index is compared with each of its partners, never
+    * with itself. Null signatures (empty shingle sets) form no pair.
+    *
+    * Returns (id_a, id_b, side, est_jaccard), one row per bucket a pair
+    * shares: a pair that collides in several bands repeats. */
   private[graft] def probePairs(probe: DataFrame, index: DataFrame,
                                 idCol: String, k: Int, bands: Int,
                                 maxBucketSize: Int,
                                 withinProbe: Boolean): DataFrame = {
-    require(bands > 0 && bands <= k && k % bands == 0,
-      s"bands ($bands) must evenly divide signature length k ($k)")
+    requireBands(k, bands)
     val sigs = probe.select(col(idCol), col("minhash"), lit(1).as("side"))
       .union(index.select(col(idCol), col("minhash"), lit(0).as("side")))
     val bucket = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "band_hash")
-    val counted = lshBands(sigs, idCol, bands, k / bands, carry = Seq("side"))
+    val twin: Column =
+      if (withinProbe) col("na") * 2 <= maxBucketSize else lit(false)
+    val members = lshBands(sigs, idCol, bands, k / bands,
+        carry = Seq("side", "minhash"))
+      // the index signature is dropped before the band shuffle
+      .withColumn("minhash", when(col("side") === 1, col("minhash")))
       .withColumn("na", sum(col("side")).over(bucket))
       .withColumn("n", count(lit(1)).over(bucket))
-    // a band row joins only within the cap of its kind of pair, so a
-    // capped bucket sends no row of that kind into the join. Both sides
-    // filter ABOVE the window (not on its partition keys), so the subtree
-    // below it — the explode and its band-key exchange — is the same plan
-    // on both, and static exchange reuse runs it once. (Under AQE each
-    // cached input is a separate TableCacheQueryStage whose id enters the
-    // exchange's canonical form, so Spark 4.1 runs it once per side.)
-    val indexHit = col("side") === 0 && col("n") <= maxBucketSize
-    val twin =
-      if (withinProbe) col("side") === 1 && col("na") * 2 <= maxBucketSize
-      else lit(false)
-    val a = counted
-      .filter(col("side") === 1 && (col("n") <= maxBucketSize || twin))
-      .select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val b = counted.filter(indexHit || twin)
-      .select(col(idCol).as("id_b"), col("side"), col("band"), col("band_hash"))
-    val pairs = a.join(b, Seq("band", "band_hash"))
-      .filter(col("side") === 0 || col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "side").distinct()
+      .filter(col("n") <= maxBucketSize || (col("side") === 1 && twin))
+      .groupBy("band", "band_hash")
+      .agg(max(col("na")).as("na"),
+        collect_list(struct(col(idCol).as("id"), col("side"),
+          col("minhash").as("sig"))).as("m"))
+    def ofSide(s: Int): Column = filter(col("m"), _.getField("side") === s)
+    val pairs = members
+      .select(col("m"), twin.as("twin"), explode(ofSide(1)).as("a"))
+      .select(col("a"), explode(
+        if (withinProbe) when(col("twin"), col("m")).otherwise(ofSide(0))
+        else ofSide(0)).as("b"))
+      .filter(col("b.side") === 0 || col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        col("b.side").as("side"), col("a.sig").as("sig_a"),
+        col("b.sig").as("sig_b"))
+    // one lookup for both kinds, so nothing forks above the band
+    // shuffle: a twin carries its partner's signature, an index hit
+    // finds it by id
+    val lookup = index.select(col(idCol).as("id_index"),
+      col("minhash").as("sig_index"))
     pairs
-      .join(probe.select(col(idCol).as("id_a"), col("minhash").as("sig_a")), "id_a")
-      .join(sigs.select(col(idCol).as("id_b"), col("side"), col("minhash").as("sig_b")),
-        Seq("id_b", "side"))
-      .withColumn("est_jaccard",
-        graft.functions.SigAgree.sig_agree(col("sig_a"), col("sig_b"))
-          .cast("double") / k)
-      .select("id_a", "id_b", "side", "est_jaccard")
+      .join(lookup, col("id_b") === col("id_index") && col("side") === 0,
+        "left_outer")
+      .select(col("id_a"), col("id_b"), col("side"),
+        // native SigAgree: fused codegen per candidate pair
+        (graft.functions.SigAgree.sig_agree(col("sig_a"),
+          coalesce(col("sig_b"), col("sig_index"))).cast("double") / k)
+          .as("est_jaccard"))
   }
 
   /** INCREMENTAL near-dup dedup — the MinHash complement of
@@ -272,37 +288,39 @@ object Dedup {
     * Returns the SURVIVING `(id, minhash)` rows — exactly the rows to
     * append to the index, so increment N+1's cost again never touches
     * increment N's bodies. Scale shape: one signature scan of the batch,
-    * then one band explode and one banded equi-join ([[probePairs]]:
-    * batch×index and batch×batch in the same pass), all candidate
-    * generation bucket-capped — the x7/x17 linear-candidate machinery
-    * end to end.
+    * then one band explode and one band-key shuffle ([[probePairs]]:
+    * index hits and within-batch twins from the same buckets), all
+    * candidate generation bucket-capped — the x7/x17 linear-candidate
+    * machinery end to end. The drop ids (batch-sized, never
+    * index-sized) are broadcast into the anti-join.
     *
-    * Cache lifecycle: the batch signature table is cached only for the
-    * DURATION of this call — the survivors (batch-sized, the increment
-    * not the corpus) are eagerly localCheckpoint-materialized off it,
-    * then it is unpersisted, so repeated invocations (every bench sweep,
-    * every daily increment) do not accumulate executor-memory state.
-    * The returned frame's checkpoint blocks are ContextCleaner-managed:
-    * they release when the caller drops the reference. */
+    * Cache lifecycle: `bands`, `k` and `threshold` are checked before
+    * any job starts. The batch signatures are then materialized ONCE, by
+    * an eager `localCheckpoint` (one job); the band pass and the
+    * anti-join both read the checkpoint, so nothing enters the cache
+    * manager and nothing needs an unpersist. The survivors come back as
+    * a lazy plan over that checkpoint. Its blocks are
+    * ContextCleaner-managed: they release when the caller drops the
+    * reference, so repeated invocations (every bench sweep, every daily
+    * increment) do not accumulate executor-memory state. */
   def incrementalNearDup(corpusSigs: DataFrame, batch: DataFrame,
                          idCol: String, shingleCol: String,
                          k: Int, bands: Int, threshold: Double,
                          maxBucketSize: Int = 10000): DataFrame = {
+    requireBands(k, bands)
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     val batchSigs = withMinHash(batch, shingleCol, k)
-      .select(col(idCol), col("minhash")).persist()
-    val survivors = batchSigs
-      .join(nearDupDrops(batchSigs, corpusSigs, idCol, k, bands, threshold,
-        maxBucketSize), Seq(idCol), "left_anti")
-      .localCheckpoint() // eager: materialized while batchSigs is cached
-    batchSigs.unpersist()
-    survivors
+      .select(col(idCol), col("minhash"))
+      .localCheckpoint()
+    batchSigs.join(broadcast(nearDupDrops(batchSigs, corpusSigs, idCol, k,
+      bands, threshold, maxBucketSize)), Seq(idCol), "left_anti")
   }
 
   /** The ids [[incrementalNearDup]] drops from a signed batch: the probe
     * doc of each index hit and the later doc of each batch twin with
-    * est ≥ `threshold` (ids may repeat). */
+    * est ≥ `threshold`. Ids repeat (once per shared bucket); the
+    * anti-join that consumes them ignores repeats, so no distinct. */
   private[graft] def nearDupDrops(batchSigs: DataFrame, corpusSigs: DataFrame,
                                   idCol: String, k: Int, bands: Int,
                                   threshold: Double,

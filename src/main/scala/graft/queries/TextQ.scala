@@ -1134,8 +1134,9 @@ object TextQ {
         .orderBy("doc_id")),
 
     // X17 — decontamination at scale: MinHash+LSH cross-corpus candidates
-    // (one A×B band equi-join, combined-occupancy bucket cap) — the shape
-    // that holds at 10⁹ train × 10⁶ benchmark docs. Hash-family-specific
+    // (one band-key shuffle, A×B pairs from each bucket, combined-
+    // occupancy bucket cap) — the shape that holds at 10⁹ train × 10⁶
+    // benchmark docs. Hash-family-specific
     // → rows-only; CrossCorpusSpec plants contamination and proves recall,
     // and x15 oracles the exact semantics on the same corpus split.
     "x17_decontam_minhash" -> ((s, d) => {
@@ -2348,7 +2349,9 @@ object TextQ {
     // the % 4 == 0 batch signs itself once and survives iff near-dup
     // (est ≥ 0.25) of neither an index doc nor an earlier batch doc;
     // both probes come from one band pass (one explode of the
-    // side-tagged batch ∪ index, one band equi-join).
+    // side-tagged batch ∪ index, one band-key shuffle, pairs from each
+    // bucket); the batch signatures are checkpointed once, 7 Spark jobs
+    // per build + run in all.
     // Output = the rows appended to the index. Rows-only (hash-family-
     // specific); IncrementalNearDupSpec plants drops, pins idempotence
     // and parity with the earlier two-pass form.
@@ -2373,7 +2376,9 @@ object TextQ {
     // partner was a deleted index doc now SURVIVES into the corpus —
     // forgetting the content means the guard no longer knows it, the
     // deliberate contrast with x58's exact-bytes digest blocker (ids
-    // and digests are not the content; signatures are). Golden-pinned
+    // and digests are not the content; signatures are). The masked
+    // index feeds both of x45's index reads: the band pass and the
+    // signature lookup of its hits. Golden-pinned
     // at the gate SF (the x45 hash-family precedent);
     // IncrementalNearDupSpec pins the family's drop/idempotence
     // semantics SF-independently.

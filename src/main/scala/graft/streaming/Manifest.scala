@@ -571,10 +571,13 @@ object Manifest {
                  primaryDataDir: String, stagedPartitions: Seq[String])
       : (Int, Option[Live], Set[Int]) = {
     val fs = fsOf(s, root)
-    if (readLiveWithGen(s, root).isEmpty &&
-        !fs.exists(new Path(primaryDataDir)))
-      commitAfter(s, root, Set.empty, basedOn = -1)
-    val st = readLiveWithGen(s, root)
+    val seen = readLiveWithGen(s, root)
+    // read again only after a birth commit, to pick up its generation
+    val st =
+      if (seen.isEmpty && !fs.exists(new Path(primaryDataDir))) {
+        commitAfter(s, root, Set.empty, basedOn = -1)
+        readLiveWithGen(s, root)
+      } else seen
     val referenced =
       if (st.isEmpty) Set.empty[Int]
       else referencedUnion(fs, root)

@@ -59,12 +59,8 @@ object StreamNearDup {
   def banded(docs: DataFrame, k: Int, bands: Int): DataFrame = {
     require(bands > 0 && bands <= k && k % bands == 0,
       s"bands ($bands) must evenly divide signature length k ($k)")
-    // Pre-filter on token count (the exact condition for a non-empty
-    // 3-shingle set → non-null signature) so lshBands can skip its null
-    // filter: a streaming plan has no persist barrier, and the pushed-down
-    // isnotnull(minhash) otherwise re-computes the whole signature at the
-    // scan with `toks` inlined per element — the O(tokens²) HOF trap
-    // (measured 3× the whole query's cost at sf0.1).
+    // Pre-filter on token count: the exact condition for a non-empty
+    // 3-shingle set, so every row that reaches lshBands signs non-null.
     val shingled = docs
       .withColumn("toks", TextOps.tokens(col("text")))
       .filter(size(col("toks")) >= 3)
@@ -73,13 +69,13 @@ object StreamNearDup {
   }
 
   /** [[banded]] over a pre-shingled (doc_id, sh) frame, for callers with
-    * their own shingle scheme. `sh` must be non-empty on every row (the
-    * signature-non-null precondition banded's token filter establishes). */
+    * their own shingle scheme. A row with an empty `sh` signs to null and
+    * emits no band row. */
   def bandedFromShingles(shingled: DataFrame, k: Int, bands: Int): DataFrame = {
     require(bands > 0 && bands <= k && k % bands == 0,
       s"bands ($bands) must evenly divide signature length k ($k)")
     Dedup.lshBands(Dedup.withMinHash(shingled, "sh", k),
-        "doc_id", bands, k / bands, carry = Seq("minhash"), sigNonNull = true)
+        "doc_id", bands, k / bands, carry = Seq("minhash"))
       .select("doc_id", "minhash", "band", "band_hash")
   }
 

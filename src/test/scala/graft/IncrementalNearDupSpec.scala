@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ext.{Dedup, TextOps}
 
@@ -107,6 +108,42 @@ class IncrementalNearDupSpec extends AnyFunSuite with SharedSpark {
     assert(survivors(5) == always ++ Set(10L, 21L, 22L))
     // nothing capped: X and Y hit the index, Z keeps its first copy
     assert(survivors(10000) == always)
+  }
+
+  /** Whether the signature table a call signs from `docs` is cached in
+    * the session: a persist the call left behind shows here. */
+  private def sigsCached(docs: DataFrame): Boolean =
+    Dedup.withMinHash(docs, "sh", 32).select(col("id"), col("minhash"))
+      .storageLevel != StorageLevel.NONE
+
+  test("a bands value that does not divide k fails before any job and caches nothing") {
+    val index = sigsOf(capIndex.toDF("id", "text"))
+    val batch = shingled(capBatch.toDF("id", "text"))
+    val other = shingled(capIndex.toDF("id", "text"))
+    val jobs = jobsStartedBy {
+      intercept[IllegalArgumentException](Dedup.incrementalNearDup(index, batch,
+        "id", "sh", k = 32, bands = 5, threshold = 0.25))
+      intercept[IllegalArgumentException](Dedup.crossCorpusCandidates(batch, other,
+        "id", "sh", k = 32, bands = 5))
+    }
+    assert(jobs == 0, s"$jobs jobs started before the bands check")
+    assert(!sigsCached(batch) && !sigsCached(other), "a signature table stayed cached")
+  }
+
+  test("incrementalNearDup and crossCorpusCandidates cache nothing and persist only a checkpoint") {
+    val index = sigsOf(capIndex.toDF("id", "text"))
+    val batch = shingled(capBatch.toDF("id", "text"))
+    val other = shingled(capIndex.toDF("id", "text"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Dedup.incrementalNearDup(index, batch, "id", "sh", k = 32, bands = 16,
+      threshold = 0.25).collect()
+    Dedup.crossCorpusCandidates(batch, other, "id", "sh", k = 32, bands = 16)
+      .collect()
+    assert(!sigsCached(batch) && !sigsCached(other), "a signature table stayed cached")
+    val left = sc.getPersistentRDDs.filter { case (id, rdd) =>
+      !before(id) && !rdd.isCheckpointed }
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
   }
 }
 

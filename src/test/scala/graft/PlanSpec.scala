@@ -326,27 +326,54 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("x45's drop set bands once: one Generate, no cartesian product") {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.execution.GenerateExec
-    import graft.ext.{Dedup, TextOps}
-    // the batch x45 signs, persisted as incrementalNearDup persists it
-    val batchSigs = Dedup.withMinHash(Tables.documents(spark, sf)
-        .filter(col("doc_id") % 4 === 0)
-        .select(col("doc_id"),
-          TextOps.shingles(TextOps.tokens(col("text")), 3).as("sh")), "sh", 32)
-      .select("doc_id", "minhash").persist()
-    try {
-      val p = Dedup.nearDupDrops(batchSigs,
-          graft.queries.TextQ.corpusSigIndex(spark, sf), "doc_id",
-          k = 32, bands = 16, threshold = 0.25, maxBucketSize = 10000)
-        .queryExecution.executedPlan
-      // batch×index and batch×batch pairs come from one explode of the
-      // side-tagged union; both join sides read its one band-key shuffle
-      val generates = p.collect { case g: GenerateExec => g }
-      assert(generates.size == 1, s"expected one band explode:\n$p")
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the executed plan as AQE leaves it after the run: under AQE each
+    // cached input is its own query stage, so a band exchange that static
+    // reuse shares between two branches runs once per branch, and only
+    // the final adaptive plan shows it
+    withSQLConf("spark.sql.adaptive.enabled" -> "true") {
+      val df = SparkEntry.queries("x45_incremental_neardup")(spark, sf)
+      df.queryExecution.toRdd.count()
+      val p = df.queryExecution.executedPlan
+      val nodes = Aqe.collect(p) { case n: SparkPlan => n }
+      val bandShuffles = nodes.collect {
+        case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.flatMap(_.references.map(_.name)) == Seq("band", "band_hash")
+          case _ => false
+        }) => e
+      }
+      assert(bandShuffles.size == 1, s"expected one band-key shuffle:\n$p")
+      val bandExplodes = nodes.collect {
+        case g: GenerateExec if g.generator.exists(_.isInstanceOf[XxHash64]) => g
+      }
+      assert(bandExplodes.size == 1, s"expected one band explode:\n$p")
+      val bandJoins = nodes.collect {
+        case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
+            .exists(_.references.exists(_.name == "band")) => j
+      }
+      assert(bandJoins.isEmpty, s"pairs must come from buckets, not a band join:\n$p")
       assert(!p.toString.contains("CartesianProduct") &&
         !p.toString.contains("BroadcastNestedLoopJoin"),
-        s"candidates must come from the band equi-join:\n$p")
-    } finally batchSigs.unpersist()
+        s"no cartesian product or nested-loop join:\n$p")
+    }
+  }
+
+  test("x45 builds and runs in at most 8 Spark jobs") {
+    withSQLConf("spark.sql.adaptive.enabled" -> "true") {
+      val x45 = SparkEntry.queries("x45_incremental_neardup")
+      // the corpus signature index is a shared artifact, built before
+      x45(spark, sf).queryExecution.toRdd.count()
+      val jobs = jobsStartedBy(x45(spark, sf).queryExecution.toRdd.count())
+      assert(jobs <= 8, s"x45 started $jobs jobs")
+    }
   }
 }
+
+/** Walks an executed plan through AQE's query stages. */
+private object Aqe
+  extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{Outcome, TestSuite}
 
@@ -36,6 +39,33 @@ trait SharedSpark extends TestSuite {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  /** Spark jobs that `body` starts from this thread. Listener events
+    * arrive asynchronously but in order, so once a marker job run after
+    * `body` is seen, every job `body` started has been seen too. */
+  protected def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-started-by-${System.nanoTime}"
+    val started = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
+      started.get
+    } finally sc.removeSparkListener(listener)
   }
 }
 

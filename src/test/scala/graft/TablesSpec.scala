@@ -1,14 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,33 +28,6 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
 
   private val reffix = Seq("quotes_daily", "stocks_dim", "quotes_5m", "fx_5m")
     .map(t => s"${ReplayQ.fixDir}/$t.parquet")
-
-  /** Spark jobs that `body` starts from this thread. Listener events
-    * arrive asynchronously but in order, so once a marker job run after
-    * `body` is seen, every job `body` started has been seen too. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime}"
-    val started = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(g) if g == s"$group-marker" => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "reads under test")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "listener barrier")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never seen")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a hit returns Spark's own inferred schema for every input table") {
     // events reads under nanosAsLong; the block puts the session back after
