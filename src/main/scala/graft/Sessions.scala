@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session factory. Every entry point (`Bench`, `Verify`,
-  * `Profile`, `EntrySmoke`, `ScaleStress`, `RecallAtScale`,
+  * `Profile` — its `scale` mode included — `EntrySmoke`,
   * `RefFixtureGen`) and the test battery's shared session take their
   * SparkSession from here, so the settings they share are written once:
   *  - `local[n]` with n shuffle partitions;

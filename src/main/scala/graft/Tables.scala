@@ -122,6 +122,10 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
+  /** Every table of an sf dir, as `<name>.parquet`. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
   /** Touch every table once (file footers, codegen, JIT) so the timings
     * that follow measure queries, not session cold start. Goes through
     * the loaders, so `events` gets its schema-adaptive `ts` handling, and
@@ -129,8 +133,7 @@ object Tables {
     * fails to load is named on stderr and the warm-up moves on to the
     * next one. */
   def warm(s: SparkSession, d: String): Unit =
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { name =>
+    names.foreach { name =>
       try (if (name == "events") events(s, d) else table(s, d, name)).count()
       catch { case t: Throwable =>
         System.err.println(s"[tables] $name warm-up failed: $t")

@@ -327,8 +327,8 @@ object Similarity {
     * fixture-scale builds (and every pinned spec) stay bit-identical;
     * above it assignment is approximate in the standard coarse-quantizer
     * way — a posting can land in a near-best cell — which probe-side
-    * recall measurement already prices (RecallAtScale sweeps run the
-    * built index end-to-end). */
+    * recall measurement already prices (the `Profile scale` recall rows
+    * run the built index end-to-end). */
   def buildIvfIndex(corpus: DataFrame, cId: String, vecCol: String,
                     nCells: Int, nAssign: Int = 2,
                     refineIters: Int = 2,
@@ -437,7 +437,7 @@ object Similarity {
     * corpus grows: with nCells ~ √n, a fixed nProbe's probed share
     * shrinks and recall decays (measured 0.38 → 0.18 across a 64×
     * blow-up at nProbe=4), while a ~10% fraction held 0.38 → 0.88 at
-    * still-sub-linear probe cost (graft.RecallAtScale; SCALING.md r4).
+    * still-sub-linear probe cost (`recall_emb` scale row; SCALING.md r4).
     * Tune the fraction per recall SLO; cost ∝ fraction · n. */
   def nProbeFor(nCells: Int, probedFraction: Double): Int = {
     require(probedFraction > 0 && probedFraction <= 1,
@@ -454,7 +454,7 @@ object Similarity {
     * probed. The measured envelope, taken over the WORST of the two
     * instrumented indexes at every scale (the weak-similarity embeddings
     * index — the chunk index needs 5-20× less at every design point;
-    * RecallAtScale sweeps, SCALING.md r4 + r6 tables):
+    * recall sweeps of the scale runs, SCALING.md r4 + r6 tables):
     *
     *   emb  8× (126 cells): fraction 0.032 → recall 0.40, 0.095 → 0.68
     *   emb 64× (357 cells): fraction 0.011 → 0.18,  0.098 → 0.88
@@ -511,7 +511,7 @@ object Similarity {
     * [[probeIvf]] a 100 TB caller actually wants: state "recall ≥ 0.5",
     * not "probe 8 cells". nProbe is sized by [[nProbeFor]] with the
     * probed fraction from [[calibratedFraction]]: the measured-envelope
-    * mapping where the RecallAtScale sweeps resolve the curve, the
+    * mapping where the scale runs' recall sweeps resolve the curve, the
     * identity fraction (= recallTarget, the uniform-cell null bound —
     * always safe: probing a fraction f of cells catches f of the true
     * neighbors in expectation, and nearest-cells-first probing dominates
@@ -624,7 +624,7 @@ object Similarity {
   /** Band width (bits per band) must GROW with the corpus or candidate
     * generation goes quadratic: with fixed r-bit bands there are only
     * bands·2^r buckets, so mean occupancy is n/2^r and the bucket
-    * self-join emits Θ(n²/2^r) pairs — measured by `graft.ScaleStress`,
+    * self-join emits Θ(n²/2^r) pairs — measured in a scale run (SCALING.md),
     * a 128k-vector corpus on 8-bit bands spilled >78 GB before dying.
     * This helper sizes planes so mean bucket occupancy stays near
     * `targetBucket` regardless of n: r = log2(n/targetBucket), capped at

@@ -209,8 +209,8 @@ object TimeSeries {
     * form while every key fits an executor, automatically switching to
     * [[asOfJoinTimeSliced]] when some key is HOT (rows-per-key above
     * `maxRowsPerKey` — the per-key window sort of the plain form then
-    * degenerates to one giant partition; the ScaleStress
-    * `a3_asof_skew_plain` row measures that superlinear wall).
+    * degenerates to one giant partition; the `a3_asof_skew_plain`
+    * scale scenario measures that superlinear wall).
     *
     * The dispatch probe is one partial-aggregated key count over both
     * sides — map-side combine means the shuffle carries ~distinct keys

@@ -1843,8 +1843,8 @@ object TextQ {
     // quality by construction, so the score adds a doc-level freshness
     // prior (md5-uniform of the id — in production: crawl recency,
     // source reputation); the corpus plants a deterministic re-crawl
-    // (doc_id % 5 == 0 re-delivered at +2·10¹⁰, the ScaleStress offset
-    // convention), and winners genuinely split between original and
+    // (doc_id % 5 == 0 re-delivered at +2·10¹⁰, past every blow-up
+    // copy's id offset), and winners genuinely split between original and
     // re-crawl. Winners decided on narrow (digest, score, id) rows;
     // bodies never shuffle.
     "x67_dedup_keep_best" -> ((s, d) => {

@@ -241,7 +241,7 @@ object VectorQ {
     val chunkVecs = graft.ext.TextOps.assembleVector(
       graft.ext.TextOps.applyTfIdf(chunks, "chunk_key", "chunk", model),
       "chunk_key", 32).persist()
-    // nCells ~ √n (the standard IVF sizing, ScaleStress builtIvf):
+    // nCells ~ √n (the standard IVF sizing, SCALING.md's IVF rows):
     // the chunk corpus is ~8× the doc corpus, and a fixed cell count
     // would make every probe drag n/nCells postings per cell
     val nCells = math.max(16,
@@ -850,8 +850,8 @@ object VectorQ {
 
     // V14 — semantic dedup, PRODUCTION form: the IVF-cell-blocked
     // SemDeDup that runs at 100 TB (k-means cells as blocks, nCells ~
-    // sqrt(n) holds cell occupancy flat — Θ(n^1.5) total, ScaleStress
-    // exponent 0.69-0.76). v10 is the label-blocked DuckDB-oracled twin;
+    // sqrt(n) holds cell occupancy flat — Θ(n^1.5) total, scale-run
+    // exponent 0.69-0.76, SCALING.md). v10 is the label-blocked DuckDB-oracled twin;
     // this makes the scale path a driver-visible, bench-tracked query.
     // Centroid-specific → rows-only; SemDedupSpec proves every
     // cell-blocked drop is justified by a real in-cell dominator.

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions.{col, sum}
   * writes and what it reads:
   *
   *   - append entry ([[enterAppend]]): refuse a negative engine batch
-  *     id, run the sink's legacy upgrade, then [[Manifest.enterBatch]]
-  *     (birth commit, same-id crash wipe, one manifest read);
+  *     id, read the manifest once, run the sink's legacy upgrade on
+  *     that state, then [[Manifest.enterBatch]] (birth commit, same-id
+  *     crash wipe);
   *   - reset refusal ([[refuseReset]]): an ever-committed batch id
   *     carrying fresh rows fails loudly;
   *   - merged-id check ([[requireFreshMergedId]]) before a fold stages;
@@ -73,17 +74,21 @@ trait ManagedSink {
 
   /** Legacy-layout upgrade an append runs before entering the protocol
     * (BM25's flat-stats migration, the corpus sink's pre-manifest
-    * adoption); none by default. */
-  protected def beforeAppend(s: SparkSession, dir: String): Unit = ()
+    * adoption); none by default. `seen` is the manifest state the
+    * append read at entry; an upgrade that commits a generation returns
+    * the state after its commit, any other returns `seen`. */
+  protected def beforeAppend(s: SparkSession, dir: String,
+                             seen: Option[(Int, Manifest.Live)])
+      : Option[(Int, Manifest.Live)] = seen
 
   /** The APPEND ENTRY. Engine batch ids are non-negative: negative ids
     * are the maintainer namespace (merged bases, tombstones, delete
     * records), and [[Manifest.enterBatch]]'s same-id wipe would delete
-    * a maintainer's staged partition under the same id. Then
-    * [[beforeAppend]] and [[Manifest.enterBatch]] — (basedOn
-    * generation, live set or None = legacy, every id any generation
-    * referenced): one read sequence serves [[refuseReset]] and the
-    * commit. `engineBatch = false` admits a sink's own reserved ids
+    * a maintainer's staged partition under the same id. Then one
+    * manifest read, [[beforeAppend]] on it and [[Manifest.enterBatch]]
+    * — (basedOn generation, live set or None = legacy, every id any
+    * generation referenced): one read sequence serves [[refuseReset]]
+    * and the commit. `engineBatch = false` admits a sink's own reserved ids
     * (IVF's retrain output), never a caller's. */
   protected def enterAppend(s: SparkSession, dir: String, batchId: Long,
                             primaryDataDir: String, staged: Seq[String],
@@ -92,8 +97,8 @@ trait ManagedSink {
     require(!engineBatch || batchId >= 0, "engine batch ids are " +
       s"non-negative (got $batchId); negative ids are the compaction " +
       "namespace")
-    beforeAppend(s, dir)
-    Manifest.enterBatch(s, dir, batchId.toInt, primaryDataDir, staged)
+    val seen = beforeAppend(s, dir, Manifest.readLiveWithGen(s, dir))
+    Manifest.enterBatch(s, dir, batchId.toInt, primaryDataDir, staged, seen)
   }
 
   /** The RESET GUARD, once an append knows it carries fresh rows

@@ -566,12 +566,14 @@ object Manifest {
     * a recycled historical id through). Returns (basedOn generation,
     * live set or None = legacy dir, every id referenced by any
     * generation) — ONE read sequence serves the guard and the later
-    * [[commitAfter]]. */
+    * [[commitAfter]]. `seen` is the caller's [[readLiveWithGen]] of
+    * `root`, so an append that inspects the manifest before entering
+    * lists it once. */
   def enterBatch(s: SparkSession, root: String, batchId: Int,
-                 primaryDataDir: String, stagedPartitions: Seq[String])
+                 primaryDataDir: String, stagedPartitions: Seq[String],
+                 seen: Option[(Int, Live)])
       : (Int, Option[Live], Set[Int]) = {
     val fs = fsOf(s, root)
-    val seen = readLiveWithGen(s, root)
     // read again only after a birth commit, to pick up its generation
     val st =
       if (seen.isEmpty && !fs.exists(new Path(primaryDataDir))) {

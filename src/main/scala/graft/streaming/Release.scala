@@ -523,7 +523,7 @@ object Release {
       // byte-copy the untouched shards from the base release — on a
       // BOUNDED POOL, not serially: the copies are independent pure
       // IO, and the serial form became the whole delta wall at
-      // production shard counts (r15 ScaleStress: 19.8 s at m=64/1024
+      // production shard counts (r15 scale run: 19.8 s at m=64/1024
       // shards, exponent 0.78 — the copy loop, not the decision or
       // the content read, both of which are flat; the pool halves it,
       // `link = true` removes it). On an object store each copy is a

@@ -83,8 +83,12 @@ object StreamBm25 extends ManagedSink {
     migrationLocks.computeIfAbsent(dir, _ => new Object).synchronized {
       migrateLegacyStatsLocked(s, dir)
     }
-  override protected def beforeAppend(s: SparkSession, dir: String): Unit =
+  override protected def beforeAppend(s: SparkSession, dir: String,
+                                      seen: Option[(Int, Manifest.Live)])
+      : Option[(Int, Manifest.Live)] = {
     migrateLegacyStats(s, dir)
+    seen
+  }
   private def migrateLegacyStatsLocked(s: SparkSession, dir: String): Unit = {
     val fs = fsOf(s, dir)
     val root = new org.apache.hadoop.fs.Path(statsDir(dir))

@@ -922,12 +922,18 @@ object StreamCurate extends ManagedSink {
     * last batch is adopted like any other (indistinguishable, and
     * dropping data would be worse). */
   override protected def beforeAppend(s: org.apache.spark.sql.SparkSession,
-                                      dir: String): Unit =
-    if (Manifest.read(s, dir).isEmpty) {
+                                      dir: String,
+                                      seen: Option[(Int, Manifest.Live)])
+      : Option[(Int, Manifest.Live)] =
+    if (seen.nonEmpty) seen
+    else {
       val baseline = partitionIds(s, seenDir(dir)) ++
         partitionIds(s, corpusDir(dir))
-      if (baseline.nonEmpty)
+      if (baseline.isEmpty) seen
+      else {
         Manifest.commitAfter(s, dir, baseline, basedOn = -1)
+        Manifest.readLiveWithGen(s, dir)
+      }
     }
 
   private def quarantineDir(dir: String) = s"$dir/quarantine"

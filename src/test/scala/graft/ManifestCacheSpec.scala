@@ -15,7 +15,8 @@ class ManifestCacheSpec extends AnyFunSuite with SharedSpark {
 
   private def refOf(dir: String): Set[Int] =
     Manifest.enterBatch(spark, dir, batchId = 999999,
-      primaryDataDir = s"$dir/members", stagedPartitions = Nil)._3
+      primaryDataDir = s"$dir/members", stagedPartitions = Nil,
+      seen = Manifest.readLiveWithGen(spark, dir))._3
 
   test("warm enterBatch folds only new generations; pruning recomputes") {
     val dir = java.nio.file.Files.createTempDirectory("mcache").toString

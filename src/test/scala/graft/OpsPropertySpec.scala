@@ -127,7 +127,7 @@ class OpsPropertySpec extends AnyFunSuite with SharedSpark {
 
   test("time-sliced as-of join equals plain on a 90%-hot-key skewed fixture") {
     import spark.implicits._
-    // the ScaleStress a3_asof_skew fixture in miniature: key 0 carries
+    // the a3_asof_skew scale fixture in miniature: key 0 carries
     // 90% of the left rows, multiple keys, slices cutting mid-stream
     val left = (0 until 3000).map { i =>
       (if (i % 10 < 9) 0 else (i % 7) + 1, new Timestamp(i * 3000L))
